@@ -3,7 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -13,8 +14,15 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warm up (session + catalog registration + JIT/codegen of the three
     // main engine shapes). Each step has its own try: a missing table must
-    // not silently skip the remaining warmups.
-    def warm(f: => Unit): Unit = try f catch { case _: Throwable => }
+    // not skip the remaining warmups — but every failure is printed and
+    // counted in the summary, never swallowed.
+    var warmFailures = 0
+    var cleanupFailures = 0
+    def warm(f: => Unit): Unit =
+      try f catch { case scala.util.control.NonFatal(e) =>
+        warmFailures += 1
+        System.err.println(s"[bench] warm-up FAILED: $e")
+      }
     warm(GraftSession.forDir(spark, sfDir).sql("select count(*) as n from lineitem").count())
     warm {
       val docsSample = GraftSession.forDir(spark, sfDir).catalog.relation("documents").limit(50)
@@ -64,7 +72,10 @@ object Bench {
       // it is session hygiene, not query cost. Own try: a throwing forDir
       // must stay a per-query failure, not kill the run pre-JSON.
       try GraftSession.forDir(spark, sfDir).releaseOperatorCaches()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        cleanupFailures += 1
+        System.err.println(s"[bench] $name cleanup FAILED: $e")
+      }
       fallbacks(name) += CodegenGuard.current
       spills(name) += SpillGuard.current
       if (ok) dt else -dt
@@ -192,7 +203,7 @@ object Bench {
         .map { case (k, prior, now) =>
           s"${q(k)}:{\"prior\":${r3(prior)},\"now\":${r3(now)},\"ratio\":${r3(now / prior)}}" }
         .mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"subset":$isSubset,"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"codegen_fallback_total":$fbTotal,"codegen_fallbacks":$fbNonzero,"spill_bytes_total":$spTotal,"spill_bytes":$spNonzero,"regressions":$regJson,"spread":$allSpread,"queries":$qs,"sf":${q(sfDir)}}"""
+      val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"subset":$isSubset,"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"codegen_fallback_total":$fbTotal,"codegen_fallbacks":$fbNonzero,"spill_bytes_total":$spTotal,"spill_bytes":$spNonzero,"regressions":$regJson,"spread":$allSpread,"queries":$qs,"sf":${q(sfDir)}}"""
       // subset runs write a SEPARATE sidecar UNCONDITIONALLY (the env
       // override is honored only for full runs): a local profiling loop —
       // even one with a stale SPARK_GRAFT_BENCH_FULL in its shell — must
@@ -205,7 +216,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write the per-query sidecar: $e")
     }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"codegen_fallback_total":${fallbacks.values.sum},"spill_bytes_total":${spills.values.sum},"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"noisiest":$spreadJson,"queries":$slowest,"sf":${q(sfDir)}}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"codegen_fallback_total":${fallbacks.values.sum},"spill_bytes_total":${spills.values.sum},"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"noisiest":$spreadJson,"queries":$slowest,"sf":${q(sfDir)}}""")
     spark.stop()
   }
 }

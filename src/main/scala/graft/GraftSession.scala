@@ -553,34 +553,28 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
       graft.operators.Sampling.leakageSafeSplit(r, "text", "doc_id",
         testPercent = num("leakage_safe_split", args, 1, 10L).toInt)
     })
-    // ANN serving surface: ann_topk(queries, 'index_dir', k[, nprobe])
-    // — top-k cosine neighbors served from a persisted IVF index layout
-    // (Similarity.saveIvfIndex: centroids + bucket-partitioned corpus);
-    // the index path is the model-artifact literal, like bpe_tokenize's
-    // merge list. Missing layout is an eager dialect error.
-    catalog.registerTableFunction("ann_topk", { args =>
-      arity("ann_topk", args, 3, 4)
-      val q = rel("ann_topk", args, 0)
+    // ANN serving surface: <fn>(queries, 'model'|'dir', k[, …]) over a
+    // persisted index layout (graft.operators.IvfIndex). The string
+    // argument is a registered MODEL NAME first, a literal layout path
+    // second; a wrong-kind model or a dir without the kind's layout is
+    // an eager dialect error. Returns (queries, layout dir, k).
+    def annIndexArgs(fn: String, kind: String, maxArgs: Int,
+                     args: Seq[TfArg]): (DataFrame, String, Int) = {
+      arity(fn, args, 3, maxArgs)
+      val q = rel(fn, args, 0)
       Seq("vec_id", "embedding").foreach(c =>
-        reqCol("ann_topk", q, c, "query relation must follow the embeddings convention"))
-      // the string arg is a registered MODEL NAME first, a literal
-      // layout path second (model names are the cross-session contract;
-      // a wrong-kind model is an eager error, not a path fallback)
-      val dirArg = str("ann_topk", args, 1)
-      val dir = catalog.model(dirArg) match {
-        case Some(m) if m.kind == "ivf" => servable("ann_topk", dirArg, m)
-        case Some(m) => throw new graft.translate.GraftAnalysisException(
-          s"ann_topk: model '$dirArg' has kind '${m.kind}', expected 'ivf'")
-        case None => dirArg
+        reqCol(fn, q, c, "query relation must follow the embeddings convention"))
+      val dir = loadArtifact(fn, str(fn, args, 1), kind,
+        s"a ${annLayout(kind).get.label} index layout") { d =>
+        requireLayout(fn, "index layout", kind, d); d
       }
-      val centroidsPath = new org.apache.hadoop.fs.Path(dir, "centroids")
-      val fs = centroidsPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(centroidsPath))
-        throw new graft.translate.GraftAnalysisException(
-          s"ann_topk: no IVF index layout at '$dir' (expected a " +
-            "Similarity.saveIvfIndex output with centroids/ and corpus/)")
-      graft.operators.Similarity.ivfTopKIndexed(spark, dir, q,
-        k = num("ann_topk", args, 2, 8L).toInt,
+      (q, dir, num(fn, args, 2, 8L).toInt)
+    }
+    // ann_topk(queries, 'model'|'dir', k[, nprobe]) — IVF: float cosine
+    // over the probed bucket directories only
+    catalog.registerTableFunction("ann_topk", { args =>
+      val (q, dir, k) = annIndexArgs("ann_topk", "ivf", 4, args)
+      graft.operators.IvfIndex.topK(spark, dir, q, k,
         nprobe = num("ann_topk", args, 3, 4L).toInt)
     })
     // BPE tokenizer surface (text/doc_id corpus convention):
@@ -721,90 +715,32 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
             s"name, got $other")
       }
     })
-    // pq_topk(queries, 'model'|'dir', k[, shortlist]) — PQ ANN serve
-    // from a persisted savePqIndex layout: ADC over the compressed
-    // codes, exact re-rank of the shortlist against the layout's
-    // originals
+    // pq_topk(queries, 'model'|'dir', k[, shortlist]) — flat PQ: ADC
+    // over the compressed codes, exact re-rank of the shortlist against
+    // the layout's originals
     catalog.registerTableFunction("pq_topk", { args =>
-      arity("pq_topk", args, 3, 4)
-      val q = rel("pq_topk", args, 0)
-      Seq("vec_id", "embedding").foreach(c =>
-        reqCol("pq_topk", q, c, "query relation must follow the embeddings convention"))
-      val dirArg = str("pq_topk", args, 1)
-      val dir = catalog.model(dirArg) match {
-        case Some(m) if m.kind == "pq" => servable("pq_topk", dirArg, m)
-        case Some(m) => throw new graft.translate.GraftAnalysisException(
-          s"pq_topk: model '$dirArg' has kind '${m.kind}', expected 'pq'")
-        case None => dirArg
-      }
-      val cbPath = new org.apache.hadoop.fs.Path(dir, "codebooks")
-      val fs = cbPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(cbPath))
-        throw new graft.translate.GraftAnalysisException(
-          s"pq_topk: no PQ index layout at '$dir' (expected a " +
-            "Similarity.savePqIndex output with codebooks/, codes/, corpus/)")
-      val k = num("pq_topk", args, 2, 8L).toInt
+      val (q, dir, k) = annIndexArgs("pq_topk", "pq", 4, args)
       val shortlist = num("pq_topk", args, 3, math.max(50L, k.toLong)).toInt
-      graft.operators.Similarity.pqTopKIndexed(spark, dir, q, k,
+      graft.operators.IvfIndex.pqTopKIndexed(spark, dir, q, k,
         shortlist = math.max(shortlist, k))
     })
-    // ivfsq8_topk(queries, 'model'|'dir', k[, nprobe]) — coarse-bucket
-    // partition pruning over the int8-compressed tier (FAISS "IVF,SQ8"):
-    // only the probed bucket directories are scanned, scoring is
-    // scale-free integer-dot cosine, no re-rank tier
+    // ivfsq8_topk(queries, 'model'|'dir', k[, nprobe]) — IVF+SQ8 (FAISS
+    // "IVF,SQ8"): scale-free integer-dot cosine over the probed int8
+    // buckets, no re-rank tier
     catalog.registerTableFunction("ivfsq8_topk", { args =>
-      arity("ivfsq8_topk", args, 3, 4)
-      val q = rel("ivfsq8_topk", args, 0)
-      Seq("vec_id", "embedding").foreach(c =>
-        reqCol("ivfsq8_topk", q, c, "query relation must follow the embeddings convention"))
-      val dirArg = str("ivfsq8_topk", args, 1)
-      val dir = catalog.model(dirArg) match {
-        case Some(m) if m.kind == "ivfsq8" =>
-          servable("ivfsq8_topk", dirArg, m)
-        case Some(m) => throw new graft.translate.GraftAnalysisException(
-          s"ivfsq8_topk: model '$dirArg' has kind '${m.kind}', expected 'ivfsq8'")
-        case None => dirArg
-      }
-      val cenPath = new org.apache.hadoop.fs.Path(dir, "centroids")
-      val cdPath = new org.apache.hadoop.fs.Path(dir, "codes")
-      val fs = cenPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(cenPath) || !fs.exists(cdPath))
-        throw new graft.translate.GraftAnalysisException(
-          s"ivfsq8_topk: no IVF+SQ8 index layout at '$dir' (expected a " +
-            "Similarity.saveIvfSq8Index output with centroids/ and codes/)")
-      val k = num("ivfsq8_topk", args, 2, 8L).toInt
-      val nprobe = num("ivfsq8_topk", args, 3, 4L).toInt
-      graft.operators.Similarity.ivfSq8TopK(spark, dir, q, k, nprobe)
+      val (q, dir, k) = annIndexArgs("ivfsq8_topk", "ivfsq8", 4, args)
+      graft.operators.IvfIndex.topK(spark, dir, q, k,
+        nprobe = num("ivfsq8_topk", args, 3, 4L).toInt)
     })
-    // ivfpq_topk(queries, 'model'|'dir', k[, nprobe[, shortlist]]) — the
-    // composed serving path: coarse-bucket partition pruning (only the
-    // probed directories are scanned), ADC over the pruned codes, exact
-    // re-rank of the shortlist against the layout's originals
+    // ivfpq_topk(queries, 'model'|'dir', k[, nprobe[, shortlist]]) —
+    // IVF-PQ: ADC over the probed codes, exact re-rank of the shortlist
+    // against the same buckets' originals; residual layouts are
+    // detected from the layout's meta
     catalog.registerTableFunction("ivfpq_topk", { args =>
-      arity("ivfpq_topk", args, 3, 5)
-      val q = rel("ivfpq_topk", args, 0)
-      Seq("vec_id", "embedding").foreach(c =>
-        reqCol("ivfpq_topk", q, c, "query relation must follow the embeddings convention"))
-      val dirArg = str("ivfpq_topk", args, 1)
-      val dir = catalog.model(dirArg) match {
-        case Some(m) if m.kind == "ivfpq" =>
-          servable("ivfpq_topk", dirArg, m)
-        case Some(m) => throw new graft.translate.GraftAnalysisException(
-          s"ivfpq_topk: model '$dirArg' has kind '${m.kind}', expected 'ivfpq'")
-        case None => dirArg
-      }
-      val cbPath = new org.apache.hadoop.fs.Path(dir, "codebooks")
-      val cenPath = new org.apache.hadoop.fs.Path(dir, "centroids")
-      val fs = cbPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(cbPath) || !fs.exists(cenPath))
-        throw new graft.translate.GraftAnalysisException(
-          s"ivfpq_topk: no IVF-PQ index layout at '$dir' (expected a " +
-            "Similarity.saveIvfPqIndex output with centroids/, codebooks/, " +
-            "codes/, corpus/)")
-      val k = num("ivfpq_topk", args, 2, 8L).toInt
-      val nprobe = num("ivfpq_topk", args, 3, 4L).toInt
+      val (q, dir, k) = annIndexArgs("ivfpq_topk", "ivfpq", 5, args)
       val shortlist = num("ivfpq_topk", args, 4, math.max(50L, k.toLong)).toInt
-      graft.operators.Similarity.ivfPqTopK(spark, dir, q, k, nprobe,
+      graft.operators.IvfIndex.topK(spark, dir, q, k,
+        nprobe = num("ivfpq_topk", args, 3, 4L).toInt,
         shortlist = math.max(shortlist, k))
     })
     // bpe_encode(rel, 'e r,i n' | 'model_name'[, cap]) — the token-id
@@ -1057,48 +993,19 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
     case _ => false
   }
 
-  /** Content hash of a model artifact at registration time: md5 over the
-    * model-sized files (a BPE merge file; an IVF layout's centroids
-    * parquet — NOT its corpus, which is data, not model), part files in
-    * name order so the hash is layout-stable. */
   /** Eager model-artifact validation (a registration pointing at a
     * missing/torn artifact is a bug NOW, not at first use). Throws
     * [[GraftAnalysisException]] on an unknown kind or a layout that
     * does not match the kind's save contract. */
   private def validateModelArtifact(name: String, kind: String,
                                     path: String): Unit = kind match {
-    case "ivf" =>
-      val c = new org.apache.hadoop.fs.Path(path, "centroids")
-      val fs = c.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(c)) throw new GraftAnalysisException(
-        s"create model $name: no IVF layout at '$path' (expected a " +
-          "Similarity.saveIvfIndex output with centroids/ and corpus/)")
+    case k if annLayout(k).nonEmpty =>
+      requireLayout(s"create model $name", "layout", k, path)
     case "bpe" =>
       try { graft.operators.TextAnalysis.loadBpeMerges(spark, path); () }
       catch { case e: Exception => throw new GraftAnalysisException(
         s"create model $name: '$path' is not a BPE merge-list " +
           s"artifact (${e.getMessage})") }
-    case "pq" =>
-      val c = new org.apache.hadoop.fs.Path(path, "codebooks")
-      val fs = c.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(c)) throw new GraftAnalysisException(
-        s"create model $name: no PQ layout at '$path' (expected a " +
-          "Similarity.savePqIndex output with codebooks/, codes/, corpus/)")
-    case "ivfpq" =>
-      val cen = new org.apache.hadoop.fs.Path(path, "centroids")
-      val cb = new org.apache.hadoop.fs.Path(path, "codebooks")
-      val fs = cen.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(cen) || !fs.exists(cb)) throw new GraftAnalysisException(
-        s"create model $name: no IVF-PQ layout at '$path' (expected a " +
-          "Similarity.saveIvfPqIndex output with centroids/, codebooks/, " +
-          "codes/, corpus/)")
-    case "ivfsq8" =>
-      val cen = new org.apache.hadoop.fs.Path(path, "centroids")
-      val cd = new org.apache.hadoop.fs.Path(path, "codes")
-      val fs = cen.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(cen) || !fs.exists(cd)) throw new GraftAnalysisException(
-        s"create model $name: no IVF+SQ8 layout at '$path' (expected a " +
-          "Similarity.saveIvfSq8Index output with centroids/ and codes/)")
     case "unigram" =>
       try { graft.operators.TextAnalysis.loadUnigramVocab(spark, path); () }
       catch { case e: Exception => throw new GraftAnalysisException(
@@ -1135,6 +1042,24 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
         "spans, paragraphs, shingles)")
   }
 
+  /** The persisted ANN index layout a model kind names, if any. */
+  private def annLayout(kind: String): Option[graft.operators.IvfIndex.Layout] =
+    graft.operators.IvfIndex.layouts.find(_.kind == kind)
+
+  /** Throws `<prefix>: no <label> <noun> at '<dir>' (expected …)` unless
+    * `dir` holds the layout of ANN model kind `kind`. */
+  private def requireLayout(prefix: String, noun: String, kind: String,
+                            dir: String): Unit = {
+    val l = annLayout(kind).get
+    if (!graft.operators.IvfIndex.layoutAt(spark, dir).contains(l))
+      throw new GraftAnalysisException(
+        s"$prefix: no ${l.label} $noun at '$dir' (${l.expected})")
+  }
+
+  /** Content hash of a model artifact at registration time: md5 over the
+    * model-sized files (a BPE merge file; an index layout's model
+    * directories — NOT its data), part files in name order so the hash
+    * is layout-stable. */
   private def artifactHash(kind: String, path: String): String = {
     val conf = spark.sessionState.newHadoopConf()
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -1154,13 +1079,8 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
         } finally in.close()
       }
     }
-    val modelParts = kind match {
-      case "ivf"   => Seq(s"$path/centroids") // not the corpus: hash the MODEL
-      case "pq"    => Seq(s"$path/codebooks")
-      case "ivfpq" => Seq(s"$path/centroids", s"$path/codebooks")
-      case "ivfsq8" => Seq(s"$path/centroids") // the model is the coarse quantizer; codes are data
-      case _       => Seq(path)
-    }
+    val modelParts =
+      annLayout(kind).fold(Seq(path))(_.modelDirs.map(d => s"$path/$d"))
     modelParts.foreach(p => feed(new org.apache.hadoop.fs.Path(p)))
     md.digest().map("%02x".format(_)).mkString
   }

@@ -896,7 +896,7 @@ object SparkEntry {
         .map { case (a, b) => s"$a $b" }.mkString(",") +
       "', 12) group by id order by id")),
     // ---- q115: PQ ANN serve reached FROM SQL via a REGISTERED MODEL
-    // NAME — build the savePqIndex layout, CREATE MODEL it, serve with
+    // NAME — build the flat PQ layout, CREATE MODEL it, serve with
     // pq_topk and assert exact parity with the operator API (recall
     // itself is x99's job; this pins the SQL/model-resolution path) ----
     "q115_pq_topk_fn" -> ((s, d) => {
@@ -916,7 +916,7 @@ object SparkEntry {
         "select qid, vec_id, cos from pq_topk(q115_q, 'q115_pq', 5, 50) " +
         "order by qid, cos desc, vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaApi = graft.operators.Similarity.pqTopKIndexed(s, dir,
+      val viaApi = graft.operators.IvfIndex.pqTopKIndexed(s, dir,
           embT.where(org.apache.spark.sql.functions.col("vec_id") < 5),
           k = 5, shortlist = 50)
         .orderBy(org.apache.spark.sql.functions.col("qid"),
@@ -941,7 +941,8 @@ object SparkEntry {
       import s.implicits._
       val e = g(s, d)
       val embT = e.catalog.relation("embeddings")
-      val dir = graft.operators.Extensions.ivfSq8IndexFixture(s, d)
+      val dir = graft.operators.Extensions.ivfIndexFixture(s, d,
+        graft.operators.IvfIndex.Sq8)
       e.sql("drop model if exists q133_ivfsq8")
       e.sql("drop table if exists q133_q")
       e.sql(s"create model q133_ivfsq8 kind 'ivfsq8' at '$dir'")
@@ -950,7 +951,7 @@ object SparkEntry {
         "select qid, vec_id, cos from ivfsq8_topk(q133_q, 'q133_ivfsq8', 5, 4) " +
         "order by qid, cos desc, vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaApi = graft.operators.Similarity.ivfSq8TopK(s, dir,
+      val viaApi = graft.operators.IvfIndex.topK(s, dir,
           embT.where(org.apache.spark.sql.functions.col("vec_id") < 5),
           k = 5, nprobe = 4)
         .orderBy(org.apache.spark.sql.functions.col("qid"),
@@ -965,7 +966,8 @@ object SparkEntry {
       import s.implicits._
       val e = g(s, d)
       val embT = e.catalog.relation("embeddings")
-      val dir = graft.operators.Extensions.ivfPqResidualIndexFixture(s, d)
+      val dir = graft.operators.Extensions.ivfIndexFixture(s, d,
+        graft.operators.IvfIndex.Pq(residual = true))
       e.sql("drop model if exists q128_ivfpq")
       e.sql("drop table if exists q128_q")
       e.sql(s"create model q128_ivfpq kind 'ivfpq' at '$dir'")
@@ -974,7 +976,7 @@ object SparkEntry {
         "select qid, vec_id, cos from ivfpq_topk(q128_q, 'q128_ivfpq', 5, 4, 50) " +
         "order by qid, cos desc, vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaApi = graft.operators.Similarity.ivfPqTopK(s, dir,
+      val viaApi = graft.operators.IvfIndex.topK(s, dir,
           embT.where(org.apache.spark.sql.functions.col("vec_id") < 5),
           k = 5, nprobe = 4, shortlist = 50)
         .orderBy(org.apache.spark.sql.functions.col("qid"),
@@ -989,7 +991,8 @@ object SparkEntry {
       import s.implicits._
       val e = g(s, d)
       val embT = e.catalog.relation("embeddings")
-      val dir = graft.operators.Extensions.ivfPqIndexFixture(s, d)
+      val dir = graft.operators.Extensions.ivfIndexFixture(s, d,
+        graft.operators.IvfIndex.Pq())
       e.sql("drop model if exists q116_ivfpq")
       e.sql("drop table if exists q116_q")
       e.sql(s"create model q116_ivfpq kind 'ivfpq' at '$dir'")
@@ -998,7 +1001,7 @@ object SparkEntry {
         "select qid, vec_id, cos from ivfpq_topk(q116_q, 'q116_ivfpq', 5, 4, 50) " +
         "order by qid, cos desc, vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaApi = graft.operators.Similarity.ivfPqTopK(s, dir,
+      val viaApi = graft.operators.IvfIndex.topK(s, dir,
           embT.where(org.apache.spark.sql.functions.col("vec_id") < 5),
           k = 5, nprobe = 4, shortlist = 50)
         .orderBy(org.apache.spark.sql.functions.col("qid"),

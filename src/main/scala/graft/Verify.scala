@@ -7,7 +7,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, s"usage: Verify <sfDir> <outDir> (got ${args.length} args)")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -29,6 +30,7 @@ object Verify {
         System.err.println(s"[verify] *** SUBSET RUN: ${sub.size}/${SparkEntry.queries.size} queries ***")
         sub
     }
+    var cleanupFailures = 0
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -53,8 +55,13 @@ object Verify {
       // forDir (e.g. corrupt table file) must stay a PER-QUERY failure,
       // not abort the run before later gates and oracle_sql.json
       try GraftSession.forDir(spark, sfDir).releaseOperatorCaches()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        cleanupFailures += 1
+        System.err.println(s"[verify] $name cleanup FAILED: $e")
+      }
     }
+    if (cleanupFailures > 0)
+      System.err.println(s"[verify] $cleanupFailures post-gate cleanup failure(s)")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -827,14 +827,33 @@ object Dedup {
     * doc-frequency aggregation. Output identical by construction
     * ([[exciseSharedSpans]] delegates here). */
   def exciseSharedSpansWith(df: DataFrame, textCol: String, idCol: String,
-                            hotSet: DataFrame, spanWords: Int = 8): DataFrame =
-    // r16 opt (guide §1.2 per-task work): the excision itself is the
-    // [[applySpanExcision]] broadcast-probe kernel — the former
-    // explode + semi-join + per-doc window re-hashed every gram a second
-    // time after training already had. Output identical by the x88
-    // parity contract (stream apply ≡ batch excision), now also by
-    // construction (one shared code path).
-    applySpanExcision(Par.widen(df, idCol), textCol, idCol, hotSet, spanWords)
+                            hotSet: DataFrame, spanWords: Int = 8): DataFrame = {
+    // the hot set is corpus-derived, so the batch path flags grams with
+    // a partitioned semi-join — never a broadcast of the whole set (the
+    // streaming [[applySpanExcision]] broadcasts a model-sized one)
+    require(spanWords >= 2, "spanWords must be >= 2")
+    val L = spanWords
+    val base = spanBase(df, textCol, idCol)
+    val grams = spanGrams(base, L)
+    val hot = hotSet.select(hotSet(hotSet.columns.head).as("__gh"))
+    val flagged = grams.join(hot, Seq("__gh"), "left_semi")
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(col("__p"))).as("__flags"))
+    // Spark's sequence(1, 0) DESCENDS rather than returning empty — guard
+    // the zero-word doc (blank text) explicitly
+    val pos = when(size(col("__ws")) === 0, array().cast("array<int>"))
+      .otherwise(sequence(lit(1), size(col("__ws"))))
+    base.join(flagged, Seq("id"), "left")
+      .withColumn("__flags",
+        coalesce(col("__flags"), array().cast("array<int>")))
+      .withColumn("__kept",
+        filter(pos, p => !exists(col("__flags"), q => q <= p && p < q + L)))
+      .select(col("id"),
+        size(col("__ws")).cast("long").as("n_words"),
+        (size(col("__ws")) - size(col("__kept"))).cast("long").as("n_removed"),
+        array_join(transform(col("__kept"), p => element_at(col("__ws"), p)), " ")
+          .as("cleaned"))
+  }
 
   /** Apply a precomputed hot-span set ([[hotSpans]]) PER ROW — no
     * explode, no grouping, no state: the hot hashes collapse to one

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-gate wiring for the M4 extension operators (SURVEY §7.2):
@@ -128,38 +128,84 @@ object Extensions {
       dir
     })
 
-  /** Shared saveIvfIndex layout (nlist 16, iters 2) over the dir's
-    * embeddings — the x90/x91 serve layout. */
-  private[graft] def ivfIndexFixture(s: SparkSession, d: String): String =
-    fixture(s"ivf:$d")(dir =>
-      Similarity.saveIvfIndex(emb(s, d), dir, nlist = 16, iters = 2))
+  /** Shared IVF layouts (nlist 16, iters 2) over the dir's embeddings:
+    * Flat for x90/x91, Pq(16, 32) for x101/q116, its residual twin for
+    * x113/q128 (identical parameters, so x113's residual-vs-raw recall
+    * comparison isolates the encoding), Sq8 for x117/q133. */
+  private[graft] def ivfIndexFixture(s: SparkSession, d: String,
+                                     codec: IvfIndex.Codec = IvfIndex.Flat): String =
+    fixture(s"$codec:$d")(dir =>
+      IvfIndex.save(emb(s, d), dir, codec, nlist = 16, iters = 2))
 
-  /** Shared savePqIndex layout (m 16, k 16, iters 1) — the q115 serve
+  /** Query batches stream in; each micro-batch is served from the shared
+    * `codec` layout (per-batch literal probe-bucket pruning: only the
+    * probed bucket directories are read) and published exactly-once via
+    * the x83 idempotent sink. Committed output ≡ one batch serve of the
+    * same queries (top-k is per qid, so micro-batch boundaries cannot
+    * change any result). */
+  private def annServeStream(s: SparkSession, d: String, gate: String,
+                             codec: IvfIndex.Codec): DataFrame = {
+    import s.implicits._
+    val dir = ivfIndexFixture(s, d, codec) // read-only here
+    val queries = emb(s, d).localCheckpoint().where(col("vec_id") < 40)
+      .select("vec_id", "embedding").localCheckpoint()
+    val serve = (b: DataFrame) =>
+      IvfIndex.topK(s, dir, b, k = 5, nprobe = 4, shortlist = 25)
+    val batchOut = serve(queries).localCheckpoint()
+    val srcDir = tempDir(s"${gate}_src_")
+    val outDir = tempDir(s"${gate}_out_")
+    val ckpt = tempDir(s"${gate}_ckpt_")
+    queries.repartition(4).write.mode("overwrite").parquet(srcDir)
+    val in = s.readStream.schema(queries.schema)
+      .option("maxFilesPerTrigger", "2").parquet(srcDir) // ≥2 micro-batches
+    val q = graft.streaming.Sinks.idempotentServe(in, outDir, ckpt, serve)
+    try q.awaitTermination() finally { q.stop(); () }
+    graft.streaming.Sinks.awaitDeregistered(q)
+    val got = graft.streaming.Sinks.readCommitted(s, outDir)
+    val (_, eq) = parityOneAction(got, batchOut)
+    Seq((queries.count(), if (eq) 1 else 0))
+      .toDF("n_queries", "stream_matches_batch")
+  }
+
+  /** The index lifecycle on one codec: append-without-retrain drifts the
+    * model; the recall audit on a FIXED probe set detects it and triggers
+    * a blue/green rebuild. Drift is manufactured deterministically: the
+    * index trains on vec_id < 250, then the `appendedIds` rows arrive
+    * SIGN-MASKED (one fixed ±1 pattern — decorrelated from every trained
+    * centroid and codebook, so the appended vectors scatter across
+    * buckets and probe recall on them collapses). After the rebuild the
+    * retrained model covers the mirrored clusters and recall recovers.
+    * Flags oracle (recall values are engine-exact but not
+    * ANSI-recomputable): the fixed query count is DuckDB-recomputed,
+    * drift/retrain/recovery are pinned. */
+  private def annLifecycle(s: SparkSession, d: String, gate: String,
+                           codec: IvfIndex.Codec, appendedIds: Column): DataFrame = {
+    import s.implicits._
+    val e = emb(s, d).localCheckpoint()
+    val mask = (v: Column) =>
+      transform(v, (x, j) => when(pmod(hash(lit("drift"), j), lit(2)) === 0, x)
+        .otherwise(-x))
+    val dir = tempDir(s"${gate}_idx_")
+    val rebuildDir = tempDir(s"${gate}_idx_v2_")
+    IvfIndex.save(e.where(col("vec_id") < 250), dir, codec, nlist = 8, iters = 2)
+    val appended = e.where(appendedIds)
+      .select(col("vec_id"), mask(col("embedding")).as("embedding"))
+      .localCheckpoint()
+    IvfIndex.append(appended, dir)
+    val queries = appended.where(col("vec_id") < 290) // fixed 40-probe set
+    val report = IvfIndex.refreshIfDrifted(s, dir, rebuildDir,
+      queries, k = 10, nprobe = 2, minRecall = 0.9, nlist = 8, iters = 2)
+      .head()
+    Seq((queries.count(), report.getInt(2), report.getInt(3),
+        if (report.getDouble(4) > report.getDouble(1)) 1 else 0))
+      .toDF("n_queries", "drifted", "retrained", "recall_recovered")
+  }
+
+  /** Shared flat PQ layout (m 16, k 16, iters 1) — the q115 serve
     * layout. */
   private[graft] def pqIndexFixture(s: SparkSession, d: String): String =
     fixture(s"pq:$d")(dir =>
-      Similarity.savePqIndex(emb(s, d), dir, m = 16, k = 16, iters = 1))
-
-  /** Shared saveIvfPqIndex layout (nlist 16, m 16, k 32, iters 2) — the
-    * composed x101/q116 serve layout. */
-  private[graft] def ivfPqIndexFixture(s: SparkSession, d: String): String =
-    fixture(s"ivfpq:$d")(dir =>
-      Similarity.saveIvfPqIndex(emb(s, d), dir, nlist = 16, m = 16, k = 32,
-        iters = 2))
-
-  /** Shared RESIDUAL saveIvfPqIndex layout — identical parameters to the
-    * raw fixture so x113's residual-vs-raw recall comparison isolates
-    * the encoding, not the configuration. */
-  private[graft] def ivfPqResidualIndexFixture(s: SparkSession, d: String): String =
-    fixture(s"ivfpqres:$d")(dir =>
-      Similarity.saveIvfPqIndex(emb(s, d), dir, nlist = 16, m = 16, k = 32,
-        iters = 2, residual = true))
-
-  /** Shared saveIvfSq8Index layout (nlist 16, iters 2) — the x117/q133
-    * IVF+SQ8 serve layout. */
-  private[graft] def ivfSq8IndexFixture(s: SparkSession, d: String): String =
-    fixture(s"ivfsq8:$d")(dir =>
-      Similarity.saveIvfSq8Index(emb(s, d), dir, nlist = 16, iters = 2))
+      IvfIndex.savePqIndex(emb(s, d), dir, m = 16, k = 16, iters = 1))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- dedup ----
@@ -1064,9 +1110,9 @@ object Extensions {
       // determinism itself is the spec's loaded≡retrained assert) —
       // the gate isolates the layout + serve path; the layout is the
       // shared fixture (r11): identical bytes to a per-gate build
-      val centroids = Similarity.loadIvfCentroids(s, dir)
-      val fresh = Similarity.ivfTopKWith(e, q, k = 5, centroids, nprobe = 4)
-      val served = Similarity.ivfTopKIndexed(s, dir, q, k = 5, nprobe = 4)
+      val model = IvfIndex.load(s, dir)
+      val fresh = IvfIndex.topKWith(e, q, k = 5, model, nprobe = 4)
+      val served = IvfIndex.topK(s, dir, q, k = 5, nprobe = 4)
       // one fused action (parityOneAction); served/fresh are top-k frames
       // (dup-free by construction), so set equality ⇒ the count equality
       // the fused check also asserts
@@ -1077,7 +1123,7 @@ object Extensions {
       // than the layout holds (16 buckets; if the probe set ever covered
       // all of them the flag fails loudly instead of passing vacuously)
       val corpus = s.read.parquet(s"$dir/corpus")
-      val needed = Similarity.probeBuckets(q, centroids, nprobe = 4)
+      val needed = Similarity.probeBuckets(q, model.centroids, nprobe = 4)
       val pruned = filesScanned(
         corpus.where(col("c").isin(needed.map(Int.box): _*))) <
         corpus.inputFiles.length
@@ -1092,159 +1138,26 @@ object Extensions {
     "x92_leakage_safe_split" -> ((s, d) =>
       Sampling.leakageSafeSplit(docs(s, d), "text", "doc_id", testPercent = 10)
         .orderBy("id")),
-    // streaming ANN serve (r9): the production retrieval pipeline E2E —
-    // query batches stream in, each micro-batch is served from the
-    // PERSISTED x90 index (per-batch literal probe-bucket pruning) and
-    // published exactly-once via the x83 idempotent sink; committed
-    // output ≡ the batch serve of the same query set (top-k is per-qid,
-    // so micro-batch boundaries cannot change any result)
-    "x91_ann_serve_stream" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d).localCheckpoint()
-      val dir = ivfIndexFixture(s, d) // shared x90 layout (read-only here)
-      val queries = e.where(col("vec_id") < 40)
-        .select("vec_id", "embedding").localCheckpoint()
-      val batchOut = Similarity.ivfTopKIndexed(s, dir, queries, k = 5, nprobe = 4)
-        .localCheckpoint()
-      val srcDir = tempDir("x91_src_")
-      val outDir = tempDir("x91_out_")
-      val ckpt = tempDir("x91_ckpt_")
-      queries.repartition(4).write.mode("overwrite").parquet(srcDir)
-      val in = s.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir) // ≥2 micro-batches
-      val q = graft.streaming.Sinks.idempotentServe(in, outDir, ckpt,
-        b => Similarity.ivfTopKIndexed(s, dir, b, k = 5, nprobe = 4))
-      try q.awaitTermination() finally { q.stop(); () }
-      graft.streaming.Sinks.awaitDeregistered(q)
-      val got = graft.streaming.Sinks.readCommitted(s, outDir)
-      val (_, eq) = parityOneAction(got, batchOut)
-      Seq((queries.count(), if (eq) 1 else 0))
-        .toDF("n_queries", "stream_matches_batch")
-    }),
-    // ---- streaming IVF-PQ serving (r11): the composed x101 architecture
-    // (bucket-pruned ADC shortlist + exact re-rank from the same pruned
-    // buckets) behind the SAME exactly-once idempotent serve used for the
-    // plain-IVF x91 — per micro-batch of queries, only the probed bucket
-    // directories of codes/corpus are read. Parity: streamed micro-batch
-    // results ≡ one batch ivfPqTopK over all queries (both engine-side
-    // deterministic; per-query results depend only on the query row) ----
-    "x103_ivfpq_serve_stream" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d).localCheckpoint()
-      val dir = ivfPqIndexFixture(s, d) // shared x101 layout (read-only)
-      val queries = e.where(col("vec_id") < 40)
-        .select("vec_id", "embedding").localCheckpoint()
-      val batchOut = Similarity.ivfPqTopK(s, dir, queries, k = 5,
-        nprobe = 4, shortlist = 25).localCheckpoint()
-      val srcDir = tempDir("x103_src_")
-      val outDir = tempDir("x103_out_")
-      val ckpt = tempDir("x103_ckpt_")
-      queries.repartition(4).write.mode("overwrite").parquet(srcDir)
-      val in = s.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir) // ≥2 micro-batches
-      val q = graft.streaming.Sinks.idempotentServe(in, outDir, ckpt,
-        b => Similarity.ivfPqTopK(s, dir, b, k = 5, nprobe = 4, shortlist = 25))
-      try q.awaitTermination() finally { q.stop(); () }
-      graft.streaming.Sinks.awaitDeregistered(q)
-      val got = graft.streaming.Sinks.readCommitted(s, outDir)
-      val (_, eq) = parityOneAction(got, batchOut)
-      Seq((queries.count(), if (eq) 1 else 0))
-        .toDF("n_queries", "stream_matches_batch")
-    }),
-    // ---- streaming IVF+SQ8 serve (r12): the x117 composed serve on a
-    // query STREAM behind the exactly-once idempotent sink — per
-    // micro-batch only the probed bucket directories of int8 codes are
-    // read (the x103 discipline on the SQ8 tier) ----
-    "x120_ivfsq8_serve_stream" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d).localCheckpoint()
-      val dir = ivfSq8IndexFixture(s, d) // shared x117/q133 layout (read-only)
-      val queries = e.where(col("vec_id") < 40)
-        .select("vec_id", "embedding").localCheckpoint()
-      val batchOut = Similarity.ivfSq8TopK(s, dir, queries, k = 5, nprobe = 4)
-        .localCheckpoint()
-      val srcDir = tempDir("x120_src_")
-      val outDir = tempDir("x120_out_")
-      val ckpt = tempDir("x120_ckpt_")
-      queries.repartition(4).write.mode("overwrite").parquet(srcDir)
-      val in = s.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir) // ≥2 micro-batches
-      val q = graft.streaming.Sinks.idempotentServe(in, outDir, ckpt,
-        b => Similarity.ivfSq8TopK(s, dir, b, k = 5, nprobe = 4))
-      try q.awaitTermination() finally { q.stop(); () }
-      graft.streaming.Sinks.awaitDeregistered(q)
-      val got = graft.streaming.Sinks.readCommitted(s, outDir)
-      val (_, eq) = parityOneAction(got, batchOut)
-      Seq((queries.count(), if (eq) 1 else 0))
-        .toDF("n_queries", "stream_matches_batch")
-    }),
-    // ---- IVF index lifecycle (r10): append-without-retrain drifts the
-    // coarse quantizer; the recall audit on a FIXED probe set detects it
-    // and triggers a blue/green rebuild. Drift is manufactured
-    // deterministically: the index trains on the first half of the
-    // corpus, then the second half arrives SIGN-MASKED (one fixed ±1
-    // pattern — decorrelated from every trained centroid, so the
-    // appended vectors scatter across buckets and probe recall on them
-    // collapses). After the rebuild the retrained centroids cover the
-    // mirrored clusters and recall recovers. Flags oracle (recall values
-    // are engine-exact but not ANSI-recomputable): the fixed query count
-    // is DuckDB-recomputed, drift/retrain/recovery are pinned. ----
-    "x96_ivf_lifecycle" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d).localCheckpoint()
-      val mask = (v: org.apache.spark.sql.Column) =>
-        transform(v, (x, j) => when(pmod(hash(lit("drift"), j), lit(2)) === 0, x)
-          .otherwise(-x))
-      val dir = tempDir("x96_idx_")
-      val rebuildDir = tempDir("x96_idx_v2_")
-      Similarity.saveIvfIndex(e.where(col("vec_id") < 250), dir,
-        nlist = 8, iters = 2)
-      val appended = e.where(col("vec_id") >= 250)
-        .select(col("vec_id"), mask(col("embedding")).as("embedding"))
-        .localCheckpoint()
-      Similarity.appendToIvfIndex(appended, dir)
-      val queries = appended.where(col("vec_id") < 290) // fixed 40-probe set
-      val report = Similarity.refreshIvfIndexIfDrifted(s, dir, rebuildDir,
-        queries, k = 10, nprobe = 2, minRecall = 0.9, nlist = 8, iters = 2)
-        .head()
-      Seq((queries.count(), report.getInt(2), report.getInt(3),
-          if (report.getDouble(4) > report.getDouble(1)) 1 else 0))
-        .toDF("n_queries", "drifted", "retrained", "recall_recovered")
-    }),
-    // ---- IVF-PQ index lifecycle (r11): the x96 drift story on the
-    // COMPOSED index — append-without-retrain encodes new vectors with
-    // BOTH persisted quantizers (coarse centroids + PQ codebooks); the
-    // sign-masked drift batch decorrelates from both, the fixed-probe
-    // recall audit detects it, and the blue/green rebuild retrains both
-    // quantizers into a NEW directory. Same flags-oracle form as x96 ----
-    "x107_ivfpq_lifecycle" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d).localCheckpoint()
-      val mask = (v: org.apache.spark.sql.Column) =>
-        transform(v, (x, j) => when(pmod(hash(lit("drift"), j), lit(2)) === 0, x)
-          .otherwise(-x))
-      val dir = tempDir("x107_idx_")
-      val rebuildDir = tempDir("x107_idx_v2_")
-      // BOUNDED drift batch ([250, 750) — constant at any sf): the
-      // lifecycle flags are the assertion here; composed-index THROUGHPUT
-      // is x99/x101/x103's axis, so this gate must not retrain a
-      // corpus-sized PQ per bench run (22s at sf0.1, 109s at sf10 when it
-      // appended everything)
-      Similarity.saveIvfPqIndex(e.where(col("vec_id") < 250), dir,
-        nlist = 8, m = 8, k = 16, iters = 2)
-      val appended = e.where(col("vec_id") >= 250 && col("vec_id") < 750)
-        .select(col("vec_id"), mask(col("embedding")).as("embedding"))
-        .localCheckpoint()
-      Similarity.appendToIvfPqIndex(appended, dir)
-      val queries = appended.where(col("vec_id") < 290) // fixed 40-probe set
-      val report = Similarity.refreshIvfPqIndexIfDrifted(s, dir, rebuildDir,
-        queries, k = 10, nprobe = 2, shortlist = 50, minRecall = 0.9,
-        nlist = 8, m = 8, kSub = 16, iters = 2)
-        .head()
-      Seq((queries.count(), report.getInt(2), report.getInt(3),
-          if (report.getDouble(4) > report.getDouble(1)) 1 else 0))
-        .toDF("n_queries", "drifted", "retrained", "recall_recovered")
-    }),
+    // streaming ANN serve: the production retrieval pipeline E2E, one
+    // gate per codec over the shared x90 / x101 / x117 layouts (see
+    // annServeStream) — Flat (r9), IVF-PQ's pruned ADC shortlist + exact
+    // re-rank (r11), IVF+SQ8's int8 buckets (r12)
+    "x91_ann_serve_stream" -> ((s, d) => annServeStream(s, d, "x91", IvfIndex.Flat)),
+    "x103_ivfpq_serve_stream" -> ((s, d) =>
+      annServeStream(s, d, "x103", IvfIndex.Pq())),
+    "x120_ivfsq8_serve_stream" -> ((s, d) =>
+      annServeStream(s, d, "x120", IvfIndex.Sq8)),
+    // ---- IVF index lifecycle (r10 Flat, r11 IVF-PQ; see annLifecycle).
+    // x107's drift batch is BOUNDED ([250, 750) — constant at any sf):
+    // the lifecycle flags are the assertion; composed-index THROUGHPUT is
+    // x99/x101/x103's axis, so this gate must not retrain a corpus-sized
+    // PQ per bench run (22s at sf0.1, 109s at sf10 when it appended
+    // everything) ----
+    "x96_ivf_lifecycle" -> ((s, d) =>
+      annLifecycle(s, d, "x96", IvfIndex.Flat, col("vec_id") >= 250)),
+    "x107_ivfpq_lifecycle" -> ((s, d) =>
+      annLifecycle(s, d, "x107", IvfIndex.Pq(m = 8, k = 16),
+        col("vec_id") >= 250 && col("vec_id") < 750)),
     // ---- product quantization (r10, Jégou et al. 2011): the
     // memory-compressed ANN complement of IVF — 16 subspaces × 32
     // sub-centroids = 16× compression of the 64-dim corpus; the raw ADC
@@ -1289,16 +1202,16 @@ object Extensions {
       import s.implicits._
       val e = emb(s, d).localCheckpoint()
       val q = e.where(col("vec_id") < 10)
-      val dirRes = ivfPqResidualIndexFixture(s, d)
-      val dirRaw = ivfPqIndexFixture(s, d)
+      val dirRes = ivfIndexFixture(s, d, IvfIndex.Pq(residual = true))
+      val dirRaw = ivfIndexFixture(s, d, IvfIndex.Pq())
       val truth = Similarity.bruteForceTopK(e, q, k = 10).localCheckpoint()
       def recall(dir: String): Double = Similarity.annRecall(
-        Similarity.ivfPqTopK(s, dir, q, k = 10, nprobe = 4, shortlist = 50),
+        IvfIndex.topK(s, dir, q, k = 10, nprobe = 4, shortlist = 50),
         truth).head().getDouble(1)
       val rRes = recall(dirRes)
       val rRaw = recall(dirRaw)
-      val centroids = Similarity.loadIvfCentroids(s, dirRes)
-      val needed = Similarity.probeBuckets(q, centroids, nprobe = 4)
+      val resModel = IvfIndex.load(s, dirRes)
+      val needed = Similarity.probeBuckets(q, resModel.centroids, nprobe = 4)
       val codes = s.read.parquet(s"$dirRes/codes")
       val pruned = filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
@@ -1307,7 +1220,7 @@ object Extensions {
           if (rRes >= 0.6) 1 else 0,
           if (rRes >= rRaw) 1 else 0,
           if (pruned) 1 else 0,
-          if (Similarity.loadIvfPqResidualFlag(s, dirRes)) 1 else 0))
+          if (resModel.codec == IvfIndex.Pq(residual = true)) 1 else 0))
         .toDF("n_queries", "recall_ok", "residual_ge_raw", "scan_pruned",
           "meta_residual")
     }),
@@ -1315,21 +1228,20 @@ object Extensions {
       import s.implicits._
       val e = emb(s, d).localCheckpoint()
       val q = e.where(col("vec_id") < 10)
-      val dir = ivfPqIndexFixture(s, d)
-      val served = Similarity.ivfPqTopK(s, dir, q, k = 10, nprobe = 4,
+      val dir = ivfIndexFixture(s, d, IvfIndex.Pq())
+      val served = IvfIndex.topK(s, dir, q, k = 10, nprobe = 4,
         shortlist = 50).localCheckpoint()
-      val codebooks = Similarity.loadPqCodebooks(s, dir)
+      val model = IvfIndex.load(s, dir)
       val codes = s.read.parquet(s"$dir/codes")
       val flat = Similarity.pqTopKRerank(
-        codes.select(col("vec_id"), col("code")), codebooks,
+        codes.select(col("vec_id"), col("code")), model.codebooks,
         s.read.parquet(s"$dir/corpus")
           .select(col("vec_id"), col("v").as("embedding")),
         q, k = 10, shortlist = 50)
       val vsFlat = Similarity.annRecall(served, flat).head()
       val vsTruth = Similarity.annRecall(served,
         Similarity.bruteForceTopK(e, q, k = 10)).head()
-      val centroids = Similarity.loadIvfCentroids(s, dir)
-      val needed = Similarity.probeBuckets(q, centroids, nprobe = 4)
+      val needed = Similarity.probeBuckets(q, model.centroids, nprobe = 4)
       val pruned = filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
         codes.inputFiles.length
@@ -1351,11 +1263,11 @@ object Extensions {
       import s.implicits._
       val e = emb(s, d).localCheckpoint()
       val q = e.where(col("vec_id") < 10)
-      val dir = ivfSq8IndexFixture(s, d)
-      val served = Similarity.ivfSq8TopK(s, dir, q, k = 5, nprobe = 4)
+      val dir = ivfIndexFixture(s, d, IvfIndex.Sq8)
+      val served = IvfIndex.topK(s, dir, q, k = 5, nprobe = 4)
         .localCheckpoint()
-      val centroids = Similarity.loadIvfCentroids(s, dir)
-      val flat = Similarity.ivfSq8TopKWith(e, q, k = 5, centroids, nprobe = 4)
+      val model = IvfIndex.load(s, dir)
+      val flat = IvfIndex.topKWith(e, q, k = 5, model, nprobe = 4)
       // fused one-action parity (top-k frames are dup-free, so the set
       // equality the old except pair asserted implies the count equality
       // the fused check adds)
@@ -1363,7 +1275,7 @@ object Extensions {
       val vsTruth = Similarity.annRecall(served,
         Similarity.bruteForceTopK(e, q, k = 5)).head()
       val codes = s.read.parquet(s"$dir/codes")
-      val needed = Similarity.probeBuckets(q, centroids, nprobe = 4)
+      val needed = Similarity.probeBuckets(q, model.centroids, nprobe = 4)
       val pruned = filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
         codes.inputFiles.length
@@ -2755,7 +2667,7 @@ object Extensions {
         "SELECT count(*) AS n_queries, CAST(1 AS INTEGER) AS stream_matches_batch " +
         "FROM embeddings WHERE vec_id < 40"),
       // x103: same parity-flag form — the streamed IVF-PQ serve must
-      // equal the batch ivfPqTopK result exactly
+      // equal the batch IvfIndex.topK result exactly
       "x103_ivfpq_serve_stream" -> (
         "SELECT count(*) AS n_queries, CAST(1 AS INTEGER) AS stream_matches_batch " +
         "FROM embeddings WHERE vec_id < 40"),

@@ -253,146 +253,9 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
               vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    ivfTopKWith(corpus, queries, k,
-      trainIvfCentroids(corpus, nlist, iters, vecCol, idCol), nprobe, vecCol, idCol)
-
-  /** [[ivfTopK]] against an ALREADY-TRAINED centroid model (yours, or
-    * [[loadIvfCentroids]]'): assignment + probing without retraining. */
-  def ivfTopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
-                  centroids: Array[Array[Double]], nprobe: Int = 4,
-                  vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val indexed = Par.widen(corpus, idCol).select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-      nearestCentroid(col(vecCol), centroids).as("c"))
-    val probes = broadcast(queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        explode(probeCentroids(col(vecCol), centroids, nprobe)).as("c")))
-    val scored = indexed.join(probes, "c").where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"), round(cosine(col("v"), col("qv")), 4).as("cos"))
-    topKPerGroup(scored, k)
-  }
-
-  /** Persist an IVF index — the "write once, probe many" layout the
-    * serving path needs at 100 TB: centroids (nlist×dim, model-sized) in
-    * `dir/centroids`, the corpus assigned and PARTITIONED BY its bucket
-    * in `dir/corpus`. Training is [[trainIvfCentroids]] (deterministic),
-    * so an index built twice from the same corpus is identical, and
-    * [[ivfTopKIndexed]] over the saved layout returns EXACTLY what
-    * [[ivfTopK]] computes fresh — gated by x90. The bucket directories
-    * are what make serving cheap: a query batch touching `nprobe` of
-    * `nlist` buckets scans only those directories (static partition
-    * pruning, asserted in the spec via `inputFiles`). */
-  /** Auto-sized bucket count (SCALE.md production rule): `nlist = 0`
-    * resolves to ceil(√n) — one cheap count() aggregate — so a save path
-    * sized for 10⁶ vectors doesn't ship 16 giant buckets at 10⁹. Gates
-    * keep explicit nlist for oracle determinism. */
-  private def resolveNlist(corpus: DataFrame, nlist: Int): Int = {
-    require(nlist >= 0, "nlist must be >= 0 (0 = auto ceil(sqrt(n)))")
-    if (nlist > 0) nlist
-    else math.max(1, math.ceil(math.sqrt(corpus.count().toDouble)).toInt)
-  }
-
-  def saveIvfIndex(corpus: DataFrame, dir: String, nlist: Int = 16, iters: Int = 2,
-                   vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
-    val centroids = trainIvfCentroids(corpus, resolveNlist(corpus, nlist),
-      iters, vecCol, idCol)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("c", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    Par.widen(corpus, idCol)
-      .select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        nearestCentroid(col(vecCol), centroids).as("c"))
-      // co-locate each bucket before the partitioned write: one file per
-      // bucket per holding task instead of (tasks × buckets) small files —
-      // AQE splits oversized buckets; the object-store layout stays tight
-      .repartition(col("c"))
-      .write.mode("overwrite").partitionBy("c").parquet(s"$dir/corpus")
-  }
-
-  /** Grow a [[saveIvfIndex]] layout WITHOUT retraining — the daily-
-    * ingest path: new vectors are assigned to the EXISTING centroids and
-    * appended to their bucket directories (append-mode partitioned
-    * write; parquet appends are new files, never rewrites — but the
-    * multi-file commit is NOT atomic: a reader listing mid-commit can
-    * observe a PARTIAL superset of the old layout (old rows always
-    * complete, new rows eventually all visible). Serves that need a
-    * point-in-time cut should snapshot the file listing first or stage
-    * the append into a temp dir and rename per partition).
-    * The coarse quantizer drifts from the true k-means of the
-    * grown corpus — periodic re-train + re-save is the rebuild story,
-    * exactly like any IVF system. Serve parity after append is exact:
-    * probing the appended layout ≡ [[ivfTopKWith]] over old ∪ new with
-    * the SAME centroids (spec-asserted). */
-  def appendToIvfIndex(newVectors: DataFrame, dir: String,
-                       vecCol: String = "embedding",
-                       idCol: String = "vec_id"): Unit = {
-    val centroids = loadIvfCentroids(newVectors.sparkSession, dir)
-    Par.widen(newVectors, idCol)
-      .select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        nearestCentroid(col(vecCol), centroids).as("c"))
-      .repartition(col("c"))
-      .write.mode("append").partitionBy("c").parquet(s"$dir/corpus")
-  }
-
-  /** Recall audit of a persisted IVF layout against the brute-force
-    * truth over the index's OWN corpus rows, on a caller-fixed query
-    * sample (the x76 discipline: a FIXED sample keeps the truth linear).
-    * This is the drift detector for the append-without-retrain lifecycle
-    * ([[appendToIvfIndex]]): as appends pull the data distribution away
-    * from the trained centroids, probe recall on a held probe set decays
-    * — the audit turns that into a number a scheduler can threshold. */
-  def ivfIndexRecallAudit(spark: SparkSession, dir: String, queries: DataFrame,
-                          k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val corpus = readLayout(spark, s"$dir/corpus")
-      .select(col("vec_id"), col("v").as("embedding"))
-    annRecall(
-      ivfTopKIndexed(spark, dir, queries, k, nprobe),
-      bruteForceTopK(corpus, queries, k))
-  }
-
-  /** Drift-triggered retrain — the index lifecycle's rebuild arm. Runs
-    * [[ivfIndexRecallAudit]] on `dir`; when mean recall has fallen below
-    * `minRecall`, retrains centroids on the CURRENT (grown) corpus and
-    * writes a fresh layout to `rebuildDir` — a NEW directory, never an
-    * in-place rewrite, so a server can keep probing the old layout until
-    * the swap (the standard blue/green index rollover). Returns a 1-row
-    * report: (n_queries, recall_before, drifted, retrained,
-    * recall_after) — recall_after echoes recall_before when no rebuild
-    * ran. Audit cadence: run per append batch (the audit is one probe of
-    * the index + one brute pass over it for a FIXED sample — linear,
-    * measured 2.8× at 100× rows in the x76 family). */
-  def refreshIvfIndexIfDrifted(spark: SparkSession, dir: String,
-                               rebuildDir: String, queries: DataFrame,
-                               k: Int = 10, nprobe: Int = 4,
-                               minRecall: Double = 0.8, nlist: Int = 16,
-                               iters: Int = 2): DataFrame = {
-    import spark.implicits._
-    // r16 opt (guide §1.2, don't recompute what you already have): the
-    // brute-force truth depends only on (corpus rows, queries) and the
-    // blue/green rebuild rewrites the SAME corpus rows, so before- and
-    // after-audit share ONE materialized truth instead of running the
-    // brute pass per audit. Values are bit-identical to the per-audit
-    // recomputation (deterministic function of the same row set).
-    val corpus = readLayout(spark, s"$dir/corpus")
-      .select(col("vec_id"), col("v").as("embedding"))
-    val truth = bruteForceTopK(corpus, queries, k).localCheckpoint()
-    val before = annRecall(
-      ivfTopKIndexed(spark, dir, queries, k, nprobe), truth).head()
-    val nq = before.getLong(0)
-    val recallBefore = before.getDouble(1)
-    if (recallBefore >= minRecall)
-      Seq((nq, recallBefore, 0, 0, recallBefore))
-        .toDF("n_queries", "recall_before", "drifted", "retrained", "recall_after")
-    else {
-      saveIvfIndex(corpus, rebuildDir, nlist, iters)
-      val after = annRecall(
-        ivfTopKIndexed(spark, rebuildDir, queries, k, nprobe), truth)
-        .head().getDouble(1)
-      Seq((nq, recallBefore, 1, 1, after))
-        .toDF("n_queries", "recall_before", "drifted", "retrained", "recall_after")
-    }
-  }
+    IvfIndex.topKWith(corpus, queries, k, IvfIndex.Model(IvfIndex.Flat,
+      trainIvfCentroids(corpus, nlist, iters, vecCol, idCol)), nprobe,
+      vecCol = vecCol, idCol = idCol)
 
   // --- product quantization (Jégou et al. 2011) -----------------------------
   // The memory-compressed complement of IVF: vectors split into m
@@ -516,589 +379,6 @@ object Similarity {
     topKPerGroup(exact, k)
   }
 
-  /** Persist a PQ index: `dir/codebooks` (the m×k sub-centroid model),
-    * `dir/codes` (the compressed corpus — the table a serving scan
-    * reads), and `dir/corpus` (the original vectors, touched ONLY by the
-    * re-rank join for shortlist ids — the IVF-PQ-with-refinement layout:
-    * codes for the scan, originals on cheap storage for the refine). */
-  def savePqIndex(corpus: DataFrame, dir: String, m: Int = 8, k: Int = 16,
-                  iters: Int = 2, vecCol: String = "embedding",
-                  idCol: String = "vec_id"): Unit = {
-    val codebooks = pqTrain(corpus, m, k, iters, vecCol, idCol)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    codebooks.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
-    }.toSeq.toDF("j", "c", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    pqEncode(corpus, codebooks, vecCol, idCol)
-      .write.mode("overwrite").parquet(s"$dir/codes")
-    Par.widen(corpus, idCol)
-      .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-      .write.mode("overwrite").parquet(s"$dir/corpus")
-  }
-
-  // ------------------------------------------------------------------
-  // r15 opt: driver-side MODEL-ARTIFACT cache (centroids / codebooks /
-  // meta — nlist×dim-bounded by the IVF/PQ design, never data). Every
-  // serve/audit call was re-running a parquet scan + collect per artifact
-  // (3 driver round-trips per ivfPqTopK; x103 paid them per micro-batch).
-  // A serving system loads a model once and serves many queries — this
-  // encodes that, with staleness handled by a directory stamp (file
-  // names, sizes, mtimes), so an overwrite or blue/green rebuild is
-  // picked up and an append (which never touches model dirs) keeps the
-  // hit. Non-local paths (no direct java.io view) skip caching entirely.
-  // NOT query-result caching: values are model parameters, and the first
-  // load in a gate still happens inside its timed region.
-  // ------------------------------------------------------------------
-  // LRU-bounded (r15 advice: an unbounded JVM-global map pins every
-  // per-run temp layout's arrays for the JVM lifetime). 128 entries — a
-  // layout contributes ~4 keys (centroids, codebooks, schema, meta), so
-  // this keeps ~30 recently-served layouts while old fixture dirs age out.
-  // Callers treat returned model arrays as read-only (scaladoc contract on
-  // every load*), so no defensive copies on the hot serve path.
-  private val modelCacheCap = 128
-  private val modelCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Long, AnyRef)](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, AnyRef)]): Boolean =
-        size() > modelCacheCap
-    })
-  private def localStamp(path: String): Long = {
-    try {
-      val raw = if (path.startsWith("file:"))
-        new java.net.URI(path).getPath else path
-      if (raw.contains("://")) return -1L // remote FS: don't cache
-      val d = new java.io.File(raw)
-      val fs = d.listFiles()
-      if (fs == null) -1L
-      else fs.foldLeft(1L) { (acc, x) =>
-        ((acc * 31 + x.getName.hashCode) * 31 + x.length()) * 31 +
-          x.lastModified()
-      }
-    } catch { case _: Exception => -1L }
-  }
-  private def cachedModel[T <: AnyRef](sub: String, key: String = "")(load: => T): T = {
-    val st = localStamp(sub)
-    if (st == -1L) load
-    else {
-      val k = if (key.isEmpty) sub else key
-      val hit = modelCache.get(k)
-      if (hit != null && hit._1 == st) hit._2.asInstanceOf[T]
-      else { val v = load; modelCache.put(k, (st, v)); v }
-    }
-  }
-
-  /** Read an index-layout directory with its schema pinned from a cached
-    * one-time inference (same stamp discipline as [[cachedModel]]): a
-    * schema-less parquet read re-infers the footer schema — a Spark job —
-    * inside every serve/audit call's analysis. Appends don't change a
-    * layout's schema, so re-inference after a stamp change is just a
-    * cheap refresh. */
-  private def readLayout(spark: SparkSession, path: String): DataFrame = {
-    val schema = cachedModel(path, s"$path#schema") {
-      spark.read.parquet(path).schema
-    }
-    spark.read.schema(schema).parquet(path)
-  }
-
-  /** The persisted PQ codebook model, (subspace, centroid)-ordered. */
-  def loadPqCodebooks(spark: SparkSession,
-                      dir: String): Array[Array[Array[Double]]] =
-    cachedModel(s"$dir/codebooks") {
-      val rows = readLayout(spark, s"$dir/codebooks")
-        .select("j", "c", "centroid").orderBy("j", "c").collect()
-      rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
-        rs.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)
-      }.toArray
-    }
-
-  /** PQ serve from a [[savePqIndex]] layout: ADC over the compressed
-    * codes, exact re-rank against the layout's own originals. Same
-    * result as [[pqTopKRerank]] with the same model (spec-asserted). */
-  def pqTopKIndexed(spark: SparkSession, dir: String, queries: DataFrame,
-                    k: Int, shortlist: Int = 50,
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame = {
-    val codebooks = loadPqCodebooks(spark, dir)
-    // the layout always stores (vec_id, embedding); align to the
-    // caller's column convention before the shared rerank path
-    val originals = readLayout(spark, s"$dir/corpus")
-      .select(col("vec_id").as(idCol), col("embedding").as(vecCol))
-    pqTopKRerank(readLayout(spark, s"$dir/codes"), codebooks,
-      originals, queries, k, shortlist, vecCol, idCol)
-  }
-
-  // --- IVF + SQ8: coarse pruning over an int8-compressed resident tier ---
-  // The FAISS "IVF,SQ8" configuration — the middle point between the raw
-  // IVF layout (full floats per bucket) and IVF-PQ (heavily lossy codes
-  // that need an exact re-rank tier): buckets prune the scan to nprobe
-  // of nlist directories AND the scanned rows are 4× smaller than
-  // float32 at near-lossless cosine recall, with NO re-rank pass —
-  // cosine over int8 codes is scale-free (the factors cancel), so
-  // serving is pure integer-dot work inside whole-stage codegen.
-
-  /** (vec_id, qvec, qscale, c) — each corpus row SQ8-encoded and
-    * assigned to its coarse bucket, one codegen projection. */
-  private def ivfSq8Encode(corpus: DataFrame, centroids: Array[Array[Double]],
-                           vecCol: String, idCol: String): DataFrame =
-    Par.widen(corpus, idCol)
-      .select(col(idCol).as("vec_id"), col(vecCol).as("__v"),
-        graft.expr.Int8Ops.scale(col(vecCol)).as("qscale"),
-        nearestCentroid(col(vecCol), centroids).as("c"))
-      .select(col("vec_id"),
-        graft.expr.Int8Ops.encode(col("__v"), col("qscale")).as("qvec"),
-        col("qscale"), col("c"))
-
-  /** In-memory IVF+SQ8 serve against an already-trained centroid model:
-    * probe pruning + int8-cosine scoring. [[ivfSq8TopK]] over a saved
-    * layout returns EXACTLY this (spec/gate-asserted parity). */
-  def ivfSq8TopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
-                     centroids: Array[Array[Double]], nprobe: Int = 4,
-                     vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame = {
-    val indexed = ivfSq8Encode(corpus, centroids, vecCol, idCol)
-    sq8Serve(indexed, queries, k, centroids, nprobe, vecCol, idCol)
-  }
-
-  private def sq8Serve(indexed: DataFrame, queries: DataFrame, k: Int,
-                       centroids: Array[Array[Double]], nprobe: Int,
-                       vecCol: String, idCol: String): DataFrame = {
-    val probes = broadcast(queries
-      .select(col(idCol).as("qid"), col(vecCol).as("__qv"),
-        graft.expr.Int8Ops.scale(col(vecCol)).as("__qs"),
-        explode(probeCentroids(col(vecCol), centroids, nprobe)).as("c"))
-      .select(col("qid"),
-        graft.expr.Int8Ops.encode(col("__qv"), col("__qs")).as("qq"),
-        col("c")))
-    val scored = indexed.join(probes, "c")
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(graft.expr.Int8Ops.cosineFromCodes(col("qvec"), col("qq")), 4)
-          .as("cos"))
-    topKPerGroup(scored, k)
-  }
-
-  /** Persist an IVF+SQ8 index: `dir/centroids` (the coarse model) and
-    * `dir/codes` — (vec_id, qvec array<byte>, qscale) PARTITIONED BY
-    * coarse bucket, the 4×-compressed layout the serve prunes on.
-    * Deterministic training, so rebuilds are bit-identical. */
-  def saveIvfSq8Index(corpus: DataFrame, dir: String, nlist: Int = 16,
-                      iters: Int = 2, vecCol: String = "embedding",
-                      idCol: String = "vec_id"): Unit = {
-    val centroids = trainIvfCentroids(corpus, resolveNlist(corpus, nlist),
-      iters, vecCol, idCol)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("c", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    ivfSq8Encode(corpus, centroids, vecCol, idCol)
-      .repartition(col("c"))
-      .write.mode("overwrite").partitionBy("c").parquet(s"$dir/codes")
-  }
-
-  /** Grow a [[saveIvfSq8Index]] layout WITHOUT retraining — the
-    * daily-ingest arm of the lifecycle, mirroring [[appendToIvfIndex]]:
-    * new vectors are SQ8-encoded and assigned with the EXISTING
-    * centroids, appended to their bucket directories (append-mode
-    * partitioned write — new files, never rewrites; the multi-file
-    * commit is not atomic, so a concurrent serve sees the old rows plus
-    * an eventually-complete subset of the new ones — snapshot the file
-    * listing for a point-in-time cut, as [[appendToIvfIndex]] documents).
-    * Drift/rebuild discipline
-    * is the same as the other two indexed layouts: audit recall on a
-    * fixed probe set, blue/green retrain when it decays. */
-  def appendToIvfSq8Index(newVectors: DataFrame, dir: String,
-                          vecCol: String = "embedding",
-                          idCol: String = "vec_id"): Unit = {
-    val centroids = loadIvfCentroids(newVectors.sparkSession, dir)
-    ivfSq8Encode(newVectors, centroids, vecCol, idCol)
-      .repartition(col("c"))
-      .write.mode("append").partitionBy("c").parquet(s"$dir/codes")
-  }
-
-  /** Recall audit of a persisted IVF+SQ8 layout against brute-force
-    * truth over the layout's own DEQUANTIZED rows (the SQ8 layout keeps
-    * no original floats — dequantized codes ARE its ground truth; the
-    * ≤0.5/qscale element error is part of the layout, the probe misses
-    * are what drift adds). Fixed query sample, the x76 discipline. */
-  def ivfSq8RecallAudit(spark: SparkSession, dir: String, queries: DataFrame,
-                        k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val corpus = dequantizeInt8(readLayout(spark, s"$dir/codes"))
-      .select(col("vec_id"), col("vec").as("embedding"))
-    annRecall(
-      ivfSq8TopK(spark, dir, queries, k, nprobe),
-      bruteForceTopK(corpus, queries, k))
-  }
-
-  /** Drift-triggered blue/green rebuild for the IVF+SQ8 lifecycle — the
-    * same arm the other two indexed layouts have: audit on `dir`; below
-    * `minRecall`, retrain on the CURRENT dequantized corpus into
-    * `rebuildDir` (a NEW directory — a server keeps probing the old
-    * layout until the swap). Same 1-row report shape as
-    * [[refreshIvfIndexIfDrifted]]. */
-  def refreshIvfSq8IndexIfDrifted(spark: SparkSession, dir: String,
-                                  rebuildDir: String, queries: DataFrame,
-                                  k: Int = 10, nprobe: Int = 4,
-                                  minRecall: Double = 0.8, nlist: Int = 16,
-                                  iters: Int = 2): DataFrame = {
-    import spark.implicits._
-    val before = ivfSq8RecallAudit(spark, dir, queries, k, nprobe).head()
-    val nq = before.getLong(0)
-    val recallBefore = before.getDouble(1)
-    if (recallBefore >= minRecall)
-      Seq((nq, recallBefore, 0, 0, recallBefore))
-        .toDF("n_queries", "recall_before", "drifted", "retrained", "recall_after")
-    else {
-      // float32 at the retrain boundary: the original corpus WAS float32
-      // and the trainer's seed collect reads floats
-      val corpus = dequantizeInt8(readLayout(spark, s"$dir/codes"))
-        .select(col("vec_id"), col("vec").cast("array<float>").as("embedding"))
-      saveIvfSq8Index(corpus, rebuildDir, nlist, iters)
-      val after = ivfSq8RecallAudit(spark, rebuildDir, queries, k, nprobe)
-        .head().getDouble(1)
-      Seq((nq, recallBefore, 1, 1, after))
-        .toDF("n_queries", "recall_before", "drifted", "retrained", "recall_after")
-    }
-  }
-
-  /** Serve from a [[saveIvfSq8Index]] layout: probe buckets collapse to
-    * a literal partition filter (static pruning — only nprobe bucket
-    * directories are read), then int8 cosine over the probed codes.
-    * Same broadcast-contract guard as the other indexed serves. */
-  def ivfSq8TopK(spark: SparkSession, dir: String, queries: DataFrame,
-                 k: Int, nprobe: Int = 4, vecCol: String = "embedding",
-                 idCol: String = "vec_id"): DataFrame = {
-    val centroids = loadIvfCentroids(spark, dir)
-    val needed = guardedProbeBuckets("ivfSq8TopK", queries, centroids,
-      nprobe, vecCol)
-    val indexed = readLayout(spark, s"$dir/codes")
-      .where(col("c").isin(needed.map(Int.box): _*))
-    sq8Serve(indexed, queries, k, centroids, nprobe, vecCol, idCol)
-  }
-
-  // --- IVF-PQ: coarse pruning COMPOSED with code compression --------------
-  // The actual serving architecture (Jégou et al. 2011 §IV): the coarse
-  // quantizer prunes the scan to nprobe of nlist bucket directories, the
-  // PQ codes make the scanned residue 16-32× smaller than float32, and
-  // the exact re-rank touches originals only for the shortlist. The two
-  // halves exist separately as saveIvfIndex (partition-pruned probes,
-  // x90) and savePqIndex (ADC + re-rank, x99); composed, per-query serve
-  // cost is (corpus/nlist)·nprobe code rows instead of corpus — the
-  // difference between corpus-linear and bucket-linear at 100 TB.
-
-  /** Persist an IVF-PQ index: `dir/centroids` (coarse model, nlist×dim),
-    * `dir/codebooks` (PQ model, m×k sub-centroids), `dir/codes` (the
-    * compressed corpus — (vec_id, code), PARTITIONED BY coarse bucket
-    * `c`, the layout the ADC scan prunes on), `dir/corpus` (originals,
-    * partitioned the same way, touched only by the shortlist re-rank).
-    * Training is deterministic (first-k seeds, fixed iteration count),
-    * so a rebuild from the same corpus is bit-identical.
-    *
-    * Parameter defaults are data-backed (r12 sf10 study, SCALE.md): PQ
-    * precision is the PRIMARY recall lever — m=16/k=32 reached 0.89
-    * recall@10 where m=8/k=16 plateaued at 0.28 at identical serve cost
-    * (dim/m ≈ 4 dims per subspace is the working rule). nlist defaults
-    * small for small corpora; production sizes it ≈ √n, bounded below
-    * by enough rows per bucket that bucket files stay IO-efficient. */
-  /** v − centroids[c], materialized as array<float> so the PQ trainer
-    * and encoder see the same representation for raw and residual
-    * vectors. The centroid table rides as ONE complex-type literal
-    * (a reference in generated code, not unrolled — the 64 KB lesson);
-    * `element_at` is 1-based. */
-  private def residualExpr(v: Column, c: Column,
-                           centroids: Array[Array[Double]]): Column = {
-    val lit2d = typedLit(centroids.map(_.toSeq).toSeq)
-    zip_with(v.cast("array<double>"), element_at(lit2d, c + lit(1)),
-      (a, b) => a - b).cast("array<float>")
-  }
-
-  /** ADC reconstruction: codebook decode, plus the coarse centroid when
-    * the layout stores RESIDUAL codes (Jégou et al. 2011 §IV.2 — the
-    * actual IVFADC: quantizing r = x − q1(x) spends the PQ's precision
-    * on the small within-bucket displacement instead of re-describing
-    * the bucket's position, so recall rises at identical serve cost). */
-  private def adcReconstruct(code: Column, c: Column,
-                             codebooks: Array[Array[Array[Double]]],
-                             centroids: Array[Array[Double]],
-                             residual: Boolean): Column =
-    if (!residual) pqReconstruct(code, codebooks)
-    else {
-      val lit2d = typedLit(centroids.map(_.toSeq).toSeq)
-      zip_with(element_at(lit2d, c + lit(1)), pqReconstruct(code, codebooks),
-        (a, b) => a + b)
-    }
-
-  /** Whether a [[saveIvfPqIndex]] layout stores residual codes. Layouts
-    * written before the meta file existed are raw (false). */
-  def loadIvfPqResidualFlag(spark: SparkSession, dir: String): Boolean =
-    cachedModel[java.lang.Boolean](s"$dir/meta")(Boolean.box(
-      loadIvfPqResidualFlagUncached(spark, dir))).booleanValue()
-  private def loadIvfPqResidualFlagUncached(
-      spark: SparkSession, dir: String): Boolean =
-    try readLayout(spark, s"$dir/meta").select("residual").head().getBoolean(0)
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  def saveIvfPqIndex(corpus: DataFrame, dir: String, nlist: Int = 16,
-                     m: Int = 16, k: Int = 32, iters: Int = 2,
-                     vecCol: String = "embedding",
-                     idCol: String = "vec_id",
-                     residual: Boolean = false): Unit = {
-    val centroids = trainIvfCentroids(corpus, resolveNlist(corpus, nlist),
-      iters, vecCol, idCol)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // residual mode: PQ model trained on (and codes stored for) the
-    // within-bucket displacement r = x − centroid(x)
-    val assigned = Par.widen(corpus, idCol).select(col(idCol), col(vecCol),
-      nearestCentroid(col(vecCol), centroids).as("__c"))
-    val encodeVec =
-      if (residual) residualExpr(col(vecCol), col("__c"), centroids)
-      else col(vecCol)
-    val codebooks =
-      if (residual)
-        pqTrain(assigned.select(col(idCol),
-          residualExpr(col(vecCol), col("__c"), centroids).as(vecCol)),
-          m, k, iters, vecCol, idCol)
-      else pqTrain(corpus, m, k, iters, vecCol, idCol)
-    Seq(Tuple1(residual)).toDF("residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("c", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    codebooks.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
-    }.toSeq.toDF("j", "c", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    // one pass assigns the coarse bucket AND the m sub-codes; co-locate
-    // each bucket before the partitioned write (the saveIvfIndex layout
-    // discipline: one file per bucket per holding task)
-    val encoded = assigned.select(
-      col(idCol).as("vec_id"),
-      graft.expr.AnnModelOps.pqEncode(encodeVec, codebooks).as("code"),
-      col("__c").as("c"))
-    encoded.repartition(col("c"))
-      .write.mode("overwrite").partitionBy("c").parquet(s"$dir/codes")
-    Par.widen(corpus, idCol)
-      .select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        nearestCentroid(col(vecCol), centroids).as("c"))
-      .repartition(col("c"))
-      .write.mode("overwrite").partitionBy("c").parquet(s"$dir/corpus")
-  }
-
-  /** Serve top-k from a [[saveIvfPqIndex]] layout: the query batch's
-    * distinct probe buckets collapse to a LITERAL `c IN (…)` filter on
-    * the partitioned code table (static partition pruning — only the
-    * probed bucket directories are read, the x90 discipline), the ADC
-    * scan reconstructs ONLY those codes (the x99 discipline), the
-    * bounded-heap [[TopK]] keeps a `shortlist` per query, and the exact
-    * re-rank fetches originals from the SAME pruned buckets. Recall is
-    * bounded above by the probe recall (a true neighbor outside every
-    * probed bucket is unreachable — audit with [[annRecall]], the x76
-    * pattern); within the probed buckets the shortlist/re-rank contract
-    * is exactly [[pqTopKRerank]]'s. */
-  def ivfPqTopK(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-                nprobe: Int = 4, shortlist: Int = 50,
-                vecCol: String = "embedding",
-                idCol: String = "vec_id"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val centroids = loadIvfCentroids(spark, dir)
-    val codebooks = loadPqCodebooks(spark, dir)
-    // ONE job computes the probe-bucket set AND guards the broadcast
-    // contract: the serve path broadcasts queries (probes + re-rank), so
-    // a corpus-sized frame passed as `queries` would broadcast the
-    // corpus. No LIMIT (a global limit inserts a single-partition
-    // exchange that cost x103 ~35 ms per micro-batch): the count rides
-    // the same parallel aggregation that collects the bucket set, so a
-    // pathological frame costs one linear pass before the error — and
-    // never reaches the broadcast. Each row explodes to exactly
-    // min(nprobe, nlist) probes. Corpus-as-queries workloads belong on
-    // the bucket-join path (hardNegativesIVF), which never broadcasts
-    // the big side.
-    val needed = guardedProbeBuckets("ivfPqTopK", queries, centroids,
-      nprobe, vecCol)
-    val probes = broadcast(queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        explode(probeCentroids(col(vecCol), centroids, nprobe)).as("c")))
-    val residual = loadIvfPqResidualFlag(spark, dir)
-    val codes = readLayout(spark, s"$dir/codes")
-      .where(col("c").isin(needed.map(Int.box): _*))
-    // every code row lives in exactly ONE bucket and a query's probe
-    // buckets are distinct, so the (c) join pairs each (query, code) at
-    // most once — no candidate dedup needed
-    val scored = codes.join(probes, "c")
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(
-          adcReconstruct(col("code"), col("c"), codebooks, centroids,
-            residual), col("qv")), 4)
-          .as("cos"))
-    val topsl = udaf(new TopK(shortlist))
-    val cand = scored.groupBy(col("qid"))
-      .agg(topsl(col("cos"), col("vec_id")).as("top"))
-      .select(col("qid"), explode(col("top")).as("e"))
-      .select(col("qid"), col("e._2").as("vec_id"))
-    val q = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv")))
-    // shortlist ids can only come from probed buckets: the re-rank scan
-    // prunes to the same directories
-    val originals = readLayout(spark, s"$dir/corpus")
-      .where(col("c").isin(needed.map(Int.box): _*))
-      .select(col("vec_id"), col("v"))
-    val exact = originals.join(cand, "vec_id").join(q, "qid")
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 4).as("cos"))
-    topKPerGroup(exact, k)
-  }
-
-  /** Append new vectors to a [[saveIvfPqIndex]] layout WITHOUT retraining
-    * either quantizer: coarse bucket from the persisted centroids, PQ
-    * code from the persisted codebooks, appended to the same
-    * bucket-partitioned codes/corpus directories (only the touched bucket
-    * partitions gain files). Same drift contract as [[appendToIvfIndex]]:
-    * as appends pull the distribution away from BOTH trained quantizers,
-    * probe recall decays — audit with [[ivfPqIndexRecallAudit]]. */
-  def appendToIvfPqIndex(newVectors: DataFrame, dir: String,
-                         vecCol: String = "embedding",
-                         idCol: String = "vec_id"): Unit = {
-    val spark = newVectors.sparkSession
-    val centroids = loadIvfCentroids(spark, dir)
-    val codebooks = loadPqCodebooks(spark, dir)
-    val residual = loadIvfPqResidualFlag(spark, dir)
-    val assigned = Par.widen(newVectors, idCol).select(col(idCol),
-      col(vecCol), nearestCentroid(col(vecCol), centroids).as("__c"))
-    val encodeVec =
-      if (residual) residualExpr(col(vecCol), col("__c"), centroids)
-      else col(vecCol)
-    assigned.select(
-      col(idCol).as("vec_id"),
-      graft.expr.AnnModelOps.pqEncode(encodeVec, codebooks).as("code"),
-      col("__c").as("c"))
-      .repartition(col("c"))
-      .write.mode("append").partitionBy("c").parquet(s"$dir/codes")
-    Par.widen(newVectors, idCol)
-      .select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        nearestCentroid(col(vecCol), centroids).as("c"))
-      .repartition(col("c"))
-      .write.mode("append").partitionBy("c").parquet(s"$dir/corpus")
-  }
-
-  /** Recall audit of a persisted IVF-PQ layout against the brute-force
-    * truth over the index's OWN corpus rows, on a caller-fixed query
-    * sample (the x76 discipline) — the drift detector for
-    * [[appendToIvfPqIndex]]'s append-without-retrain lifecycle. */
-  def ivfPqIndexRecallAudit(spark: SparkSession, dir: String,
-                            queries: DataFrame, k: Int = 10,
-                            nprobe: Int = 4,
-                            shortlist: Int = 50): DataFrame = {
-    val corpus = readLayout(spark, s"$dir/corpus")
-      .select(col("vec_id"), col("v").as("embedding"))
-    annRecall(
-      ivfPqTopK(spark, dir, queries, k, nprobe, shortlist),
-      bruteForceTopK(corpus, queries, k))
-  }
-
-  /** Drift-triggered blue/green retrain of the COMPOSED index: below
-    * `minRecall`, BOTH quantizers retrain on the current (grown) corpus
-    * into a NEW directory — never in place (the [[refreshIvfIndexIfDrifted]]
-    * discipline). Returns the same one-row report shape. */
-  def refreshIvfPqIndexIfDrifted(spark: SparkSession, dir: String,
-                                 rebuildDir: String, queries: DataFrame,
-                                 k: Int = 10, nprobe: Int = 4,
-                                 shortlist: Int = 50,
-                                 minRecall: Double = 0.8, nlist: Int = 16,
-                                 m: Int = 16, kSub: Int = 32,
-                                 iters: Int = 2): DataFrame = {
-    import spark.implicits._
-    // shared brute truth across before/after audits — the rebuild rewrites
-    // the SAME float corpus rows (see refreshIvfIndexIfDrifted); one
-    // materialized truth replaces two brute passes, bit-identically.
-    val corpus = readLayout(spark, s"$dir/corpus")
-      .select(col("vec_id"), col("v").as("embedding"))
-    val truth = bruteForceTopK(corpus, queries, k).localCheckpoint()
-    val before = annRecall(
-      ivfPqTopK(spark, dir, queries, k, nprobe, shortlist), truth).head()
-    val nq = before.getLong(0)
-    val recallBefore = before.getDouble(1)
-    if (recallBefore >= minRecall)
-      Seq((nq, recallBefore, 0, 0, recallBefore))
-        .toDF("n_queries", "recall_before", "drifted", "retrained", "recall_after")
-    else {
-      // the rebuild preserves the old layout's residual mode
-      saveIvfPqIndex(corpus, rebuildDir, nlist, m, kSub, iters,
-        residual = loadIvfPqResidualFlag(spark, dir))
-      val after = annRecall(
-        ivfPqTopK(spark, rebuildDir, queries, k, nprobe, shortlist), truth)
-        .head().getDouble(1)
-      Seq((nq, recallBefore, 1, 1, after))
-        .toDF("n_queries", "recall_before", "drifted", "retrained", "recall_after")
-    }
-  }
-
-  /** The persisted centroid model, bucket-ordered (nlist×dim — driver-
-    * held by design, like the in-memory trainer's output). */
-  def loadIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    cachedModel(s"$dir/centroids") {
-      readLayout(spark, s"$dir/centroids").select("c", "centroid")
-        .orderBy("c").collect().map(_.getSeq[Double](1).toArray)
-    }
-
-  /** ANN top-k served from a [[saveIvfIndex]] layout. The query batch is
-    * bounded by definition (it is the probe side), so its distinct probe
-    * buckets collapse to a LITERAL `c IN (…)` filter on the partitioned
-    * corpus — static partition pruning: only the probed bucket
-    * directories are read, the other `nlist − |buckets|` never leave the
-    * object store. Same output contract as [[ivfTopK]], and exactly its
-    * result for the same (nlist, iters, nprobe). */
-  def ivfTopKIndexed(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-                     nprobe: Int = 4, vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame = {
-    val centroids = loadIvfCentroids(spark, dir)
-    val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      explode(probeCentroids(col(vecCol), centroids, nprobe)).as("c"))
-    val needed = guardedProbeBuckets("ivfTopKIndexed", queries, centroids,
-      nprobe, vecCol)
-    val indexed = readLayout(spark, s"$dir/corpus")
-      .where(col("c").isin(needed.map(Int.box): _*))
-    val scored = indexed.join(broadcast(probes), "c")
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"), round(cosine(col("v"), col("qv")), 4).as("cos"))
-    topKPerGroup(scored, k)
-  }
-
-  /** The serve paths BROADCAST the query batch (probes + re-rank), so a
-    * corpus-sized frame passed as `queries` would broadcast the corpus —
-    * a driver OOM at scale, not a slow plan. [[ivfPqTopK]] and
-    * [[ivfTopKIndexed]] enforce this bound inside the probe-bucket job
-    * they already run (zero extra jobs — the r12 bench showed a
-    * standalone LIMIT-count guard cost x103 one job per micro-batch).
-    * Corpus-as-queries workloads (mine neighbors for EVERY corpus row)
-    * belong on the bucket-join path — [[hardNegativesIVF]] — which
-    * co-partitions both sides and never broadcasts the big one. */
-  val MaxServeQueryRows: Int = 65536
-
-  /** [[probeBuckets]] with the broadcast-contract guard riding the same
-    * aggregation: `groupBy(c).count` has the identical partial-agg plan
-    * shape as `distinct` (≤ nlist rows collected either way), and the
-    * count sum says how many probe rows the batch exploded to — each
-    * query row contributes exactly min(nprobe, nlist), so the ceiling
-    * detects an oversized batch in the job the serve needed anyway. */
-  private def guardedProbeBuckets(fn: String, queries: DataFrame,
-                                  centroids: Array[Array[Double]],
-                                  nprobe: Int, vecCol: String): Array[Int] = {
-    val perRow = math.min(nprobe, centroids.length).toLong
-    val probeRows = queries
-      .select(explode(probeCentroids(col(vecCol), centroids, nprobe)).as("c"))
-      .groupBy("c").agg(count(lit(1)).as("n")).collect()
-    if (probeRows.map(_.getLong(1)).sum > MaxServeQueryRows.toLong * perRow)
-      throw new IllegalArgumentException(
-        s"$fn: query batch exceeds $MaxServeQueryRows rows; the serve " +
-          "path broadcasts queries, so a corpus-sized batch would broadcast " +
-          "the corpus - for corpus-as-queries workloads use the bucket-join " +
-          "path (hardNegativesIVF)")
-    probeRows.map(_.getInt(0)).sorted
-  }
-
   /** The distinct buckets a query batch probes (≤ min(nlist,
     * |queries|·nprobe) values — bounded because the query side is).
     * This is the literal partition filter the serve scan prunes on. */
@@ -1109,7 +389,7 @@ object Similarity {
 
   /** Exact per-group top-k: collect (cos, id) per qid, sort desc with id
     * tiebreak, slice k, re-explode. Deterministic. */
-  private def topKPerGroup(scored: DataFrame, k: Int): DataFrame = {
+  private[operators] def topKPerGroup(scored: DataFrame, k: Int): DataFrame = {
     val entry = struct((-col("cos")).as("negCos"), col("vec_id").as("vid"))
     scored.groupBy(col("qid"))
       .agg(slice(sort_array(collect_list(entry)), 1, k).as("top"))

@@ -11,7 +11,8 @@ object GateProfile {
   def main(a: Array[String]): Unit = {
     // session shaped exactly like graft.Bench's (cores/partitions from env)
     // so the profile explains the bench numbers, not some other config
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -43,7 +44,8 @@ object GateProfile {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[profile] $name warm FAILED: $e") }
       try GraftSession.forDir(spark, sfDir).releaseOperatorCaches()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[profile] $name cleanup FAILED: $e") }
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
       val t0 = System.nanoTime()
       val ok = try {
@@ -53,7 +55,8 @@ object GateProfile {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       try GraftSession.forDir(spark, sfDir).releaseOperatorCaches()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[profile] $name cleanup FAILED: $e") }
       // listener events drain asynchronously; give the bus a beat
       Thread.sleep(150)
       val line = f"""{"gate":"$name","ok":$ok,"wall_s":${math.rint(dt * 1000) / 1000},"jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_ms":${taskMs.get}}"""

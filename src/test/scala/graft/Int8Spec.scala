@@ -1,7 +1,7 @@
 package graft
 
 import graft.expr.Int8Ops
-import graft.operators.Similarity
+import graft.operators.{IvfIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -104,24 +104,24 @@ class Int8Spec extends AnyFunSuite {
     val old = emb.where(col("vec_id") % 3 =!= 0)
     val fresh = emb.where(col("vec_id") % 3 === 0)
     val q = emb.where(col("vec_id") < 6)
-    Similarity.saveIvfSq8Index(old, dir)
-    val centroids = Similarity.loadIvfCentroids(spark, dir)
+    IvfIndex.save(old, dir, IvfIndex.Sq8)
+    val model = IvfIndex.load(spark, dir)
     // layout serve is exactly the in-memory composition
-    val served = Similarity.ivfSq8TopK(spark, dir, q, k = 4, nprobe = 3)
-    val flat = Similarity.ivfSq8TopKWith(old, q, k = 4, centroids, nprobe = 3)
+    val served = IvfIndex.topK(spark, dir, q, k = 4, nprobe = 3)
+    val flat = IvfIndex.topKWith(old, q, k = 4, model, nprobe = 3)
     assert(served.except(flat).count() === 0L && flat.except(served).count() === 0L)
     // append: grown layout ≡ composition over old ∪ new with SAME centroids
-    Similarity.appendToIvfSq8Index(fresh, dir)
-    val grown = Similarity.ivfSq8TopK(spark, dir, q, k = 4, nprobe = 3)
-    val flatAll = Similarity.ivfSq8TopKWith(emb, q, k = 4, centroids, nprobe = 3)
+    IvfIndex.append(fresh, dir)
+    val grown = IvfIndex.topK(spark, dir, q, k = 4, nprobe = 3)
+    val flatAll = IvfIndex.topKWith(emb, q, k = 4, model, nprobe = 3)
     assert(grown.except(flatAll).count() === 0L && flatAll.except(grown).count() === 0L)
   }
 
   test("IVF+SQ8 lifecycle: audit reports sane recall; injected drift triggers blue/green rebuild that recovers") {
     val dir = java.nio.file.Files.createTempDirectory("ivfsq8_lc_").toString
     val q = emb.where(col("vec_id") < 8)
-    Similarity.saveIvfSq8Index(emb, dir)
-    val healthy = Similarity.ivfSq8RecallAudit(spark, dir, q, k = 5, nprobe = 8)
+    IvfIndex.save(emb, dir, IvfIndex.Sq8)
+    val healthy = IvfIndex.recallAudit(spark, dir, q, k = 5, nprobe = 8)
       .head()
     assert(healthy.getLong(0) === 8L && healthy.getDouble(1) >= 0.6,
       s"healthy audit: $healthy")
@@ -129,9 +129,9 @@ class Int8Spec extends AnyFunSuite {
     // from the trained centroids) — probe recall on the grown layout decays
     val flipped = emb.select((col("vec_id") + 1000000L).as("vec_id"),
       transform(col("embedding").cast("array<double>"), x => -x).as("embedding"))
-    Similarity.appendToIvfSq8Index(flipped, dir)
+    IvfIndex.append(flipped, dir)
     val rebuildDir = dir + "_rebuilt"
-    val report = Similarity.refreshIvfSq8IndexIfDrifted(spark, dir, rebuildDir,
+    val report = IvfIndex.refreshIfDrifted(spark, dir, rebuildDir,
       q, k = 5, nprobe = 2, minRecall = 0.95).head()
     // either the audit already sees decay (drifted=1 and the rebuild
     // recovers to >= before) or the probe set stayed lucky — pin the

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{IvfIndex, Similarity}
 
 /** Round-12 IVF-PQ production parameterization study (VERDICT r11 #5):
   * at sf10 (~200k vectors, dim 64) sweep nlist ∈ {16, 256, 2048} × an
@@ -51,20 +51,20 @@ object IvfPqParamStudy {
       }
       rm(new java.io.File(dir))
       val t0 = System.nanoTime
-      Similarity.saveIvfPqIndex(emb, dir, nlist = nlist, m = m, k = kSub,
-        iters = 2, residual = residual)
+      IvfIndex.save(emb, dir, IvfIndex.Pq(m, kSub, residual), nlist = nlist,
+        iters = 2)
       val trainS = (System.nanoTime - t0) / 1e9
-      val centroids = Similarity.loadIvfCentroids(spark, dir)
+      val centroids = IvfIndex.load(spark, dir).centroids
       for (nprobe <- ladders(nlist)) {
         def serveSec(): Double = {
           val s0 = System.nanoTime
-          Similarity.ivfPqTopK(spark, dir, q, k = 10, nprobe = nprobe,
+          IvfIndex.topK(spark, dir, q, k = 10, nprobe = nprobe,
             shortlist = shortlist).count(): Unit
           (System.nanoTime - s0) / 1e9
         }
         val lat = math.min(serveSec(), serveSec())
         val recall = Similarity.annRecall(
-          Similarity.ivfPqTopK(spark, dir, q, k = 10, nprobe = nprobe,
+          IvfIndex.topK(spark, dir, q, k = 10, nprobe = nprobe,
             shortlist = shortlist), truth).head().getDouble(1)
         val probed = Similarity.probeBuckets(q, centroids, nprobe).length
         println(f"[study] res=$residual m=$m%2d k=$kSub%2d sl=$shortlist%3d nlist=$nlist%5d nprobe=$nprobe%4d train=$trainS%6.1fs " +

@@ -21,7 +21,7 @@ class ModelFuzzSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("300-op seeded model-lifecycle fuzz: catalog mirror, name≡path serving, clean wrong-kind errors") {
-    import graft.operators.{Similarity, TextAnalysis}
+    import graft.operators.{IvfIndex, TextAnalysis}
     val base = java.nio.file.Files.createTempDirectory("graft_modelfuzz_")
     try {
       val g0 = new GraftSession(spark).registerDir(TestSpark.sf)
@@ -31,14 +31,14 @@ class ModelFuzzSpec extends AnyFunSuite {
       TextAnalysis.saveBpeMerges(spark,
         Seq(("e", "r"), ("i", "n")), mergesPath)
       val ivfDir = base.resolve("ivf").toString
-      Similarity.saveIvfIndex(embT, ivfDir, nlist = 8, iters = 1)
+      IvfIndex.save(embT, ivfDir, IvfIndex.Flat, nlist = 8, iters = 1)
       val pqDir = base.resolve("pq").toString
-      Similarity.savePqIndex(embT, pqDir, m = 16, k = 8, iters = 1)
+      IvfIndex.savePqIndex(embT, pqDir, m = 16, k = 8, iters = 1)
       val ivfpqDir = base.resolve("ivfpq").toString
-      Similarity.saveIvfPqIndex(embT, ivfpqDir, nlist = 8, m = 16, k = 8,
+      IvfIndex.save(embT, ivfpqDir, IvfIndex.Pq(m = 16, k = 8), nlist = 8,
         iters = 1)
       val ivfsq8Dir = base.resolve("ivfsq8").toString
-      Similarity.saveIvfSq8Index(embT, ivfsq8Dir, nlist = 8, iters = 1)
+      IvfIndex.save(embT, ivfsq8Dir, IvfIndex.Sq8, nlist = 8, iters = 1)
       val linDir = base.resolve("linear").toString
       spark.range(0, 256).select(
         org.apache.spark.sql.functions.col("id").as("bucket"),

@@ -153,17 +153,24 @@ class OperatorsSpec extends AnyFunSuite {
     assert(c1.flatten.toSeq == c2.flatten.toSeq)
   }
 
-  test("IVF lifecycle: masked append drifts the index, audit detects, rebuild recovers") {
+  // one lifecycle, every codec (the Flat case keeps the test's original
+  // name): the rebuild must keep the codec — for the residual PQ layout
+  // that means a residual rebuild
+  Seq[(String, IvfIndex.Codec)]("" -> IvfIndex.Flat, " (Sq8)" -> IvfIndex.Sq8,
+    " (residual Pq)" -> IvfIndex.Pq(m = 8, k = 16, residual = true)).foreach {
+    case (tag, codec) =>
+  test(s"IVF lifecycle$tag: masked append drifts the index, audit detects, rebuild recovers") {
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val spark = TestSpark.spark
     val e = emb.localCheckpoint()
     val dir = tmp("ivf_life_"); val dir2 = tmp("ivf_life_v2_")
     val dir3 = tmp("ivf_life_v3_")
-    Similarity.saveIvfIndex(e.where(col("vec_id") < 250), dir, nlist = 8, iters = 2)
+    IvfIndex.save(e.where(col("vec_id") < 250), dir, codec, nlist = 8, iters = 2)
+    assert(IvfIndex.load(spark, dir).codec == codec)
     // no-drift arm: in-distribution probes over the freshly-trained index
     // with a floor the index easily clears — no rebuild, report echoes
     val easyQ = e.where(col("vec_id") < 20)
-    val noDrift = Similarity.refreshIvfIndexIfDrifted(spark, dir, dir2,
+    val noDrift = IvfIndex.refreshIfDrifted(spark, dir, dir2,
       easyQ, k = 10, nprobe = 4, minRecall = 0.05, nlist = 8, iters = 2).head()
     assert(noDrift.getInt(2) == 0 && noDrift.getInt(3) == 0)
     assert(noDrift.getDouble(1) == noDrift.getDouble(4))
@@ -177,22 +184,22 @@ class OperatorsSpec extends AnyFunSuite {
     val appended = e.where(col("vec_id") >= 250)
       .select(col("vec_id"), mask(col("embedding")).as("embedding"))
       .localCheckpoint()
-    Similarity.appendToIvfIndex(appended, dir)
+    IvfIndex.append(appended, dir)
     val probes = appended.where(col("vec_id") < 290)
-    val audit = Similarity.ivfIndexRecallAudit(spark, dir, probes,
-      k = 10, nprobe = 2).head()
+    val audit = IvfIndex.recallAudit(spark, dir, probes, k = 10, nprobe = 2).head()
     assert(audit.getLong(0) == 40L)
-    val report = Similarity.refreshIvfIndexIfDrifted(spark, dir, dir3,
+    val report = IvfIndex.refreshIfDrifted(spark, dir, dir3,
       probes, k = 10, nprobe = 2, minRecall = 0.9, nlist = 8, iters = 2).head()
     assert(report.getInt(2) == 1 && report.getInt(3) == 1,
       s"drift not detected: $report")
     assert(report.getDouble(1) == audit.getDouble(1)) // audit ≡ refresh's before
     assert(report.getDouble(4) > report.getDouble(1),
       s"rebuild did not recover recall: $report")
-    // the rebuilt layout serves and covers the grown corpus
-    assert(new java.io.File(dir3, "centroids").exists())
-    val served = Similarity.ivfTopKIndexed(spark, dir3, probes, k = 5, nprobe = 8)
+    // the rebuilt layout keeps the codec, serves and covers the grown corpus
+    assert(IvfIndex.load(spark, dir3).codec == codec)
+    val served = IvfIndex.topK(spark, dir3, probes, k = 5, nprobe = 8)
     assert(served.groupBy("qid").count().count() == 40L)
+  }
   }
 
   test("product quantization: exact round-trip at k=corpus, decent ADC recall") {
@@ -243,10 +250,10 @@ class OperatorsSpec extends AnyFunSuite {
     assert(cb2.flatten.flatten.toSeq == cb3.flatten.flatten.toSeq)
     // persisted layout serves EXACTLY the in-memory rerank result
     val dir = java.nio.file.Files.createTempDirectory("pq_idx_").toString
-    Similarity.savePqIndex(emb, dir, m = 16, k = 32, iters = 3)
-    val lcb = Similarity.loadPqCodebooks(TestSpark.spark, dir)
+    IvfIndex.savePqIndex(emb, dir, m = 16, k = 32, iters = 3)
+    val lcb = IvfIndex.loadPqCodebooks(TestSpark.spark, dir)
     assert(lcb.flatten.flatten.toSeq == cb2.flatten.flatten.toSeq)
-    val served = Similarity.pqTopKIndexed(TestSpark.spark, dir, q,
+    val served = IvfIndex.pqTopKIndexed(TestSpark.spark, dir, q,
         k = 10, shortlist = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val direct = Similarity.pqTopKRerank(codes2, cb2, emb, q,
@@ -291,21 +298,21 @@ class OperatorsSpec extends AnyFunSuite {
     val d2 = java.nio.file.Files.createTempDirectory("sq8auto_").toString
     val d3 = java.nio.file.Files.createTempDirectory("pqauto_").toString
     try {
-      Similarity.saveIvfIndex(sub, d1, nlist = 0, iters = 1)
-      Similarity.saveIvfSq8Index(sub, d2, nlist = 0, iters = 1)
-      Similarity.saveIvfPqIndex(sub, d3, nlist = 0, m = 4, k = 8, iters = 1)
+      IvfIndex.save(sub, d1, IvfIndex.Flat, nlist = 0, iters = 1)
+      IvfIndex.save(sub, d2, IvfIndex.Sq8, nlist = 0, iters = 1)
+      IvfIndex.save(sub, d3, IvfIndex.Pq(m = 4, k = 8), nlist = 0, iters = 1)
       // trained bucket count = ceil(sqrt(n)); the materialized layout may
       // have fewer dirs if a centroid ends up empty, never more
-      assert(Similarity.loadIvfCentroids(spark, d1).length === want)
-      assert(Similarity.loadIvfCentroids(spark, d2).length === want)
-      assert(Similarity.loadIvfCentroids(spark, d3).length === want)
+      assert(IvfIndex.load(spark, d1).centroids.length === want)
+      assert(IvfIndex.load(spark, d2).centroids.length === want)
+      assert(IvfIndex.load(spark, d3).centroids.length === want)
       assert(bucketDirs(d1, "corpus") <= want && bucketDirs(d1, "corpus") > 1)
       assert(bucketDirs(d2, "codes") <= want && bucketDirs(d2, "codes") > 1)
       // auto-sized index still serves
       val q = sub.where(col("vec_id") < 2)
-      assert(Similarity.ivfTopKIndexed(spark, d1, q, k = 3, nprobe = 3).count() > 0)
+      assert(IvfIndex.topK(spark, d1, q, k = 3, nprobe = 3).count() > 0)
       intercept[IllegalArgumentException](
-        Similarity.saveIvfIndex(sub, d1, nlist = -2))
+        IvfIndex.save(sub, d1, nlist = -2))
     } finally Seq(d1, d2, d3).foreach { d =>
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
@@ -317,14 +324,14 @@ class OperatorsSpec extends AnyFunSuite {
   test("saveIvfIndex/ivfTopKIndexed: served equals fresh, layout prunes") {
     val dir = java.nio.file.Files.createTempDirectory("ivfidx_").toString
     try {
-      Similarity.saveIvfIndex(emb, dir, nlist = 8, iters = 2)
+      IvfIndex.save(emb, dir, nlist = 8, iters = 2)
       val q = emb.where(col("vec_id") < 3)
       val fresh = Similarity.ivfTopK(emb, q, k = 5, nlist = 8, nprobe = 3, iters = 2)
-      val served = Similarity.ivfTopKIndexed(spark, dir, q, k = 5, nprobe = 3)
+      val served = IvfIndex.topK(spark, dir, q, k = 5, nprobe = 3)
       assert(served.count() > 0)
       assert(served.except(fresh).isEmpty && fresh.except(served).isEmpty)
       // persisted centroids == retrained centroids (training is deterministic)
-      val loaded = Similarity.loadIvfCentroids(spark, dir)
+      val loaded = IvfIndex.load(spark, dir).centroids
       val trained = Similarity.trainIvfCentroids(emb, nlist = 8, iters = 2)
       assert(loaded.flatten.toSeq == trained.flatten.toSeq)
       // the bucket filter prunes: 3 queries x 3 probes cover < 8 buckets
@@ -347,24 +354,24 @@ class OperatorsSpec extends AnyFunSuite {
   test("saveIvfPqIndex/ivfPqTopK: pruned serve ≡ flat rerank at full probe; partial probes prune and stay faithful (r11)") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_").toString
     try {
-      Similarity.saveIvfPqIndex(emb, dir, nlist = 8, m = 16, k = 32, iters = 2)
+      IvfIndex.save(emb, dir, IvfIndex.Pq(m = 16, k = 32), nlist = 8, iters = 2)
       val q = emb.where(col("vec_id") < 10)
-      val served = Similarity.ivfPqTopK(spark, dir, q, k = 10, nprobe = 3,
+      val served = IvfIndex.topK(spark, dir, q, k = 10, nprobe = 3,
         shortlist = 50).localCheckpoint()
       // full k per query
       assert(served.groupBy("qid").count().collect()
         .forall(_.getLong(1) == 10L))
-      val cb = Similarity.loadPqCodebooks(spark, dir)
+      val model = IvfIndex.load(spark, dir)
       val codes = spark.read.parquet(s"$dir/codes")
       val corpus = spark.read.parquet(s"$dir/corpus")
         .select(col("vec_id"), col("v").as("embedding"))
       val flat = Similarity.pqTopKRerank(
-        codes.select(col("vec_id"), col("code")), cb, corpus, q,
+        codes.select(col("vec_id"), col("code")), model.codebooks, corpus, q,
         k = 10, shortlist = 50).localCheckpoint()
       // probing EVERY bucket removes the only approximation the coarse
       // quantizer adds: the composed serve must equal the flat rerank
       // EXACTLY (same codebooks, same shortlist, same tie-breaks)
-      val full = Similarity.ivfPqTopK(spark, dir, q, k = 10, nprobe = 8,
+      val full = IvfIndex.topK(spark, dir, q, k = 10, nprobe = 8,
         shortlist = 50)
       assert(full.except(flat).isEmpty && flat.except(full).isEmpty)
       // partial probes: faithful within the probe recall
@@ -380,30 +387,25 @@ class OperatorsSpec extends AnyFunSuite {
       // pruning is observable on the EXECUTED code scan (numFiles) — a
       // small query batch, the serving-path shape (10 queries × 3 probes
       // can legitimately cover all 8 buckets of this tiny corpus)
-      val centroids = Similarity.loadIvfCentroids(spark, dir)
       val needed = Similarity.probeBuckets(
-        emb.where(col("vec_id") < 2), centroids, nprobe = 3)
+        emb.where(col("vec_id") < 2), model.centroids, nprobe = 3)
       assert(needed.length < 8)
       assert(graft.operators.Extensions.filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
         graft.operators.Extensions.filesScanned(codes))
       intercept[IllegalArgumentException](
-        Similarity.ivfPqTopK(spark, dir, q, k = 10, nprobe = 2, shortlist = 5))
+        IvfIndex.topK(spark, dir, q, k = 10, nprobe = 2, shortlist = 5))
       // broadcast guard: a corpus-sized query frame is rejected EAGERLY
       // (the serve path broadcasts queries) with the bucket-join remedy
       // named; the check never touches the layout, so it fires before
       // any scan of the frame's true (possibly unbounded) size
-      val oversized = spark.range(Similarity.MaxServeQueryRows + 1L)
+      val oversized = spark.range(IvfIndex.MaxServeQueryRows + 1L)
         .select(col("id").as("vec_id"),
           array(lit(1.0), lit(0.0)).as("embedding"))
       val g = intercept[IllegalArgumentException](
-        Similarity.ivfPqTopK(spark, dir, oversized, k = 4))
-      assert(g.getMessage.contains("hardNegativesIVF"), g.getMessage)
-      // the plain-IVF serve shares the guard (same broadcast contract,
-      // same probe-bucket job; the ivfpq layout carries centroids too)
-      val g2 = intercept[IllegalArgumentException](
-        Similarity.ivfTopKIndexed(spark, dir, oversized, k = 4))
-      assert(g2.getMessage.contains("ivfTopKIndexed"), g2.getMessage)
+        IvfIndex.topK(spark, dir, oversized, k = 4))
+      assert(g.getMessage.contains("hardNegativesIVF") &&
+        g.getMessage.contains("IvfIndex.topK"), g.getMessage)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
@@ -419,15 +421,15 @@ class OperatorsSpec extends AnyFunSuite {
       // deliberately COARSE PQ (8 codes/subspace) so the quantization
       // error dominates: spending it on the within-bucket displacement
       // instead of the bucket's absolute position must not lose recall
-      Similarity.saveIvfPqIndex(emb, dirRaw, nlist = 8, m = 16, k = 8, iters = 2)
-      Similarity.saveIvfPqIndex(emb, dirRes, nlist = 8, m = 16, k = 8, iters = 2,
-        residual = true)
-      assert(!Similarity.loadIvfPqResidualFlag(spark, dirRaw))
-      assert(Similarity.loadIvfPqResidualFlag(spark, dirRes))
+      IvfIndex.save(emb, dirRaw, IvfIndex.Pq(m = 16, k = 8), nlist = 8, iters = 2)
+      IvfIndex.save(emb, dirRes, IvfIndex.Pq(m = 16, k = 8, residual = true),
+        nlist = 8, iters = 2)
+      assert(IvfIndex.load(spark, dirRaw).codec == IvfIndex.Pq(16, 8, residual = false))
+      assert(IvfIndex.load(spark, dirRes).codec == IvfIndex.Pq(16, 8, residual = true))
       val q = emb.where(col("vec_id") < 10)
       val truth = Similarity.bruteForceTopK(emb, q, k = 10).localCheckpoint()
       def recall(dir: String): Double = Similarity.annRecall(
-        Similarity.ivfPqTopK(spark, dir, q, k = 10, nprobe = 8,
+        IvfIndex.topK(spark, dir, q, k = 10, nprobe = 8,
           shortlist = 50), truth).head().getDouble(1)
       val (rRaw, rRes) = (recall(dirRaw), recall(dirRes))
       info(s"recall raw=$rRaw residual=$rRes")
@@ -437,8 +439,8 @@ class OperatorsSpec extends AnyFunSuite {
       val fresh = emb.where(col("vec_id") >= 400)
         .select(col("vec_id") + 10000, col("embedding"))
         .toDF("vec_id", "embedding")
-      Similarity.appendToIvfPqIndex(fresh, dirRes)
-      val served = Similarity.ivfPqTopK(spark, dirRes,
+      IvfIndex.append(fresh, dirRes)
+      val served = IvfIndex.topK(spark, dirRes,
         fresh.where(col("vec_id") < 10405), k = 5, nprobe = 8,
         shortlist = 400)
         .collect()
@@ -459,12 +461,12 @@ class OperatorsSpec extends AnyFunSuite {
     try {
       val old = emb.where(col("vec_id") % 2 === 0)
       val fresh = emb.where(col("vec_id") % 2 =!= 0)
-      Similarity.saveIvfIndex(old, dir, nlist = 8, iters = 2)
-      Similarity.appendToIvfIndex(fresh, dir)
+      IvfIndex.save(old, dir, nlist = 8, iters = 2)
+      IvfIndex.append(fresh, dir)
       val q = emb.where(col("vec_id") < 3)
-      val served = Similarity.ivfTopKIndexed(spark, dir, q, k = 5, nprobe = 3)
-      val expected = Similarity.ivfTopKWith(emb, q, k = 5,
-        Similarity.loadIvfCentroids(spark, dir), nprobe = 3)
+      val served = IvfIndex.topK(spark, dir, q, k = 5, nprobe = 3)
+      val expected = IvfIndex.topKWith(emb, q, k = 5, IvfIndex.load(spark, dir),
+        nprobe = 3)
       assert(served.count() > 0)
       assert(served.except(expected).isEmpty && expected.except(served).isEmpty)
     } finally {
@@ -480,15 +482,15 @@ class OperatorsSpec extends AnyFunSuite {
     try {
       val old = emb.where(col("vec_id") % 2 === 0)
       val fresh = emb.where(col("vec_id") % 2 =!= 0)
-      Similarity.saveIvfPqIndex(old, dir, nlist = 8, m = 16, k = 32, iters = 2)
-      Similarity.appendToIvfPqIndex(fresh, dir)
+      IvfIndex.save(old, dir, IvfIndex.Pq(m = 16, k = 32), nlist = 8, iters = 2)
+      IvfIndex.append(fresh, dir)
       val q = emb.where(col("vec_id") < 3)
       // probing every bucket on the GROWN layout must equal the flat
       // rerank over the grown codes (both quantizers are the persisted
       // ones — append added data, not new centroids/codebooks)
-      val served = Similarity.ivfPqTopK(spark, dir, q, k = 5, nprobe = 8,
+      val served = IvfIndex.topK(spark, dir, q, k = 5, nprobe = 8,
         shortlist = 25)
-      val cb = Similarity.loadPqCodebooks(spark, dir)
+      val cb = IvfIndex.load(spark, dir).codebooks
       val codes = spark.read.parquet(s"$dir/codes")
       val corpus = spark.read.parquet(s"$dir/corpus")
         .select(col("vec_id"), col("v").as("embedding"))
@@ -499,7 +501,7 @@ class OperatorsSpec extends AnyFunSuite {
       assert(served.count() > 0)
       assert(served.except(flat).isEmpty && flat.except(served).isEmpty)
       // the audit runs on the grown layout and reports a sane recall
-      val audit = Similarity.ivfPqIndexRecallAudit(spark, dir, q, k = 5,
+      val audit = IvfIndex.recallAudit(spark, dir, q, k = 5,
         nprobe = 8, shortlist = 25).head()
       assert(audit.getLong(0) == 3L && audit.getDouble(1) > 0.0)
     } finally {

@@ -132,7 +132,9 @@ class PlanAuditSpec extends AnyFunSuite {
       // r12: the int8 loop-expression family (quantize/dot/cosine) and
       // the composed IVF+SQ8 serve join the pinned set — same silent-
       // degradation surface as the IVF/PQ trees this audit exists for
-      "x115_int8_ann", "x117_ivfsq8_ann", "q131_int8_quantize_fn")
+      "x115_int8_ann", "x117_ivfsq8_ann", "q131_int8_quantize_fn",
+      // the residual-PQ encode and the SQL IVF+SQ8 serve
+      "x113_ivfpq_residual_ann", "q133_ivfsq8_topk_fn")
     CodegenGuard.reset()
     family.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -60,7 +60,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("model artifacts: train -> create model -> sidecar round-trip -> apply by name") {
-    import graft.operators.{Similarity, TextAnalysis}
+    import graft.operators.{IvfIndex, TextAnalysis}
     val dir = java.nio.file.Files.createTempDirectory("graft_models_")
     val sidecar = dir.resolve("catalog.json").toString
     val mergesPath = dir.resolve("bpe_merges.txt").toString
@@ -73,7 +73,7 @@ class SurfaceSpec extends AnyFunSuite {
         numMerges = 8, path = mergesPath)
       assert(merges.nonEmpty)
       assert(TextAnalysis.loadBpeMerges(spark, mergesPath) == merges)
-      Similarity.saveIvfIndex(g1.catalog.relation("embeddings"), ivfDir,
+      IvfIndex.save(g1.catalog.relation("embeddings"), ivfDir,
         nlist = 8, iters = 2)
       g1.sql(s"create model toktok kind 'bpe' at '$mergesPath'")
       g1.sql(s"create model annidx kind 'ivf' at '$ivfDir'")
@@ -108,7 +108,7 @@ class SurfaceSpec extends AnyFunSuite {
       assert(e3.getMessage.contains("no IVF layout"))
       // PQ index as a third model kind: register + serve by name
       val pqDir = dir.resolve("pq").toString
-      graft.operators.Similarity.savePqIndex(
+      IvfIndex.savePqIndex(
         g2.catalog.relation("embeddings"), pqDir, m = 16, k = 16, iters = 1)
       g2.sql(s"create model pqidx kind 'pq' at '$pqDir'")
       val pqServed = g2.sql("select qid, vec_id from pq_topk(annq, 'pqidx', 5, 50)")
@@ -128,6 +128,63 @@ class SurfaceSpec extends AnyFunSuite {
       }
       rm(dir.toFile)
     }
+  }
+
+  test("ANN table functions: wrong-kind model, layout-less literal path and torn-layout CREATE MODEL are eager errors") {
+    import graft.operators.IvfIndex
+    import graft.translate.GraftAnalysisException
+    val base = java.nio.file.Files.createTempDirectory("graft_ann_surface_")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
+      f.delete(): Unit
+    }
+    try {
+      val g = new GraftSession(spark).registerDir(TestSpark.sf)
+      val e = g.catalog.relation("embeddings").where(col("vec_id") < 64)
+      g.sql("create table ann_surface_q as select vec_id, embedding from embeddings where vec_id < 3")
+      // (table function, model kind, layout label, save, a part whose
+      // loss tears the layout)
+      val cases = Seq[(String, String, String, String => Unit, String)](
+        ("ann_topk", "ivf", "IVF",
+          d => IvfIndex.save(e, d, IvfIndex.Flat, nlist = 4, iters = 1), "centroids"),
+        ("pq_topk", "pq", "PQ",
+          d => IvfIndex.savePqIndex(e, d, m = 16, k = 8, iters = 1), "codebooks"),
+        ("ivfpq_topk", "ivfpq", "IVF-PQ",
+          d => IvfIndex.save(e, d, IvfIndex.Pq(m = 16, k = 8), nlist = 4, iters = 1),
+          "codebooks"),
+        ("ivfsq8_topk", "ivfsq8", "IVF+SQ8",
+          d => IvfIndex.save(e, d, IvfIndex.Sq8, nlist = 4, iters = 1), "codes"))
+      val dirs = cases.map { case (_, kind, _, save, _) =>
+        val d = base.resolve(kind).toString
+        save(d)
+        g.sql(s"create model ann_surface_$kind kind '$kind' at '$d'")
+        kind -> d
+      }.toMap
+      val empty = java.nio.file.Files.createDirectory(base.resolve("empty")).toString
+      cases.zipWithIndex.foreach { case ((fn, kind, label, _, torn), i) =>
+        // a registered model of another kind
+        val other = cases((i + 1) % cases.length)._2
+        val wrong = intercept[GraftAnalysisException](
+          g.sql(s"select * from $fn(ann_surface_q, 'ann_surface_$other', 5)"))
+        assert(wrong.getMessage.contains(
+          s"model 'ann_surface_$other' has kind '$other', expected '$kind'"),
+          wrong.getMessage)
+        // a literal path that holds no layout
+        val noLayout = intercept[GraftAnalysisException](
+          g.sql(s"select * from $fn(ann_surface_q, '$empty', 5)"))
+        assert(noLayout.getMessage.contains(s"$fn: ") &&
+          noLayout.getMessage.contains(s"no $label index layout at '$empty'"),
+          noLayout.getMessage)
+        // CREATE MODEL on a layout that lost a required part
+        rm(new java.io.File(dirs(kind), torn))
+        val tornErr = intercept[GraftAnalysisException](
+          g.sql(s"create model ann_surface_torn kind '$kind' at '${dirs(kind)}'"))
+        assert(tornErr.getMessage.contains(
+          s"create model ann_surface_torn: no $label layout at '${dirs(kind)}'"),
+          tornErr.getMessage)
+        assert(!g.catalog.hasModel("ann_surface_torn"))
+      }
+    } finally rm(base.toFile)
   }
 
   test("catalog persistence: a failed mid-replay never truncates the sidecar") {

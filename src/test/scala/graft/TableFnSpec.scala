@@ -275,12 +275,12 @@ class TableFnSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("annfn_").toString
     try {
       val e = g.catalog.relation("embeddings")
-      graft.operators.Similarity.saveIvfIndex(e, dir, nlist = 8, iters = 2)
+      graft.operators.IvfIndex.save(e, dir, nlist = 8, iters = 2)
       val viaSql = g.sql(
         s"select qid, vec_id, cos from ann_topk(embeddings, '$dir', 5, 3) " +
         "where qid < 3 order by qid, cos desc, vec_id")
-      val viaApi = graft.operators.Similarity
-        .ivfTopKIndexed(spark, dir, e.where(col("vec_id") < 3), k = 5, nprobe = 3)
+      val viaApi = graft.operators.IvfIndex
+        .topK(spark, dir, e.where(col("vec_id") < 3), k = 5, nprobe = 3)
         .orderBy(col("qid"), col("cos").desc, col("vec_id"))
       assert(viaSql.count() > 0)
       assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty)
