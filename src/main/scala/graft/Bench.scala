@@ -3,15 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Verify.localSession()
     // Warm up (session + catalog registration + JIT/codegen of the three
     // main engine shapes). Each step has its own try: a missing table must
     // not skip the remaining warmups — but every failure is printed and
@@ -39,60 +31,53 @@ object Bench {
     // a 100 TB job compiles once and runs for hours), and min-of-2 damps
     // the VM's noisy-neighbor windows, which can inflate any single
     // measurement 1.5-10x. Methodology recorded in the JSON ("runs": 2).
-    // Silent-degradation watchdog (r11 verdict): count codegen compile
-    // failures per gate — a 64 KB-limit fallback keeps results correct
-    // while the hot loop runs interpreted, invisible in the time alone.
-    CodegenGuard.install()
-    // spill watchdog (r12, same discipline): per-gate memory+disk spill
-    // bytes in the sidecar — a spilling gate is slow for a reason the
-    // wall clock alone never names
-    SpillGuard.install(spark)
+    // Each gate runs inside graft.obs: codegen fallbacks (a 64 KB-limit
+    // fallback keeps results correct while the hot loop runs interpreted)
+    // and memory+disk spill bytes are summed over passes; jobs, stages,
+    // tasks and task time come from the final pass, and construct_jobs
+    // counts the jobs run while the gate builds its DataFrame — the
+    // reasons a gate is slow that the wall clock alone never names.
     val fallbacks = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     val spills = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    val profiles = scala.collection.mutable.Map[String, (obs.Counters, Long)]()
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      CodegenGuard.reset()
-      SpillGuard.reset()
-      val t0 = System.nanoTime()
-      // noop sink materializes the FULL plan — count() would let Catalyst
-      // prune projections and eliminate sorts, timing only scan+filter.
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.toString}")
-          false
+      var constructJobs = 0L
+      val ((ok, dt), c) = obs.Obs.around(spark) {
+        val t0 = System.nanoTime()
+        // noop sink materializes the FULL plan — count() would let Catalyst
+        // prune projections and eliminate sorts, timing only scan+filter.
+        val ok =
+          try {
+            val (df, built) = obs.Obs.around(spark)(fn(spark, sfDir))
+            constructJobs = built.jobs
+            df.write.format("noop").mode("overwrite").save(); true
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.toString}")
+            false
+          }
+        // negative elapsed marks a failed query instead of reporting a
+        // fast-looking bogus time
+        val dt = (System.nanoTime() - t0) / 1e9
+        // the result is fully consumed (noop sink) — NOW it is safe to drop
+        // any operator-pinned RDDs (unkeyed count/session windows persist a
+        // range-partitioned shuffle per translation; without this, back-to-
+        // back gate runs accumulate pinned blocks until the ContextCleaner
+        // happens to run). Release time is outside the timed span by design:
+        // it is session hygiene, not query cost. Own try: a throwing forDir
+        // must stay a per-query failure, not kill the run pre-JSON.
+        try GraftSession.forDir(spark, sfDir).releaseOperatorCaches()
+        catch { case scala.util.control.NonFatal(e) =>
+          cleanupFailures += 1
+          System.err.println(s"[bench] $name cleanup FAILED: $e")
         }
-      // negative elapsed marks a failed query instead of reporting a
-      // fast-looking bogus time
-      val dt = (System.nanoTime() - t0) / 1e9
-      // the result is fully consumed (noop sink) — NOW it is safe to drop
-      // any operator-pinned RDDs (unkeyed count/session windows persist a
-      // range-partitioned shuffle per translation; without this, back-to-
-      // back gate runs accumulate pinned blocks until the ContextCleaner
-      // happens to run). Release time is outside the timed span by design:
-      // it is session hygiene, not query cost. Own try: a throwing forDir
-      // must stay a per-query failure, not kill the run pre-JSON.
-      try GraftSession.forDir(spark, sfDir).releaseOperatorCaches()
-      catch { case scala.util.control.NonFatal(e) =>
-        cleanupFailures += 1
-        System.err.println(s"[bench] $name cleanup FAILED: $e")
+        (ok, dt)
       }
-      fallbacks(name) += CodegenGuard.current
-      spills(name) += SpillGuard.current
+      fallbacks(name) += c.codegenFallbacks
+      spills(name) += c.spillBytes
+      profiles(name) = (c, constructJobs)
       if (ok) dt else -dt
     }
-    // local profiling convenience: SPARK_GRAFT_ONLY=x44,x27 benches the
-    // matching-prefix subset (driver never sets it → full run)
-    val benchSet = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case None => SparkEntry.queries
-      case Some(s) =>
-        val pfx = s.split(",").toSeq
-        val sub = SparkEntry.queries.filter { case (n, _) => pfx.exists(n.startsWith) }
-        // loud, unmissable: a filtered run must never pass for a full one
-        // (if the variable ever leaked into a grading environment)
-        println(s"""{"SUBSET":true,"SPARK_GRAFT_ONLY":"$s","n_of":${SparkEntry.queries.size},"n_selected":${sub.size}}""")
-        System.err.println(s"[bench] *** SUBSET RUN: ${sub.size}/${SparkEntry.queries.size} queries (SPARK_GRAFT_ONLY=$s) ***")
-        sub
-    }
+    val benchSet = Verify.selectedGates("bench")
     // min-of-N with the noise spread IN the artifact (r8 verdict #5): the
     // committed BENCH_full flipped 154↔179 s for identical code because a
     // single noisy-neighbor window inflates any one pass 1.5-10×; N passes
@@ -130,22 +115,16 @@ object Bench {
       val ok = ts.filter(_ > 0)
       name -> math.rint(ok.max / ok.min * 100) / 100
     }
-    // JSON string escape (same contract as Verify.q): a quote/backslash in
-    // a path or key must not break the driver's json parse
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    import Verify.q
+    def obj(kv: Iterable[(String, Any)]): String =
+      kv.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    val qs = obj(results)
     val total = if (results.nonEmpty) results.values.filter(_ > 0).sum else 0.0
     // spread summary: median + p90 of the per-query noise ratios
     val sVals = spreads.values.toSeq.sorted
     def pct(p: Double): Double =
       if (sVals.isEmpty) 1.0 else sVals(((sVals.size - 1) * p).toInt)
-    val spreadJson = spreads.toSeq.sortBy(-_._2).take(10)
-      .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    val spreadJson = obj(spreads.toSeq.sortBy(-_._2).take(10))
     println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$nRuns,"agg":"min","queries":$qs,"sf":${q(sfDir)}}""")
     // The driver keeps only the LAST ~2000 chars of output; with 90 queries
     // the full line above is ~4 KB, so its head (and the "{"metric"...`
@@ -154,17 +133,19 @@ object Bench {
     // values — guaranteed to sit complete inside the tail window. Both
     // lines carry the same total, so either parse is correct.
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val slowest = results.toSeq.sortBy(-_._2).take(15)
-      .map { case (k, v) => s"${q(k)}:${r3(v)}" }.mkString("{", ",", "}")
+    val slowest = obj(results.toSeq.sortBy(-_._2).take(15).map { case (k, v) => k -> r3(v) })
     val nFailed = results.values.count(_ < 0)
     // Regression tripwire (r12 verdict #2): diff this run against the
     // PREVIOUSLY COMMITTED full-run map before overwriting it. Any common
     // gate >3x its prior min lands in a `regressions` block inside the new
-    // sidecar + a loud stderr line — the CodegenGuard/SpillGuard
+    // sidecar + a loud stderr line — the codegen/spill watchdog
     // discipline applied to wall-time (x36 sat at 5.7x in a committed
     // artifact without a note in r12). Noise context: the identical-code
     // band on this box is ±11% suite-wide with single gates 1.5-10x in
     // noisy windows (SCALE.md), so 3x is the "look at it" bar, not proof.
+    // A sidecar that exists but cannot be read disables the tripwire, so
+    // that failure is printed and counted, never swallowed.
+    var priorFailures = 0
     val priorQueries: Map[String, Double] = try {
       val p = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_full.json"))
@@ -177,8 +158,13 @@ object Bench {
         """"([^"]+)"\s*:\s*(-?[0-9.eE+\-]+)""".r.findAllMatchIn(qblock)
           .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
           .toMap
+          .ensuring(_.nonEmpty, s"no \"queries\" map in $p")
       } else Map.empty
-    } catch { case _: Throwable => Map.empty }
+    } catch { case scala.util.control.NonFatal(e) =>
+      priorFailures += 1
+      System.err.println(s"[bench] prior sidecar unreadable, regression tripwire off: $e")
+      Map.empty
+    }
     val regressions = results.toSeq.collect {
       case (name, now) if now > 0 && priorQueries.getOrElse(name, -1.0) > 0 &&
           now > 3.0 * priorQueries(name) =>
@@ -192,18 +178,16 @@ object Bench {
     // compact summary, so round-over-round diffs need this sidecar.
     try {
       val isSubset = sys.env.contains("SPARK_GRAFT_ONLY")
-      val allSpread = spreads.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-      val fbNonzero = fallbacks.toSeq.filter(_._2 > 0).sortBy(-_._2)
-        .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-      val fbTotal = fallbacks.values.sum
-      val spNonzero = spills.toSeq.filter(_._2 > 0).sortBy(-_._2)
-        .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-      val spTotal = spills.values.sum
-      val regJson = regressions
-        .map { case (k, prior, now) =>
-          s"${q(k)}:{\"prior\":${r3(prior)},\"now\":${r3(now)},\"ratio\":${r3(now / prior)}}" }
-        .mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"subset":$isSubset,"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"codegen_fallback_total":$fbTotal,"codegen_fallbacks":$fbNonzero,"spill_bytes_total":$spTotal,"spill_bytes":$spNonzero,"regressions":$regJson,"spread":$allSpread,"queries":$qs,"sf":${q(sfDir)}}"""
+      val allSpread = obj(spreads)
+      val fbNonzero = obj(fallbacks.toSeq.filter(_._2 > 0).sortBy(-_._2))
+      val spNonzero = obj(spills.toSeq.filter(_._2 > 0).sortBy(-_._2))
+      val gateJson = obj(profiles.toSeq.sortBy(_._1).map { case (k, (c, cj)) =>
+        k -> s"""{"jobs":${c.jobs},"construct_jobs":$cj,"stages":${c.stages},"tasks":${c.tasks},"task_ms":${c.taskMs}}"""
+      })
+      val regJson = obj(regressions.map { case (k, prior, now) =>
+        k -> s"""{"prior":${r3(prior)},"now":${r3(now)},"ratio":${r3(now / prior)}}"""
+      })
+      val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"prior_failures":$priorFailures,"subset":$isSubset,"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"codegen_fallback_total":${fallbacks.values.sum},"codegen_fallbacks":$fbNonzero,"spill_bytes_total":${spills.values.sum},"spill_bytes":$spNonzero,"gates":$gateJson,"regressions":$regJson,"spread":$allSpread,"queries":$qs,"sf":${q(sfDir)}}"""
       // subset runs write a SEPARATE sidecar UNCONDITIONALLY (the env
       // override is honored only for full runs): a local profiling loop —
       // even one with a stale SPARK_GRAFT_BENCH_FULL in its shell — must
@@ -216,7 +200,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write the per-query sidecar: $e")
     }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"codegen_fallback_total":${fallbacks.values.sum},"spill_bytes_total":${spills.values.sum},"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"noisiest":$spreadJson,"queries":$slowest,"sf":${q(sfDir)}}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"prior_failures":$priorFailures,"codegen_fallback_total":${fallbacks.values.sum},"spill_bytes_total":${spills.values.sum},"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"noisiest":$spreadJson,"queries":$slowest,"sf":${q(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1500,10 +1500,12 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
 
     // EXPLAIN ANALYZE (round 9): EXECUTE the query, then render the final
     // physical plan annotated with its runtime SQLMetrics (output rows,
-    // spill bytes, shuffle bytes, peak memory per operator) — the runtime
-    // complement of PlanAuditSpec's static scale-killer checks: static
-    // audit says "no BNLJ", this says "operator X actually spilled 2 GB /
-    // emitted 10⁹ rows", which is where skew shows up first.
+    // spill bytes, shuffle bytes, peak memory per operator) and one line of
+    // graft.obs totals (jobs, stages, tasks, task time, spill and shuffle
+    // bytes, codegen fallbacks) — the runtime complement of PlanAuditSpec's
+    // static scale-killer checks: static audit says "no BNLJ", this says
+    // "operator X actually spilled 2 GB / emitted 10⁹ rows", which is where
+    // skew shows up first.
     case Explain(q, true) =>
       import spark.implicits._
       val df = translator.query(q)
@@ -1515,7 +1517,7 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
       // collect would run a separate deserializing QueryExecution and the
       // metrics would accumulate on that other plan instance) and renders
       // the AQE-finalized tree
-      Seq(PlanMetrics.executeAndRender(df)).toDF("plan")
+      Seq(obs.PlanMetrics.executeAndRender(df)).toDF("plan")
 
     case CreateSchema(name, fields, parent) =>
       catalog.createSchema(name, fields, parent)

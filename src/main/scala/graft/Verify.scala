@@ -1,12 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    require(args.length == 2, s"usage: Verify <sfDir> <outDir> (got ${args.length} args)")
-    val Array(sfDir, outDir) = args
+  /** The session the Verify and Bench mains run on:
+    * `local[N]` with N = SPARK_GRAFT_CPUS, defaulting to the host's
+    * available processors. */
+  def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
@@ -16,20 +17,42 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // local pre-flight convenience: SPARK_GRAFT_ONLY=q94,q95 runs the
-    // matching-prefix subset (driver never sets it → full run)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = only match {
+    spark
+  }
+
+  /** Local pre-flight and profiling convenience: SPARK_GRAFT_ONLY=q94,x44
+    * selects the gates whose names start with a listed prefix (unset →
+    * full run). A subset run says so on stdout and stderr, loud and
+    * unmissable: it must never pass for a full one. */
+  def selectedGates(tag: String): Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
       case None => SparkEntry.queries
-      case Some(pfx) =>
-        val sub = SparkEntry.queries.filter { case (n, _) => pfx.exists(n.startsWith) }
-        // loud, unmissable: a filtered run must never pass for a full one
-        println(s"[verify] *** SUBSET RUN: ${sub.size}/${SparkEntry.queries.size} " +
-          s"queries (SPARK_GRAFT_ONLY=${pfx.mkString(",")}) ***")
-        System.err.println(s"[verify] *** SUBSET RUN: ${sub.size}/${SparkEntry.queries.size} queries ***")
+      case Some(s) =>
+        val sub = SparkEntry.queries.filter { case (n, _) => s.split(",").exists(n.startsWith) }
+        println(s"""{"SUBSET":true,"SPARK_GRAFT_ONLY":"$s","n_of":${SparkEntry.queries.size},"n_selected":${sub.size}}""")
+        System.err.println(s"[$tag] *** SUBSET RUN: ${sub.size}/${SparkEntry.queries.size} queries (SPARK_GRAFT_ONLY=$s) ***")
         sub
     }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in gate SQL would otherwise make oracle_sql.json
+  // unparseable and silently skip the oracle compare.
+  def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def main(args: Array[String]): Unit = {
+    require(args.length == 2, s"usage: Verify <sfDir> <outDir> (got ${args.length} args)")
+    val Array(sfDir, outDir) = args
+    val spark = localSession()
+    new java.io.File(outDir).mkdirs()
+    val selected = selectedGates("verify")
     var cleanupFailures = 0
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -62,18 +85,6 @@ object Verify {
     }
     if (cleanupFailures > 0)
       System.err.println(s"[verify] $cleanupFailures post-gate cleanup failure(s)")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,9 +1,9 @@
-package graft
+package graft.obs
 
 import org.apache.spark.sql.DataFrame
 
 /** Runtime per-operator SQLMetrics off a DataFrame's OWN QueryExecution —
-  * the shared engine behind the dialect's `EXPLAIN ANALYZE` and the
+  * the engine behind the dialect's `EXPLAIN ANALYZE` and the
   * DressRehearsal sf10 metrics artifact.
   *
   * Two traps this encapsulates (both measured in round 9):
@@ -18,12 +18,13 @@ object PlanMetrics {
 
   /** EXECUTE the frame's plan and render it with every touched runtime
     * metric (output rows, spill bytes, shuffle bytes, peak memory, files
-    * read, …) per operator. */
+    * read, …) per operator, then one `totals:` line with the execution's
+    * [[Counters]]. */
   def executeAndRender(df: DataFrame): String = {
-    df.queryExecution.toRdd.foreach(_ => ())
+    val (_, c) = Obs.around(df.sparkSession)(df.queryExecution.toRdd.foreach(_ => ()))
     val sb = new StringBuilder
     render(df.queryExecution.executedPlan, 0, sb)
-    sb.toString
+    sb.append("totals: ").append(c).append('\n').toString
   }
 
   private def render(p: org.apache.spark.sql.execution.SparkPlan, depth: Int,
@@ -45,27 +46,5 @@ object PlanMetrics {
       case other => other.children
     }
     next.foreach(render(_, depth + 1, sb))
-  }
-
-  /** Sum one metric name across the executed tree (e.g. "spill size",
-    * "shuffle bytes written") — the headline numbers a scale audit pins. */
-  def totalMetric(df: DataFrame, metricName: String): Long = {
-    var acc = 0L
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      p.metrics.foreach { case (key, m) =>
-        if ((key.contains(metricName) ||
-             m.name.exists(_.contains(metricName))) && m.value > 0)
-          acc += m.value
-      }
-      (p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          Seq(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          Seq(s.plan)
-        case other => other.children
-      }).foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-    acc
   }
 }

@@ -1404,15 +1404,12 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
     * gap, matching Spark's session_window upper bound). Per-key sorting
     * parallelizes across keys via window functions; the UNKEYED form is
     * range-partitioned and boundary-merged (no global sort — see
-    * [[applyGlobalSessionWindow]]). Streaming session windows: use
-    * `graft.streaming.Sessions` (native session_window + watermark) — the
-    * per-row two-pass form below is not expressible on a stream. */
+    * [[applyGlobalSessionWindow]]). Streaming session windows never reach
+    * here: the per-row two-pass form below is not expressible on a stream,
+    * so [[applyWindowFull]] sends them to [[applyStreamingSessionWindow]]
+    * (native session_window + watermark). */
   private def applySessionWindow(df: DataFrame, timeField: String,
       gapUs: Long, partCols: Seq[String]): (DataFrame, Seq[String]) = {
-    if (df.isStreaming)
-      throw new GraftAnalysisException(
-        "streaming session windows are not supported in the dialect yet; " +
-          "use graft.streaming.Sessions.aggregate")
     if (partCols.isEmpty) return applyGlobalSessionWindow(df, timeField, gapUs)
     val tUs = unix_micros(col(timeField).cast("timestamp"))
     val ord = Window.partitionBy(partCols.map(col): _*).orderBy(tUs)
@@ -1582,9 +1579,9 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
     * the translator supplies the policy; SURVEY §7.4 risk 3). Grouping
     * keys include the window STRUCT (`__w`) so append-mode state eviction
     * works (the struct carries the event-time watermark metadata; plain
-    * derived `w_start` columns don't — verified empirically, StreamProbe
-    * shapes C vs D). `w_start`/`w_end` stay materialized for projections
-    * and windowed joins.
+    * derived `w_start` columns don't: Spark rejects append mode on an
+    * aggregation grouped by them). `w_start`/`w_end` stay materialized for
+    * projections and windowed joins.
     *
     * Gap windows (`every` > `size`): Spark's native `window()` rejects
     * slide > duration, but a gap window is a tumbling window of period

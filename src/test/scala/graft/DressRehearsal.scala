@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * training-data pipeline ([[graft.operators.Curation.fullPipeline]]:
   * normalize → Gopher filter → exact dedup → near-dup families →
   * leakage-safe split → packing → shard publish) at ~sf10 (the
-  * ScaleGrowth10 synth, 100× bench scale, multi-file layout) and commit
+  * `ScaleGrowth 100` synth, 100× bench scale, multi-file layout) and commit
   * the per-operator runtime SQLMetrics — rows, spill bytes, shuffle
   * bytes — as an artifact, plus the headline totals the 100 TB posture
   * claims (zero spill, shuffle bounded by the keyed stages).
@@ -31,10 +31,8 @@ object DressRehearsal {
     val tUpstream = (System.nanoTime() - t0) / 1e9
 
     val t1 = System.nanoTime()
-    val rendered = PlanMetrics.executeAndRender(packedLazy)
+    val (rendered, c) = obs.Obs.around(spark)(obs.PlanMetrics.executeAndRender(packedLazy))
     val tPacked = (System.nanoTime() - t1) / 1e9
-    val spill = PlanMetrics.totalMetric(packedLazy, "spill")
-    val shuffleW = PlanMetrics.totalMetric(packedLazy, "shuffle bytes written")
 
     val packed = packedLazy.localCheckpoint()
     val pubDir = java.nio.file.Files.createTempDirectory("rehearsal_pub_")
@@ -56,7 +54,7 @@ object DressRehearsal {
     body.append(s"published=$published  splits={$splitRows}\n")
     body.append(f"# upstream (normalize+filter+dedup+pair checkpoints)=${tUpstream}%.1f s  ")
     body.append(f"packed-plan execute=${tPacked}%.1f s  publish(32 shards)=${tPublish}%.1f s\n")
-    body.append(s"# packed-plan totals: spill_bytes=$spill  shuffle_bytes_written=$shuffleW\n")
+    body.append(s"# packed-plan totals: spill_bytes=${c.spillBytes}  shuffle_bytes_written=${c.shuffleWriteBytes}\n")
     body.append("# (exact dedup + LSH pair mining execute inside the kept/pairs\n")
     body.append("#  localCheckpoints; the tree below is the split+tokens+pack plan)\n\n")
     body.append(rendered)

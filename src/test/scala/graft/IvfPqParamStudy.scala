@@ -16,7 +16,7 @@ import graft.operators.{IvfIndex, Similarity}
   *
   * Run: `sbt -batch "Test/runMain graft.IvfPqParamStudy
   *   [sfDir [m k shortlist [nlistCsv]]]"`
-  * (expects a ScaleGrowth10 output at /tmp/sfsynth10 by default). The
+  * (expects a `ScaleGrowth 100` output at /tmp/sfsynth10 by default). The
   * m/k/shortlist knobs isolate the OTHER recall levers: the first sweep
   * showed recall is ADC-bound at m=8 (more probes LOWER recall — noisy
   * ADC scores crowd true neighbors out of the shortlist), so the second

@@ -170,18 +170,10 @@ class RegressionSpec extends AnyFunSuite {
 
   test("schemaOf/EXPLAIN with a scalar subquery plans without running a Spark job") {
     g.catalog.registerTable("sq_probe", Seq((1, "a"), (2, "b")).toDF("id", "s"))
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val schema = g.schemaOf("select s, (select max(id) from sq_probe) as m from sq_probe")
-      assert(schema.fieldNames.toSeq == Seq("s", "m"))
-      Thread.sleep(500) // listener bus is async
-      assert(jobs == 0, "planning a scalar subquery must not execute it")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (schema, c) = obs.Obs.around(spark)(
+      g.schemaOf("select s, (select max(id) from sq_probe) as m from sq_probe"))
+    assert(schema.fieldNames.toSeq == Seq("s", "m"))
+    assert(c.jobs == 0, "planning a scalar subquery must not execute it")
     // and the lazy form still computes the right value
     val v = g.sql("select (select max(id) from sq_probe) as m from sq_probe where id = 1")
       .collect().head.getInt(0)

@@ -337,6 +337,10 @@ class SurfaceSpec extends AnyFunSuite {
     assert(out.contains("numOutputRows="), out)
     // shuffle node reports exchanged data (bytes written > 0)
     assert(out.contains("Exchange") || out.contains("ShuffleQueryStage"), out)
+    // last line: the graft.obs counters of the execution
+    val totals = out.linesIterator.toSeq.last
+    assert(totals.startsWith("totals: jobs=") && !totals.startsWith("totals: jobs=0 "), out)
+    assert(totals.contains(" spill_bytes=0 ") && totals.contains(" codegen_fallbacks=0"), out)
     // plain explain still returns the formatted static plan
     val stat = g.sql("explain select n_name from nation").head().getString(0)
     assert(stat.contains("Scan parquet") && !stat.contains("numOutputRows="))
