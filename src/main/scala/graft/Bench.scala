@@ -15,6 +15,10 @@ object Bench {
         warmFailures += 1
         System.err.println(s"[bench] warm-up FAILED: $e")
       }
+    // the catalog layer: the first forDir registers every table
+    val tReg = System.nanoTime()
+    val (_, registered) = obs.Obs.around(spark)(warm(GraftSession.forDir(spark, sfDir)))
+    val registerMs = math.rint((System.nanoTime() - tReg) / 1e5) / 10
     warm(GraftSession.forDir(spark, sfDir).sql("select count(*) as n from lineitem").count())
     warm {
       val docsSample = GraftSession.forDir(spark, sfDir).catalog.relation("documents").limit(50)
@@ -187,7 +191,7 @@ object Bench {
       val regJson = obj(regressions.map { case (k, prior, now) =>
         k -> s"""{"prior":${r3(prior)},"now":${r3(now)},"ratio":${r3(now / prior)}}"""
       })
-      val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"prior_failures":$priorFailures,"subset":$isSubset,"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"codegen_fallback_total":${fallbacks.values.sum},"codegen_fallbacks":$fbNonzero,"spill_bytes_total":${spills.values.sum},"spill_bytes":$spNonzero,"gates":$gateJson,"regressions":$regJson,"spread":$allSpread,"queries":$qs,"sf":${q(sfDir)}}"""
+      val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"prior_failures":$priorFailures,"register_ms":$registerMs,"register_jobs":${registered.jobs},"subset":$isSubset,"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"codegen_fallback_total":${fallbacks.values.sum},"codegen_fallbacks":$fbNonzero,"spill_bytes_total":${spills.values.sum},"spill_bytes":$spNonzero,"gates":$gateJson,"regressions":$regJson,"spread":$allSpread,"queries":$qs,"sf":${q(sfDir)}}"""
       // subset runs write a SEPARATE sidecar UNCONDITIONALLY (the env
       // override is honored only for full runs): a local profiling loop —
       // even one with a stale SPARK_GRAFT_BENCH_FULL in its shell — must
@@ -200,7 +204,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write the per-query sidecar: $e")
     }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"prior_failures":$priorFailures,"codegen_fallback_total":${fallbacks.values.sum},"spill_bytes_total":${spills.values.sum},"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"noisiest":$spreadJson,"queries":$slowest,"sf":${q(sfDir)}}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$nRuns,"agg":"min","n_queries":${results.size},"n_failed":$nFailed,"warm_failures":$warmFailures,"cleanup_failures":$cleanupFailures,"prior_failures":$priorFailures,"register_ms":$registerMs,"register_jobs":${registered.jobs},"codegen_fallback_total":${fallbacks.values.sum},"spill_bytes_total":${spills.values.sum},"spread_med":${pct(0.5)},"spread_p90":${pct(0.9)},"noisiest":$spreadJson,"queries":$slowest,"sf":${q(sfDir)}}""")
     spark.stop()
   }
 }

@@ -850,59 +850,24 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
     this
   }
 
-  /** Register every parquet table in a testdata directory (TESTDATA.md). */
+  /** Register every parquet table in a testdata directory (TESTDATA.md).
+    * Each table's schema is read from one parquet footer on the driver
+    * ([[graft.catalog.ParquetFooter]]), so registration runs no Spark job,
+    * and pinned: a schema-less parquet read would re-infer it, a Spark job,
+    * inside every query's analysis. */
   def registerDir(dir: String): this.type = {
     val d = new java.io.File(dir)
     val files = Option(d.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
     files.foreach { f =>
-      val name = f.getName.stripSuffix(".parquet")
-      val nanoCols = nanoTimestampCols(f.getPath) // footer read once
-      // Infer the schema ONCE at registration (r15 opt): a schema-less
-      // parquet read re-runs footer schema inference — a real Spark job —
-      // inside EVERY query's analysis (measured: ~60-100 ms per table
-      // reference, ~30 s across the bench suite). With the schema pinned,
-      // analysis is pure driver work.
-      val schema = spark.read.parquet(f.getPath).schema
+      val footer = graft.catalog.ParquetFooter.read(spark, f.getPath)
       // by-name: every catalog access plans a FRESH read, so self-joins get
       // distinct attribute ids (otherwise `e1 join e2` on the same table
       // collapses both sides onto one relation).
-      catalog.registerTable(name, restoreNanoTimestamps(
-        spark.read.schema(schema).parquet(f.getPath), nanoCols))
+      catalog.registerTable(f.getName.stripSuffix(".parquet"), restoreNanoTimestamps(
+        spark.read.schema(footer.schema).parquet(f.getPath), footer.nanoCols))
     }
     this
-  }
-
-  /** Columns stored as parquet TIMESTAMP(NANOS) — detected from the footer's
-    * logical type annotations. `<table>.parquet` may be a single file OR a
-    * directory of part files (all written together, so any one footer is
-    * representative — probe the first). */
-  private def nanoTimestampCols(path: String): Set[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    val f0 = new java.io.File(path)
-    val probe =
-      if (!f0.isDirectory) path
-      else Option(f0.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).headOption
-        .map(_.getPath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no part files under parquet directory $path"))
-    val inFile = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(probe), spark.sessionState.newHadoopConf())
-    val reader = ParquetFileReader.open(inFile)
-    try {
-      reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-        case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == TimeUnit.NANOS
-          case _ => false
-        }) => f.getName
-      }.toSet
-    } finally reader.close()
   }
 
   /** Under `nanosAsLong`, NANOS columns surface as LongType epoch-nanos;
@@ -1904,7 +1869,8 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
       }
     } else {
       path match {
-        case p if p.endsWith(".parquet") => spark.read.parquet(p)
+        case p if p.endsWith(".parquet") =>
+          spark.read.schema(graft.catalog.ParquetFooter.read(spark, p).schema).parquet(p)
         case p if p.endsWith(".json")    => spark.read.schema(schema).json(p)
         case p                           => spark.read.schema(schema).csv(p)
       }

@@ -33,7 +33,7 @@ import org.apache.spark.sql.types._
   *    over struct(cos, idx));
   *  - [[ProbeCentroids]] orders by (cos desc, idx desc) (`sort_array`
   *    desc over the same structs);
-  *  - [[NearestSubCentroid]]/[[PqEncode]] score `dot(v_j, c) − |c|²/2`
+  *  - [[PqEncode]] scores `dot(v_j, c) − |c|²/2`
   *    and tie to the LOWER index (the negIdx trick);
   *  - [[PqReconstruct]] is the `element_at` chain as one array copy.
   * Comparisons use `Double.compare` (the struct-ordering total order).
@@ -265,76 +265,10 @@ case class ProbeCentroids(child: Expression, flat: Array[Double],
     copy(child = newChild)
 }
 
-/** L2-nearest sub-centroid index over one flattened k×sub codebook:
-  * argmax (v·c − |c|²/2), ties → LOWER index. */
-case class NearestSubCentroid(child: Expression, flat: Array[Double],
-                              k: Int, sub: Int)
-    extends AnnVectorExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "pq_nearest_sub_centroid"
-
-  // |c|²/2 per sub-centroid, accumulated in element order (bitwise
-  // identical to the literal tree's `lit(c.map(x => x*x).sum / 2.0)`)
-  private lazy val half: Array[Double] = Array.tabulate(k) { c =>
-    var s = 0.0; var i = 0
-    while (i < sub) { val y = flat(c * sub + i); s += y * y; i += 1 }
-    s / 2.0
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), sub)
-    var best = -1; var bestScore = 0.0
-    var c = 0
-    while (c < k) {
-      val base = c * sub
-      var dot = 0.0
-      var i = 0
-      while (i < n) { dot += getElemEval(v, i) * flat(base + i); i += 1 }
-      val score = dot - half(c)
-      if (best < 0 || java.lang.Double.compare(score, bestScore) > 0) {
-        bestScore = score; best = c
-      }
-      c += 1
-    }
-    best
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("codebook", flat, "double[]")
-      val halfRef = ctx.addReferenceObj("codebookHalfNorms", half, "double[]")
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val c = ctx.freshName("c"); val base = ctx.freshName("base")
-      val dot = ctx.freshName("dot"); val score = ctx.freshName("score")
-      val best = ctx.freshName("best"); val bestScore = ctx.freshName("bestScore")
-      s"""
-         |int $n = java.lang.Math.min($v.numElements(), $sub);
-         |int $best = -1; double $bestScore = 0.0;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  int $base = $c * $sub;
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += ${getElem(v, i)} * $flatRef[$base + $i];
-         |  }
-         |  double $score = $dot - $halfRef[$c];
-         |  if ($best < 0 || java.lang.Double.compare($score, $bestScore) > 0) {
-         |    $bestScore = $score; $best = $c;
-         |  }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Fused PQ encode: all m subspaces of a vector against a flattened
   * m×k×sub codebook model in ONE pass — no per-subspace `slice` copies.
   * Element j is the lower-tie argmax of (v_j·c − |c|²/2) over subspace
-  * j's k sub-centroids (exactly [[NearestSubCentroid]] over
-  * `slice(v, j·sub+1, sub)`). */
+  * j's k sub-centroids, v_j being `slice(v, j·sub+1, sub)`. */
 case class PqEncode(child: Expression, flat: Array[Double],
                     m: Int, k: Int, sub: Int)
     extends AnnVectorExpression {
@@ -484,12 +418,6 @@ object AnnModelOps {
     require(centroids.nonEmpty, "probeCentroids: empty centroid model")
     GraftBridge.column(ProbeCentroids(GraftBridge.expression(v),
       flatten2(centroids), centroids.length, centroids(0).length, nprobe))
-  }
-
-  def nearestSubCentroid(sv: Column, subCentroids: Array[Array[Double]]): Column = {
-    require(subCentroids.nonEmpty, "nearestSubCentroid: empty codebook")
-    GraftBridge.column(NearestSubCentroid(GraftBridge.expression(sv),
-      flatten2(subCentroids), subCentroids.length, subCentroids(0).length))
   }
 
   def pqEncode(v: Column, codebooks: Array[Array[Array[Double]]]): Column = {

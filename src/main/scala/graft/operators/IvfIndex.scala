@@ -464,13 +464,15 @@ object IvfIndex {
     }
   }
 
-  /** Read a layout directory with its schema pinned from a cached
-    * one-time inference: a schema-less parquet read re-infers the footer
-    * schema — a Spark job — inside every serve/audit call's analysis.
-    * Appends don't change a layout's schema. */
+  /** Read a layout directory with its schema pinned: a schema-less
+    * parquet read re-infers the schema, a Spark job, inside every
+    * serve/audit call's analysis. The schema is read from one footer on
+    * the driver ([[graft.catalog.ParquetFooter]]) and cached; appends don't
+    * change it. The `partitionBy("c")` data layouts get `c` back from
+    * partition discovery. */
   private def readLayout(spark: SparkSession, path: String): DataFrame = {
     val schema = cachedModel(path, s"$path#schema") {
-      spark.read.parquet(path).schema
+      graft.catalog.ParquetFooter.read(spark, path).schema
     }
     spark.read.schema(schema).parquet(path)
   }

@@ -268,9 +268,12 @@ object Similarity {
     * sub-vectors (same first-k init + mean-update scheme as
     * [[trainIvfCentroids]], L2 assignment — `argmax (v·c − |c|²/2)` is
     * exactly argmin L2 without materializing distances). All m subspaces
-    * assign in ONE pass per iteration (a single explode over an
-    * m-struct array), so training costs iters corpus scans, not
-    * iters × m. Model: m × k × (dim/m) = k·dim doubles — model-sized. */
+    * assign in ONE pass per iteration (the fused [[pqEncode]] kernel,
+    * whose code is exploded into (j, c) with a dynamic sub-vector slice),
+    * so training costs iters corpus scans, not iters × m. An m-way
+    * unrolled assignment would generate a method past HotSpot's
+    * 8,000-byte JIT limit at m = 16 and run interpreted. Model:
+    * m × k × (dim/m) = k·dim doubles — model-sized. */
   def pqTrain(corpus: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 2,
               vecCol: String = "embedding",
               idCol: String = "vec_id"): Array[Array[Array[Double]]] = {
@@ -288,14 +291,12 @@ object Similarity {
       Array.tabulate(m)(j => seed.map(_.slice(j * sub, (j + 1) * sub)))
     val wcorpus = Par.widen(corpus, idCol)
     for (_ <- 0 until iters) {
-      val parts = (0 until m).map { j =>
-        val sv = slice(col(vecCol), j * sub + 1, sub)
-        struct(lit(j).as("j"),
-          nearestSubCentroid(sv, codebooks(j)).as("c"), sv.as("sv"))
-      }
       val means = wcorpus
-        .select(explode(array(parts: _*)).as("e"))
-        .select(col("e.j"), col("e.c"), posexplode(col("e.sv")).as(Seq("pos", "x")))
+        .select(col(vecCol).as("v"),
+          posexplode(graft.expr.AnnModelOps.pqEncode(col(vecCol), codebooks))
+            .as(Seq("j", "c")))
+        .select(col("j"), col("c"),
+          posexplode(slice(col("v"), col("j") * sub + 1, lit(sub))).as(Seq("pos", "x")))
         .groupBy(col("j"), col("c"), col("pos"))
         .agg(avg(col("x").cast("double")).as("mu"))
         .collect()
@@ -309,13 +310,6 @@ object Similarity {
     }
     codebooks
   }
-
-  /** L2-nearest sub-centroid index: argmax of (v·c − |c|²/2), ties to
-    * the lower index — compact loop-based codegen over the codebook held
-    * as a field (not k literal probes; see [[nearestCentroid]]). */
-  private def nearestSubCentroid(sv: Column,
-                                 subCentroids: Array[Array[Double]]): Column =
-    graft.expr.AnnModelOps.nearestSubCentroid(sv, subCentroids)
 
   /** PQ-encode the corpus: (vec_id, code array<int> of length m) — the
     * compressed representation (m bytes/vector at k ≤ 256 vs dim·4). */

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.execution.FormattedMode
@@ -157,5 +159,41 @@ class PlanAuditSpec extends AnyFunSuite {
         "logger never reached the guard — the appender is detached or the " +
         "logger level filters WARN")
     CodegenGuard.reset()
+  }
+
+  test("PQ training generates no method too long for the JIT") {
+    // HotSpot interprets any method over 8,000 bytecode bytes; Spark logs
+    // that at INFO only, so CodegenGuard never sees it. Raise only the
+    // CodeGenerator logger for one training call. k = 5 is used nowhere
+    // else, so the generated code is new and really compiles here.
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    // Spark (re)configures log4j when the session starts: start it first
+    val emb = TestSpark.session.catalog.relation("embeddings")
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("jit-limit-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    assert(!cfg.getLoggers.containsKey(name), "CodeGenerator already has its own logger config")
+    val lc = new LoggerConfig(name, Level.INFO, true)
+    lc.addAppender(app, Level.INFO, null)
+    cfg.addLogger(name, lc)
+    ctx.updateLoggers()
+    try operators.Similarity.pqTrain(emb, m = 16, k = 5, iters = 1)
+    finally {
+      cfg.removeLogger(name)
+      ctx.updateLoggers()
+      app.stop()
+    }
+    val all = lines.asScala.toSeq
+    assert(all.exists(_.startsWith("Code generated in")), "the INFO probe saw no compile")
+    val tooLong = all.filter(_.contains("too long to be JIT compiled"))
+    assert(tooLong.isEmpty, tooLong.mkString(" | "))
   }
 }
