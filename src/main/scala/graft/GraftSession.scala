@@ -83,6 +83,16 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
         case Some(other) => throw new graft.translate.GraftAnalysisException(
           s"$fn: argument ${i + 1} must be an integer literal, got $other")
       }
+    // a literal merge list, 'e r,i n,m er': comma-separated symbol pairs
+    def bpeMerges(fn: String, list: String): Seq[(String, String)] =
+      list.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
+        p.split("\\s+") match {
+          case Array(a, b) => (a, b)
+          case _ => throw new graft.translate.GraftAnalysisException(
+            s"$fn: each merge must be two space-separated symbols, got " +
+              s"`$p` (format: 'e r,i n,m er', or a registered model name)")
+        }
+      }
     def arity(fn: String, args: Seq[TfArg], min: Int, max: Int): Unit =
       if (args.length < min || args.length > max)
         throw new graft.translate.GraftAnalysisException(
@@ -614,15 +624,7 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
             TextAnalysis.loadBpeMerges(spark,
               servable("bpe_tokenize", s, m)), cap)
         case graft.catalog.TfArg.Lit(s: String) =>
-          val merges = s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
-            p.split("\\s+") match {
-              case Array(a, b) => (a, b)
-              case _ => throw new graft.translate.GraftAnalysisException(
-                s"bpe_tokenize: each merge must be two space-separated " +
-                  s"symbols, got `$p` (format: 'e r,i n,m er', or a " +
-                  "registered model name)")
-            }
-          }
+          val merges = bpeMerges("bpe_tokenize", s)
           if (args.length > 2) throw new graft.translate.GraftAnalysisException(
             "bpe_tokenize: a vocab cap only applies to train mode " +
               "(integer merge count) or a registered model; an explicit " +
@@ -773,15 +775,7 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
           if (m.kind != "bpe") throw new graft.translate.GraftAnalysisException(
             s"bpe_encode: model '$s' has kind '${m.kind}', expected 'bpe'")
           TextAnalysis.loadBpeMerges(spark, servable("bpe_encode", s, m))
-        case graft.catalog.TfArg.Lit(s: String) =>
-          s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
-            p.split("\\s+") match {
-              case Array(a, b) => (a, b)
-              case _ => throw new graft.translate.GraftAnalysisException(
-                s"bpe_encode: each merge must be two space-separated " +
-                  s"symbols, got `$p` (format: 'e r,i n', or a model name)")
-            }
-          }
+        case graft.catalog.TfArg.Lit(s: String) => bpeMerges("bpe_encode", s)
         case other => throw new graft.translate.GraftAnalysisException(
           s"bpe_encode: argument 2 must be a merge-list string literal or " +
             s"a registered bpe model name, got $other")

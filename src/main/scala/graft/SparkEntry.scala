@@ -1379,10 +1379,11 @@ object SparkEntry {
           if (!done) Thread.sleep(200)
         }
       } finally { q.stop(); server.close() }
-      s.table(sink)
+      try s.table(sink)
         .select(org.apache.spark.sql.functions.col("k"),
           org.apache.spark.sql.functions.col("name"))
         .orderBy("k").localCheckpoint()
+      finally { s.catalog.dropTempView(sink); () }
     }),
     // ---- S8 driver gate (r13): the q117 pattern for JDBC — the gate
     // parquet is loaded into an embedded Derby table, registered through

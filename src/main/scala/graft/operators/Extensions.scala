@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Driver-gate wiring for the M4 extension operators (SURVEY §7.2):
   * one `queries` entry per operator, DuckDB oracles where the semantics
@@ -48,6 +50,112 @@ object Extensions {
                  else df.repartition(want)
     spread.write.mode("overwrite").parquet(dir)
     s.readStream.schema(df.schema).parquet(dir)
+  }
+
+  /** The one stream lifecycle of the gate harness: start `df`, drain it
+    * with `processAllAvailable`, stop it, and return its output as a batch
+    * frame. `spark.sql.shuffle.partitions` = `parts` (a one-batch replay:
+    * few state stores beat many) and `confs` hold only around `start()`
+    * (the query captures them there) and are then restored. Append mode
+    * writes the parquet file sink under `out`'s (dir, checkpoint), fresh
+    * temp dirs by default, so rows stay on the executors; it is read back
+    * with the stream's own schema, so no inference job runs. Complete
+    * mode, which the file sink cannot write, and a stream fed from a
+    * MemoryStream, whose rows are on the driver already (the file sink
+    * would only add its write, log and read-back), go to a uniquely
+    * named memory sink that is copied out before `stop()` and whose view
+    * is dropped after. Nothing is left behind: no temp view, no changed
+    * conf. */
+  private def drain(s: SparkSession, df: DataFrame, gate: String,
+                    mode: OutputMode = OutputMode.Append(), parts: Int = 4,
+                    confs: Map[String, String] = Map.empty,
+                    out: Option[(String, String)] = None): DataFrame = {
+    val fromDriver = df.queryExecution.logical.collectLeaves().exists {
+      case r: StreamingRelationV2 => r.sourceName == "memory"
+      case _ => false
+    }
+    val toFiles = mode == OutputMode.Append() && !fromDriver
+    val sink = s"${gate}_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val (dir, ckpt) = out.getOrElse(
+      if (toFiles) (tempDir(s"${gate}_out_"), tempDir(s"${gate}_ckpt_")) else (null, null))
+    val set = confs + ("spark.sql.shuffle.partitions" -> parts.toString)
+    val saved = set.keys.map(k => k -> s.conf.getOption(k)).toMap
+    val q = try {
+      set.foreach { case (k, v) => s.conf.set(k, v) }
+      if (toFiles) graft.streaming.Sinks.parquet(df, dir, ckpt, Trigger.ProcessingTime(0L))
+      else graft.streaming.Sinks.memory(df, sink, mode)
+    } finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+    try {
+      try {
+        q.processAllAvailable()
+        if (toFiles) s.read.schema(df.schema).parquet(dir)
+        else { // copied out, because its view is dropped below
+          val t = s.table(sink)
+          s.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+        }
+      } finally q.stop()
+    } finally { if (!toFiles) s.catalog.dropTempView(sink); () }
+  }
+
+  /** The parquet-parity ending: (n, stream_matches_batch) for a drained
+    * stream against its frozen batch output, compared in one action. */
+  private def parityRow(s: SparkSession, got: DataFrame, batchOut: DataFrame,
+                        nCol: String): DataFrame = {
+    import s.implicits._
+    val (n, same) = parityOneAction(got, batchOut)
+    Seq((n, if (n > 0 && same) 1 else 0)).toDF(nCol, "stream_matches_batch")
+  }
+
+  /** Count-window stream ≡ batch parity (size 9; `slide` rows apart, or
+    * tumbling at 0, CountWindow.assign's convention):
+    * the thinned event subset replays in on-field order through the
+    * stateful streaming counter (CountWindow.assign); per-row w_id
+    * assignments must equal the batch dialect's row_number chunking.
+    * Count windows are arrival-ORDER-sensitive, so this replay keeps the
+    * single-partition MemoryStream feed (one pre-start block = one
+    * ordered batch) instead of the file-backed replayStream — a file
+    * split does not contractually preserve row order. The feed is the
+    * thinned %20 subset, so the driver round-trip stays bounded. */
+  private def countWindowStream(s: SparkSession, d: String, gate: String,
+                                slide: Int): DataFrame = {
+    import s.implicits._
+    val g = GraftSession.forDir(s, d)
+    val every = if (slide > 0) s" every $slide" else ""
+    val batch = g.sql(
+        "select event_id as id, w_id from " +
+        "(select * from events where event_id % 20 = 0) as e " +
+        s"[size 9$every on event_id partitioned on event_type]")
+    val rows = g.catalog.relation("events")
+      .where(col("event_id") % 20 === 0)
+      .select(col("event_id"), col("event_type"))
+      .orderBy("event_id") // arrival order = batch's `on`-field order
+      .collect().map(r => (r.getLong(0), r.getString(1))).toIndexedSeq
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)](s)
+    val assigned = graft.streaming.CountWindow.assign(
+      in.toDF().toDF("id", "event_type"), 9, Seq("event_type"), slide)
+    in.addData(rows: _*) // one block → one partition → stable order
+    val (got, want) =
+      longPairs(drain(s, assigned.select(col("id"), col("w_id")), gate), batch)
+    Seq((want.length.toLong, if (got == want && got.nonEmpty) 1 else 0))
+      .toDF("n_rows", "stream_matches_batch")
+  }
+
+  /** Sorted (got, want) pairs of two long columns from ONE action: the
+    * drained stream's output joins the batch plan's last stage, so the
+    * compare costs the batch side's own jobs and no more. */
+  private def longPairs(got: DataFrame,
+                        want: DataFrame): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    def tagged(df: DataFrame, side: Boolean) =
+      df.select(df.columns.take(2).map(col) :+ lit(side).as("__got"): _*)
+    val (g, w) = tagged(got, true).union(tagged(want, false)).collect()
+      .partition(_.getBoolean(2))
+    def sorted(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    (sorted(g), sorted(w))
   }
 
   /** Files a frame's scan ACTUALLY reads: executes THIS QueryExecution
@@ -306,7 +414,6 @@ object Extensions {
     // corpus replays through the per-row stream filter; flags assert
     // md5-exact agreement with the two-pass batch paragraphDedup ----
     "x64_paragraph_dedup_stream" -> ((s, d) => {
-      import s.implicits._
       // localCheckpoint: consumed three times (batch dedup, hot model,
       // stream feed)
       val injected = docs(s, d).select(col("doc_id"),
@@ -329,23 +436,7 @@ object Extensions {
       val streamed = Dedup.applyParagraphDedup(in, "text", "doc_id", hot)
         .select(col("doc_id"), col("n_kept"), col("n_removed"),
           md5(col("cleaned")).as("h"))
-      val outDir = tempDir("x64_out_")
-      val ckpt = tempDir("x64_ckpt_")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try streamed.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val (nDocs, eq) = try {
-        q.processAllAvailable()
-        val got = s.read.parquet(outDir)
-          .select(col("doc_id"), col("n_kept"), col("n_removed"), col("h"))
-        val (n, same) = parityOneAction(got, batchOut)
-        (n, n > 0 && same)
-      } finally q.stop()
-      Seq((nDocs, if (eq) 1 else 0))
-        .toDF("n_docs", "stream_matches_batch")
+      parityRow(s, drain(s, streamed, "x64"), batchOut, "n_docs")
     }),
     // ---- streaming exact dedup (watermark-bounded state): the events
     // stream replays file-backed through dropDuplicatesWithinWatermark;
@@ -361,21 +452,8 @@ object Extensions {
       val in = replayStream(s, ev.select("user_id", "event_type", "ts"))
       val deduped = graft.streaming.Dedup.withinWatermark(
         in, Seq("user_id", "event_type"), "ts", "1 hour")
-      val sink = "x58_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // one micro-batch replay: 4 state stores beat 32 (conf captured at
-      // start; restored right after)
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try deduped.select(col("user_id"), col("event_type"))
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      try {
-        q.processAllAvailable()
-        s.table(sink).orderBy("user_id", "event_type")
-          // materialize BEFORE q.stop(): the memory sink's table reads
-          // the in-memory batches the query owns
-          .localCheckpoint()
-      } finally q.stop()
+      drain(s, deduped.select(col("user_id"), col("event_type")), "x58")
+        .orderBy("user_id", "event_type")
     }),
     // ---- streaming URL dedup (r12): the x114 canonicalize-then-dedup
     // hygiene on a STREAM — normalization is a stateless codegen
@@ -399,16 +477,7 @@ object Extensions {
         .withColumn("url_norm", UrlCuration.normalizeUrl(col("url")))
       val deduped = graft.streaming.Dedup.withinWatermark(
         in, Seq("url_norm"), "ts", "1 hour")
-      val sink = "x118_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try deduped.select(col("url_norm"))
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      try {
-        q.processAllAvailable()
-        s.table(sink).orderBy("url_norm").localCheckpoint()
-      } finally q.stop()
+      drain(s, deduped.select(col("url_norm")), "x118").orderBy("url_norm")
     }),
     // ---- the WEB curation pipeline (r12): the round-12 family as ONE
     // composition — canonical-URL dedup (re-crawl removal) → encoding
@@ -475,7 +544,6 @@ object Extensions {
     // encodes through stream-static joins only, md5-exact per-doc token
     // stream vs the batch operator ----
     "x128_unigram_stream" -> ((s, d) => {
-      import s.implicits._
       val dd = docs(s, d).localCheckpoint()
       val wf = TextAnalysis.bpeCappedVocab(dd, "text", "doc_id", 1 << 16)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -493,21 +561,7 @@ object Extensions {
         .localCheckpoint()
       val in = replayStream(s, dd.select("doc_id", "text").repartition(32))
       val streamed = TextAnalysis.unigramEncodeWith(in, "text", "doc_id", seg, ids)
-      val outDir = tempDir("x128_out_")
-      val ckpt = tempDir("x128_ckpt_")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try streamed.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val (nDocs, eq) = try {
-        q.processAllAvailable()
-        val got = digest(s.read.parquet(outDir))
-        val (n, same) = parityOneAction(got, batchOut)
-        (n, n > 0 && same)
-      } finally q.stop()
-      Seq((nDocs, if (eq) 1 else 0)).toDF("n_docs", "stream_matches_batch")
+      parityRow(s, digest(drain(s, streamed, "x128")), batchOut, "n_docs")
     }),
     // ---- gram-key bucketing is output-IDENTICAL (r14): the shuffle-
     // slicing lever re-runs ownership/coverage per pmod(__gh, 4) slice;
@@ -672,24 +726,18 @@ object Extensions {
       val outDir = tempDir("x81_out_")
       val ckpt = tempDir("x81_ckpt_")
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
-      def runPhase(): Unit = {
+      def runPhase(): DataFrame = {
         val in = s.readStream.schema(ev.schema).parquet(srcDir)
-        val dd = graft.streaming.Dedup.withinWatermark(
-          in, Seq("user_id", "event_type"), "ts", "400 days")
-          .select(col("user_id"), col("event_type"))
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = try dd.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-        try q.processAllAvailable() finally q.stop()
+        drain(s, graft.streaming.Dedup.withinWatermark(
+            in, Seq("user_id", "event_type"), "ts", "400 days")
+          .select(col("user_id"), col("event_type")), "x81",
+          out = Some((outDir, ckpt)))
       }
       ev.where(col("ts") < cut).coalesce(2).write.mode("append").parquet(srcDir)
       runPhase() // phase 1: first half, checkpoint written, query "dies"
       ev.where(col("ts") >= cut).coalesce(2).write.mode("append").parquet(srcDir)
-      runPhase() // RESTART from the checkpoint: offsets + dedup state restored
-      s.read.parquet(outDir).orderBy("user_id", "event_type")
+      // RESTART from the checkpoint: offsets + dedup state restored
+      runPhase().orderBy("user_id", "event_type")
     }),
     // ---- idempotent foreachBatch publish (r9): exactly-once WITHOUT the
     // file sink's _spark_metadata log (that driver-side compaction log is
@@ -856,7 +904,6 @@ object Extensions {
     // intervals row-at-a-time; md5-exact parity vs the batch operator,
     // same contract as x51/x64's hot-set streaming dedups ----
     "x88_span_dedup_stream" -> ((s, d) => {
-      import s.implicits._
       val injected = docs(s, d).select(col("doc_id"),
         when(col("doc_id") % 3 === 0,
           concat(col("text"),
@@ -885,23 +932,7 @@ object Extensions {
           spanWords = 8)
         .select(col("id"), col("n_words"), col("n_removed"),
           md5(col("cleaned")).as("h"))
-      val outDir = tempDir("x88_out_")
-      val ckpt = tempDir("x88_ckpt_")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try streamed.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val (nDocs, eq) = try {
-        q.processAllAvailable()
-        val got = s.read.parquet(outDir)
-          .select(col("id"), col("n_words"), col("n_removed"), col("h"))
-        val (n, same) = parityOneAction(got, batchOut)
-        (n, n > 0 && same)
-      } finally q.stop()
-      Seq((nDocs, if (eq) 1 else 0))
-        .toDF("n_docs", "stream_matches_batch")
+      parityRow(s, drain(s, streamed, "x88"), batchOut, "n_docs")
     }),
     // ---- end-to-end curation pipeline (r9): quality filter -> exact
     // dedup -> per-source cap -> corpus report, composed as ONE lazy plan
@@ -1644,7 +1675,6 @@ object Extensions {
     // per-row streaming filter (applyLineDedup over MemoryStream); flags
     // assert md5-exact agreement with the two-pass batch lineDedup ----
     "x51_line_dedup_stream" -> ((s, d) => {
-      import s.implicits._
       // localCheckpoint: the regexp-injected frame is consumed three times
       // (batch dedup, hot-line model, stream feed)
       val injected = docs(s, d).select(col("doc_id"),
@@ -1665,25 +1695,9 @@ object Extensions {
       val streamed = Dedup.applyLineDedup(in, "text", "doc_id", hot)
         .select(col("doc_id"), col("n_kept"), col("n_removed"),
           md5(col("cleaned")).as("h"))
-      val outDir = tempDir("x51_out_")
-      val ckpt = tempDir("x51_ckpt_")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try streamed.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val (nDocs, eq) = try {
-        q.processAllAvailable()
-        val got = s.read.parquet(outDir)
-          .select(col("doc_id"), col("n_kept"), col("n_removed"), col("h"))
-        // doc_id is unique per side, so equal counts + empty set diffs
-        // == exact multiset equality, computed distributed
-        val (n, same) = parityOneAction(got, batchOut)
-        (n, n > 0 && same)
-      } finally q.stop()
-      Seq((nDocs, if (eq) 1 else 0))
-        .toDF("n_docs", "stream_matches_batch")
+      // doc_id is unique per side, so equal counts + empty set diffs
+      // == exact multiset equality, computed distributed
+      parityRow(s, drain(s, streamed, "x51"), batchOut, "n_docs")
     }),
     // ---- streaming ≡ batch parity for the interval join: the same event
     // subsets replay through IntervalJoin.streaming (native stream-stream
@@ -1706,123 +1720,34 @@ object Extensions {
       val batch = IntervalJoin.join(l, r, Seq("event_type"), "l_ts", "r_ts",
           beforeUs = 21600000000L, afterUs = 0L)
         .select(col("l_id"), col("r_id"))
-        .collect().map(x => (x.getLong(0), x.getLong(1))).sorted
       // file-backed replay (order-insensitive join): no driver collect,
       // no data in task binaries; all files pre-exist => one micro-batch
       val js = IntervalJoin.streaming(
         replayStream(s, l), replayStream(s, r),
         Seq("event_type"), "l_ts", "r_ts",
         beforeUs = 21600000000L, afterUs = 0L, watermarkDelay = "0 seconds")
-      val sink = "x52_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state-store count per micro-batch = shuffle partitions; the gate's
-      // replay is one batch, so 2 stores beat 32 (restored after start —
-      // streaming queries capture the conf at start time)
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      // the replay is one batch; skip the trailing watermark-only batch
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val q = try js.select(col("l_id"), col("r_id")).writeStream.format("memory")
-        .queryName(sink).outputMode("append").start()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
-      val eq = try {
-        q.processAllAvailable()
-        val got = s.table(sink).collect()
-          .map(x => (x.getLong(0), x.getLong(1))).sorted
-        // no nonEmpty guard: if the BATCH op legitimately yields zero
-        // pairs (tiny sf), an empty stream result is CORRECT. A broken
-        // stream returning nothing while batch has pairs still fails the
-        // equality, and the oracle independently pins n_pairs.
-        got.toSeq == batch.toSeq
-      } finally q.stop()
-      Seq((batch.length.toLong, if (eq) 1 else 0))
+      // state-store count per micro-batch = shuffle partitions: 2 stores;
+      // the replay is one batch, so skip the trailing watermark-only batch
+      val (got, want) = longPairs(drain(s, js.select(col("l_id"), col("r_id")),
+          "x52", parts = 2,
+          confs = Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")),
+        batch)
+      // no nonEmpty guard: if the BATCH op legitimately yields zero
+      // pairs (tiny sf), an empty stream result is CORRECT. A broken
+      // stream returning nothing while batch has pairs still fails the
+      // equality, and the oracle independently pins n_pairs.
+      val eq = got == want
+      Seq((want.length.toLong, if (eq) 1 else 0))
         .toDF("n_pairs", "stream_matches_batch")
     }),
-    // ---- streaming ≡ batch parity for count windows (W2): the same
-    // thinned event subset replays in on-field order through the stateful
-    // streaming counter (CountWindow.assign); per-row w_id assignments
-    // must equal the batch dialect's row_number chunking ----
-    "x55_count_window_stream" -> ((s, d) => {
-      import s.implicits._
-      val g = GraftSession.forDir(s, d)
-      val batch = g.sql(
-          "select event_id as id, w_id from " +
-          "(select * from events where event_id % 20 = 0) as e " +
-          "[size 9 on event_id partitioned on event_type]")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      val rows = g.catalog.relation("events")
-        .where(col("event_id") % 20 === 0)
-        .select(col("event_id"), col("event_type"))
-        .orderBy("event_id") // arrival order = batch's `on`-field order
-        .collect().map(r => (r.getLong(0), r.getString(1))).toIndexedSeq
-      // count windows are arrival-ORDER-sensitive, so this replay keeps
-      // the single-partition MemoryStream feed (one pre-start block = one
-      // ordered batch) instead of the file-backed replayStream — a file
-      // split does not contractually preserve row order. The feed is the
-      // thinned %20 subset, so the driver round-trip stays bounded.
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val assigned = graft.streaming.CountWindow.assign(
-        in.toDF().toDF("id", "event_type"), 9, Seq("event_type"))
-      val sink = "x55_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // one replay batch → 4 state partitions beat 32 (conf captured at start)
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try assigned.select(col("id"), col("w_id")).writeStream
-        .format("memory").queryName(sink).outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val eq = try {
-        in.addData(rows: _*) // one block → one partition → stable order
-        q.processAllAvailable()
-        val got = s.table(sink).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).sorted
-        got.toSeq == batch.toSeq && got.nonEmpty
-      } finally q.stop()
-      Seq((batch.length.toLong, if (eq) 1 else 0))
-        .toDF("n_rows", "stream_matches_batch")
-    }),
+    // ---- streaming ≡ batch parity for count windows (W2) ----
+    "x55_count_window_stream" -> ((s, d) => countWindowStream(s, d, "x55", 0)),
     // ---- streaming ≡ batch parity for SLIDING count windows (r11):
     // slide 4 < size 9, so every row lands in up to 3 overlapping
     // windows — the stateful counter must emit the SAME (row, w_id)
     // multiset as the batch row_number explode ----
-    "x106_count_window_sliding_stream" -> ((s, d) => {
-      import s.implicits._
-      val g = GraftSession.forDir(s, d)
-      val batch = g.sql(
-          "select event_id as id, w_id from " +
-          "(select * from events where event_id % 20 = 0) as e " +
-          "[size 9 every 4 on event_id partitioned on event_type]")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      val rows = g.catalog.relation("events")
-        .where(col("event_id") % 20 === 0)
-        .select(col("event_id"), col("event_type"))
-        .orderBy("event_id") // arrival order = batch's `on`-field order
-        .collect().map(r => (r.getLong(0), r.getString(1))).toIndexedSeq
-      // arrival-ORDER-sensitive: single-partition MemoryStream feed (one
-      // pre-start block = one ordered batch), the x55 discipline
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val assigned = graft.streaming.CountWindow.assign(
-        in.toDF().toDF("id", "event_type"), 9, Seq("event_type"), slide = 4)
-      val sink = "x106_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try assigned.select(col("id"), col("w_id")).writeStream
-        .format("memory").queryName(sink).outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val eq = try {
-        in.addData(rows: _*) // one block → one partition → stable order
-        q.processAllAvailable()
-        val got = s.table(sink).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).sorted
-        got.toSeq == batch.toSeq && got.nonEmpty
-      } finally q.stop()
-      Seq((batch.length.toLong, if (eq) 1 else 0))
-        .toDF("n_rows", "stream_matches_batch")
-    }),
+    "x106_count_window_sliding_stream" -> ((s, d) =>
+      countWindowStream(s, d, "x106", 4)),
     // ---- streaming ≡ batch parity for session windows: the same subset
     // replays through the native session_window streaming aggregation
     // (Sessions.aggregate, the documented streaming path); per-session
@@ -1847,21 +1772,11 @@ object Extensions {
       val sessioned = graft.streaming.Sessions.aggregate(
         in, "ts", "3600 seconds", Seq("k"),
         (count(lit(1)).as("n"), Nil))
-      val sink = "x56_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // complete mode: emit every session without waiting on the watermark;
-      // one replay batch → 4 state partitions beat 32
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try sessioned.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val eq = try {
-        q.processAllAvailable()
-        val got = s.table(sink).collect()
-          .map(r => (r.getString(2), r.getTimestamp(0).getTime,
-            r.getTimestamp(1).getTime, r.getLong(3))).sorted
-        got.toSeq == batch.toSeq && got.nonEmpty
-      } finally q.stop()
+      // complete mode: emit every session without waiting on the watermark
+      val got = drain(s, sessioned, "x56", mode = OutputMode.Complete()).collect()
+        .map(r => (r.getString(2), r.getTimestamp(0).getTime,
+          r.getTimestamp(1).getTime, r.getLong(3))).sorted
+      val eq = got.toSeq == batch.toSeq && got.nonEmpty
       Seq((batch.length.toLong, if (eq) 1 else 0))
         .toDF("n_sessions", "stream_matches_batch")
     }),
@@ -1891,20 +1806,11 @@ object Extensions {
       gs.sql(s"create stream gapev (ts timestamp, value double) source file('$dir')")
       val streamed = gs.sql(fsql.format("gapev"))
       assert(streamed.isStreaming, "x102 must exercise the streaming plan")
-      val sink = "x102_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       // complete mode: emit every window without waiting on the watermark
-      val q = try streamed.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      val eq = try {
-        q.processAllAvailable()
-        val got = s.table(sink).collect()
-          .map(r => (r.getTimestamp(0).getTime,
-            r.getTimestamp(1).getTime, r.getLong(2), r.getDouble(3))).sorted
-        got.toSeq == batch.toSeq && got.nonEmpty
-      } finally q.stop()
+      val got = drain(s, streamed, "x102", mode = OutputMode.Complete()).collect()
+        .map(r => (r.getTimestamp(0).getTime,
+          r.getTimestamp(1).getTime, r.getLong(2), r.getDouble(3))).sorted
+      val eq = got.toSeq == batch.toSeq && got.nonEmpty
       Seq((batch.length.toLong, if (eq) 1 else 0))
         .toDF("n_windows", "stream_matches_batch")
     }),
@@ -1992,16 +1898,8 @@ object Extensions {
       val in = replayStream(s, train.select("doc_id", "text"))
       val streamed = Decontaminate.applyClean(in, "text", "doc_id", hot,
         w = 3, minHits = 1).select("doc_id")
-      val outDir = tempDir("x109_out_")
-      val ckpt = tempDir("x109_ckpt_")
-      val q = streamed.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      val eq = try {
-        q.processAllAvailable()
-        val got = s.read.parquet(outDir).collect().map(_.getLong(0)).sorted
-        got.nonEmpty && got.toSeq == batchIds.toSeq
-      } finally q.stop()
+      val got = drain(s, streamed, "x109").collect().map(_.getLong(0)).sorted
+      val eq = got.nonEmpty && got.toSeq == batchIds.toSeq
       Seq((batchIds.length.toLong, if (eq) 1 else 0))
         .toDF("n_clean", "stream_matches_batch")
     }),
@@ -2429,14 +2327,8 @@ object Extensions {
       val model = Importance.dsirModel(dd, "text", "doc_id",
         isTarget = col("source") === "src0", buckets = 256)
       val in = replayStream(s, dd.select("doc_id", "text"))
-      val scored = Importance.applyDsirScore(in, "text", "doc_id", model, 256)
-      val outDir = tempDir("x73_out_")
-      val ckpt = tempDir("x73_ckpt_")
-      val q = scored.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(outDir).orderBy("id")
+      drain(s, Importance.applyDsirScore(in, "text", "doc_id", model, 256), "x73")
+        .orderBy("id")
     })
   )
 

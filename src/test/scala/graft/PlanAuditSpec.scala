@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.execution.FormattedMode
@@ -148,8 +146,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // sanity: the detector actually sees compile-failure logs (guards
     // against a silently detached appender making this test vacuous) —
     // emit the marker through Spark's own CodeGenerator logger name, so
-    // the check exercises the same logger → level filter → root appender
-    // path the real fallback warning takes.
+    // the check exercises the same logger → level filter → guard path
+    // the real fallback warning takes.
     CodegenGuard.reset()
     org.apache.logging.log4j.LogManager
       .getLogger("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
@@ -163,37 +161,34 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("PQ training generates no method too long for the JIT") {
     // HotSpot interprets any method over 8,000 bytecode bytes; Spark logs
-    // that at INFO only, so CodegenGuard never sees it. Raise only the
-    // CodeGenerator logger for one training call. k = 5 is used nowhere
-    // else, so the generated code is new and really compiles here.
+    // that at INFO on the CodeGenerator logger, which CodegenGuard lifts
+    // to INFO. k = 5 is used nowhere else, so the generated code is new
+    // and really compiles here; a probe on the same logger config proves
+    // it did, so a codegen-cache hit cannot pass this vacuously.
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-    // Spark (re)configures log4j when the session starts: start it first
+    import org.apache.logging.log4j.core.config.Property
     val emb = TestSpark.session.catalog.relation("embeddings")
     val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("jit-limit-probe", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    CodegenGuard.install()
+    CodegenGuard.reset()
+    LogManager.getLogger(name)
+      .info("Generated method too long to be JIT compiled: (CodegenGuard self-check)")
+    assert(CodegenGuard.current == 1, "the guard missed an INFO line on CodeGenerator")
+    CodegenGuard.reset()
+    val compiles = new java.util.concurrent.atomic.AtomicInteger(0)
+    val probe = new AbstractAppender("jit-limit-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.startsWith("Code generated in")) compiles.incrementAndGet()
     }
-    app.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val cfg = ctx.getConfiguration
-    assert(!cfg.getLoggers.containsKey(name), "CodeGenerator already has its own logger config")
-    val lc = new LoggerConfig(name, Level.INFO, true)
-    lc.addAppender(app, Level.INFO, null)
-    cfg.addLogger(name, lc)
-    ctx.updateLoggers()
+    probe.start()
+    val lc = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getLoggers.get(name)
+    lc.addAppender(probe, Level.INFO, null)
     try operators.Similarity.pqTrain(emb, m = 16, k = 5, iters = 1)
-    finally {
-      cfg.removeLogger(name)
-      ctx.updateLoggers()
-      app.stop()
-    }
-    val all = lines.asScala.toSeq
-    assert(all.exists(_.startsWith("Code generated in")), "the INFO probe saw no compile")
-    val tooLong = all.filter(_.contains("too long to be JIT compiled"))
-    assert(tooLong.isEmpty, tooLong.mkString(" | "))
+    finally { lc.removeAppender(probe.getName); probe.stop() }
+    assert(compiles.get > 0, "the INFO probe saw no compile")
+    assert(CodegenGuard.current == 0, CodegenGuard.recentSamples.mkString(" | "))
   }
 }
