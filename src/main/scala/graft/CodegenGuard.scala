@@ -17,19 +17,21 @@ import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
   * artifact says so. This class of degradation survived two rounds of
   * IVF/PQ work precisely because it is log-only.
   *
-  * A generated method past HotSpot's 8,000-byte JIT limit compiles but
-  * runs in the bytecode interpreter, and Spark says so only at INFO on
-  * the `CodeGenerator` logger, which the root level normally drops.
+  * Two more degradations are reported only at INFO, which the root level
+  * normally drops. A generated method past HotSpot's 8,000-byte JIT limit
+  * compiles but runs in the bytecode interpreter (`CodeGenerator`). A
+  * whole-stage method past `spark.sql.codegen.hugeMethodLimit` makes
+  * `WholeStageCodegenExec` run the plan without whole-stage codegen.
   *
   * The guard attaches one log4j2 appender to the root logger and counts
-  * events whose message carries a marker. `CodeGenerator`'s own events
-  * are counted at its logger config instead. When the configuration has
-  * none, the guard adds one that is not additive, whose level is INFO or
-  * the inherited level when that is more verbose (so `setLogLevel
-  * ("DEBUG")` still shows the generated code), and that hands its parent
-  * config only what the parent's level lets through: console output and
-  * any appender or level set on `org.apache.spark` read as before. A
-  * `CodeGenerator` config that already exists is left as it is and only
+  * events whose message carries a marker. The two INFO loggers' events
+  * are counted at their own logger configs instead. When the
+  * configuration has none, the guard adds one that is not additive, whose
+  * level is INFO or the inherited level when that is more verbose (so
+  * `setLogLevel("DEBUG")` still shows the generated code), and that hands
+  * its parent config only what the parent's level lets through: console
+  * output and any appender or level set on `org.apache.spark` read as
+  * before. A config that already exists is left as it is and only
   * counted; if its level drops INFO, install says so on stderr. The
   * bench snapshots the counter around every gate (per-gate counts land
   * in the BENCH_full sidecar), and PlanAuditSpec asserts zero across the
@@ -44,10 +46,12 @@ object CodegenGuard {
     "Failed to compile the generated Java code",
     "Whole-stage codegen disabled for plan",
     "grows beyond 64 KB",
-    "Generated method too long to be JIT compiled")
+    "Generated method too long to be JIT compiled",
+    "Found too long generated codes")
 
-  private val codegenLogger =
-    "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+  private val infoLoggers = Seq(
+    "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
+    "org.apache.spark.sql.execution.WholeStageCodegenExec")
 
   /** Idempotent; safe to call from tests and mains alike. */
   def install(): Unit = synchronized {
@@ -61,26 +65,28 @@ object CodegenGuard {
       a.start()
       a
     }
-    // CodeGenerator's events count at its own config, never at the root
+    // the INFO loggers' events count at their own configs, never at the root
     cfg.getRootLogger.addAppender(appender("graft-codegen-guard") { e =>
-      if (e.getLoggerName != codegenLogger) count(e)
+      if (!infoLoggers.contains(e.getLoggerName)) count(e)
     }, Level.ALL, null)
-    val lc = Option(cfg.getLoggers.get(codegenLogger)).getOrElse {
-      val own: LoggerConfig = new LoggerConfig(codegenLogger, Level.INFO, false) {
-        override def getLevel: Level = Option(getParent).map(_.getLevel)
-          .filter(_.isLessSpecificThan(Level.INFO)).getOrElse(Level.INFO)
+    infoLoggers.foreach { name =>
+      val lc = Option(cfg.getLoggers.get(name)).getOrElse {
+        val own: LoggerConfig = new LoggerConfig(name, Level.INFO, false) {
+          override def getLevel: Level = Option(getParent).map(_.getLevel)
+            .filter(_.isLessSpecificThan(Level.INFO)).getOrElse(Level.INFO)
+        }
+        own.addAppender(appender("graft-codegen-forward") { e =>
+          val up = own.getParent
+          if (up != null && e.getLevel.isMoreSpecificThan(up.getLevel)) up.log(e)
+        }, Level.ALL, null)
+        cfg.addLogger(name, own) // sets its parent
+        own
       }
-      own.addAppender(appender("graft-codegen-forward") { e =>
-        val up = own.getParent
-        if (up != null && e.getLevel.isMoreSpecificThan(up.getLevel)) up.log(e)
-      }, Level.ALL, null)
-      cfg.addLogger(codegenLogger, own) // sets its parent
-      own
+      lc.addAppender(appender("graft-codegen-info")(count), Level.ALL, null)
+      if (!Level.INFO.isMoreSpecificThan(lc.getLevel))
+        System.err.println(s"[codegen-guard] $name is configured at " +
+          s"${lc.getLevel}: its INFO markers are not counted")
     }
-    lc.addAppender(appender("graft-codegen-info")(count), Level.ALL, null)
-    if (!Level.INFO.isMoreSpecificThan(lc.getLevel))
-      System.err.println(s"[codegen-guard] $codegenLogger is configured at " +
-        s"${lc.getLevel}: its INFO markers (the JIT limit) are not counted")
     ctx.updateLoggers()
     installed = true
   }

@@ -56,6 +56,9 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
   // confs; a user needing local-time display can convert explicitly.
   spark.conf.set("spark.sql.session.timeZone", "UTC")
 
+  // local streaming checkpoints without a forked readlink/chmod per file
+  graft.streaming.LocalCheckpointFileManager.install(spark)
+
   // native vector expressions usable from the dialect (vec_dot/vec_cosine)
   graft.expr.VectorOps.register(spark)
   graft.expr.Int8Ops.register(spark)

@@ -45,6 +45,19 @@ class ObsSpec extends AnyFunSuite {
     assert(none.jobs == 0 && none.tasks == 0, none)
   }
 
+  test("a plan past spark.sql.codegen.hugeMethodLimit counts as a codegen fallback") {
+    // past the limit, WholeStageCodegenExec says so only at INFO and runs
+    // the plan without whole-stage codegen
+    def run() = obs.Obs.around(spark)(spark.range(0, 1000, 1, 2)
+      .selectExpr("id * 3 as x").where("x % 7 = 1").agg(sum("x")).collect())
+    val key = "spark.sql.codegen.hugeMethodLimit"
+    spark.conf.set(key, "100")
+    val (_, huge) = try run() finally spark.conf.unset(key)
+    assert(huge.codegenFallbacks > 0, huge)
+    val (_, normal) = run()
+    assert(normal.codegenFallbacks == 0, normal)
+  }
+
   test("graft.obs holds the only SparkListener under src/") {
     val listener =
       """\b(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b|\baddSparkListener\s*\(""".r

@@ -13,6 +13,16 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Runs one query phase and asserts it wrote its checkpoint through
+    * graft's local checkpoint file system (`LocalCheckpointFileManager`,
+    * which a GraftSession on `s` installs). */
+  private def throughGraftCheckpoints(s: org.apache.spark.sql.SparkSession)(phase: => Unit): Unit = {
+    val before = TestSpark.graftCheckpointBytes(s)
+    phase
+    assert(TestSpark.graftCheckpointBytes(s) > before,
+      "checkpoint not written through LocalCheckpointFileManager")
+  }
+
   test("W1 streaming: tumbling window aggregation on a stream") {
     val in = MemoryStream[(java.sql.Timestamp, Double)](spark)
     val df = in.toDF().toDF("ts", "value")
@@ -288,7 +298,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = tmp("restart_ckpt_")
     def ts(d: Int, h: Int) = java.sql.Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00")
     val schema = Seq((1L, ts(1, 1))).toDF("k", "ts").schema
-    def runPhase(): Unit = {
+    new GraftSession(spark)
+    def runPhase(): Unit = throughGraftCheckpoints(spark) {
       val in = spark.readStream.schema(schema).parquet(srcDir)
       val dd = SDedup.withinWatermark(in, Seq("k"), "ts", "365 days").select("k")
       val q = dd.writeStream.format("parquet")
@@ -327,7 +338,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = tmp("restart_agg_ckpt_")
     def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     val schema = Seq(("a", ts(1, 0))).toDF("k", "ts").schema
-    def runPhase(): Unit = {
+    new GraftSession(spark)
+    def runPhase(): Unit = throughGraftCheckpoints(spark) {
       val in = spark.readStream.schema(schema).parquet(srcDir)
       val agg = in.withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"))
@@ -383,7 +395,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = tmp("rocks_ckpt_")
     def ts(d: Int, h: Int) = java.sql.Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00")
     val schema = Seq((1L, ts(1, 1))).toDF("k", "ts").schema
-    def runPhase(): Unit = {
+    new GraftSession(rocks)
+    def runPhase(): Unit = throughGraftCheckpoints(rocks) {
       val in = rocks.readStream.schema(schema).parquet(srcDir)
       val dd = SDedup.withinWatermark(in, Seq("k"), "ts", "365 days").select("k")
       val q = dd.writeStream.format("parquet")

@@ -19,4 +19,12 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val session: GraftSession = GraftSession.forDir(spark, sf)
+
+  /** Bytes written so far through graft's local checkpoint file system.
+    * Hadoop keeps file-system statistics per class, so these are its own. */
+  def graftCheckpointBytes(s: SparkSession): Long = {
+    val raw = graft.streaming.LocalCheckpointFileManager
+      .localFs(s.sessionState.newHadoopConf()).getRaw.getClass
+    org.apache.hadoop.fs.FileSystem.getStatistics("file", raw).getBytesWritten
+  }
 }
