@@ -21,7 +21,22 @@ final class GraftAnalysisException(msg: String) extends RuntimeException(msg)
 final case class RelPlan(df: DataFrame, implicitKeys: Seq[Column], windowed: Boolean,
     // streaming session windows: output columns that only exist AFTER the
     // aggregation, as (outputName -> struct field path on the grouped key)
-    postAggCols: Map[String, String] = Map.empty)
+    postAggCols: Map[String, String] = Map.empty,
+    // streaming time windows: the watermarked event-time column, bound like
+    // implicitKeys, and the window size
+    eventTime: Option[EventTime] = None)
+
+/** A streaming time window's watermarked event-time column and its size
+  * `spanUs`: every row of one window lies within `spanUs` of its start. */
+final case class EventTime(col: Column, spanUs: Long)
+
+/** A window spec applied to a DataFrame: grouping keys by name and as
+  * expressions (the streaming session_window struct), post-aggregation
+  * columns, and, for streaming time windows, the event-time column's name
+  * with the window size. */
+private final case class Windowed(df: DataFrame, keys: Seq[String],
+    exprKeys: Seq[Column] = Nil, postAgg: Map[String, String] = Map.empty,
+    eventTime: Option[(String, Long)] = None)
 
 /** AST → DataFrame translator. Spark-first: we emit declarative
   * DataFrame/Column operations and let Catalyst do resolution, predicate
@@ -1025,21 +1040,23 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
   // FROM / relations / windows
   // ------------------------------------------------------------------
 
+  /** `base` under its FROM alias, with its window spec applied and the
+    * window's columns bound to the aliased DataFrame. */
+  private def windowedRel(base: DataFrame, alias: String,
+      window: Option[WindowSpec]): RelPlan = {
+    val w = window.fold(Windowed(base, Nil))(applyWindowFull(base, _))
+    val aliased = w.df.alias(alias)
+    RelPlan(aliased, w.keys.map(aliased(_)) ++ w.exprKeys, window.isDefined,
+      w.postAgg, w.eventTime.map { case (c, spanUs) => EventTime(aliased(c), spanUs) })
+  }
+
   def relation(r: Relation): RelPlan = r match {
     case t @ TableRef(name, _, window) =>
-      val base = cteScope.getOrElse(name.toLowerCase(java.util.Locale.ROOT),
-        catalog.relation(name))
-      val (wdf, keys, exprKeys, postAgg) =
-        window.map(applyWindowFull(base, _)).getOrElse((base, Nil, Nil, Map.empty[String, String]))
-      val aliased = wdf.alias(t.refName)
-      RelPlan(aliased, keys.map(aliased(_)) ++ exprKeys, window.isDefined, postAgg)
+      windowedRel(cteScope.getOrElse(name.toLowerCase(java.util.Locale.ROOT),
+        catalog.relation(name)), t.refName, window)
 
     case DerivedRel(q, alias, window) =>
-      val base = query(q)
-      val (wdf, keys, exprKeys, postAgg) =
-        window.map(applyWindowFull(base, _)).getOrElse((base, Nil, Nil, Map.empty[String, String]))
-      val aliased = wdf.alias(alias)
-      RelPlan(aliased, keys.map(aliased(_)) ++ exprKeys, window.isDefined, postAgg)
+      windowedRel(query(q), alias, window)
 
     case ValuesRel(rows, alias, cols) =>
       val width = rows.head.length
@@ -1263,11 +1280,22 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
       // Windowed join (SURVEY W6): both inputs carry window specs → equi-join
       // on the window bucket, so only co-windowed rows pair up. This is the
       // scale-safe plan: the bucket equality turns a theta/cross join into a
-      // hash-partitionable equi-join.
+      // hash-partitionable equi-join. On streams `w_start` carries no
+      // watermark, so the bucket alone never lets Spark evict join state.
+      // Rows of windows with equal starts lie less than the larger window
+      // size apart, so the equivalent event-time range is added: Spark
+      // drops each side's rows once the watermark passes the range.
       val windowEq: Option[Column] =
-        if (lp.windowed && rp.windowed)
-          Some(lp.df("w_start") === rp.df("w_start"))
-        else None
+        if (lp.windowed && rp.windowed) {
+          val bucket = lp.df("w_start") === rp.df("w_start")
+          Some((lp.eventTime, rp.eventTime) match {
+            case (Some(l), Some(r)) =>
+              val span = lit(java.time.Duration.of(math.max(l.spanUs, r.spanUs),
+                java.time.temporal.ChronoUnit.MICROS))
+              bucket && l.col > r.col - span && l.col < r.col + span
+            case _ => bucket
+          })
+        } else None
 
       val joined = cond match {
         case Some(Natural) =>
@@ -1301,9 +1329,10 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
               throw new GraftAnalysisException(s"$k requires an ON or USING clause")
           }
       }
-      // keep left's window keys; right's are equated (or absent)
-      val keys = if (lp.implicitKeys.nonEmpty) lp.implicitKeys else rp.implicitKeys
-      RelPlan(joined, keys, lp.windowed || rp.windowed)
+      // keep left's window keys and event time; right's are equated (or absent)
+      val keep = if (lp.implicitKeys.nonEmpty) lp else rp
+      RelPlan(joined, keep.implicitKeys, lp.windowed || rp.windowed,
+        eventTime = keep.eventTime)
   }
 
   private def joinName(k: JoinKind): String = k match {
@@ -1349,28 +1378,31 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
     */
   /** Public hook for windowed INSERT targets (W7/S6). */
   def applyWindowPublic(df: DataFrame, w: WindowSpec): (DataFrame, Seq[String]) = {
-    val (d, names, _, _) = applyWindowFull(df, w)
-    (d, names)
+    val applied = applyWindowFull(df, w)
+    (applied.df, applied.keys)
   }
 
-  /** Full window application: (df, named keys, expression keys, post-agg
-    * column mapping). Expression keys (the streaming session_window
-    * struct) group directly; post-agg cols materialize after agg. */
-  private def applyWindowFull(df: DataFrame, w: WindowSpec)
-      : (DataFrame, Seq[String], Seq[Column], Map[String, String]) = {
+  /** Full window application. Expression keys (the streaming
+    * session_window struct) group directly; post-agg cols materialize
+    * after agg. */
+  private def applyWindowFull(df: DataFrame, w: WindowSpec): Windowed =
     if (w.session && df.isStreaming) applyStreamingSessionWindow(df, w)
-    else {
-      val (d, names) = applyWindow(df, w)
-      (d, names, Nil, Map.empty)
-    }
-  }
+    else applyWindow(df, w)
+
+  /** `df` with a watermark of `delayUs` on `timeField`, and the name of the
+    * watermarked column: `timeField` itself when it is a timestamp, else
+    * its timestamp cast `__evt`. */
+  private def watermarked(df: DataFrame, timeField: String, delayUs: Long): (DataFrame, String) =
+    if (df.schema(timeField).dataType.typeName == "timestamp")
+      (df.withWatermark(timeField, s"$delayUs microseconds"), timeField)
+    else (df.withColumn("__evt", col(timeField).cast("timestamp"))
+      .withWatermark("__evt", s"$delayUs microseconds"), "__evt")
 
   /** Streaming session windows in the dialect: group by the native
     * session_window struct (+watermark); w_start/w_end exist only after
     * the aggregation (the session extent depends on the whole group), so
     * they are post-agg columns resolved from the struct. */
-  private def applyStreamingSessionWindow(df: DataFrame, w: WindowSpec)
-      : (DataFrame, Seq[String], Seq[Column], Map[String, String]) = {
+  private def applyStreamingSessionWindow(df: DataFrame, w: WindowSpec): Windowed = {
     val unit = w.size.timeUnit.getOrElse(
       throw new GraftAnalysisException("session windows need a time unit (the gap)"))
     val gapUs = w.size.value * unitMicros(unit)
@@ -1385,13 +1417,9 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
       throw new GraftAnalysisException(
         "streaming session windows need `partitioned on <col>` " +
           "(Spark does not support global session aggregation on streams)")
-    val isTs = df.schema(timeField).dataType.typeName == "timestamp"
-    val (wdf, evtName) =
-      if (isTs) (df.withWatermark(timeField, s"$delayUs microseconds"), timeField)
-      else (df.withColumn("__evt", col(timeField).cast("timestamp"))
-        .withWatermark("__evt", s"$delayUs microseconds"), "__evt")
+    val (wdf, evtName) = watermarked(df, timeField, delayUs)
     val sessKey = session_window(col(evtName), s"$gapUs microseconds")
-    (wdf, partCols, Seq(sessKey),
+    Windowed(wdf, partCols, Seq(sessKey),
       Map("w_start" -> "session_window.start", "w_end" -> "session_window.end"))
   }
 
@@ -1591,20 +1619,18 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
     * semantics exactly (rows in gaps dropped; starts aligned to `every`).
     * The `__w` group struct keeps end = start + every, which only delays
     * append-mode eviction of a finished window by (every - size) — safe,
-    * never early. */
+    * never early.
+    *
+    * The result also names the watermarked event-time column (`timeField`,
+    * or its cast `__evt`) with `sizeUs`: a row lies less than `sizeUs` after
+    * its window's start, for tumbling, sliding and gap windows alike. A
+    * windowed join turns that into the event-time range that lets Spark
+    * evict join state (see the W6 join in [[relation]]). */
   private def applyStreamingTimeWindow(df: DataFrame, timeField: String,
       sizeUs: Long, everyUs: Option[Long], partCols: Seq[String],
-      watermarkUs: Option[Long] = None): (DataFrame, Seq[String]) = {
+      watermarkUs: Option[Long] = None): Windowed = {
     // delay: explicit `watermark N unit` in the spec, else the window size
-    val delayUs = watermarkUs.getOrElse(sizeUs)
-    val isTs = df.schema(timeField).dataType.typeName == "timestamp"
-    val (wdf, evtName) =
-      if (isTs) (df.withWatermark(timeField, s"$delayUs microseconds"), timeField)
-      else {
-        val d = df.withColumn("__evt", col(timeField).cast("timestamp"))
-          .withWatermark("__evt", s"$delayUs microseconds")
-        (d, "__evt")
-      }
+    val (wdf, evtName) = watermarked(df, timeField, watermarkUs.getOrElse(sizeUs))
     val gapSlide = everyUs.filter(_ > sizeUs)
     val base = gapSlide match {
       case Some(slide) =>
@@ -1621,10 +1647,11 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
       .withColumn("w_end", if (gapSlide.isDefined)
         timestamp_micros(unix_micros(col("__w.start")) + sizeUs)
       else col("__w.end"))
-    (out, Seq("__w", "w_start", "w_end") ++ partCols)
+    Windowed(out, Seq("__w", "w_start", "w_end") ++ partCols,
+      eventTime = Some((evtName, sizeUs)))
   }
 
-  private def applyWindow(df: DataFrame, w: WindowSpec): (DataFrame, Seq[String]) = {
+  private def applyWindow(df: DataFrame, w: WindowSpec): Windowed = {
     val partCols: Seq[String] = w.partition.map(_.name).toSeq
     if (w.session) {
       val unit = w.size.timeUnit.getOrElse(
@@ -1634,7 +1661,8 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
         .orElse(df.schema.fields.find(_.dataType.typeName == "timestamp").map(_.name))
         .getOrElse(throw new GraftAnalysisException(
           "session window needs an `on <column>` field or a timestamp column"))
-      return applySessionWindow(df, timeField, gapUs, partCols)
+      val (out, keys) = applySessionWindow(df, timeField, gapUs, partCols)
+      return Windowed(out, keys)
     }
     w.size.timeUnit match {
       case Some(unit) =>
@@ -1669,7 +1697,7 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
           .withColumn("w_start", timestamp_micros(col("w_start_us")))
           .withColumn("w_end", timestamp_micros(col("w_start_us") + sizeUs))
           .drop("w_start_us")
-        (withTs, Seq("w_start", "w_end") ++ partCols)
+        Windowed(withTs, Seq("w_start", "w_end") ++ partCols)
 
       case None => // count window [size N [every S]]
         val n = w.size.value
@@ -1707,7 +1735,7 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
           // counter operator (streaming W2, flatMapGroupsWithState).
           val out = graft.streaming.CountWindow.assign(df, n.toInt, partCols,
             slide.toInt)
-          (out, Seq("w_id") ++ partCols)
+          Windowed(out, Seq("w_id") ++ partCols)
         } else {
           val orderCol = w.size.onField.map(f => col(f.name))
             .getOrElse(col(df.columns.head))
@@ -1723,7 +1751,7 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
                 df.withColumn("__r", (row_number().over(win) - 1).cast("long"))
                   .withColumn("w_id", slideIds(col("__r")))
                   .drop("__r")
-            (out, Seq("w_id") ++ partCols)
+            Windowed(out, Seq("w_id") ++ partCols)
           } else {
             // Unkeyed batch count window without a single global sort, and
             // without depending on the optional ReuseExchange rule for
@@ -1765,7 +1793,7 @@ final class Translator(spark: SparkSession, catalog: Catalog) {
             val out = spark.createDataFrame(indexed,
               sorted.schema.add("w_id",
                 org.apache.spark.sql.types.LongType, nullable = false))
-            (out, Seq("w_id"))
+            Windowed(out, Seq("w_id"))
           }
         }
     }

@@ -114,6 +114,30 @@ class PlanAuditSpec extends AnyFunSuite {
       "scale-killer plan shapes found:\n  " + violations.mkString("\n  "))
   }
 
+  test("a windowed FSQL stream join plans state cleanup on both sides") {
+    // without a watermarked time range in the join condition Spark keeps
+    // every input row of both sides until the query stops
+    import org.apache.spark.sql.execution.streaming.operators.stateful.join.StreamingSymmetricHashJoinExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val spark = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_join_audit")
+    java.nio.file.Files.write(dir.resolve("a.csv"),
+      "2024-01-01T01:10:00,x\n2024-01-01T02:10:00,y\n".getBytes("UTF-8"))
+    val g = new GraftSession(spark, streaming = true)
+    g.sql(s"create stream join_audit (ts timestamp, k string) source file('$dir')")
+    val j = g.sql("select a.k as k from join_audit [size 1 h on ts] as a " +
+      "join join_audit [size 2 h on ts every 1 h] as b on a.k = b.k")
+    val q = graft.streaming.Sinks.memory(j, "join_audit_out")
+    val joins = try {
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        .collect { case s: StreamingSymmetricHashJoinExec => s }
+    } finally { q.stop(); spark.sql("drop view if exists join_audit_out") }
+    assert(joins.size == 1)
+    val cleanup = joins.head.stateWatermarkPredicates
+    assert(cleanup.left.isDefined && cleanup.right.isDefined, cleanup.toString)
+  }
+
   test("ANN family executes with ZERO codegen compile fallbacks (r11 weak)") {
     // Spark keeps results correct when generated Java exceeds Janino's
     // 64 KB method limit — it logs and silently drops to interpreted

@@ -595,6 +595,119 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** Result of [[replayJoin]]: streamed and batch rows, the final
+    * watermark and the join's state rows after the last micro-batch. */
+  private case class JoinReplay(streamed: Seq[Seq[String]], batch: Seq[Seq[String]],
+      watermark: java.sql.Timestamp, stateRows: Long)
+
+  /** Replays `fsql` (`%1$s`, `%2$s`: the two streams, each with columns
+    * ts, k, v) over two file streams, one pair of CSV files per batch, and
+    * evaluates the same text in batch over the same files. */
+  private def replayJoin(name: String, fsql: String,
+      batches: Seq[(Seq[String], Seq[String])]): JoinReplay = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dirs = Seq("a", "b").map(side => Files.createTempDirectory(s"graft_${name}_$side").toFile)
+    def create(g: GraftSession): Unit = dirs.zip(Seq("a", "b")).foreach { case (d, side) =>
+      g.sql(s"create stream ${name}_$side (ts timestamp, k string, v double) " +
+        s"source file('${d.getAbsolutePath}')")
+    }
+    val text = fsql.format(s"${name}_a", s"${name}_b")
+    val g = new GraftSession(spark, streaming = true)
+    create(g)
+    val q = Sinks.memory(g.sql(text), s"${name}_out", OutputMode.Append())
+    val (wm, stateRows) = try {
+      batches.zipWithIndex.foreach { case ((as, bs), i) =>
+        dirs.zip(Seq(as, bs)).foreach { case (d, lines) =>
+          // a file stream must never list a half-written file
+          val tmp = Files.createTempFile("graft_drop", ".csv")
+          Files.write(tmp, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+          Files.move(tmp, new java.io.File(d, f"part-$i%03d.csv").toPath,
+            StandardCopyOption.ATOMIC_MOVE)
+        }
+        q.processAllAvailable()
+      }
+      val p = q.lastProgress
+      (java.sql.Timestamp.from(java.time.Instant.parse(p.eventTime.get("watermark"))),
+        p.stateOperators.head.numRowsTotal)
+    } finally q.stop()
+    def cells(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[String]] =
+      rows.map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+    val streamed = cells(spark.table(s"${name}_out").collect())
+    spark.sql(s"drop view if exists ${name}_out")
+    val b = new GraftSession(spark)
+    create(b)
+    JoinReplay(streamed, cells(b.sql(text).collect()), wm, stateRows)
+  }
+
+  /** `n` rows per hour from `fromH` (inclusive) to `toH` (exclusive) of
+    * 2024-01-01, starting `offsetMin` into each step, keys x and y in turn. */
+  private def hourRows(fromH: Int, toH: Int, n: Int, offsetMin: Int): Seq[String] =
+    for (h <- fromH until toH; i <- 0 until n) yield {
+      val m = offsetMin + i * (60 / n)
+      f"2024-01-01T$h%02d:$m%02d:00,${if (i % 2 == 0) "x" else "y"},${h * 100 + i}.0"
+    }
+
+  /** Rows whose window `[start, end)` has `end` (column `endAt`) at or
+    * below the watermark: no later on-time row can change them. */
+  private def closedBy(rows: Seq[Seq[String]], endAt: Int, wm: java.sql.Timestamp): Seq[Seq[String]] =
+    rows.filter(r => !java.sql.Timestamp.valueOf(r(endAt)).after(wm))
+
+  test("W6 streaming join evicts state once the watermark closes its windows") {
+    // three batches of three hours each; both sides use the 1 h window
+    val batches = (0 until 3).map(b => (hourRows(3 * b, 3 * b + 3, 6, 0), hourRows(3 * b, 3 * b + 3, 4, 5)))
+    val r = replayJoin("ssj_evict",
+      "select a.w_start as w_start, a.w_end as w_end, a.k as k, a.v as v, b.v as w " +
+        "from %1$s [size 1 h on ts] as a join %2$s [size 1 h on ts] as b on a.k = b.k",
+      batches)
+    val input = batches.flatMap { case (as, bs) => as ++ bs }
+    val hour = 3600L * 1000
+    val openRows = input.count { l =>
+      val t = java.time.LocalDateTime.parse(l.takeWhile(_ != ','))
+        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      t - Math.floorMod(t, hour) + hour > r.watermark.getTime
+    }
+    // Spark keeps the rows newer than (watermark - 1 h); the last row of each
+    // side sits at hh:50, so those are exactly the rows of open windows
+    info(s"${input.size} input rows, ${r.stateRows} in state, $openRows in open windows")
+    assert(r.stateRows < input.size, s"join kept all ${input.size} input rows")
+    assert(r.stateRows <= openRows,
+      s"join keeps ${r.stateRows} rows; windows still open hold $openRows (watermark ${r.watermark})")
+    val closed = closedBy(r.streamed, 1, r.watermark)
+    assert(closed.nonEmpty && closed == closedBy(r.batch, 1, r.watermark))
+  }
+
+  test("W6 streaming join across window sizes and a sliding side matches batch") {
+    val batches = (0 until 3).map(b => (hourRows(4 * b, 4 * b + 4, 4, 0), hourRows(4 * b, 4 * b + 4, 3, 10)))
+    // equal starts pair a 1 h window with the 2 h window that shares its
+    // start: a key on the whole window (start and end) would pair nothing
+    Seq("[size 2 h on ts]", "[size 2 h on ts every 30 min]").foreach { spec =>
+      val r = replayJoin("ssj_mixed",
+        "select a.w_start as w_start, b.w_end as w_end, a.k as k, a.v as v, b.v as w " +
+          s"from %1$$s [size 1 h on ts] as a join %2$$s $spec as b on a.k = b.k",
+        batches)
+      val closed = closedBy(r.streamed, 1, r.watermark)
+      assert(closed.nonEmpty, s"$spec: no closed window (watermark ${r.watermark})")
+      assert(closed == closedBy(r.batch, 1, r.watermark), spec)
+    }
+  }
+
+  test("W6 streaming LEFT join emits unmatched rows once the watermark evicts them") {
+    // b has no rows in hours 1 and 4, so a's rows there pair with nothing
+    val gaps = Set("2024-01-01T01", "2024-01-01T04")
+    val batches = (0 until 3).map(b => (hourRows(3 * b, 3 * b + 3, 4, 0),
+      hourRows(3 * b, 3 * b + 3, 3, 10).filterNot(l => gaps(l.take(13)))))
+    val r = replayJoin("ssj_left",
+      "select a.w_start as w_start, a.w_end as w_end, a.k as k, a.v as v, b.v as w " +
+        "from %1$s [size 1 h on ts] as a left join %2$s [size 1 h on ts] as b on a.k = b.k",
+      batches)
+    // an unmatched row is emitted when it leaves the join state, one window
+    // size after its window closed
+    val evicted = new java.sql.Timestamp(r.watermark.getTime - 3600L * 1000)
+    val done = closedBy(r.streamed, 1, evicted)
+    assert(done.count(_(4) == "null") == 8, s"unmatched rows: ${done.filter(_(4) == "null")}")
+    assert(done == closedBy(r.batch, 1, evicted))
+  }
+
   test("IntervalJoin.streaming: live stream-stream join within the time bound") {
     val inL = MemoryStream[(java.sql.Timestamp, String, Long)](spark)
     val inR = MemoryStream[(java.sql.Timestamp, String, Long)](spark)
