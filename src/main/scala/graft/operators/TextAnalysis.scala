@@ -129,7 +129,7 @@ object TextAnalysis {
   // stopword hits. Deterministic ties broken by language order.
   // ------------------------------------------------------------------
 
-  private[operators] val langProfiles: Seq[(String, Seq[String])] = Seq(
+  private[graft] val langProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "was", "for", "with"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "eine", "mit", "von"),
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans", "que", "pour"),

@@ -63,13 +63,7 @@ object Sinks {
     */
   def idempotentParquet(df: DataFrame, outDir: String, checkpoint: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        publishBatch(b.toDF(), outDir, id); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    idempotentServe(df, outDir, checkpoint, identity, trigger)
 
   /** [[idempotentParquet]] with a per-batch TRANSFORM before the publish —
     * the online-serving shape: each micro-batch of requests is mapped

@@ -340,9 +340,9 @@ class OperatorsSpec extends AnyFunSuite {
       val corpus = spark.read.parquet(s"$dir/corpus")
       val needed = Similarity.probeBuckets(q, loaded, nprobe = 3)
       assert(needed.length < 8)
-      assert(graft.operators.Extensions.filesScanned(
+      assert(graft.gates.Harness.filesScanned(
         corpus.where(col("c").isin(needed.map(Int.box): _*))) <
-        graft.operators.Extensions.filesScanned(corpus))
+        graft.gates.Harness.filesScanned(corpus))
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
@@ -390,9 +390,9 @@ class OperatorsSpec extends AnyFunSuite {
       val needed = Similarity.probeBuckets(
         emb.where(col("vec_id") < 2), model.centroids, nprobe = 3)
       assert(needed.length < 8)
-      assert(graft.operators.Extensions.filesScanned(
+      assert(graft.gates.Harness.filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
-        graft.operators.Extensions.filesScanned(codes))
+        graft.gates.Harness.filesScanned(codes))
       intercept[IllegalArgumentException](
         IvfIndex.topK(spark, dir, q, k = 10, nprobe = 2, shortlist = 5))
       // broadcast guard: a corpus-sized query frame is rejected EAGERLY
@@ -2210,7 +2210,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("bpeEncode: ordered token-id streams; packTokenStream cuts fixed-length sequences") {
-    val merges = Extensions.X86_MERGES
+    val merges = graft.gates.Harness.X86_MERGES
     val tiny = Seq((1L, "lower stow"), (2L, "ab lower")).toDF("doc_id", "text")
     val enc = TextAnalysis.bpeEncode(tiny, "text", "doc_id", merges)
     val rows = enc.collect()
@@ -2248,7 +2248,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("packTokenStreamAuto: shard count tracks the corpus; totals invariant at any shard count (r11)") {
-    val merges = Extensions.X86_MERGES
+    val merges = graft.gates.Harness.X86_MERGES
     val d = docs.limit(200)
     val enc = TextAnalysis.bpeEncode(d, "text", "doc_id", merges,
       vocabCap = 12).localCheckpoint()
@@ -2313,7 +2313,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("bpeSpacedApply replace chain ≡ reference BPE segmentation on the corpus vocabulary") {
-    val merges = Extensions.X86_MERGES
+    val merges = graft.gates.Harness.X86_MERGES
     // every distinct word of the real corpus: chain token count must
     // equal the driver reference tokenizer's, word by word
     val vocab = docs.select(explode(split(lower(col("text")), "[^a-z]+")).as("word"))

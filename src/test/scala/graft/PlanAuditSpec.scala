@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Automated scale-killer audit over EVERY SparkEntry gate: flag the two
+/** Automated scale-killer audit over every batch gate: flag the two
   * shapes that cannot survive a 100 TB input —
   *
   *  1. BroadcastNestedLoopJoin (O(|L|·|R|) pair scan) anywhere in the
@@ -70,48 +71,55 @@ class PlanAuditSpec extends AnyFunSuite {
   test("no gate plans a BroadcastNestedLoopJoin or an engine-chosen global window") {
     val spark = TestSpark.spark
     val sf = TestSpark.sf
-    // the streaming parity gates execute a replay during build — they are
-    // audited by their own specs; skip the expensive harness runs here
-    val skip = Set("x51_line_dedup_stream", "x52_interval_join_stream",
-      "x55_count_window_stream", "x56_session_window_stream",
-      "x58_stream_dedup", "x64_paragraph_dedup_stream", "x73_dsir_stream")
+    // stream gates run a replay while they build and are audited by their
+    // own specs; a gate of any other family must start no query
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet(): Unit
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
     val violations = scala.collection.mutable.Buffer.empty[String]
     var audited = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!skip(name)) {
-        try {
-          val df = fn(spark, sf)
-          if (!df.isStreaming) {
-            audited += 1
-            def walkL(p: LogicalPlan): Unit = {
-              p match {
-                case w: Window if w.partitionSpec.isEmpty &&
-                    !globalWindowByDesign.contains(name) =>
-                  violations += s"$name: global (unpartitioned) Window"
-                case _ => ()
-              }
-              p.children.foreach(walkL)
-              p.subqueries.foreach(walkL)
+    spark.streams.addListener(listener) // onQueryStarted runs inside start()
+    try gates.Gates.all.filter(_.family != gates.Family.Stream).sortBy(_.name).foreach { gate =>
+      val name = gate.name
+      started.set(0)
+      try {
+        val df = gate.run(spark, sf)
+        if (!df.isStreaming) {
+          audited += 1
+          def walkL(p: LogicalPlan): Unit = {
+            p match {
+              case w: Window if w.partitionSpec.isEmpty &&
+                  !globalWindowByDesign.contains(name) =>
+                violations += s"$name: global (unpartitioned) Window"
+              case _ => ()
             }
-            walkL(df.queryExecution.optimizedPlan)
-            // FormattedMode prints every node twice (numbered tree + the
-            // per-node details section) — halve the text occurrences
-            val bnljCount = "BroadcastNestedLoopJoin".r
-              .findAllIn(df.queryExecution.explainString(FormattedMode)).length / 2
-            val allowed = bnljByDesign.get(name).map(_._1).getOrElse(0)
-            if (bnljCount > allowed)
-              violations += s"$name: $bnljCount BroadcastNestedLoopJoin (allowed $allowed)"
-            else if (allowed > 0 && bnljCount < allowed)
-              violations += s"$name: BNLJ allowance stale ($bnljCount < $allowed) — tighten the whitelist"
+            p.children.foreach(walkL)
+            p.subqueries.foreach(walkL)
           }
-        } catch {
-          case e: Exception => violations += s"$name: failed to plan (${e.getMessage})"
+          walkL(df.queryExecution.optimizedPlan)
+          // FormattedMode prints every node twice (numbered tree + the
+          // per-node details section) — halve the text occurrences
+          val bnljCount = "BroadcastNestedLoopJoin".r
+            .findAllIn(df.queryExecution.explainString(FormattedMode)).length / 2
+          val allowed = bnljByDesign.get(name).map(_._1).getOrElse(0)
+          if (bnljCount > allowed)
+            violations += s"$name: $bnljCount BroadcastNestedLoopJoin (allowed $allowed)"
+          else if (allowed > 0 && bnljCount < allowed)
+            violations += s"$name: BNLJ allowance stale ($bnljCount < $allowed) — tighten the whitelist"
         }
+      } catch {
+        case e: Exception => violations += s"$name: failed to plan (${e.getMessage})"
       }
-    }
+      if (started.get > 0)
+        violations += s"$name: started ${started.get} streaming queries, family ${gate.family}"
+    } finally spark.streams.removeListener(listener)
     assert(audited > 120, s"audit only reached $audited gates — harness broken?")
     assert(violations.isEmpty,
-      "scale-killer plan shapes found:\n  " + violations.mkString("\n  "))
+      "scale-killer plan shapes or unlabelled stream gates found:\n  " + violations.mkString("\n  "))
   }
 
   test("a windowed FSQL stream join plans state cleanup on both sides") {

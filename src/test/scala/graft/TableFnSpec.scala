@@ -182,7 +182,8 @@ class TableFnSpec extends AnyFunSuite {
   }
 
   test("bpe_pairs / bpe_tokenize table functions: both modes from SQL") {
-    import graft.operators.{Extensions, TextAnalysis}
+    import graft.operators.TextAnalysis
+    import graft.gates.Harness.X86_MERGES
     // bpe_pairs ≡ operator API
     val viaSql = g.sql("select pair, n from bpe_pairs(documents, 10)")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -192,11 +193,11 @@ class TableFnSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(viaSql == viaApi && viaSql.length == 10)
     // apply mode: merge-list literal ≡ tokenizeBpe with X86_MERGES
-    val lit = Extensions.X86_MERGES.map { case (a, b) => s"$a $b" }.mkString(",")
+    val lit = X86_MERGES.map { case (a, b) => s"$a $b" }.mkString(",")
     val applied = g.sql(
       s"select id, n_tokens from bpe_tokenize(documents, '$lit') order by id")
     val expected = TextAnalysis.tokenizeBpe(
-        g.catalog.relation("documents"), "text", "doc_id", Extensions.X86_MERGES)
+        g.catalog.relation("documents"), "text", "doc_id", X86_MERGES)
       .select("id", "n_tokens").orderBy("id")
     assert(applied.exceptAll(expected).isEmpty && expected.exceptAll(applied).isEmpty)
     // train mode: n merges trained on the relation itself; more merges
