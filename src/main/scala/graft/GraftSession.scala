@@ -63,779 +63,8 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
   graft.expr.VectorOps.register(spark)
   graft.expr.Int8Ops.register(spark)
 
-  // --- relation-valued table functions: the SQL surface for the M4
-  // pipeline operators (`select * from gopher_flags(documents) where
-  // keep = 1`). Convention: document-corpus functions expect `text` +
-  // `doc_id` columns (the corpus contract every M4 gate uses); numeric
-  // parameters are literal args with defaults. Composable like any FROM
-  // source — joins, CTEs, derived tables, set ops all apply.
-  locally {
-    import graft.catalog.TfArg
-    import graft.operators.{Dedup, QualityFilters, Sketches, TextAnalysis}
-    def rel(fn: String, args: Seq[TfArg], i: Int): org.apache.spark.sql.DataFrame =
-      args.lift(i) match {
-        case Some(TfArg.Rel(_, df)) => df
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"$fn: argument ${i + 1} must be a relation name" +
-            other.fold("")(a => s", got $a"))
-      }
-    def num(fn: String, args: Seq[TfArg], i: Int, default: Long): Long =
-      args.lift(i) match {
-        case None                       => default
-        case Some(TfArg.Lit(v: Long))   => v
-        case Some(other) => throw new graft.translate.GraftAnalysisException(
-          s"$fn: argument ${i + 1} must be an integer literal, got $other")
-      }
-    // a literal merge list, 'e r,i n,m er': comma-separated symbol pairs
-    def bpeMerges(fn: String, list: String): Seq[(String, String)] =
-      list.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
-        p.split("\\s+") match {
-          case Array(a, b) => (a, b)
-          case _ => throw new graft.translate.GraftAnalysisException(
-            s"$fn: each merge must be two space-separated symbols, got " +
-              s"`$p` (format: 'e r,i n,m er', or a registered model name)")
-        }
-      }
-    def arity(fn: String, args: Seq[TfArg], min: Int, max: Int): Unit =
-      if (args.length < min || args.length > max)
-        throw new graft.translate.GraftAnalysisException(
-          s"$fn takes $min-$max arguments, got ${args.length}")
-    catalog.registerTableFunction("gopher_flags", { args =>
-      arity("gopher_flags", args, 1, 1)
-      QualityFilters.gopherFlags(rel("gopher_flags", args, 0), "text", "doc_id")
-    })
-    catalog.registerTableFunction("c4_lines", { args =>
-      arity("c4_lines", args, 1, 2)
-      QualityFilters.c4LineFilter(rel("c4_lines", args, 0), "text", "doc_id",
-        minLineWords = num("c4_lines", args, 1, 3L).toInt)
-    })
-    catalog.registerTableFunction("dup_line_stats", { args =>
-      arity("dup_line_stats", args, 1, 1)
-      QualityFilters.dupLineStats(rel("dup_line_stats", args, 0), "text", "doc_id")
-    })
-    // quality_classifier(rel[, 'model']) — hashed-bag-of-words linear
-    // scoring; the one-arg form uses the deterministic built-in weight
-    // arithmetic, the two-arg form serves a CREATE MODEL … KIND 'linear'
-    // (bucket, weight) artifact through the same codegen plumbing
-    catalog.registerTableFunction("quality_classifier", { args =>
-      arity("quality_classifier", args, 1, 2)
-      val r = rel("quality_classifier", args, 0)
-      if (args.length == 1) TextAnalysis.hashedLinearScore(r, "text", "doc_id")
-      else {
-        val name = str("quality_classifier", args, 1)
-        catalog.model(name) match {
-          case Some(m) if m.kind == "linear" =>
-            if (m.hash == "missing")
-              throw new graft.translate.GraftAnalysisException(
-                s"quality_classifier: model '$name' is degraded (its " +
-                  "artifact was unavailable when the catalog sidecar " +
-                  "replayed) — DROP MODEL and re-CREATE it")
-            TextAnalysis.hashedLinearScoreModel(r, "text", "doc_id",
-              TextAnalysis.loadLinearWeights(spark, m.path))
-          case Some(m) => throw new graft.translate.GraftAnalysisException(
-            s"quality_classifier: model '$name' has kind '${m.kind}', " +
-              "expected 'linear'")
-          case None =>
-            // registered MODEL NAME first, literal artifact path second
-            // (the ann_topk/bpe_tokenize convention); an unreadable path
-            // is an eager dialect error
-            val weights =
-              try TextAnalysis.loadLinearWeights(spark, name)
-              catch { case e: Exception =>
-                throw new graft.translate.GraftAnalysisException(
-                  s"quality_classifier: '$name' is neither a registered " +
-                    s"linear model (known: ${catalog.modelNames.mkString(", ")}) " +
-                    s"nor a (bucket, weight) parquet artifact (${e.getMessage})")
-              }
-            TextAnalysis.hashedLinearScoreModel(r, "text", "doc_id", weights)
-        }
-      }
-    })
-    catalog.registerTableFunction("compression_ratio", { args =>
-      arity("compression_ratio", args, 1, 1)
-      TextAnalysis.compressionRatio(rel("compression_ratio", args, 0), "text", "doc_id")
-    })
-    // image_phash(rel[, payloadCol[, idCol]]) — perceptual dHash over a
-    // binary image column (media convention: media_id, payload)
-    catalog.registerTableFunction("image_phash", { args =>
-      arity("image_phash", args, 1, 3)
-      val payloadCol = if (args.length > 1) str("image_phash", args, 1) else "payload"
-      val idCol = if (args.length > 2) str("image_phash", args, 2) else "media_id"
-      val media = rel("image_phash", args, 0)
-      // eager convention-naming check (the r8 advisory the sibling
-      // hamming_pairs/decontaminate registrations follow): a missing or
-      // typoed payload/id column fails at ANALYSIS with the dialect's
-      // message, not at action time with a raw unresolved-column error
-      Seq(idCol, payloadCol).foreach(c => reqCol("image_phash", media, c,
-        "media relation must have (media_id, payload) columns " +
-          "(or pass payload/id column names as arguments 2 and 3)"))
-      graft.operators.Multimodal.dHash(media, payloadCol, idCol)
-    })
-    // hamming_pairs(rel[, maxHamming]) — banded near-dup candidate pairs
-    // over a precomputed 64-bit signature relation (id, sh)
-    catalog.registerTableFunction("hamming_pairs", { args =>
-      arity("hamming_pairs", args, 1, 2)
-      val sig = rel("hamming_pairs", args, 0)
-      Seq("id", "sh").foreach(c => reqCol("hamming_pairs", sig, c,
-        "signature relation must have (id, sh) columns"))
-      graft.operators.Dedup.hammingCandidatesFromSig(sig,
-        maxHamming = num("hamming_pairs", args, 1, 3L).toInt)
-    })
-    // audio_fingerprint(rel[, payloadCol[, idCol]]) — volume-invariant
-    // energy-envelope fingerprint over a binary WAV column (the audio
-    // sibling of image_phash; output (id, afp, ok) feeds hamming_pairs
-    // via afp AS sh)
-    catalog.registerTableFunction("audio_fingerprint", { args =>
-      arity("audio_fingerprint", args, 1, 3)
-      val payloadCol = if (args.length > 1) str("audio_fingerprint", args, 1) else "payload"
-      val idCol = if (args.length > 2) str("audio_fingerprint", args, 2) else "media_id"
-      val media = rel("audio_fingerprint", args, 0)
-      Seq(idCol, payloadCol).foreach(c => reqCol("audio_fingerprint", media, c,
-        "media relation must have (media_id, payload) columns " +
-          "(or pass payload/id column names as arguments 2 and 3)"))
-      graft.operators.Multimodal.audioFingerprint(media, payloadCol, idCol)
-    })
-    // audio_stats(rel) — sample-level WAV quality signals (silence /
-    // clipping / energy) over a media relation (media_id, payload, mime)
-    catalog.registerTableFunction("audio_stats", { args =>
-      arity("audio_stats", args, 1, 1)
-      val media = rel("audio_stats", args, 0)
-      Seq("media_id", "payload", "mime").foreach(c =>
-        reqCol("audio_stats", media, c,
-          "media relation must have (media_id, payload, mime) columns"))
-      graft.operators.Multimodal.audioStats(media).toDF()
-    })
-    // pii_redact(rel) — per-document PII detection counts + redacted
-    // text (the auditable form of the x21 hygiene pass) over the
-    // documents convention (doc_id, text)
-    catalog.registerTableFunction("pii_redact", { args =>
-      arity("pii_redact", args, 1, 1)
-      val docs = rel("pii_redact", args, 0)
-      Seq("doc_id", "text").foreach(c => reqCol("pii_redact", docs, c,
-        "input relation must follow the documents convention"))
-      TextAnalysis.piiStats(docs, "text", "doc_id")
-    })
-    // warc_responses(rel) — parse WARC files ((warc_file, payload binary)
-    // rows; gzip auto-detected) into well-formed HTTP response records:
-    // (record_id, url, warc_date, status, mime, text, n_bytes). The crawl
-    // entry point in front of url_dedup/domain_stats (r13).
-    catalog.registerTableFunction("warc_responses", { args =>
-      arity("warc_responses", args, 1, 1)
-      val r = rel("warc_responses", args, 0)
-      Seq("warc_file", "payload").foreach(c => reqCol("warc_responses", r, c,
-        "input relation must have (warc_file, payload) columns"))
-      graft.operators.WebArchive.responses(r)
-    })
-    // warc_scan(files[, targetBytes]) — the crawl entry point over file
-    // PATHS: member-offset split parse (indexWarcMembers cuts each file
-    // at record-aligned gzip member boundaries every ~targetBytes, so
-    // one big .warc.gz becomes many tasks), well-formed response
-    // records only. The index scan runs eagerly at translation (it
-    // sizes the task spread).
-    catalog.registerTableFunction("warc_scan", { args =>
-      arity("warc_scan", args, 1, 2)
-      val files = rel("warc_scan", args, 0)
-      reqCol("warc_scan", files, "path",
-        "input relation must list WARC file paths in a `path` column")
-      graft.operators.WebArchive.responsesSplit(files,
-        targetBytes = num("warc_scan", args, 1, 8L << 20))
-    })
-    // url_normalize(rel[, urlCol[, idCol]]) — canonical URL + host +
-    // registered domain per row (C4/RefinedWeb web-hygiene stage);
-    // output (id, url_norm, host, domain)
-    catalog.registerTableFunction("url_normalize", { args =>
-      arity("url_normalize", args, 1, 3)
-      val urlCol = if (args.length > 1) str("url_normalize", args, 1) else "url"
-      val idCol = if (args.length > 2) str("url_normalize", args, 2) else "doc_id"
-      val r = rel("url_normalize", args, 0)
-      Seq(idCol, urlCol).foreach(c => reqCol("url_normalize", r, c,
-        "input relation must have (doc_id, url) columns " +
-          "(or pass url/id column names as arguments 2 and 3)"))
-      graft.operators.UrlCuration.normalize(r, urlCol, idCol)
-    })
-    // url_dedup(rel[, urlCol[, idCol]]) — keep the lowest-id row per
-    // canonical URL (url-exact crawl dedup with canonicalization in front)
-    catalog.registerTableFunction("url_dedup", { args =>
-      arity("url_dedup", args, 1, 3)
-      val urlCol = if (args.length > 1) str("url_dedup", args, 1) else "url"
-      val idCol = if (args.length > 2) str("url_dedup", args, 2) else "doc_id"
-      val r = rel("url_dedup", args, 0)
-      Seq(idCol, urlCol).foreach(c => reqCol("url_dedup", r, c,
-        "input relation must have (doc_id, url) columns " +
-          "(or pass url/id column names as arguments 2 and 3)"))
-      graft.operators.UrlCuration.urlDedup(r, urlCol, idCol)
-    })
-    // domain_stats(rel[, urlCol]) — per-registered-domain page count and
-    // distinct canonical hosts (the domain scoreboard caps/blocklists key on)
-    catalog.registerTableFunction("domain_stats", { args =>
-      arity("domain_stats", args, 1, 2)
-      val urlCol = if (args.length > 1) str("domain_stats", args, 1) else "url"
-      val r = rel("domain_stats", args, 0)
-      reqCol("domain_stats", r, urlCol,
-        "input relation must have a url column (or pass its name as argument 2)")
-      graft.operators.UrlCuration.domainStats(r, urlCol)
-    })
-    // domain_split(rel, testPercent[, urlCol]) — domain-disjoint
-    // train/test split: pages of one registered domain never straddle
-    // the eval boundary (provenance-level leakage guard)
-    catalog.registerTableFunction("domain_split", { args =>
-      arity("domain_split", args, 2, 3)
-      val r = rel("domain_split", args, 0)
-      val pct = num("domain_split", args, 1, 10L).toInt
-      if (pct < 0 || pct > 100)
-        throw new graft.translate.GraftAnalysisException(
-          s"domain_split: test percent must be in [0,100], got $pct")
-      val urlCol = if (args.length > 2) str("domain_split", args, 2) else "url"
-      reqCol("domain_split", r, urlCol,
-        "input relation must have a url column (or pass its name as argument 3)")
-      graft.operators.UrlCuration.domainDisjointSplit(r, pct, urlCol)
-    })
-    // int8_quantize(rel[, vecCol[, idCol]]) — symmetric per-vector int8
-    // scalar quantization (SQ8, the embedding storage tier): output
-    // (id, scale, codes array<tinyint>), all via codegen loop expressions
-    catalog.registerTableFunction("int8_quantize", { args =>
-      arity("int8_quantize", args, 1, 3)
-      val vecCol = if (args.length > 1) str("int8_quantize", args, 1) else "embedding"
-      val idCol = if (args.length > 2) str("int8_quantize", args, 2) else "vec_id"
-      val r = rel("int8_quantize", args, 0)
-      Seq(idCol, vecCol).foreach(c => reqCol("int8_quantize", r, c,
-        "input relation must have (vec_id, embedding) columns " +
-          "(or pass vector/id column names as arguments 2 and 3)"))
-      graft.operators.Similarity.quantizeInt8(r, vecCol, idCol)
-    })
-    // cluster_sample(rel, cap[, k]) — cluster-balanced diversity
-    // sampling (SemDeDup/DCLM shape): k-means the embedding space, keep
-    // a deterministic content-addressed sample of ≤ cap rows per cluster
-    catalog.registerTableFunction("cluster_sample", { args =>
-      arity("cluster_sample", args, 2, 3)
-      val r = rel("cluster_sample", args, 0)
-      Seq("vec_id", "embedding").foreach(c => reqCol("cluster_sample", r, c,
-        "input relation must have (vec_id, embedding) columns"))
-      val cap = num("cluster_sample", args, 1, 64L).toInt
-      if (cap <= 0)
-        throw new graft.translate.GraftAnalysisException(
-          s"cluster_sample: cap must be positive, got $cap")
-      val k = num("cluster_sample", args, 2, 16L).toInt
-      graft.operators.Similarity.clusterBalancedSample(r, cap, nlist = k)
-    })
-    // script_stats(rel) — per-document Unicode-script counts + mojibake
-    // signals (replacement/control chars) over the documents convention
-    catalog.registerTableFunction("script_stats", { args =>
-      arity("script_stats", args, 1, 1)
-      val docs = rel("script_stats", args, 0)
-      Seq("doc_id", "text").foreach(c => reqCol("script_stats", docs, c,
-        "input relation must follow the documents convention"))
-      TextAnalysis.scriptStats(docs, "text", "doc_id")
-    })
-    // decontaminate(train, bench[, w[, minHits]]) — training rows whose
-    // w-shingles do NOT overlap the benchmark set (text/doc_id convention)
-    catalog.registerTableFunction("decontaminate", { args =>
-      arity("decontaminate", args, 2, 4)
-      val train = rel("decontaminate", args, 0)
-      val bench = rel("decontaminate", args, 1)
-      Seq(train -> "argument 1", bench -> "argument 2").foreach { case (df, which) =>
-        Seq("text", "doc_id").foreach(c => reqCol("decontaminate", df, c,
-          s"$which must follow the text/doc_id corpus convention"))
-      }
-      graft.operators.Decontaminate.clean(train, bench, "text", "doc_id",
-        w = num("decontaminate", args, 2, 8L).toInt,
-        minHits = num("decontaminate", args, 3, 1L).toInt)
-    })
-    catalog.registerTableFunction("oov_rate", { args =>
-      arity("oov_rate", args, 1, 2)
-      TextAnalysis.oovRate(rel("oov_rate", args, 0), "text", "doc_id",
-        vocabK = num("oov_rate", args, 1, 500L).toInt)
-    })
-    catalog.registerTableFunction("heavy_hitters", { args =>
-      arity("heavy_hitters", args, 1, 2)
-      // approx counts are arrival-order-dependent (MG contract) — the
-      // guaranteed-exact composition is heavy_hitters_exact
-      Sketches.heavyHitters(rel("heavy_hitters", args, 0), "text", "doc_id",
-        k = num("heavy_hitters", args, 1, 128L).toInt)
-    })
-    catalog.registerTableFunction("heavy_hitters_exact", { args =>
-      arity("heavy_hitters_exact", args, 1, 2)
-      Sketches.heavyHittersExact(rel("heavy_hitters_exact", args, 0), "text", "doc_id",
-        k = num("heavy_hitters_exact", args, 1, 128L).toInt)
-    })
-    catalog.registerTableFunction("exact_dedup", { args =>
-      arity("exact_dedup", args, 1, 1)
-      Dedup.exact(rel("exact_dedup", args, 0), Seq("text"), "doc_id")
-    })
-    catalog.registerTableFunction("keep_best", { args =>
-      arity("keep_best", args, 2, 2)
-      val r = rel("keep_best", args, 0)
-      val scoreCol = args(1) match {
-        case graft.catalog.TfArg.Lit(s: String) => s
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"keep_best: argument 2 must be the score column name (string literal), got $other")
-      }
-      if (!r.columns.exists(_.equalsIgnoreCase(scoreCol)))
-        throw new graft.translate.GraftAnalysisException(
-          s"keep_best: input relation has no `$scoreCol` column; found: ${r.columns.mkString(", ")}")
-      Dedup.exactKeepBest(r, Seq("text"), "doc_id", scoreCol)
-    })
-    catalog.registerTableFunction("line_dedup", { args =>
-      arity("line_dedup", args, 1, 2)
-      Dedup.lineDedup(rel("line_dedup", args, 0), "text", "doc_id",
-        minDocFreq = num("line_dedup", args, 1, 5L))
-    })
-    catalog.registerTableFunction("paragraph_dedup", { args =>
-      arity("paragraph_dedup", args, 1, 2)
-      Dedup.paragraphDedup(rel("paragraph_dedup", args, 0), "text", "doc_id",
-        minDocFreq = num("paragraph_dedup", args, 1, 5L))
-    })
-    def str(fn: String, args: Seq[TfArg], i: Int): String =
-      args.lift(i) match {
-        case Some(TfArg.Lit(v: String)) => v
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"$fn: argument ${i + 1} must be a string literal" +
-            other.fold("")(a => s", got $a"))
-      }
-    def dbl(fn: String, args: Seq[TfArg], i: Int): Double =
-      args.lift(i) match {
-        case Some(TfArg.Lit(v: Double)) => v
-        case Some(TfArg.Lit(v: Long))   => v.toDouble
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"$fn: argument ${i + 1} must be a numeric literal" +
-            other.fold("")(a => s", got $a"))
-      }
-    // corpus convention: dsir/distinct_audit slice on a `source` column —
-    // checked EAGERLY so the dialect error names the convention instead
-    // of a raw Spark unresolved-column failure at action time (r8 advisory)
-    def reqCol(fn: String, df: org.apache.spark.sql.DataFrame, c: String,
-               why: String): org.apache.spark.sql.DataFrame = {
-      if (!df.columns.exists(_.equalsIgnoreCase(c)))
-        throw new graft.translate.GraftAnalysisException(
-          s"$fn: input relation must have a `$c` column ($why); " +
-            s"found columns: ${df.columns.mkString(", ")}")
-      df
-    }
-    // a model registered DEGRADED during sidecar replay (artifact missing
-    // at replay, hash 'missing' in SHOW MODELS) must fail SERVING with the
-    // dialect's eager error — not whatever filesystem exception the stale
-    // path produces downstream. Remedy is DROP MODEL + re-CREATE, which
-    // re-validates the artifact and records a real hash.
-    def servable(fn: String, name: String,
-                 m: graft.catalog.Catalog#ModelEntry): String = {
-      if (m.hash == "missing")
-        throw new graft.translate.GraftAnalysisException(
-          s"$fn: model '$name' is degraded (its artifact was unavailable " +
-            "when the catalog sidecar replayed) — DROP MODEL and " +
-            "re-CREATE it to re-validate the artifact")
-      m.path
-    }
-    // resolve a model argument (the quality_classifier convention:
-    // registered MODEL NAME first, literal artifact path second) and
-    // load it kind-checked — a wrong-kind model is an eager error, not
-    // a path fallback, and an unloadable literal path is an eager
-    // dialect error naming the known models
-    def loadArtifact[A](fn: String, ref: String, kind: String,
-                        what: String)(load: String => A): A =
-      catalog.model(ref) match {
-        case Some(m) if m.kind == kind => load(servable(fn, ref, m))
-        case Some(m) => throw new graft.translate.GraftAnalysisException(
-          s"$fn: model '$ref' has kind '${m.kind}', expected '$kind'")
-        case None =>
-          try load(ref)
-          catch { case e: Exception =>
-            throw new graft.translate.GraftAnalysisException(
-              s"$fn: '$ref' is neither a registered $kind model " +
-                s"(known: ${catalog.modelNames.mkString(", ")}) nor " +
-                s"$what (${e.getMessage})")
-          }
-      }
-    catalog.registerTableFunction("dsir_scores", { args =>
-      arity("dsir_scores", args, 2, 3)
-      graft.operators.Importance.dsirScores(
-        reqCol("dsir_scores", rel("dsir_scores", args, 0), "source",
-          "the corpus slice the target-literal argument selects"),
-        "text", "doc_id",
-        isTarget = org.apache.spark.sql.functions.col("source") ===
-          str("dsir_scores", args, 1),
-        buckets = num("dsir_scores", args, 2, 1024L).toInt)
-    })
-    catalog.registerTableFunction("dsir_resample", { args =>
-      arity("dsir_resample", args, 3, 4)
-      graft.operators.Importance.dsirResample(
-        reqCol("dsir_resample", rel("dsir_resample", args, 0), "source",
-          "the corpus slice the target-literal argument selects"),
-        "text", "doc_id",
-        isTarget = org.apache.spark.sql.functions.col("source") ===
-          str("dsir_resample", args, 1),
-        frac = dbl("dsir_resample", args, 2),
-        buckets = num("dsir_resample", args, 3, 1024L).toInt)
-    })
-    // dsir_apply(rel, 'model') — the ONLINE half of DSIR served from a
-    // persisted CREATE MODEL … KIND 'dsir' artifact: stateless (batch or
-    // streaming), scores bit-identical to dsir_scores on the model
-    // corpus (the x73 parity contract survives the save/load cycle —
-    // Double.toString round-trips exactly)
-    catalog.registerTableFunction("dsir_apply", { args =>
-      arity("dsir_apply", args, 2, 2)
-      val r = rel("dsir_apply", args, 0)
-      Seq("text", "doc_id").foreach(c => reqCol("dsir_apply", r, c,
-        "the documents convention the curation appliers score"))
-      val (model, buckets) = loadArtifact("dsir_apply",
-        str("dsir_apply", args, 1), "dsir", "a DSIR log-ratio artifact")(
-        p => graft.operators.Importance.loadDsirModel(spark, p))
-      graft.operators.Importance.applyDsirScore(r, "text", "doc_id",
-        model, buckets)
-    })
-    // span_excise(rel, 'model'[, spanWords]) — hot-span excision served
-    // from a persisted 'spans' artifact (x88's stateless apply, by name;
-    // spanWords must match the value the hot set was mined with)
-    catalog.registerTableFunction("span_excise", { args =>
-      arity("span_excise", args, 2, 3)
-      val r = rel("span_excise", args, 0)
-      Seq("text", "doc_id").foreach(c => reqCol("span_excise", r, c,
-        "the documents convention the curation appliers excise"))
-      graft.operators.Dedup.applySpanExcision(r, "text", "doc_id",
-        loadArtifact("span_excise", str("span_excise", args, 1), "spans",
-          "a (key BIGINT) hot-span artifact")(
-          p => graft.operators.Dedup.loadHotSpans(spark, p)),
-        spanWords = num("span_excise", args, 2, 8L).toInt)
-    })
-    // paragraph_apply(rel, 'model') — hot-paragraph dedup served from a
-    // persisted 'paragraphs' artifact (the x64 stateless apply, by name)
-    catalog.registerTableFunction("paragraph_apply", { args =>
-      arity("paragraph_apply", args, 2, 2)
-      val r = rel("paragraph_apply", args, 0)
-      Seq("text", "doc_id").foreach(c => reqCol("paragraph_apply", r, c,
-        "the documents convention the curation appliers dedup"))
-      graft.operators.Dedup.applyParagraphDedup(r, "text", "doc_id",
-        loadArtifact("paragraph_apply", str("paragraph_apply", args, 1),
-          "paragraphs", "a (key STRING) hot-paragraph artifact")(
-          p => graft.operators.Dedup.loadHotParagraphs(spark, p)))
-    })
-    // decontaminate_apply(rel, 'model'[, w[, minHits]]) — benchmark
-    // removal served from a persisted 'shingles' artifact (the x109
-    // stateless apply, by name; w must match the mined shingle width)
-    catalog.registerTableFunction("decontaminate_apply", { args =>
-      arity("decontaminate_apply", args, 2, 4)
-      val r = rel("decontaminate_apply", args, 0)
-      Seq("text", "doc_id").foreach(c => reqCol("decontaminate_apply", r, c,
-        "the documents convention the curation appliers filter"))
-      graft.operators.Decontaminate.applyClean(r, "text", "doc_id",
-        loadArtifact("decontaminate_apply",
-          str("decontaminate_apply", args, 1), "shingles",
-          "an (h BIGINT) benchmark shingle artifact")(
-          p => graft.operators.Decontaminate.loadBenchShingles(spark, p)),
-        w = num("decontaminate_apply", args, 2, 8L).toInt,
-        minHits = num("decontaminate_apply", args, 3, 1L).toInt)
-    })
-    // grouped quantile_cont with BOUNDED executor state (histogram
-    // refinement) — the documented alternative to the dialect's exact
-    // `percentile` aggregate when one group holds an unbounded corpus
-    // slice (percentile buffers whole groups; this never does)
-    catalog.registerTableFunction("grouped_quantiles", { args =>
-      arity("grouped_quantiles", args, 4, 5)
-      graft.operators.Quantiles.groupedExactQuantiles(
-        rel("grouped_quantiles", args, 0),
-        str("grouped_quantiles", args, 1), str("grouped_quantiles", args, 2),
-        Seq("q" -> dbl("grouped_quantiles", args, 3)),
-        buckets = num("grouped_quantiles", args, 4, 4096L).toInt)
-    })
-    // hard-negative mining surface (embeddings corpus convention:
-    // vec_id/embedding/label — checked eagerly so the dialect error
-    // names the convention): hard_negatives(corpus, queries, k
-    // [, ceiling [, floor]]) — per query the k most-similar
-    // DIFFERENT-label vectors with 4-dp cosine in [floor, ceiling)
-    catalog.registerTableFunction("hard_negatives", { args =>
-      arity("hard_negatives", args, 3, 5)
-      val corpus = rel("hard_negatives", args, 0)
-      val queries = rel("hard_negatives", args, 1)
-      Seq(corpus -> "argument 1", queries -> "argument 2").foreach { case (df, which) =>
-        Seq("vec_id", "embedding", "label").foreach { c =>
-          reqCol("hard_negatives", df, c,
-            s"$which must follow the embeddings corpus convention")
-        }
-      }
-      graft.operators.Similarity.hardNegatives(corpus, queries,
-        k = num("hard_negatives", args, 2, 8L).toInt,
-        dupCeiling = if (args.length > 3) dbl("hard_negatives", args, 3) else 0.95,
-        floor = if (args.length > 4) dbl("hard_negatives", args, 4) else -1.0)
-    })
-    // leakage-safe split surface (text/doc_id corpus convention):
-    // duplicate families never straddle train/test
-    catalog.registerTableFunction("leakage_safe_split", { args =>
-      arity("leakage_safe_split", args, 2, 2)
-      val r = rel("leakage_safe_split", args, 0)
-      Seq("text", "doc_id").foreach(c =>
-        reqCol("leakage_safe_split", r, c, "document corpus convention"))
-      graft.operators.Sampling.leakageSafeSplit(r, "text", "doc_id",
-        testPercent = num("leakage_safe_split", args, 1, 10L).toInt)
-    })
-    // ANN serving surface: <fn>(queries, 'model'|'dir', k[, …]) over a
-    // persisted index layout (graft.operators.IvfIndex). The string
-    // argument is a registered MODEL NAME first, a literal layout path
-    // second; a wrong-kind model or a dir without the kind's layout is
-    // an eager dialect error. Returns (queries, layout dir, k).
-    def annIndexArgs(fn: String, kind: String, maxArgs: Int,
-                     args: Seq[TfArg]): (DataFrame, String, Int) = {
-      arity(fn, args, 3, maxArgs)
-      val q = rel(fn, args, 0)
-      Seq("vec_id", "embedding").foreach(c =>
-        reqCol(fn, q, c, "query relation must follow the embeddings convention"))
-      val dir = loadArtifact(fn, str(fn, args, 1), kind,
-        s"a ${annLayout(kind).get.label} index layout") { d =>
-        requireLayout(fn, "index layout", kind, d); d
-      }
-      (q, dir, num(fn, args, 2, 8L).toInt)
-    }
-    // ann_topk(queries, 'model'|'dir', k[, nprobe]) — IVF: float cosine
-    // over the probed bucket directories only
-    catalog.registerTableFunction("ann_topk", { args =>
-      val (q, dir, k) = annIndexArgs("ann_topk", "ivf", 4, args)
-      graft.operators.IvfIndex.topK(spark, dir, q, k,
-        nprobe = num("ann_topk", args, 3, 4L).toInt)
-    })
-    // BPE tokenizer surface (text/doc_id corpus convention):
-    // bpe_pairs(rel[, k]) — top-k frequency-weighted adjacent char pairs;
-    // bpe_tokenize(rel, n[, cap]) — train n merges on the relation (model
-    // vocabulary capped at `cap` words, default 65536 — the bound that
-    // keeps the driver copy model-sized on an unbounded corpus; words
-    // below the cut segment one-token-per-char), tokenize it;
-    // bpe_tokenize(rel, 'e r,i n,m er') — apply an ALREADY-TRAINED merge
-    // list (the production shape: the tokenizer is a model artifact)
-    catalog.registerTableFunction("bpe_pairs", { args =>
-      arity("bpe_pairs", args, 1, 2)
-      TextAnalysis.bpePairCounts(
-        TextAnalysis.bpeWordFrequencies(rel("bpe_pairs", args, 0), "text", "doc_id"),
-        k = num("bpe_pairs", args, 1, 30L).toInt)
-    })
-    catalog.registerTableFunction("bpe_tokenize", { args =>
-      arity("bpe_tokenize", args, 2, 3)
-      val r = rel("bpe_tokenize", args, 0)
-      args(1) match {
-        case graft.catalog.TfArg.Lit(n: Long) =>
-          val cap = num("bpe_tokenize", args, 2,
-            TextAnalysis.DefaultBpeVocabCap.toLong).toInt
-          if (cap <= 0) throw new graft.translate.GraftAnalysisException(
-            s"bpe_tokenize: vocab cap must be positive, got $cap")
-          TextAnalysis.tokenizeBpeTrained(r, "text", "doc_id", n.toInt, cap)
-        case graft.catalog.TfArg.Lit(s: String) if catalog.hasModel(s) =>
-          // registered model name: load the persisted merge list and
-          // apply it (handles same-symbol merges via the bounded-vocab
-          // driver segmenter; distinct-pair lists stay fully distributed)
-          val m = catalog.model(s).get
-          if (m.kind != "bpe") throw new graft.translate.GraftAnalysisException(
-            s"bpe_tokenize: model '$s' has kind '${m.kind}', expected 'bpe'")
-          val cap = num("bpe_tokenize", args, 2,
-            TextAnalysis.DefaultBpeVocabCap.toLong).toInt
-          TextAnalysis.tokenizeBpeModel(r, "text", "doc_id",
-            TextAnalysis.loadBpeMerges(spark,
-              servable("bpe_tokenize", s, m)), cap)
-        case graft.catalog.TfArg.Lit(s: String) =>
-          val merges = bpeMerges("bpe_tokenize", s)
-          if (args.length > 2) throw new graft.translate.GraftAnalysisException(
-            "bpe_tokenize: a vocab cap only applies to train mode " +
-              "(integer merge count) or a registered model; an explicit " +
-              "merge list is already a model")
-          TextAnalysis.tokenizeBpe(r, "text", "doc_id", merges)
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"bpe_tokenize: argument 2 must be a merge count (integer) or a " +
-            s"merge-list string literal, got $other")
-      }
-    })
-    // unigram_tokenize(rel, vocabSize[, iters]) — train a deterministic
-    // unigram-LM (SentencePiece-style Viterbi hard-EM) piece vocabulary
-    // on the relation's capped word table and tokenize it; per-doc
-    // (id, n_words, n_tokens). The second tokenizer family next to BPE.
-    // unigram_tokenize(rel, 'model') — apply an ALREADY-TRAINED unigram
-    // vocab artifact (the production shape, like bpe_tokenize's)
-    catalog.registerTableFunction("unigram_tokenize", { args =>
-      arity("unigram_tokenize", args, 2, 3)
-      val r = rel("unigram_tokenize", args, 0)
-      Seq("doc_id", "text").foreach(c => reqCol("unigram_tokenize", r, c,
-        "input relation must follow the documents convention"))
-      args(1) match {
-        case graft.catalog.TfArg.Lit(s: String) if catalog.hasModel(s) =>
-          if (args.length > 2) throw new graft.translate.GraftAnalysisException(
-            "unigram_tokenize: iters only applies when training in place " +
-              "(integer vocab size); a registered model is already trained")
-          val m = catalog.model(s).get
-          if (m.kind != "unigram") throw new graft.translate.GraftAnalysisException(
-            s"unigram_tokenize: model '$s' has kind '${m.kind}', expected 'unigram'")
-          TextAnalysis.tokenizeUnigramModel(r, "text", "doc_id",
-            TextAnalysis.loadUnigramVocab(spark,
-              servable("unigram_tokenize", s, m)).toMap)
-        case graft.catalog.TfArg.Lit(n: Long) =>
-          val vs = n.toInt
-          val iters = num("unigram_tokenize", args, 2, 4L).toInt
-          if (vs <= 0 || iters <= 0) throw new graft.translate.GraftAnalysisException(
-            s"unigram_tokenize: vocabSize and iters must be positive, got ($vs, $iters)")
-          TextAnalysis.tokenizeUnigramTrained(r, "text", "doc_id", vs, iters)
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"unigram_tokenize: argument 2 must be a vocab size (integer) " +
-            s"or a registered unigram model name, got $other")
-      }
-    })
-    // substring_dedup(rel[, k[, stride[, buckets]]]) — exact-substring
-    // REMOVAL (Lee et al.): cut every char span of length >= k that a
-    // lower-id doc also contains; (id, text_clean, n_removed). stride>1
-    // winnows gram starts (edge-approximate, guaranteed for spans >=
-    // k+stride-1); buckets>1 slices the gram shuffle (output-identical).
-    catalog.registerTableFunction("substring_dedup", { args =>
-      arity("substring_dedup", args, 1, 4)
-      val r = rel("substring_dedup", args, 0)
-      Seq("doc_id", "text").foreach(c => reqCol("substring_dedup", r, c,
-        "input relation must follow the documents convention"))
-      val k = num("substring_dedup", args, 1, 30L).toInt
-      if (k < 2) throw new graft.translate.GraftAnalysisException(
-        s"substring_dedup: k must be >= 2, got $k")
-      val stride = num("substring_dedup", args, 2, 1L).toInt
-      val buckets = num("substring_dedup", args, 3, 1L).toInt
-      if (stride < 1 || buckets < 1) throw new graft.translate.GraftAnalysisException(
-        s"substring_dedup: stride and buckets must be >= 1, got ($stride, $buckets)")
-      if (stride > k) throw new graft.translate.GraftAnalysisException(
-        s"substring_dedup: stride must be <= k so duplicated-span interiors " +
-          s"stay covered, got stride=$stride > k=$k")
-      TextAnalysis.removeSharedSubstrings(r, "text", "doc_id", k, stride, buckets)
-    })
-    // unigram_encode(rel, 'model'[, cap]) — the unigram token stream
-    // (id, wpos, tpos, token, token_id), same frame as bpe_encode, so
-    // bpe_decode round-trips it. Model-artifact only (training belongs
-    // to unigram_tokenize / trainUnigramModel — an encode that silently
-    // trains would hide a driver EM inside a projection).
-    catalog.registerTableFunction("unigram_encode", { args =>
-      arity("unigram_encode", args, 2, 3)
-      val r = rel("unigram_encode", args, 0)
-      Seq("doc_id", "text").foreach(c => reqCol("unigram_encode", r, c,
-        "input relation must follow the documents convention"))
-      val cap = num("unigram_encode", args, 2,
-        TextAnalysis.DefaultBpeVocabCap.toLong).toInt
-      if (cap <= 0) throw new graft.translate.GraftAnalysisException(
-        s"unigram_encode: vocab cap must be positive, got $cap")
-      args(1) match {
-        case graft.catalog.TfArg.Lit(s: String) if catalog.hasModel(s) =>
-          val m = catalog.model(s).get
-          if (m.kind != "unigram") throw new graft.translate.GraftAnalysisException(
-            s"unigram_encode: model '$s' has kind '${m.kind}', expected 'unigram'")
-          TextAnalysis.unigramEncode(r, "text", "doc_id",
-            TextAnalysis.loadUnigramVocab(spark,
-              servable("unigram_encode", s, m)).toMap, cap)
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"unigram_encode: argument 2 must be a registered unigram model " +
-            s"name, got $other")
-      }
-    })
-    // pq_topk(queries, 'model'|'dir', k[, shortlist]) — flat PQ: ADC
-    // over the compressed codes, exact re-rank of the shortlist against
-    // the layout's originals
-    catalog.registerTableFunction("pq_topk", { args =>
-      val (q, dir, k) = annIndexArgs("pq_topk", "pq", 4, args)
-      val shortlist = num("pq_topk", args, 3, math.max(50L, k.toLong)).toInt
-      graft.operators.IvfIndex.pqTopKIndexed(spark, dir, q, k,
-        shortlist = math.max(shortlist, k))
-    })
-    // ivfsq8_topk(queries, 'model'|'dir', k[, nprobe]) — IVF+SQ8 (FAISS
-    // "IVF,SQ8"): scale-free integer-dot cosine over the probed int8
-    // buckets, no re-rank tier
-    catalog.registerTableFunction("ivfsq8_topk", { args =>
-      val (q, dir, k) = annIndexArgs("ivfsq8_topk", "ivfsq8", 4, args)
-      graft.operators.IvfIndex.topK(spark, dir, q, k,
-        nprobe = num("ivfsq8_topk", args, 3, 4L).toInt)
-    })
-    // ivfpq_topk(queries, 'model'|'dir', k[, nprobe[, shortlist]]) —
-    // IVF-PQ: ADC over the probed codes, exact re-rank of the shortlist
-    // against the same buckets' originals; residual layouts are
-    // detected from the layout's meta
-    catalog.registerTableFunction("ivfpq_topk", { args =>
-      val (q, dir, k) = annIndexArgs("ivfpq_topk", "ivfpq", 5, args)
-      val shortlist = num("ivfpq_topk", args, 4, math.max(50L, k.toLong)).toInt
-      graft.operators.IvfIndex.topK(spark, dir, q, k,
-        nprobe = num("ivfpq_topk", args, 3, 4L).toInt,
-        shortlist = math.max(shortlist, k))
-    })
-    // bpe_encode(rel, 'e r,i n' | 'model_name'[, cap]) — the token-id
-    // STREAM (id, wpos, tpos, token, token_id), the form packing and
-    // shard writers consume; ids dense over the emitted token vocabulary
-    // bpe_decode(rel) — detokenize a bpe_encode output relation back to
-    // text: (id, text_detok); decode(encode(x)) reproduces the lowercase
-    // word normalization of x exactly (merges are concatenative)
-    catalog.registerTableFunction("bpe_decode", { args =>
-      arity("bpe_decode", args, 1, 1)
-      val r = rel("bpe_decode", args, 0)
-      Seq("id", "wpos", "tpos", "token").foreach(c => reqCol("bpe_decode", r, c,
-        "input must be a bpe_encode output relation (id, wpos, tpos, token, token_id)"))
-      TextAnalysis.bpeDecode(r)
-    })
-    catalog.registerTableFunction("bpe_encode", { args =>
-      arity("bpe_encode", args, 2, 3)
-      val r = rel("bpe_encode", args, 0)
-      // default bounds the dense-id window (bpeEncode's own default):
-      // an uncapped encode of a web-scale corpus would push a Heaps-law
-      // vocabulary through one row_number task. Callers wanting the
-      // uncapped full-vocab encode pass the cap explicitly.
-      val cap = num("bpe_encode", args, 2,
-        TextAnalysis.DefaultBpeVocabCap.toLong).toInt
-      if (cap <= 0) throw new graft.translate.GraftAnalysisException(
-        s"bpe_encode: vocab cap must be positive, got $cap")
-      val merges = args(1) match {
-        case graft.catalog.TfArg.Lit(s: String) if catalog.hasModel(s) =>
-          val m = catalog.model(s).get
-          if (m.kind != "bpe") throw new graft.translate.GraftAnalysisException(
-            s"bpe_encode: model '$s' has kind '${m.kind}', expected 'bpe'")
-          TextAnalysis.loadBpeMerges(spark, servable("bpe_encode", s, m))
-        case graft.catalog.TfArg.Lit(s: String) => bpeMerges("bpe_encode", s)
-        case other => throw new graft.translate.GraftAnalysisException(
-          s"bpe_encode: argument 2 must be a merge-list string literal or " +
-            s"a registered bpe model name, got $other")
-      }
-      TextAnalysis.bpeEncode(r, "text", "doc_id", merges, cap)
-    })
-    catalog.registerTableFunction("distinct_audit", { args =>
-      arity("distinct_audit", args, 1, 1)
-      Sketches.distinctAudit(
-        reqCol("distinct_audit", rel("distinct_audit", args, 0), "source",
-          "per-source distinct counts are grouped on it"),
-        "text", "source")
-    })
-    // text-cleanup scalar functions in the dialect registry (usable in
-    // any expression position, not just as whole-relation transforms)
-    graft.functions.Registry.registerScalar("normalize_text") { as =>
-      require(as.length == 1, "normalize_text(text)")
-      graft.operators.TextAnalysis.normalizeText(as.head)
-    }
-    graft.functions.Registry.registerScalar("redact_pii") { as =>
-      require(as.length == 1, "redact_pii(text)")
-      graft.operators.TextAnalysis.redactPII(as.head)
-    }
-    // URL scalar functions (r12): the canonicalization family in any
-    // expression position — `where url_domain(u) = 'x.com'`, join keys,
-    // SELECT lists — not just through the whole-relation table fns
-    graft.functions.Registry.registerScalar("url_canonical") { as =>
-      require(as.length == 1, "url_canonical(url)")
-      graft.operators.UrlCuration.normalizeUrl(as.head)
-    }
-    graft.functions.Registry.registerScalar("url_host") { as =>
-      require(as.length == 1, "url_host(url)")
-      graft.operators.UrlCuration.canonicalHost(as.head)
-    }
-    graft.functions.Registry.registerScalar("url_domain") { as =>
-      require(as.length == 1, "url_domain(url)")
-      graft.operators.UrlCuration.registeredDomain(as.head)
-    }
-    // vector-corpus convention: embedding + vec_id columns
-    catalog.registerTableFunction("dim_covariance", { args =>
-      arity("dim_covariance", args, 1, 1)
-      graft.operators.Similarity.dimCovariance(
-        rel("dim_covariance", args, 0), "embedding", "vec_id")
-    })
-    catalog.registerTableFunction("standardize", { args =>
-      arity("standardize", args, 1, 1)
-      graft.operators.Similarity.standardize(
-        rel("standardize", args, 0), "embedding", "vec_id")
-    })
-    catalog.registerTableFunction("pca_project", { args =>
-      arity("pca_project", args, 2, 2)
-      val e = rel("pca_project", args, 0)
-      val model = graft.operators.Similarity.pcaFit(
-        e, "embedding", "vec_id", num("pca_project", args, 1, 8L).toInt)
-      graft.operators.Similarity.pcaProject(e, "embedding", "vec_id", model)
-    })
-  }
+  // the built-in relation-valued table functions (`FROM gopher_flags(documents)`)
+  graft.functions.TableFunctions.install(spark, catalog)
 
   /** Register a custom relation-valued table function, callable from the
     * dialect as `FROM name(rel [, lit…])`. Bare identifiers in the call
@@ -955,74 +184,11 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
     case _ => false
   }
 
-  /** Eager model-artifact validation (a registration pointing at a
-    * missing/torn artifact is a bug NOW, not at first use). Throws
-    * [[GraftAnalysisException]] on an unknown kind or a layout that
-    * does not match the kind's save contract. */
-  private def validateModelArtifact(name: String, kind: String,
-                                    path: String): Unit = kind match {
-    case k if annLayout(k).nonEmpty =>
-      requireLayout(s"create model $name", "layout", k, path)
-    case "bpe" =>
-      try { graft.operators.TextAnalysis.loadBpeMerges(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not a BPE merge-list " +
-          s"artifact (${e.getMessage})") }
-    case "unigram" =>
-      try { graft.operators.TextAnalysis.loadUnigramVocab(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not a unigram vocab " +
-          s"artifact (${e.getMessage})") }
-    case "linear" =>
-      try { graft.operators.TextAnalysis.loadLinearWeights(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not a (bucket, weight) linear " +
-          s"classifier artifact (${e.getMessage})") }
-    case "dsir" =>
-      try { graft.operators.Importance.loadDsirModel(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not a DSIR log-ratio " +
-          s"artifact (${e.getMessage})") }
-    case "spans" =>
-      try { graft.operators.Dedup.loadHotSpans(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not a (key BIGINT) hot-span " +
-          s"artifact (${e.getMessage})") }
-    case "paragraphs" =>
-      try { graft.operators.Dedup.loadHotParagraphs(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not a (key STRING) " +
-          s"hot-paragraph artifact (${e.getMessage})") }
-    case "shingles" =>
-      try { graft.operators.Decontaminate.loadBenchShingles(spark, path); () }
-      catch { case e: Exception => throw new GraftAnalysisException(
-        s"create model $name: '$path' is not an (h BIGINT) benchmark " +
-          s"shingle artifact (${e.getMessage})") }
-    case other => throw new GraftAnalysisException(
-      s"create model $name: unknown kind '$other' " +
-        "(valid: ivf, bpe, unigram, pq, ivfpq, ivfsq8, linear, dsir, " +
-        "spans, paragraphs, shingles)")
-  }
-
-  /** The persisted ANN index layout a model kind names, if any. */
-  private def annLayout(kind: String): Option[graft.operators.IvfIndex.Layout] =
-    graft.operators.IvfIndex.layouts.find(_.kind == kind)
-
-  /** Throws `<prefix>: no <label> <noun> at '<dir>' (expected …)` unless
-    * `dir` holds the layout of ANN model kind `kind`. */
-  private def requireLayout(prefix: String, noun: String, kind: String,
-                            dir: String): Unit = {
-    val l = annLayout(kind).get
-    if (!graft.operators.IvfIndex.layoutAt(spark, dir).contains(l))
-      throw new GraftAnalysisException(
-        s"$prefix: no ${l.label} $noun at '$dir' (${l.expected})")
-  }
-
-  /** Content hash of a model artifact at registration time: md5 over the
-    * model-sized files (a BPE merge file; an index layout's model
-    * directories — NOT its data), part files in name order so the hash
-    * is layout-stable. */
-  private def artifactHash(kind: String, path: String): String = {
+  /** Content hash of a model artifact at registration time: md5 over its
+    * model-sized `parts` ([[graft.catalog.ModelKind.modelParts]]: a BPE
+    * merge file; an index layout's model directories — NOT its data),
+    * part files in name order so the hash is layout-stable. */
+  private def artifactHash(parts: Seq[String]): String = {
     val conf = spark.sessionState.newHadoopConf()
     val md = java.security.MessageDigest.getInstance("MD5")
     def feed(p: org.apache.hadoop.fs.Path): Unit = {
@@ -1041,9 +207,7 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
         } finally in.close()
       }
     }
-    val modelParts =
-      annLayout(kind).fold(Seq(path))(_.modelDirs.map(d => s"$path/$d"))
-    modelParts.foreach(p => feed(new org.apache.hadoop.fs.Path(p)))
+    parts.foreach(p => feed(new org.apache.hadoop.fs.Path(p)))
     md.digest().map("%02x".format(_)).mkString
   }
 
@@ -1491,7 +655,7 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
     case CreateModel(name, kindRaw, path) =>
       val kind = kindRaw.toLowerCase(java.util.Locale.ROOT)
       val hash =
-        try { validateModelArtifact(name, kind, path); artifactHash(kind, path) }
+        try artifactHash(graft.catalog.ModelKind.validate(spark, name, kind, path).modelParts(path))
         catch {
           // during sidecar replay a missing/moved artifact must DEGRADE,
           // not poison: failing here would make the entire catalog
@@ -1502,7 +666,7 @@ final class GraftSession(val spark: SparkSession, streaming: Boolean = false) {
           case e: GraftAnalysisException if replaying =>
             Console.err.println(s"[graft] sidecar replay: model '$name' " +
               s"registered degraded (artifact unavailable: ${e.getMessage})")
-            "missing"
+            graft.catalog.ModelKind.Degraded
         }
       catalog.registerModel(name, kind, path, hash)
       spark.emptyDataFrame

@@ -161,6 +161,13 @@ object Registry {
         arity(n, args, 2); call_function("endswith", args: _*)
       case "regexp_matches" =>
         arity(n, args, 2); call_function("regexp_like", args: _*)
+      // text cleanup and URL canonicalization from graft.operators, in any
+      // expression position (`where url_domain(u) = 'x.com'`, join keys)
+      case "normalize_text" => arity(n, args, 1); graft.operators.TextAnalysis.normalizeText(args.head)
+      case "redact_pii"     => arity(n, args, 1); graft.operators.TextAnalysis.redactPII(args.head)
+      case "url_canonical"  => arity(n, args, 1); graft.operators.UrlCuration.normalizeUrl(args.head)
+      case "url_host"       => arity(n, args, 1); graft.operators.UrlCuration.canonicalHost(args.head)
+      case "url_domain"     => arity(n, args, 1); graft.operators.UrlCuration.registeredDomain(args.head)
       // DISTINCT variants with real Spark counterparts; anything else
       // must error rather than silently dropping the DISTINCT flag
       case "string_agg" | "listagg" | "group_concat" if distinct =>

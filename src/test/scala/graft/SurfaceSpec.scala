@@ -491,6 +491,19 @@ class SurfaceSpec extends AnyFunSuite {
     assert(grouped.count() == 3)
   }
 
+  test("a user override of a built-in scalar survives constructing another session") {
+    // the override answers one probe input and defers to the built-in on
+    // every other, so the JVM-global registry stays correct for other suites
+    graft.functions.Registry.registerScalar("url_host") { as =>
+      when(as.head === "override-probe", lit("overridden"))
+        .otherwise(graft.operators.UrlCuration.canonicalHost(as.head))
+    }
+    val g = new GraftSession(spark)
+    assert(g.sql("select url_host('override-probe') as h").head().getString(0) == "overridden")
+    assert(g.sql("select url_host('http://WWW.Example.com/a') as h").head().getString(0) ==
+      TestSpark.session.sql("select url_host('http://WWW.Example.com/a') as h").head().getString(0))
+  }
+
   test("audio_stats / pii_redact: eager convention-naming errors (r8 advisory pattern)") {
     val g1 = new GraftSession(spark).registerDir(TestSpark.sf)
     // documents lacks media_id/payload/mime → audio_stats names the

@@ -11,14 +11,43 @@ class TableFnSpec extends AnyFunSuite {
   import spark.implicits._
   private lazy val g = TestSpark.session
 
-  test("gopher_flags(documents) in SQL equals the operator API") {
-    val viaSql = g.sql(
-      "select id, n_words, keep from gopher_flags(documents) order by id")
-    val viaApi = graft.operators.QualityFilters
-      .gopherFlags(g.catalog.relation("documents"), "text", "doc_id")
-      .select("id", "n_words", "keep").orderBy("id")
-    assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty)
-    assert(viaSql.count() == g.catalog.relation("documents").count())
+  test("corpus table functions in SQL equal the operator API") {
+    import graft.operators.{Dedup, QualityFilters, Sampling}
+    val docs = g.catalog.relation("documents")
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame)](
+      "gopher_flags(documents)" -> QualityFilters.gopherFlags(docs, "text", "doc_id"),
+      "c4_lines(documents, 4)" -> QualityFilters.c4LineFilter(docs, "text", "doc_id", minLineWords = 4),
+      "dup_line_stats(documents)" -> QualityFilters.dupLineStats(docs, "text", "doc_id"),
+      "line_dedup(documents, 3)" -> Dedup.lineDedup(docs, "text", "doc_id", minDocFreq = 3L),
+      "paragraph_dedup(documents, 3)" -> Dedup.paragraphDedup(docs, "text", "doc_id", minDocFreq = 3L),
+      "leakage_safe_split(documents, 10)" -> Sampling.leakageSafeSplit(docs, "text", "doc_id", 10))
+    cases.foreach { case (call, viaApi) =>
+      val viaSql = g.sql(s"select * from $call")
+      assert(viaSql.columns.toSeq == viaApi.columns.toSeq, call)
+      assert(viaSql.count() > 0, call)
+      assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty, call)
+    }
+    assert(g.sql("select * from gopher_flags(documents)").count() == docs.count())
+    val err = intercept[graft.translate.GraftAnalysisException](
+      g.sql("select * from leakage_safe_split(embeddings, 10)"))
+    assert(err.getMessage.contains("text"))
+  }
+
+  test("heavy_hitters_exact counts equal a plain group-by's token counts") {
+    val truth = g.catalog.relation("documents")
+      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
+      .where(col("tok") =!= "").groupBy("tok").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val total = truth.values.sum
+    // k small enough that the most frequent token is a true heavy hitter
+    val k = (total / truth.values.max).toInt + 1
+    val got = g.sql(s"select term, n from heavy_hitters_exact(documents, $k)")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    got.foreach { case (t, n) => assert(truth.get(t).contains(n), s"$t: $n vs ${truth.get(t)}") }
+    // the candidates depend on arrival order, but every true heavy hitter
+    // (more than total / (k + 1) occurrences) is among them
+    val heavy = truth.filter(_._2 * (k + 1) > total).keySet
+    assert(heavy.nonEmpty && heavy.subsetOf(got.keySet), s"$heavy vs ${got.keySet}")
   }
 
   test("table functions compose: join, literal args, WHERE pushdown") {
@@ -260,18 +289,6 @@ class TableFnSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("positive"))
   }
 
-  test("leakage_safe_split(documents, pct) equals the operator API") {
-    val viaSql = g.sql(
-      "select id, rep, split from leakage_safe_split(documents, 10) order by id")
-    val viaApi = graft.operators.Sampling
-      .leakageSafeSplit(g.catalog.relation("documents"), "text", "doc_id", 10)
-      .orderBy("id")
-    assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty)
-    val err = intercept[graft.translate.GraftAnalysisException](
-      g.sql("select * from leakage_safe_split(embeddings, 10)"))
-    assert(err.getMessage.contains("text"))
-  }
-
   test("ann_topk(queries, 'index_dir', k, nprobe) serves a persisted IVF index") {
     val dir = java.nio.file.Files.createTempDirectory("annfn_").toString
     try {
@@ -314,5 +331,79 @@ class TableFnSpec extends AnyFunSuite {
     val err = intercept[graft.translate.GraftAnalysisException](
       g.sql("select * from hard_negatives(documents, embeddings, 3)"))
     assert(err.getMessage.contains("vec_id") || err.getMessage.contains("embedding"))
+  }
+
+  private val builtins = Seq(
+    "ann_topk", "audio_fingerprint", "audio_stats", "bpe_decode", "bpe_encode", "bpe_pairs",
+    "bpe_tokenize", "c4_lines", "cluster_sample", "compression_ratio", "decontaminate",
+    "decontaminate_apply", "dim_covariance", "distinct_audit", "domain_split", "domain_stats",
+    "dsir_apply", "dsir_resample", "dsir_scores", "dup_line_stats", "exact_dedup",
+    "gopher_flags", "grouped_quantiles", "hamming_pairs", "hard_negatives", "heavy_hitters",
+    "heavy_hitters_exact", "image_phash", "int8_quantize", "ivfpq_topk", "ivfsq8_topk",
+    "keep_best", "leakage_safe_split", "line_dedup", "oov_rate", "paragraph_apply",
+    "paragraph_dedup", "pca_project", "pii_redact", "pq_topk", "quality_classifier",
+    "script_stats", "span_excise", "standardize", "substring_dedup", "unigram_encode",
+    "unigram_tokenize", "url_dedup", "url_normalize", "warc_responses", "warc_scan")
+
+  test("every built-in table function: pinned names, arity guard, relation slot") {
+    import graft.translate.GraftAnalysisException
+    assert(builtins.size == 51)
+    assert(new GraftSession(spark).catalog.tableFunctionNames == builtins)
+    graft.functions.TableFunctions.all.foreach { f =>
+      val over = intercept[GraftAnalysisException](g.sql(
+        s"select * from ${f.name}(${("documents" +: Seq.fill(f.max)("1")).mkString(", ")})"))
+      assert(over.getMessage.startsWith(f.name), over.getMessage)
+      val lit = intercept[GraftAnalysisException](
+        g.sql(s"select * from ${f.name}(${Seq.fill(f.min)("1").mkString(", ")})"))
+      assert(lit.getMessage.contains(f.name), lit.getMessage)
+    }
+  }
+
+  test("non-positive k or cap is an analysis error before any Spark job") {
+    val bad = Seq(
+      "heavy_hitters(documents, 0)" -> "heavy_hitters: k must be positive",
+      "heavy_hitters_exact(documents, -1)" -> "heavy_hitters_exact: k must be positive",
+      "cluster_sample(embeddings, 0)" -> "cluster_sample: cap must be positive",
+      "cluster_sample(embeddings, 4, 0)" -> "cluster_sample: k must be positive",
+      "pca_project(embeddings, 0)" -> "pca_project: k must be positive")
+    bad.foreach { case (call, msg) =>
+      val (out, counters) =
+        graft.obs.Obs.around(spark)(scala.util.Try(g.sql(s"select * from $call")))
+      out match {
+        case scala.util.Failure(e: graft.translate.GraftAnalysisException) =>
+          assert(e.getMessage.startsWith(msg), e.getMessage)
+        case other => fail(s"$call: $other")
+      }
+      assert(counters.jobs == 0, s"$call ran ${counters.jobs} jobs")
+    }
+  }
+
+  test("only TableFunctions and Catalog register table functions; model kinds compare in one place") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = {
+      val s = java.nio.file.Files.walk(main)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    assert(files.size > 30, "run from the project root")
+    def code(p: java.nio.file.Path): Seq[String] =
+      java.nio.file.Files.readAllLines(p).asScala.toSeq.filterNot { l =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }
+    val registers = files.flatMap(p => code(p).filter(_.contains("registerTableFunction"))
+      .map(l => main.relativize(p).toString -> l.trim))
+    val allowed = Set("functions/TableFunctions.scala", "catalog/Catalog.scala")
+    val strays = registers.filterNot(r => allowed(r._1))
+    // the public GraftSession forwarder: its signature and its one call
+    assert(strays.map(_._1).toSet == Set("GraftSession.scala") && strays.size == 2 &&
+      strays.exists(_._2.startsWith("def registerTableFunction(")) &&
+      strays.exists(_._2 == "catalog.registerTableFunction(name, fn)"),
+      s"registerTableFunction outside TableFunctions and Catalog: ${strays.mkString("; ")}")
+    val kindTest = """\.kind\s*(==|!=)""".r
+    val kindTests = files.filterNot(_.endsWith("catalog/ModelKind.scala"))
+      .flatMap(p => code(p).filter(l => kindTest.findFirstIn(l).nonEmpty)
+        .map(l => s"${main.relativize(p)}: ${l.trim}"))
+    assert(kindTests.isEmpty, s"model-kind comparisons outside ModelKind: ${kindTests.mkString("; ")}")
   }
 }
