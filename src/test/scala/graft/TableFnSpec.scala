@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,26 +12,40 @@ class TableFnSpec extends AnyFunSuite {
   import spark.implicits._
   private lazy val g = TestSpark.session
 
-  test("corpus table functions in SQL equal the operator API") {
+  // One SQL-equals-operator test per corpus table function:
+  // (test name, SQL call, the operator API on `documents`, extra checks on the SQL result).
+  private val corpusCases: Seq[(String, String, DataFrame => DataFrame, DataFrame => Unit)] = {
     import graft.operators.{Dedup, QualityFilters, Sampling}
-    val docs = g.catalog.relation("documents")
-    val cases = Seq[(String, org.apache.spark.sql.DataFrame)](
-      "gopher_flags(documents)" -> QualityFilters.gopherFlags(docs, "text", "doc_id"),
-      "c4_lines(documents, 4)" -> QualityFilters.c4LineFilter(docs, "text", "doc_id", minLineWords = 4),
-      "dup_line_stats(documents)" -> QualityFilters.dupLineStats(docs, "text", "doc_id"),
-      "line_dedup(documents, 3)" -> Dedup.lineDedup(docs, "text", "doc_id", minDocFreq = 3L),
-      "paragraph_dedup(documents, 3)" -> Dedup.paragraphDedup(docs, "text", "doc_id", minDocFreq = 3L),
-      "leakage_safe_split(documents, 10)" -> Sampling.leakageSafeSplit(docs, "text", "doc_id", 10))
-    cases.foreach { case (call, viaApi) =>
+    Seq(
+      ("gopher_flags(documents) in SQL", "gopher_flags(documents)",
+        QualityFilters.gopherFlags(_, "text", "doc_id"),
+        viaSql => assert(viaSql.count() == g.catalog.relation("documents").count())),
+      ("c4_lines(documents, 4)", "c4_lines(documents, 4)",
+        QualityFilters.c4LineFilter(_, "text", "doc_id", minLineWords = 4), _ => ()),
+      ("dup_line_stats(documents)", "dup_line_stats(documents)",
+        QualityFilters.dupLineStats(_, "text", "doc_id"), _ => ()),
+      ("line_dedup(documents, 3)", "line_dedup(documents, 3)",
+        Dedup.lineDedup(_, "text", "doc_id", minDocFreq = 3L), _ => ()),
+      ("paragraph_dedup(documents, 3)", "paragraph_dedup(documents, 3)",
+        Dedup.paragraphDedup(_, "text", "doc_id", minDocFreq = 3L), _ => ()),
+      ("leakage_safe_split(documents, pct)", "leakage_safe_split(documents, 10)",
+        Sampling.leakageSafeSplit(_, "text", "doc_id", 10),
+        _ => {
+          val err = intercept[graft.translate.GraftAnalysisException](
+            g.sql("select * from leakage_safe_split(embeddings, 10)"))
+          assert(err.getMessage.contains("text"))
+        }))
+  }
+
+  corpusCases.foreach { case (name, call, api, extra) =>
+    test(s"$name equals the operator API") {
       val viaSql = g.sql(s"select * from $call")
-      assert(viaSql.columns.toSeq == viaApi.columns.toSeq, call)
-      assert(viaSql.count() > 0, call)
-      assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty, call)
+      val viaApi = api(g.catalog.relation("documents"))
+      assert(viaSql.columns.toSeq == viaApi.columns.toSeq)
+      assert(viaSql.count() > 0)
+      assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty)
+      extra(viaSql)
     }
-    assert(g.sql("select * from gopher_flags(documents)").count() == docs.count())
-    val err = intercept[graft.translate.GraftAnalysisException](
-      g.sql("select * from leakage_safe_split(embeddings, 10)"))
-    assert(err.getMessage.contains("text"))
   }
 
   test("heavy_hitters_exact counts equal a plain group-by's token counts") {
