@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.operators.{Decontaminate, Dedup, Importance, IvfIndex, TextAnalysis}
+import graft.operators.{Decontaminate, Dedup, Importance, IvfIndex, Subwords, TextAnalysis}
 import graft.translate.GraftAnalysisException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -40,10 +40,10 @@ object ModelKind {
     * missing (sidecar replay); `SHOW MODELS` shows it. */
   val Degraded = "missing"
 
-  val Bpe: ModelKind[Seq[(String, String)]] =
-    ModelKind("bpe", "a BPE merge-list artifact", TextAnalysis.loadBpeMerges)
-  val Unigram: ModelKind[Seq[(String, Double)]] =
-    ModelKind("unigram", "a unigram vocab artifact", TextAnalysis.loadUnigramVocab)
+  val Bpe: ModelKind[Subwords.Bpe] =
+    ModelKind("bpe", "a BPE merge-list artifact", Subwords.Bpe.load)
+  val Unigram: ModelKind[Subwords.Unigram] =
+    ModelKind("unigram", "a unigram vocab artifact", Subwords.Unigram.load)
   val Linear: ModelKind[Array[Long]] =
     ModelKind("linear", "a (bucket, weight) linear classifier artifact", TextAnalysis.loadLinearWeights)
   val Dsir: ModelKind[(Array[(Long, Double)], Int)] =

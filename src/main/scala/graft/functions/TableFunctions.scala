@@ -115,22 +115,29 @@ object TableFunctions {
   }
 
   /** A literal merge list, `'e r,i n,m er'`: comma-separated symbol pairs. */
-  private def merges(a: Args, list: String): Seq[(String, String)] =
-    list.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
+  private def merges(a: Args, list: String): Subwords.Bpe =
+    Subwords.Bpe(list.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
       p.split("\\s+") match {
         case Array(x, y) => (x, y)
         case _ => a.fail(s"each merge must be two space-separated symbols, got " +
           s"`$p` (format: 'e r,i n,m er', or a registered model name)")
       }
-    }
+    })
 
   /** The registered unigram model that argument 2 names; otherwise
     * "argument 2 must be <alt>a registered unigram model name". */
-  private def unigramModel(a: Args, alt: String): Map[String, Double] = (a.lit(1) match {
+  private def unigramModel(a: Args, alt: String): Subwords.Unigram = (a.lit(1) match {
     case _: String => a.registered(1, ModelKind.Unigram)
     case _ => None
   }).getOrElse(a.fail(s"argument 2 must be ${alt}a registered unigram model name, got ${a.lit(1)}"))
-    .toMap
+
+  /** Tokenize `r` with a model trained in place on the driver copy of its
+    * capped vocabulary, segmenting that same copy. */
+  private def trainedTokenize(r: DataFrame, cap: Int)(
+      train: Seq[(String, Long)] => Subwords.Model): DataFrame = {
+    val wf = Subwords.vocab(r, "text", "doc_id", cap)
+    Subwords.tokenize(r, "text", "doc_id", train(wf), cap, Some(wf))
+  }
 
   /** ANN serving, `fn(queries, 'model'|'dir', k[, …])` over a persisted
     * [[IvfIndex]] layout: (queries, layout dir, k). */
@@ -303,8 +310,8 @@ object TableFunctions {
       IvfIndex.topK(a.spark, dir, q, k, nprobe = a.int(3, 4))
     },
     // bpe_pairs(rel[, k]) — top-k frequency-weighted adjacent char pairs
-    Fn("bpe_pairs", 1, 2)(a => TextAnalysis.bpePairCounts(
-      TextAnalysis.bpeWordFrequencies(a.rel(0), "text", "doc_id"), k = a.int(1, 30))),
+    Fn("bpe_pairs", 1, 2)(a => Subwords.bpePairCounts(
+      Subwords.bpeWordFrequencies(a.rel(0), "text", "doc_id"), k = a.int(1, 30))),
     // bpe_tokenize(rel, n[, cap]) trains n merges on the relation (model
     // vocabulary capped at `cap` words, so the driver copy stays
     // model-sized) and tokenizes it; bpe_tokenize(rel, 'model'[, cap])
@@ -312,17 +319,16 @@ object TableFunctions {
     // a literal one
     Fn("bpe_tokenize", 2, 3) { a =>
       val r = a.rel(0)
+      def cap = a.posInt(2, Subwords.DefaultBpeVocabCap, "vocab cap") // not for a literal list
       a.lit(1) match {
-        case n: Long => TextAnalysis.tokenizeBpeTrained(r, "text", "doc_id", n.toInt,
-          a.posInt(2, TextAnalysis.DefaultBpeVocabCap, "vocab cap"))
+        case n: Long => trainedTokenize(r, cap)(wf => Subwords.Bpe(Subwords.bpeTrain(wf, n.toInt)))
         case s: String => a.registered(1, ModelKind.Bpe) match {
-          case Some(m) => TextAnalysis.tokenizeBpeModel(r, "text", "doc_id", m,
-            a.int(2, TextAnalysis.DefaultBpeVocabCap))
+          case Some(m) => Subwords.tokenize(r, "text", "doc_id", m, cap)
           case None =>
-            val ms = merges(a, s)
+            val m = merges(a, s)
             if (a.length > 2) a.fail("a vocab cap only applies to train mode (integer " +
               "merge count) or a registered model; an explicit merge list is already a model")
-            TextAnalysis.tokenizeBpe(r, "text", "doc_id", ms)
+            Subwords.tokenize(r, "text", "doc_id", m, Int.MaxValue)
         }
         case other => a.fail(s"argument 2 must be a merge count (integer) or a " +
           s"merge-list string literal, got $other")
@@ -334,14 +340,15 @@ object TableFunctions {
     // applies a registered one. Output (id, n_words, n_tokens).
     Fn("unigram_tokenize", 2, 3) { a =>
       val r = a.rel(0, Docs, DocsWhy)
-      if (a.lit(1).isInstanceOf[Long])
-        TextAnalysis.tokenizeUnigramTrained(r, "text", "doc_id",
-          a.posInt(1, 0, "vocabSize"), a.posInt(2, 4, "iters"))
-      else {
-        val vocab = unigramModel(a, "a vocab size (integer) or ")
+      if (a.lit(1).isInstanceOf[Long]) {
+        val (size, iters) = (a.posInt(1, 0, "vocabSize"), a.posInt(2, 4, "iters"))
+        trainedTokenize(r, Subwords.DefaultBpeVocabCap)(wf =>
+          Subwords.Unigram(Subwords.unigramTrain(wf, size, iters)))
+      } else {
+        val m = unigramModel(a, "a vocab size (integer) or ")
         if (a.length > 2) a.fail("iters only applies when training in place " +
           "(integer vocab size); a registered model is already trained")
-        TextAnalysis.tokenizeUnigramModel(r, "text", "doc_id", vocab)
+        Subwords.tokenize(r, "text", "doc_id", m)
       }
     },
     // substring_dedup(rel[, k[, stride[, buckets]]]) — exact-substring
@@ -363,8 +370,8 @@ object TableFunctions {
     // trained would hide a driver EM inside a projection.
     Fn("unigram_encode", 2, 3) { a =>
       val r = a.rel(0, Docs, DocsWhy)
-      val cap = a.posInt(2, TextAnalysis.DefaultBpeVocabCap, "vocab cap")
-      TextAnalysis.unigramEncode(r, "text", "doc_id", unigramModel(a, ""), cap)
+      val cap = a.posInt(2, Subwords.DefaultBpeVocabCap, "vocab cap")
+      Subwords.encode(r, "text", "doc_id", unigramModel(a, ""), cap)
     },
     // pq_topk(queries, 'model'|'dir', k[, shortlist]) — flat PQ: ADC over
     // the codes, exact re-rank of the shortlist against the originals
@@ -389,7 +396,7 @@ object TableFunctions {
     // bpe_decode(rel) — a bpe_encode output back to text, (id,
     // text_detok): decode(encode(x)) is the lowercase word normalization
     // of x (merges are concatenative)
-    Fn("bpe_decode", 1, 1)(a => TextAnalysis.bpeDecode(a.rel(0, Seq("id", "wpos", "tpos", "token"),
+    Fn("bpe_decode", 1, 1)(a => Subwords.bpeDecode(a.rel(0, Seq("id", "wpos", "tpos", "token"),
       "input must be a bpe_encode output relation (id, wpos, tpos, token, token_id)"))),
     // bpe_encode(rel, 'e r,i n' | 'model'[, cap]) — the token-id stream
     // (id, wpos, tpos, token, token_id) that packing and shard writers
@@ -398,13 +405,13 @@ object TableFunctions {
     // task.
     Fn("bpe_encode", 2, 3) { a =>
       val r = a.rel(0)
-      val cap = a.posInt(2, TextAnalysis.DefaultBpeVocabCap, "vocab cap")
-      val ms = a.lit(1) match {
+      val cap = a.posInt(2, Subwords.DefaultBpeVocabCap, "vocab cap")
+      val m = a.lit(1) match {
         case s: String => a.registered(1, ModelKind.Bpe).getOrElse(merges(a, s))
         case other => a.fail(s"argument 2 must be a merge-list string literal or " +
           s"a registered bpe model name, got $other")
       }
-      TextAnalysis.bpeEncode(r, "text", "doc_id", ms, cap)
+      Subwords.encode(r, "text", "doc_id", m, cap)
     },
     Fn("distinct_audit", 1, 1)(a => Sketches.distinctAudit(
       a.rel(0, Seq("source"), "per-source distinct counts are grouped on it"), "text", "source")),

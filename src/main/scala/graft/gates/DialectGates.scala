@@ -1,6 +1,7 @@
 package graft.gates
 
 import graft.GraftSession
+import graft.operators.Subwords
 import org.apache.spark.sql.functions.{round => rnd, sum => fsum}
 import Duck._
 import Family._
@@ -1787,9 +1788,8 @@ object DialectGates {
       // a `create table as` here materialized the full token relation
       // (~50M rows at the 100× sweep) just to re-shuffle it
       e.catalog.registerTable("q134_enc",
-        graft.operators.TextAnalysis.bpeEncode(
-          e.catalog.relation("documents"), "text", "doc_id",
-          Seq(("e", "r"), ("i", "n"), ("t", "h"), ("a", "n"))))
+        Subwords.encode(e.catalog.relation("documents"), "text", "doc_id",
+          Subwords.Bpe(Seq(("e", "r"), ("i", "n"), ("t", "h"), ("a", "n")))))
       e.sql("select id, text_detok from bpe_decode(q134_enc) order by id")
     }),
     // ---- domain_split table fn (r12): the FULL per-row assignment
@@ -1852,9 +1852,9 @@ object DialectGates {
       val e = g(s, d)
       val dir = java.nio.file.Files.createTempDirectory("q141_").toString
       val path = s"$dir/vocab.tsv"
-      graft.operators.TextAnalysis.trainUnigramModel(
-        e.catalog.relation("documents"), "text", "doc_id",
-        vocabSize = 256, iters = 2, path = path)
+      Subwords.Unigram(Subwords.unigramTrain(
+        Subwords.vocab(e.catalog.relation("documents"), "text", "doc_id"), vocabSize = 256, iters = 2))
+        .save(s, path)
       // idempotent re-run (Bench passes share the session catalog)
       try e.sql("drop model q141uni") catch { case _: Exception => }
       e.sql(s"create model q141uni kind 'unigram' at '$path'")

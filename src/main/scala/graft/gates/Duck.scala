@@ -197,7 +197,7 @@ private[gates] object Duck {
     "WHERE ROUND(dp / (na * nb), 4) >= 0.0 AND ROUND(dp / (na * nb), 4) < 0.98) " +
     "WHERE rn <= 5 ORDER BY qid, cos DESC, vec_id"
 
-  /** The x86 oracle, which q112 filters: tokenizeBpe with the SAME
+  /** The x86 oracle, which q112 filters: Subwords.tokenize with the SAME
     * X86_MERGES chain; token count = split of the trimmed result. */
   val duckBpeTokenize: String =
     "WITH words AS (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS w " +

@@ -342,8 +342,7 @@ object OperatorGates {
       "md5(string_agg(CAST(token_id AS VARCHAR), ' ' ORDER BY i % 256)) AS h " +
       "FROM rn GROUP BY 1, 2 ORDER BY 1, 2",
       (s, d) => {
-      val enc = TextAnalysis.bpeEncode(docs(s, d), "text", "doc_id",
-          X86_MERGES, vocabCap = 12)
+      val enc = Subwords.encode(docs(s, d), "text", "doc_id", Subwords.Bpe(X86_MERGES), 12)
         .localCheckpoint() // counted once (shard sizing) + packed once
       val packed = Curation.packTokenStreamAuto(enc, seqLen = 256,
         targetTokensPerShard = 20000L)
@@ -369,12 +368,9 @@ object OperatorGates {
       "ORDER BY id",
       (s, d) => {
       val dd = docs(s, d)
-      val wf = TextAnalysis.bpeCappedVocab(dd, "text", "doc_id", 1 << 16)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val model = TextAnalysis.unigramTrain(wf, vocabSize = 512, iters = 3).toMap
-      TextAnalysis.bpeDecode(
-        TextAnalysis.unigramEncode(dd, "text", "doc_id", model))
-        .orderBy("id")
+      val model = Subwords.Unigram(
+        Subwords.unigramTrain(Subwords.vocab(dd, "text", "doc_id"), vocabSize = 512, iters = 3))
+      Subwords.bpeDecode(Subwords.encode(dd, "text", "doc_id", model)).orderBy("id")
     }),
     // ---- x124: per-doc unigram token counts through the SQL surface;
     // n_words is DuckDB-recomputed, and the piece-count bounds (every
@@ -586,8 +582,8 @@ object OperatorGates {
       "i AS (SELECT word, freq, unnest(generate_series(1, length(word)-1)) AS i FROM w) " +
       "SELECT substr(word, CAST(i AS INT), 2) AS pair, CAST(SUM(freq) AS BIGINT) AS n " +
       "FROM i GROUP BY 1 ORDER BY n DESC, pair LIMIT 30",
-      (s, d) => TextAnalysis.bpePairCounts(
-        TextAnalysis.bpeWordFrequencies(docs(s, d), "text", "doc_id"), k = 30)),
+      (s, d) => Subwords.bpePairCounts(
+        Subwords.bpeWordFrequencies(docs(s, d), "text", "doc_id"), k = 30)),
     // ---- BPE tokenizer application (r9): per-doc token counts under a
     // FIXED trained merge list (literal on both sides — training
     // determinism is bpeTrain/OperatorsSpec; the property spec proves
@@ -597,7 +593,7 @@ object OperatorGates {
     // partial-agged per-doc groupBy. Includes second-order merges
     // ((m,er),(er,g),(l,ow)) so multi-char tokens are load-bearing ----
     Gate("x86_bpe_tokenize", Operator, duckBpeTokenize, (s, d) =>
-      TextAnalysis.tokenizeBpe(docs(s, d), "text", "doc_id", X86_MERGES)
+      Subwords.tokenize(docs(s, d), "text", "doc_id", Subwords.Bpe(X86_MERGES), Int.MaxValue)
         .orderBy("id")),
     // ---- BPE with a CAPPED model vocabulary (r10): the bound that
     // keeps the trained path's driver collect model-sized on an
@@ -607,7 +603,7 @@ object OperatorGates {
     // (freq DESC, word) is replayed exactly by the oracle ----
     Gate("x94_bpe_capped", Operator,
       // x94: the x86 chain restricted to the top-12 vocabulary by
-      // (freq DESC, word) — the exact cut tokenizeBpe(vocabCap=12)
+      // (freq DESC, word) — the exact cut Subwords.tokenize(cap = 12)
       // makes — with out-of-vocab words segmented one-token-per-char
       "WITH words AS (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS w " +
       "FROM documents), nz AS (SELECT doc_id, w FROM words WHERE w <> ''), " +
@@ -617,8 +613,7 @@ object OperatorGates {
       s"THEN len(string_split(trim(${duckMergeChain("w")}), ' ')) ELSE length(w) END AS nt FROM nz) " +
       "SELECT doc_id AS id, CAST(count(*) AS BIGINT) AS n_words, " +
       "CAST(sum(nt) AS BIGINT) AS n_tokens FROM tok GROUP BY doc_id ORDER BY id",
-      (s, d) => TextAnalysis.tokenizeBpe(docs(s, d), "text", "doc_id", X86_MERGES,
-          vocabCap = 12)
+      (s, d) => Subwords.tokenize(docs(s, d), "text", "doc_id", Subwords.Bpe(X86_MERGES), 12)
         .orderBy("id")),
     // ---- BPE ENCODING to token-id streams (r10): the training-pipeline
     // form — per-token rows totally ordered by (wpos, tpos), ids dense
@@ -632,8 +627,7 @@ object OperatorGates {
       "md5(string_agg(CAST(token_id AS VARCHAR), ' ' ORDER BY wpos, tpos)) AS h " +
       "FROM j GROUP BY doc_id ORDER BY id",
       (s, d) => {
-      val enc = TextAnalysis.bpeEncode(docs(s, d), "text", "doc_id",
-        X86_MERGES, vocabCap = 12)
+      val enc = Subwords.encode(docs(s, d), "text", "doc_id", Subwords.Bpe(X86_MERGES), 12)
       enc.groupBy(col("id"))
         .agg(count(lit(1)).as("n_tokens"),
           md5(concat_ws(" ", transform(
@@ -656,8 +650,7 @@ object OperatorGates {
       "md5(string_agg(CAST(token_id AS VARCHAR), ' ' ORDER BY i % 256)) AS h " +
       "FROM rn GROUP BY 1, 2 ORDER BY 1, 2",
       (s, d) => {
-      val enc = TextAnalysis.bpeEncode(docs(s, d), "text", "doc_id",
-        X86_MERGES, vocabCap = 12)
+      val enc = Subwords.encode(docs(s, d), "text", "doc_id", Subwords.Bpe(X86_MERGES), 12)
       val packed = Curation.packTokenStream(enc, seqLen = 256,
         shard = pmod(
           pmod(col("id"), lit(1000000L)) * lit(2654435761L) % lit(1000000L),
@@ -831,8 +824,7 @@ object OperatorGates {
         .select(col("doc_id"), TextAnalysis.normalizeText(col("text")).as("text"))
         .join(packed.select(col("id").as("doc_id")), "doc_id")
         .localCheckpoint() // encoded once, vocab-counted once
-      val enc = TextAnalysis.bpeEncode(survivors, "text", "doc_id",
-        X86_MERGES, vocabCap = 12)
+      val enc = Subwords.encode(survivors, "text", "doc_id", Subwords.Bpe(X86_MERGES), 12)
       val withSplit = enc.join(packed, "id")
       val seqs = Curation.packTokenStream(withSplit, seqLen = 256,
         shard = concat(col("split"), lit("#"), col("bucket").cast("string")))

@@ -330,10 +330,9 @@ object StreamGates {
       "w -> w <> '')) > 0",
       (s, d) => {
       val dd = docs(s, d).localCheckpoint()
-      val wf = TextAnalysis.bpeCappedVocab(dd, "text", "doc_id", 1 << 16)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val model = TextAnalysis.unigramTrain(wf, vocabSize = 512, iters = 3).toMap
-      val (seg0, ids0) = TextAnalysis.unigramEncodeTables(dd, "text", "doc_id", model)
+      val model = Subwords.Unigram(
+        Subwords.unigramTrain(Subwords.vocab(dd, "text", "doc_id"), vocabSize = 512, iters = 3))
+      val (seg0, ids0) = Subwords.encodeTables(dd, "text", "doc_id", model)
       val seg = seg0.localCheckpoint(); val ids = ids0.localCheckpoint()
       def digest(enc: org.apache.spark.sql.DataFrame) = enc.groupBy(col("id"))
         .agg(count(lit(1)).as("n_tokens"),
@@ -342,10 +341,10 @@ object StreamGates {
               col("token_id")))),
             e => e.getField("token_id").cast("string")))).as("h"))
       val batchOut = digest(
-        TextAnalysis.unigramEncodeWith(dd, "text", "doc_id", seg, ids))
+        Subwords.encodeWith(dd, "text", "doc_id", seg, ids))
         .localCheckpoint()
       val in = replayStream(s, dd.select("doc_id", "text").repartition(32))
-      val streamed = TextAnalysis.unigramEncodeWith(in, "text", "doc_id", seg, ids)
+      val streamed = Subwords.encodeWith(in, "text", "doc_id", seg, ids)
       parityRow(s, digest(drain(s, streamed, "x128")), batchOut, "n_docs")
     }),
     // ---- streaming RESTART RECOVERY (r9): checkpointed writeStream over

@@ -186,7 +186,7 @@ object Curation {
     packSequences(docs, idCol, tokenCol, budget,
       pmod(xxhash64(col(idCol)), lit(shards.toLong)))
 
-  /** Pack a TOKEN STREAM ([[TextAnalysis.bpeEncode]] output) into
+  /** Pack a TOKEN STREAM ([[Subwords.encode]] output) into
     * fixed-length training sequences — the pretraining batch-assembly
     * step proper: within each shard, documents concatenate in (id, wpos,
     * tpos) order and the stream is cut every `seqLen` tokens, documents

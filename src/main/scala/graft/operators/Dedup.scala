@@ -99,9 +99,8 @@ object Dedup {
     * would mangle formatting). The reference defines no pipeline ops
     * (SURVEY §7.2); semantics follow CCNet per-shard line dedup. */
   def lineDedup(docs: DataFrame, textCol: String, idCol: String,
-                minDocFreq: Long, hashShuffle: Boolean = false): DataFrame =
-    lineDedupWith(docs, textCol, idCol,
-      hotLines(docs, textCol, idCol, minDocFreq, hashShuffle))
+                minDocFreq: Long): DataFrame =
+    lineDedupWith(docs, textCol, idCol, hotLines(docs, textCol, idCol, minDocFreq))
 
   /** [[lineDedup]] against an ALREADY-COMPUTED hot-line set (r16 opt,
     * guide §1.2): callers that build the hot model anyway — the x51
@@ -129,35 +128,16 @@ object Dedup {
 
   /** Corpus-global hot (boilerplate) line set — non-blank lines appearing
     * in >= `minDocFreq` distinct docs — as a one-column (`line`) frame.
-    * The precomputable "model" half of [[lineDedup]]. hashShuffle mode
-    * gets the same result in two phases: (1) doc-frequency on
-    * xxhash64(line) — the wide shuffle carries 8-byte keys instead of
-    * full lines (10×+ narrower for prose); hash pooling can only INFLATE
-    * a count, so phase 1 is a lossless over-approximation of the hot set;
-    * (2) recount the true df of just the candidate lines (small by
-    * construction — boilerplate is the repeated tail) after a broadcast
-    * semi join, which removes any collision-inflated candidate. Results
-    * are identical in both modes at any corpus size. */
+    * The precomputable "model" half of [[lineDedup]]. */
   def hotLines(docs: DataFrame, textCol: String, idCol: String,
-               minDocFreq: Long, hashShuffle: Boolean = false): DataFrame = {
-    val nonBlank = docs.select(col(idCol).as("__ld_id"),
+               minDocFreq: Long): DataFrame =
+    docs.select(col(idCol).as("__ld_id"),
         explode(split(col(textCol), "\n")).as("__ld_line"))
       .where(trim(col("__ld_line")) =!= "")
-    def dfAtLeast(src: DataFrame): DataFrame =
-      src.select(col("__ld_id"), col("__ld_line")).distinct()
-        .groupBy(col("__ld_line")).agg(count(lit(1)).as("__ld_df"))
-        .where(col("__ld_df") >= minDocFreq)
-        .select(col("__ld_line").as("line"))
-    if (hashShuffle) {
-      val hotHashes = nonBlank
-        .select(col("__ld_id"), xxhash64(col("__ld_line")).as("__ld_k")).distinct()
-        .groupBy(col("__ld_k")).agg(count(lit(1)).as("__ld_df"))
-        .where(col("__ld_df") >= minDocFreq)
-        .select(col("__ld_k"))
-      dfAtLeast(nonBlank.join(broadcast(hotHashes),
-        xxhash64(col("__ld_line")) === hotHashes("__ld_k"), "left_semi"))
-    } else dfAtLeast(nonBlank)
-  }
+      .distinct()
+      .groupBy(col("__ld_line")).agg(count(lit(1)).as("__ld_df"))
+      .where(col("__ld_df") >= minDocFreq)
+      .select(col("__ld_line").as("line"))
 
   /** Apply a precomputed hot-line set ([[hotLines]]) to documents PER ROW
     * — no explode, no grouping, no state: the hot set (small by

@@ -121,28 +121,14 @@ object Importance {
       require(!lr.isNaN && !lr.isInfinite, s"unsaveable log-ratio $lr") }
     require(model.map(_._1).distinct.length == model.length,
       "duplicate bucket ids in DSIR model")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write((s"buckets\t$buckets" +: model.sortBy(_._1).map { case (b, lr) =>
-      s"$b\t${java.lang.Double.toString(lr)}" }).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    ModelIO.writeLines(spark, path, s"buckets\t$buckets" +: model.sortBy(_._1).toSeq.map {
+      case (b, lr) => s"$b\t${java.lang.Double.toString(lr)}" })
   }
 
   /** Load a [[saveDsirModel]] artifact: (log-ratio table, buckets). */
   def loadDsirModel(spark: org.apache.spark.sql.SparkSession,
                     path: String): (Array[(Long, Double)], Int) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    val lines = ModelIO.readLines(spark, path)
     val buckets = lines.headOption match {
       case Some(h) => h.split("\t") match {
         case Array("buckets", n) if n.toIntOption.exists(_ >= 1) => n.toInt
@@ -166,7 +152,7 @@ object Importance {
 
   /** Fit the DSIR bucket models and persist the artifact at `path` —
     * the train-then-register flow behind `CREATE MODEL … KIND 'dsir'`
-    * (the trainBpeModel convention). */
+    * (train, then save). */
   def trainDsirModel(df: DataFrame, textCol: String, idCol: String,
                      isTarget: Column, buckets: Int,
                      path: String): Array[(Long, Double)] = {

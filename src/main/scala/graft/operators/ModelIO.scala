@@ -1,11 +1,14 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persistence for the single-column "hot set" model artifacts — the
-  * broadcast-sized tables the streaming appliers probe (hot span gram
-  * hashes, hot paragraph keys, benchmark shingle hashes). One parquet
+/** Persistence for the model artifacts. One-file text artifacts (BPE
+  * merges, unigram vocabularies, DSIR log-ratio tables) are lines through
+  * [[writeLines]]/[[readLines]]. The single-column "hot set" artifacts —
+  * the broadcast-sized tables the streaming appliers probe (hot span gram
+  * hashes, hot paragraph keys, benchmark shingle hashes) — are one parquet
   * directory per artifact, exactly one column with a pinned name and
   * type, so `CREATE MODEL` can validate the layout eagerly (the 'linear'
   * kind's discipline) and the registration content-hash covers the whole
@@ -16,6 +19,24 @@ import org.apache.spark.sql.functions._
   * save is one small parquet write, never a corpus landing.
   */
 object ModelIO {
+
+  /** Write `lines`, newline-joined (no trailing newline) as UTF-8, to the
+    * file at `path`, replacing it — through the Hadoop filesystem, so the
+    * artifact lands wherever the cluster's storage is. */
+  def writeLines(spark: SparkSession, path: String, lines: Seq[String]): Unit = {
+    val p = new Path(path)
+    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The non-empty lines of the file at `path`, in order. */
+  def readLines(spark: SparkSession, path: String): Seq[String] = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    text.linesIterator.filter(_.nonEmpty).toSeq
+  }
 
   /** Write `df`'s single value column to `path` as parquet under
     * `name` with `dataType`. Fails eagerly on a multi-column frame. */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * the shuffle carries k rows per partition TOTAL, at the price of
   * approximate counts with the guarantee above. Exact counts for the
   * (<= k) surviving candidates can be recovered with one cheap
-  * broadcast-semi-join recount, as [[Dedup.hotLines]] does for lines.
+  * broadcast-semi-join recount.
   *
   * The per-term counts themselves depend on arrival/merge order (any
   * MG implementation's do); only the three contract properties are

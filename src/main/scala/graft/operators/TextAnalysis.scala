@@ -1000,708 +1000,6 @@ object TextAnalysis {
         "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", " "),
       "[\\s\\u00A0]+", " "))
 
-  /** BPE tokenizer training, decomposed the way it actually scales
-    * (Sennrich et al. 2016): the ONLY corpus-sized stage is the word-
-    * frequency table — one hash aggregation with map-side partials. Pair
-    * counting and the merge loop then run over that VOCABULARY-sized
-    * table (the corpus is never re-scanned per merge), which is why BPE
-    * training is tractable at 100 TB: a trillion tokens collapse to a
-    * few million distinct words before any quadratic-ish work starts.
-    *
-    * Words are lowercased maximal `[a-z]+` runs — ASCII-only on purpose
-    * so `substr` indexing agrees byte-for-byte with any external oracle
-    * regardless of Unicode normalization. */
-  def bpeWordFrequencies(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    Par.widen(df, idCol)
-      .select(explode(split(lower(col(textCol)), "[^a-z]+")).as("word"))
-      .where(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-
-  /** Frequency-weighted adjacent character-pair counts over the word
-    * table — the statistic the first BPE merge maximizes. Input is the
-    * vocabulary-sized output of [[bpeWordFrequencies]], so the explode is
-    * ~(mean word length) x vocab rows, not corpus-sized. Ties in the
-    * top-k cut break on the pair text. Single-char words contribute no
-    * pairs (guarded: Spark's `sequence(1, 0)` would DESCEND, not empty). */
-  def bpePairCounts(wordFreq: DataFrame, k: Int = 30): DataFrame =
-    wordFreq
-      .where(length(col("word")) >= 2)
-      .select(col("freq"), explode(transform(
-          sequence(lit(1), length(col("word")) - 1),
-          i => col("word").substr(i, lit(2)))).as("pair"))
-      .groupBy("pair").agg(sum(col("freq")).as("n"))
-      .orderBy(col("n").desc, col("pair"))
-      .limit(k)
-
-  /** The BPE merge loop, run where it belongs: on the driver, over the
-    * collected vocabulary-sized word-frequency table (exactly how
-    * reference BPE trainers work — the corpus pass is distributed, the
-    * merge iterations are not). Deterministic: each round merges the
-    * highest-count adjacent symbol pair, ties broken by (left, right)
-    * symbol text; within a word, merges apply left-to-right and do not
-    * overlap. Returns the ordered merge list; stops early when no pair
-    * remains. */
-  /** One BPE merge applied to a symbol sequence: left-to-right,
-    * non-overlapping — the reference semantics [[bpeTokenCounts]]'s
-    * distributed replace-chain must reproduce (and the property spec
-    * checks it does, word by word, on the real corpus vocabulary). */
-  def bpeMergeWord(syms: Vector[String], p: (String, String)): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i + 1 < syms.length && syms(i) == p._1 && syms(i + 1) == p._2) {
-        out += (p._1 + p._2); i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.result()
-  }
-
-  /** Segment one word with an ordered, already-trained merge list —
-    * the driver-side reference tokenizer (each merge fully applied in
-    * training order, exactly as [[bpeTrain]] built it). */
-  def bpeSegment(word: String, merges: Seq[(String, String)]): Vector[String] =
-    merges.foldLeft(word.map(_.toString).toVector)(bpeMergeWord)
-
-  def bpeTrain(wordFreq: Seq[(String, Long)], numMerges: Int): Seq[(String, String)] = {
-    var words: Seq[(Vector[String], Long)] =
-      wordFreq.map { case (w, f) => (w.map(_.toString).toVector, f) }
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    def mergeWord(syms: Vector[String], p: (String, String)): Vector[String] =
-      bpeMergeWord(syms, p)
-    var round = 0
-    var exhausted = false
-    while (round < numMerges && !exhausted) {
-      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      for ((syms, f) <- words; j <- 0 until syms.length - 1) {
-        val p = (syms(j), syms(j + 1))
-        counts.update(p, counts.getOrElse(p, 0L) + f)
-      }
-      if (counts.isEmpty) exhausted = true
-      else {
-        val best = counts.toSeq
-          .sortBy { case ((a, b), n) => (-n, a, b) }.head._1
-        merges += best
-        words = words.map { case (syms, f) => (mergeWord(syms, best), f) }
-        round += 1
-      }
-    }
-    merges.toSeq
-  }
-
-  /** The spaced-symbol replace chain for one ordered merge list: word
-    * "lower" → " l o w e r "; each merge (a,b) is TWO global
-    * `replace(" a b " → " ab ")` passes, all inside whole-stage codegen.
-    * For a != b two passes are EXACTLY left-to-right non-overlapping BPE
-    * ([[bpeMergeWord]]): a pass-1 match is missed only when its leading
-    * space was consumed by the immediately preceding match, two misses
-    * are never adjacent (a merged token separates them), and a
-    * replacement (" ab ") can never mint a new " a b " occurrence (a+b
-    * is a single token distinct from both operands) — so pass 2 catches
-    * every miss and nothing else. For a == b that argument fails (a run
-    * of equal symbols strands singles between merged pairs), hence the
-    * require: same-symbol merges belong on the driver-side
-    * [[bpeSegment]] over a collected vocabulary. */
-  def bpeSpacedApply(word: Column, merges: Seq[(String, String)]): Column = {
-    merges.foreach { case (a, b) =>
-      require(a.nonEmpty && b.nonEmpty && !a.contains(" ") && !b.contains(" "),
-        s"bad merge pair ($a, $b)")
-      require(a != b,
-        s"same-symbol merge ($a, $b): the replace chain is exact only for " +
-          "distinct pairs — segment such merge lists with bpeSegment instead")
-    }
-    val spaced = concat(lit(" "), array_join(split(word, ""), " "), lit(" "))
-    merges.foldLeft(spaced) { case (s, (a, b)) =>
-      val from = lit(s" $a $b ")
-      val to = lit(s" $a$b ")
-      replace(replace(s, from, to), from, to)
-    }
-  }
-
-  /** Token SEQUENCE per distinct word under an ordered merge list —
-    * (word, tokens array<string>), the vocabulary-sized model table
-    * behind [[bpeEncode]]. Same replace chain as [[bpeTokenCounts]],
-    * split instead of counted. */
-  def bpeWordTokens(vocab: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    vocab.select(col("word"),
-      split(trim(bpeSpacedApply(col("word"), merges)), " ").as("toks"))
-
-  /** Distributed BPE ENCODING: the actual token-id stream a training
-    * pipeline consumes, not just counts. Output: one row per token —
-    * (id, wpos, tpos, token, token_id), totally ordered per doc by
-    * (wpos, tpos). The flattened-stream form is deliberate: a
-    * collect_list re-assembly would materialize per-doc arrays through
-    * the aggregation buffer; the stream form feeds [[packTokenStream]]
-    * (and any writer) with nothing wider than a row.
-    *
-    * Scale shape: per-symbol work is VOCAB-sized ([[bpeWordTokens]] runs
-    * the codegen replace chain once per distinct in-cap word; OOV words
-    * segment to chars inline on the corpus side — the same capped-model
-    * contract as [[tokenizeBpe]]); the corpus side is one posexplode,
-    * one model join (AQE-broadcast), one posexplode of the (mean ~4
-    * tokens) word segmentation. Token ids are assigned from the
-    * model-sized token vocabulary by `row_number() over (order by
-    * token)` — deterministic, reproducible by any external system, and
-    * the id table is itself a registrable model artifact.
-    *
-    * The cap DEFAULTS to [[DefaultBpeVocabCap]] (the same bound as the
-    * trained/model tokenize paths) because the dense-id window is only
-    * model-sized when the vocabulary is: an uncapped web-scale corpus
-    * pushes a Heaps-law vocabulary (10⁸+ distinct noisy "words") through
-    * ONE row_number task. Callers wanting the uncapped full-vocabulary
-    * encode must say `vocabCap = Int.MaxValue` explicitly. */
-  def bpeEncode(df: DataFrame, textCol: String, idCol: String,
-                merges: Seq[(String, String)],
-                vocabCap: Int = DefaultBpeVocabCap): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val words = Par.widen(df, idCol)
-      .select(col(idCol).as("id"),
-        posexplode(split(lower(col(textCol)), "[^a-z]+")).as(Seq("wpos", "word")))
-      .where(col("word") =!= "")
-    val distinctPairs = merges.forall { case (a, b) => a != b }
-    require(distinctPairs || vocabCap != Int.MaxValue,
-      "same-symbol merges segment on the driver and need a bounded model: " +
-        "pass a vocabCap (the [[tokenizeBpeModel]] contract)")
-    val segmented =
-      if (distinctPairs) {
-        val vocab =
-          if (vocabCap == Int.MaxValue) words.select("word").distinct()
-          else bpeCappedVocab(df, textCol, idCol, vocabCap).select("word")
-        bpeWordTokens(vocab, merges)
-      } else
-        bpeCappedVocab(df, textCol, idCol, vocabCap)
-          .collect().map(r => r.getString(0))
-          .map(w => (w, bpeSegment(w, merges)))
-          .toSeq.toDF("word", "toks")
-    // OOV fallback: one token per char, computed inline (split("") on a
-    // non-empty string is its exact char sequence)
-    val withToks = words.join(segmented, Seq("word"), "left")
-      .select(col("id"), col("wpos"),
-        coalesce(col("toks"), split(col("word"), "")).as("toks"))
-      .select(col("id"), col("wpos"),
-        posexplode(col("toks")).as(Seq("tpos", "token")))
-    // deterministic dense token ids over the emitted token vocabulary
-    val tokenIds = withToks.select("token").distinct()
-      .select(col("token"),
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("token"))).cast("long").as("token_id"))
-    withToks.join(tokenIds, "token")
-      .select(col("id"), col("wpos"), col("tpos"),
-        col("token"), col("token_id"))
-  }
-
-  /** Detokenize a [[bpeEncode]] frame back to text — the inspection /
-    * debugging path every packed-token pipeline needs (what do these
-    * token ids SAY?). BPE merges are concatenative, so no information is
-    * lost: tokens concatenate within each word (tpos order), words join
-    * with single spaces (wpos order), and the round-trip contract
-    * decode(encode(x)) = the lowercase `[a-z]+`-word normalization of x
-    * is EXACT (oracle-gated — the oracle derives the expected text from
-    * the RAW corpus, independent of both codecs). Two keyed
-    * partial-aggregatable aggregations; per-group arrays are word- and
-    * document-sized. Output: (id, text_detok). */
-  def bpeDecode(encoded: DataFrame): DataFrame = {
-    // ONE hash shuffle on id + an in-partition UnsafeExternalSort, then a
-    // streaming assembler holding a single document's string at a time.
-    // The obvious two-level collect_list formulation buffered every
-    // token struct in aggregation state — 36 GB of spill at the 100×
-    // sweep; this shape spills only if one PARTITION outgrows memory,
-    // and then through the radix sorter, not object aggregation maps.
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    encoded.select(col("id").cast("long"), col("wpos").cast("int"),
-        col("tpos").cast("int"), col("token").cast("string"))
-      .repartition(col("id"))
-      .sortWithinPartitions("id", "wpos", "tpos")
-      .as[(Long, Int, Int, String)]
-      .mapPartitions { it =>
-        new Iterator[(Long, String)] {
-          private var cur: Option[(Long, Int, Int, String)] =
-            if (it.hasNext) Some(it.next()) else None
-          def hasNext: Boolean = cur.isDefined
-          def next(): (Long, String) = {
-            val (id, w0, _, t0) = cur.get
-            val sb = new java.lang.StringBuilder(t0)
-            var lastW = w0
-            var nxt = if (it.hasNext) Some(it.next()) else None
-            while (nxt.exists(_._1 == id)) {
-              val (_, w, _, t) = nxt.get
-              if (w != lastW) { sb.append(' '); lastW = w }
-              sb.append(t)
-              nxt = if (it.hasNext) Some(it.next()) else None
-            }
-            cur = nxt
-            (id, sb.toString)
-          }
-        }
-      }.toDF("id", "text_detok")
-  }
-
-  /** Token count per distinct word under an ordered merge list — the
-    * vocabulary-sized half of distributed tokenization. Input must be a
-    * `word` column of non-empty space-free strings. */
-  def bpeTokenCounts(vocab: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    vocab.select(col("word"),
-      size(split(trim(bpeSpacedApply(col("word"), merges)), " ")).cast("long")
-        .as("n_tokens"))
-
-  /** Default model-vocabulary cap for trained/capped tokenization. 2^16
-    * words is generous for a merge-statistics model (GPT-2's whole token
-    * vocab is 50k) while bounding the driver copy to a few MB regardless
-    * of corpus size — the property that makes `bpe_tokenize(rel, n)`
-    * safe on an unbounded corpus (web-scale vocabularies grow ~N^0.5
-    * with no ceiling; an uncapped collect is a driver OOM). */
-  val DefaultBpeVocabCap: Int = 1 << 16
-
-  /** The capped model vocabulary: top `cap` words by (freq DESC, word) —
-    * a deterministic total order, so the cut is exactly reproducible by
-    * any external oracle. This is the ONLY table the trained path ever
-    * collects; its size is min(cap, |vocab|) by construction. */
-  def bpeCappedVocab(df: DataFrame, textCol: String, idCol: String,
-                     cap: Int): DataFrame = {
-    require(cap > 0, s"vocabCap must be positive, got $cap")
-    bpeWordFrequencies(df, textCol, idCol)
-      .orderBy(col("freq").desc, col("word"))
-      .limit(cap)
-  }
-
-  /** Distributed BPE tokenization: per-doc word and token counts under
-    * an ordered, already-trained merge list. The corpus collapses to
-    * its VOCABULARY before any per-symbol work: the replace chain runs
-    * once per DISTINCT word (one hash-distinct), the corpus-sized side
-    * only explodes words and joins the count table back (AQE picks
-    * broadcast when the vocab is small, shuffle when it isn't), then
-    * one partial-agged groupBy per doc — no shuffle grows with merge
-    * count, and the per-symbol cost is vocab-, not corpus-,
-    * proportional (why tokenizer application is tractable at 100 TB).
-    *
-    * `vocabCap` bounds the REPLACE-CHAIN side to the top-cap words by
-    * (freq DESC, word); words outside the cap segment by the standard
-    * rare-word fallback — one token per character (`length(word)`),
-    * computed inline on the corpus side, no model row needed. The
-    * default (no cap) runs the chain over the full distinct-word table,
-    * which stays fully distributed either way. Docs with no letter runs
-    * are absent from the output (no words → nothing to count),
-    * mirroring the oracle's GROUP BY. */
-  def tokenizeBpe(df: DataFrame, textCol: String, idCol: String,
-                  merges: Seq[(String, String)],
-                  vocabCap: Int = Int.MaxValue): DataFrame = {
-    val words = corpusWords(df, textCol, idCol)
-    val vocab =
-      if (vocabCap == Int.MaxValue) words.select("word").distinct()
-      else bpeCappedVocab(df, textCol, idCol, vocabCap).select("word")
-    docTokenCounts(words, bpeTokenCounts(vocab, merges))
-  }
-
-  /** Train `numMerges` BPE merges on the corpus and tokenize it in one
-    * call — the SQL-surface composition (`bpe_tokenize(rel, n[, cap])`).
-    * The driver copy is the CAPPED vocabulary ([[bpeCappedVocab]], ≤
-    * `vocabCap` rows — bounded regardless of corpus size, unlike IVF
-    * centroids this table would otherwise grow with the corpus);
-    * training and per-word token counts both run on that copy with the
-    * exact reference tokenizer ([[bpeSegment]] — handles the
-    * same-symbol merges the distributed chain rejects). Words below the
-    * frequency cut segment by the standard rare-word fallback (one
-    * token per character) — they contribute ~nothing to merge
-    * statistics, which is why capping is how production BPE trainers
-    * bound their driver state too. The corpus-sized side is identical
-    * to [[tokenizeBpe]]'s; the model join is NOT hint-forced, so AQE
-    * broadcasts the (small) model and would shuffle-join a huge one. */
-  def tokenizeBpeTrained(df: DataFrame, textCol: String, idCol: String,
-                         numMerges: Int,
-                         vocabCap: Int = DefaultBpeVocabCap): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val words = corpusWords(df, textCol, idCol)
-    val wf = bpeCappedVocab(df, textCol, idCol, vocabCap)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(wf.length <= vocabCap,
-      s"collected model vocab ${wf.length} exceeds cap $vocabCap")
-    val merges = bpeTrain(wf, numMerges)
-    val vocabCounts = wf
-      .map { case (w, _) => (w, bpeSegment(w, merges).length.toLong) }
-      .toDF("word", "n_tokens")
-    docTokenCounts(words, vocabCounts)
-  }
-
-  /** Apply an ALREADY-TRAINED merge list that may contain same-symbol
-    * merges (which [[bpeTrain]] legitimately produces and the distributed
-    * replace chain rejects): distinct-pair lists take the fully
-    * distributed [[tokenizeBpe]] path; otherwise the capped vocabulary is
-    * collected and segmented with the exact driver tokenizer
-    * ([[bpeSegment]]), out-of-vocab words falling back to chars — the
-    * same bounded-model shape as [[tokenizeBpeTrained]]. This is the
-    * apply path behind a `CREATE MODEL … KIND 'bpe'` reference.
-    *
-    * The cap applies on BOTH branches (the distinct-pair path forwards
-    * it to [[tokenizeBpe]], whose replace chain then runs over the
-    * top-cap vocabulary with the char fallback below the cut) — a model
-    * apply is a bounded-model contract regardless of merge shape. */
-  def tokenizeBpeModel(df: DataFrame, textCol: String, idCol: String,
-                       merges: Seq[(String, String)],
-                       vocabCap: Int = DefaultBpeVocabCap): DataFrame =
-    if (merges.forall { case (a, b) => a != b })
-      tokenizeBpe(df, textCol, idCol, merges, vocabCap)
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val words = corpusWords(df, textCol, idCol)
-      val wf = bpeCappedVocab(df, textCol, idCol, vocabCap)
-        .collect().map(r => r.getString(0)).toSeq
-      val vocabCounts = wf
-        .map(w => (w, bpeSegment(w, merges).length.toLong))
-        .toDF("word", "n_tokens")
-      docTokenCounts(words, vocabCounts)
-    }
-
-  /** Persist an ordered merge list as a model artifact — one `a b` line
-    * per merge, order-preserving (BPE merges are order-sensitive).
-    * Hadoop FS so the artifact lands wherever the cluster's storage is. */
-  def saveBpeMerges(spark: SparkSession, merges: Seq[(String, String)],
-                    path: String): Unit = {
-    merges.foreach { case (a, b) =>
-      require(a.nonEmpty && b.nonEmpty && !a.contains(" ") && !b.contains(" ") &&
-        !a.contains("\n") && !b.contains("\n"), s"unsaveable merge pair ($a, $b)")
-    }
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(merges.map { case (a, b) => s"$a $b" }.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Load a [[saveBpeMerges]] artifact, order preserved. */
-  def loadBpeMerges(spark: SparkSession, path: String): Seq[(String, String)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      line.split(" ") match {
-        case Array(a, b) => (a, b)
-        case _ => throw new IllegalArgumentException(
-          s"malformed BPE merge line `$line` in $path (expected `a b`)")
-      }
-    }.toSeq
-  }
-
-  /** Train a BPE model on the corpus (capped vocabulary, same bound as
-    * [[tokenizeBpeTrained]]) and persist the merge list at `path` — the
-    * train-then-register flow behind `CREATE MODEL … KIND 'bpe'`. */
-  def trainBpeModel(df: DataFrame, textCol: String, idCol: String,
-                    numMerges: Int, path: String,
-                    vocabCap: Int = DefaultBpeVocabCap): Seq[(String, String)] = {
-    val wf = bpeCappedVocab(df, textCol, idCol, vocabCap)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val merges = bpeTrain(wf, numMerges)
-    saveBpeMerges(df.sparkSession, merges, path)
-    merges
-  }
-
-  // ------------------------------------------------------------------
-  // Unigram-LM tokenizer (SentencePiece-style; Kudo 2018, "Subword
-  // Regularization") — the second tokenizer family modern pipelines ship
-  // next to BPE. Same scale discipline as the BPE paths: TRAINING runs on
-  // the driver over the capped word-frequency table (bounded model state,
-  // the bpeTrain posture), APPLICATION collapses the corpus to its
-  // vocabulary — the Viterbi segmenter runs once per distinct in-cap
-  // word, the corpus side is joins/explodes only.
-  //
-  // Deliberately DETERMINISTIC variant (every gate needs exact
-  // reproducibility): hard-EM — the E-step uses Viterbi best
-  // segmentations (not forward-backward expectations), a fixed iteration
-  // count, total orders on all ties, and log-probs rounded to 6 dp at
-  // every iteration boundary. Single characters are never pruned (floor
-  // log-prob keeps segmentation total), mirroring the reference
-  // SentencePiece's character-coverage guarantee.
-  // ------------------------------------------------------------------
-
-  /** Log-prob floor for pieces with zero Viterbi count (kept single
-    * chars) and for characters outside the model alphabet. */
-  val UnigramFloorLogProb: Double = -20.0
-
-  private def round6(x: Double): Double = math.rint(x * 1e6) / 1e6
-
-  /** Seed candidate pieces: every substring of length 1..maxPieceLen of
-    * every vocabulary word, frequency-weighted by occurrence; all single
-    * characters are kept unconditionally, multi-char candidates are cut
-    * to the top `seedSize` by (weight DESC, piece ASC) — a total order,
-    * so the seed is exactly reproducible. */
-  def unigramSeedVocab(wordFreq: Seq[(String, Long)], maxPieceLen: Int = 6,
-                       seedSize: Int = 4096): Seq[(String, Long)] = {
-    val w = scala.collection.mutable.HashMap.empty[String, Long]
-    for ((word, f) <- wordFreq; i <- 0 until word.length;
-         j <- (i + 1) to math.min(word.length, i + maxPieceLen))
-      w.update(word.substring(i, j), w.getOrElse(word.substring(i, j), 0L) + f)
-    val (chars, multi) = w.toSeq.partition(_._1.length == 1)
-    chars.sortBy(_._1) ++
-      multi.sortBy { case (p, f) => (-f, p) }.take(math.max(0, seedSize - chars.length))
-  }
-
-  /** Viterbi best segmentation of `word` under piece log-probs: maximize
-    * the summed log-prob; ties prefer FEWER pieces, remaining ties prefer
-    * the longer piece at the earliest split (fixed scan order — a total
-    * tie-break, pinned by spec). Characters absent from `vocab` segment
-    * as themselves at [[UnigramFloorLogProb]], so the function is total.
-    * O(len × maxPieceLen) per word, driver- or executor-side. */
-  def unigramSegment(word: String, vocab: collection.Map[String, Double],
-                     maxPieceLen: Int = 6): Vector[String] = {
-    val n = word.length
-    if (n == 0) return Vector.empty
-    val bestScore = Array.fill(n + 1)(Double.NegativeInfinity)
-    val bestCount = Array.fill(n + 1)(Int.MaxValue)
-    val bestPrev = Array.fill(n + 1)(-1)
-    bestScore(0) = 0.0; bestCount(0) = 0
-    var i = 1
-    while (i <= n) {
-      var j = math.max(0, i - maxPieceLen)
-      while (j < i) {
-        val piece = word.substring(j, i)
-        val lp = vocab.getOrElse(piece,
-          if (i - j == 1) UnigramFloorLogProb else Double.NegativeInfinity)
-        if (lp > Double.NegativeInfinity && bestScore(j) > Double.NegativeInfinity) {
-          val s = bestScore(j) + lp
-          val c = bestCount(j) + 1
-          // strictly-better score wins; equal score → fewer pieces; the
-          // ascending-j scan means later (shorter-last-piece) candidates
-          // must be STRICTLY better to replace — i.e. ties keep the
-          // longest last piece
-          if (s > bestScore(i) + 1e-12 ||
-              (math.abs(s - bestScore(i)) <= 1e-12 && c < bestCount(i))) {
-            bestScore(i) = s; bestCount(i) = c; bestPrev(i) = j
-          }
-        }
-        j += 1
-      }
-      i += 1
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var k = n
-    while (k > 0) { val p = bestPrev(k); out += word.substring(p, k); k = p }
-    out.reverseIterator.toVector
-  }
-
-  /** Train a unigram-LM piece vocabulary on a word-frequency table —
-    * deterministic Viterbi hard-EM:
-    *  1. seed = [[unigramSeedVocab]], probs ∝ substring weight;
-    *  2. each iteration: Viterbi-segment every word under the current
-    *     (6-dp-rounded) log-probs, recount pieces frequency-weighted,
-    *     re-normalize; multi-char pieces with zero count drop out,
-    *     single chars stay at the floor;
-    *  3. after the last iteration, cut to `vocabSize` by
-    *     (count DESC, piece ASC), single chars always kept.
-    * Returns (piece, logProb) with log-probs rounded to 6 dp — the exact
-    * values any external system reproduces from the same word table. */
-  def unigramTrain(wordFreq: Seq[(String, Long)], vocabSize: Int = 512,
-                   iters: Int = 4, maxPieceLen: Int = 6,
-                   seedSize: Int = 4096): Seq[(String, Double)] = {
-    require(vocabSize > 0 && iters > 0 && maxPieceLen > 0)
-    val seed = unigramSeedVocab(wordFreq, maxPieceLen, seedSize)
-    val total0 = seed.map(_._2).sum.toDouble.max(1.0)
-    var vocab: Map[String, Double] = seed.map { case (p, f) =>
-      p -> round6(math.log(f / total0)) }.toMap
-    var it = 0
-    while (it < iters) {
-      val counts = scala.collection.mutable.HashMap.empty[String, Long]
-      for ((word, f) <- wordFreq; piece <- unigramSegment(word, vocab, maxPieceLen))
-        counts.update(piece, counts.getOrElse(piece, 0L) + f)
-      val totalC = counts.values.sum.toDouble.max(1.0)
-      val chars = vocab.keysIterator.filter(_.length == 1).toSeq
-      val kept = counts.toSeq.filter(_._2 > 0).map { case (p, c) =>
-        p -> round6(math.log(c / totalC)) }
-      val floorChars = chars.filterNot(counts.contains)
-        .map(_ -> UnigramFloorLogProb)
-      // final-iteration cut to vocabSize (count DESC, piece ASC); single
-      // chars ride along unconditionally
-      val cut =
-        if (it == iters - 1) {
-          val (c1, cm) = kept.partition(_._1.length == 1)
-          val order = counts.toMap
-          c1 ++ cm.sortBy { case (p, _) => (-order(p), p) }
-            .take(math.max(0, vocabSize - c1.length - floorChars.length))
-        } else kept
-      vocab = (cut ++ floorChars).toMap
-      it += 1
-    }
-    vocab.toSeq.sortBy { case (p, lp) => (-lp, p) }
-  }
-
-  /** Per-doc (id, n_words, n_tokens) under a TRAINED-IN-PLACE unigram
-    * model: the vocabulary is capped ([[bpeCappedVocab]] — the bounded
-    * driver copy), EM runs on the driver, the per-word piece counts join
-    * back to the corpus exactly like the BPE paths (OOV words fall back
-    * to one token per char). */
-  def tokenizeUnigramTrained(df: DataFrame, textCol: String, idCol: String,
-                             vocabSize: Int = 512, iters: Int = 4,
-                             vocabCap: Int = DefaultBpeVocabCap): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val wf = bpeCappedVocab(df, textCol, idCol, vocabCap)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val model = unigramTrain(wf, vocabSize, iters).toMap
-    val vocabCounts = wf
-      .map { case (w, _) => (w, unigramSegment(w, model).length.toLong) }
-      .toDF("word", "n_tokens")
-    docTokenCounts(corpusWords(df, textCol, idCol), vocabCounts)
-  }
-
-  /** Persist a unigram vocabulary as `piece<TAB>logprob` lines, pieces
-    * in the [[unigramTrain]] order. 6-dp decimal text round-trips the
-    * round6'd log-probs exactly (both directions are correctly-rounded
-    * conversions of k/10⁶). */
-  def saveUnigramVocab(spark: SparkSession, vocab: Seq[(String, Double)],
-                       path: String): Unit = {
-    vocab.foreach { case (p, _) =>
-      require(p.nonEmpty && !p.contains("\t") && !p.contains("\n"),
-        s"unsaveable piece `$p`") }
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(hp, true)
-    try out.write(vocab.map { case (p, lp) => f"$p\t$lp%.6f" }.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Load a [[saveUnigramVocab]] artifact, order preserved. */
-  def loadUnigramVocab(spark: SparkSession, path: String): Seq[(String, Double)] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(hp)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      line.split("\t") match {
-        case Array(p, lp) => (p, lp.toDouble)
-        case _ => throw new IllegalArgumentException(
-          s"malformed unigram vocab line `$line` in $path (expected `piece\\tlogprob`)")
-      }
-    }.toSeq
-  }
-
-  /** Train a unigram model on the corpus (capped vocabulary) and persist
-    * it at `path` — the flow behind `CREATE MODEL … KIND 'unigram'`. */
-  def trainUnigramModel(df: DataFrame, textCol: String, idCol: String,
-                        vocabSize: Int, iters: Int, path: String,
-                        vocabCap: Int = DefaultBpeVocabCap): Seq[(String, Double)] = {
-    val wf = bpeCappedVocab(df, textCol, idCol, vocabCap)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val vocab = unigramTrain(wf, vocabSize, iters)
-    saveUnigramVocab(df.sparkSession, vocab, path)
-    vocab
-  }
-
-  /** Per-doc (id, n_words, n_tokens) under an ALREADY-TRAINED unigram
-    * model — the production apply path (the tokenizer is a model
-    * artifact). Same capped-vocab shape as [[tokenizeUnigramTrained]]. */
-  def tokenizeUnigramModel(df: DataFrame, textCol: String, idCol: String,
-                           model: collection.Map[String, Double],
-                           vocabCap: Int = DefaultBpeVocabCap): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vocabCounts = bpeCappedVocab(df, textCol, idCol, vocabCap)
-      .collect().map(r => r.getString(0))
-      .map(w => (w, unigramSegment(w, model).length.toLong))
-      .toSeq.toDF("word", "n_tokens")
-    docTokenCounts(corpusWords(df, textCol, idCol), vocabCounts)
-  }
-
-  /** Unigram token stream — (id, wpos, tpos, token, token_id), the same
-    * frame shape as [[bpeEncode]], so [[bpeDecode]] round-trips it (the
-    * pieces concatenate to each word exactly; Viterbi never drops a
-    * character). Corpus side: one posexplode + one model join (AQE
-    * broadcast) + one posexplode; the Viterbi work is vocab-sized. */
-  def unigramEncode(df: DataFrame, textCol: String, idCol: String,
-                    model: collection.Map[String, Double],
-                    vocabCap: Int = DefaultBpeVocabCap): DataFrame = {
-    val (segmented, tokenIds) =
-      unigramEncodeTables(df, textCol, idCol, model, vocabCap)
-    unigramEncodeWith(df, textCol, idCol, segmented, tokenIds)
-  }
-
-  /** The two MODEL-SIZED static tables [[unigramEncode]] builds
-    * internally, exposed so a STREAM can apply the tokenizer with
-    * stream-static joins only: `segmented` = (word, toks) for the capped
-    * batch vocabulary, `tokenIds` = (token, token_id) over the batch
-    * corpus's distinct tokens (char-fallback pieces included) with the
-    * bpeEncode dense-id discipline. Both derive from the BATCH corpus —
-    * freeze them (localCheckpoint) before serving micro-batches. */
-  def unigramEncodeTables(df: DataFrame, textCol: String, idCol: String,
-                          model: collection.Map[String, Double],
-                          vocabCap: Int = DefaultBpeVocabCap): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val segmented = bpeCappedVocab(df, textCol, idCol, vocabCap)
-      .collect().map(r => r.getString(0))
-      .map(w => (w, unigramSegment(w, model)))
-      .toSeq.toDF("word", "toks")
-    // deterministic dense token ids — model-sized window, the bpeEncode
-    // posture exactly
-    val tokenIds = tokenStream(df, textCol, idCol, segmented)
-      .select("token").distinct()
-      .select(col("token"),
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("token"))).cast("long").as("token_id"))
-    (segmented, tokenIds)
-  }
-
-  private def tokenStream(df: DataFrame, textCol: String, idCol: String,
-                          segmented: DataFrame): DataFrame =
-    Par.widen(df, idCol)
-      .select(col(idCol).as("id"),
-        posexplode(split(lower(col(textCol)), "[^a-z]+")).as(Seq("wpos", "word")))
-      .where(col("word") =!= "")
-      .join(segmented, Seq("word"), "left")
-      .select(col("id"), col("wpos"),
-        coalesce(col("toks"), split(col("word"), "")).as("toks"))
-      .select(col("id"), col("wpos"),
-        posexplode(col("toks")).as(Seq("tpos", "token")))
-
-  /** Apply a unigram tokenizer from PRE-BUILT tables — the stateless
-    * serve path: works identically on a batch frame or a STREAM (the
-    * word/token joins are stream-static against the model-sized tables,
-    * broadcast by AQE; no aggregation, no state store). `strict = false`
-    * keeps rows whose token is outside the batch id space (token_id
-    * null) instead of dropping them — only reachable when the served
-    * corpus drifts from the table-building one. */
-  def unigramEncodeWith(df: DataFrame, textCol: String, idCol: String,
-                        segmented: DataFrame, tokenIds: DataFrame,
-                        strict: Boolean = true): DataFrame =
-    tokenStream(df, textCol, idCol, segmented)
-      .join(tokenIds, Seq("token"), if (strict) "inner" else "left")
-      .select(col("id"), col("wpos"), col("tpos"), col("token"), col("token_id"))
-
-  private def corpusWords(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    Par.widen(df, idCol)
-      .select(col(idCol).as("id"),
-        explode(split(lower(col(textCol)), "[^a-z]+")).as("word"))
-      .where(col("word") =!= "")
-
-  /** Corpus side × model side. LEFT join + char-count fallback: a word
-    * absent from the model vocabulary still counts (as `length(word)`
-    * tokens — character segmentation), so a capped model changes token
-    * counts only for rare words and never drops them from `n_words`.
-    * No join hint: the model is usually broadcast-sized and AQE will
-    * broadcast it; when it isn't (huge uncapped vocab), forcing a
-    * broadcast would be exactly the wrong call. */
-  private def docTokenCounts(words: DataFrame, vocabCounts: DataFrame): DataFrame =
-    words.join(vocabCounts, Seq("word"), "left")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(coalesce(col("n_tokens"), length(col("word")).cast("long")))
-          .as("n_tokens"))
-
   /** Compression-ratio quality signal (the CCNet/RedPajama heuristic):
     * highly repetitive or templated text deflates far below natural prose,
     * and near-random noise deflates above it — both tails are low-quality.

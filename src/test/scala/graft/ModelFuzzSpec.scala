@@ -21,15 +21,14 @@ class ModelFuzzSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("300-op seeded model-lifecycle fuzz: catalog mirror, name≡path serving, clean wrong-kind errors") {
-    import graft.operators.{IvfIndex, TextAnalysis}
+    import graft.operators.{IvfIndex, Subwords}
     val base = java.nio.file.Files.createTempDirectory("graft_modelfuzz_")
     try {
       val g0 = new GraftSession(spark).registerDir(TestSpark.sf)
       val embT = g0.catalog.relation("embeddings")
       val mergesList = "e r,i n"
       val mergesPath = base.resolve("merges.txt").toString
-      TextAnalysis.saveBpeMerges(spark,
-        Seq(("e", "r"), ("i", "n")), mergesPath)
+      Subwords.Bpe(Seq(("e", "r"), ("i", "n"))).save(spark, mergesPath)
       val ivfDir = base.resolve("ivf").toString
       IvfIndex.save(embT, ivfDir, IvfIndex.Flat, nlist = 8, iters = 1)
       val pqDir = base.resolve("pq").toString

@@ -1314,9 +1314,9 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "zzzqqq xyzzy"),          // OOV words: char-split then reassembled
       (3L, "12345 !!!"),             // no [a-z] word: absent from output
       (4L, "interesting anthem")).toDF("doc_id", "text")
-    val enc = TextAnalysis.bpeEncode(d, "text", "doc_id",
-      Seq(("e", "r"), ("i", "n"), ("t", "h")))
-    val dec = TextAnalysis.bpeDecode(enc)
+    val enc = Subwords.encode(d, "text", "doc_id",
+      Subwords.Bpe(Seq(("e", "r"), ("i", "n"), ("t", "h"))))
+    val dec = Subwords.bpeDecode(enc)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(dec(1L) == "the quick brown fox")
     assert(dec(2L) == "zzzqqq xyzzy")
@@ -1326,8 +1326,8 @@ class OperatorsSpec extends AnyFunSuite {
     val want = docs.select(col("doc_id").as("id"),
       array_join(filter(split(lower(col("text")), "[^a-z]+"),
         w => length(w) > 0), " ").as("w"))
-    val got = TextAnalysis.bpeDecode(
-      TextAnalysis.bpeEncode(docs, "text", "doc_id", Seq(("e", "r"))))
+    val got = Subwords.bpeDecode(
+      Subwords.encode(docs, "text", "doc_id", Subwords.Bpe(Seq(("e", "r")))))
     assert(got.join(want, "id").where(col("text_detok") =!= col("w")).count() === 0L)
   }
 
@@ -2132,18 +2132,18 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, "low low lower"),
       (2L, "low Be be 42")
     ).toDF("doc_id", "text")
-    val wf = TextAnalysis.bpeWordFrequencies(d, "text", "doc_id")
+    val wf = Subwords.bpeWordFrequencies(d, "text", "doc_id")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(wf == Map("low" -> 3L, "lower" -> 1L, "be" -> 2L))
     // pairs: lo 3+1, ow 3+1, we 1, er 1, be 2
-    val pc = TextAnalysis.bpePairCounts(
-        TextAnalysis.bpeWordFrequencies(d, "text", "doc_id"), k = 10)
+    val pc = Subwords.bpePairCounts(
+        Subwords.bpeWordFrequencies(d, "text", "doc_id"), k = 10)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     assert(pc.toMap == Map("lo" -> 4L, "ow" -> 4L, "be" -> 2L, "we" -> 1L, "er" -> 1L))
     // deterministic order: count desc, then pair asc
     assert(pc.map(_._1).toSeq == Seq("lo", "ow", "be", "er", "we"))
     // single-char words contribute nothing (and don't crash the sequence)
-    val one = TextAnalysis.bpePairCounts(
+    val one = Subwords.bpePairCounts(
       Seq(("a", 5L)).toDF("word", "freq"), k = 10).count()
     assert(one == 0L)
   }
@@ -2152,7 +2152,7 @@ class OperatorsSpec extends AnyFunSuite {
     // Sennrich-style toy vocab. Round 1: "lo"+"ow" tie broken by pair text?
     // counts: (l,o)=7+3=... compute: low x5, lower x2, newest x6, widest x3
     val wf = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
-    val merges = TextAnalysis.bpeTrain(wf, numMerges = 4)
+    val merges = Subwords.bpeTrain(wf, numMerges = 4)
     // pair counts round 1: (e,s)=9, (s,t)=9, (l,o)=7, (o,w)=7, (w,e)=8? -
     // (w,e): lower 2 + newest 6 = 8; (n,e)=6, (e,w)=6, (w,i)=3, (i,d)=3,
     // (d,e)=3, (e,r)=2. Max 9 tie (e,s)/(s,t) -> (e,s) by text order.
@@ -2160,32 +2160,29 @@ class OperatorsSpec extends AnyFunSuite {
     // round 2: "es"+"t" now 9, wins.
     assert(merges(1) == ("es", "t"))
     // merges apply left-to-right without overlap: "aaa" with (a,a) -> ["aa","a"]
-    val m2 = TextAnalysis.bpeTrain(Seq(("aaa", 1L)), numMerges = 10)
+    val m2 = Subwords.bpeTrain(Seq(("aaa", 1L)), numMerges = 10)
     assert(m2.head == ("a", "a") && m2(1) == ("aa", "a"))
     // stops early when no pairs remain (single symbol left)
     assert(m2.length == 2)
   }
 
   test("BPE vocab cap: bounded model, deterministic cut, char fallback for OOV") {
-    // the trained path's only driver collect is bpeCappedVocab — its
+    // the family's only driver collect is the capped vocabulary — its
     // row count respects the cap by construction
-    assert(TextAnalysis.bpeCappedVocab(docs, "text", "doc_id", 12).count() == 12L)
-    assert(TextAnalysis.bpeCappedVocab(docs, "text", "doc_id", 1000000).count() ==
-      TextAnalysis.bpeWordFrequencies(docs, "text", "doc_id").count())
+    assert(Subwords.vocab(docs, "text", "doc_id", 12).length == 12)
+    assert(Subwords.vocab(docs, "text", "doc_id", 1000000).length ==
+      Subwords.bpeWordFrequencies(docs, "text", "doc_id").count())
     // the cut is exactly top-K by (freq DESC, word)
-    val all = TextAnalysis.bpeWordFrequencies(docs, "text", "doc_id")
+    val all = Subwords.bpeWordFrequencies(docs, "text", "doc_id")
       .collect().map(r => (r.getString(0), r.getLong(1)))
       .sortBy { case (w, f) => (-f, w) }
-    val capped = TextAnalysis.bpeCappedVocab(docs, "text", "doc_id", 12)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-      .sortBy { case (w, f) => (-f, w) }
-    assert(capped.toSeq == all.take(12).toSeq)
+    assert(Subwords.vocab(docs, "text", "doc_id", 12) == all.take(12).toSeq)
     // hand-computed capped tokenization: cap=1 keeps only the most
     // frequent word (aa/bb tie at 2 broken by word text); OOV words
     // fall back to one token per char, and still count in n_words
     val tiny = Seq((1L, "aa bb aa"), (2L, "bb lower")).toDF("doc_id", "text")
-    val m = Seq("l" -> "o", "w" -> "e")
-    val out = TextAnalysis.tokenizeBpe(tiny, "text", "doc_id", m, vocabCap = 1)
+    val m = Subwords.Bpe(Seq("l" -> "o", "w" -> "e"))
+    val out = Subwords.tokenize(tiny, "text", "doc_id", m, 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     // vocab by (freq desc, word): aa(2) wins the cap. Doc 1: aa(chain:
     // 2 toks) + bb(OOV: 2 chars) + aa(2) = 6 over 3 words. Doc 2:
@@ -2193,26 +2190,28 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out == Seq((1L, 3L, 6L), (2L, 2L, 7L)))
     // trained path under a cap: merge statistics come from capped vocab
     // only; uncapped ≡ the historical behavior on this small corpus
-    val trainedCapped = TextAnalysis.tokenizeBpeTrained(tiny, "text", "doc_id",
-        numMerges = 2, vocabCap = 1)
+    // (trained in place: the model segments the copy it was trained on)
+    def trained(d: DataFrame, numMerges: Int, cap: Int): DataFrame = {
+      val wf = Subwords.vocab(d, "text", "doc_id", cap)
+      Subwords.tokenize(d, "text", "doc_id", Subwords.Bpe(Subwords.bpeTrain(wf, numMerges)),
+        cap, Some(wf))
+    }
+    val trainedCapped = trained(tiny, numMerges = 2, cap = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     // training on {aa:2}: merges (a,a) then exhausted -> aa = 1 token;
     // OOV bb=2, lower=5
     assert(trainedCapped == Seq((1L, 3L, 4L), (2L, 2L, 7L)))
     // real corpus, generous cap ≡ uncapped trained result
-    val a = TextAnalysis.tokenizeBpeTrained(docs, "text", "doc_id", 8)
-      .orderBy("id").collect().toSeq
-    val b = TextAnalysis.tokenizeBpeTrained(docs, "text", "doc_id", 8,
-      vocabCap = 1000000).orderBy("id").collect().toSeq
+    val a = trained(docs, 8, Subwords.DefaultBpeVocabCap).orderBy("id").collect().toSeq
+    val b = trained(docs, 8, 1000000).orderBy("id").collect().toSeq
     assert(a == b && a.nonEmpty)
-    intercept[IllegalArgumentException](
-      TextAnalysis.bpeCappedVocab(docs, "text", "doc_id", 0))
+    intercept[IllegalArgumentException](Subwords.vocab(docs, "text", "doc_id", 0))
   }
 
   test("bpeEncode: ordered token-id streams; packTokenStream cuts fixed-length sequences") {
-    val merges = graft.gates.Harness.X86_MERGES
+    val merges = Subwords.Bpe(graft.gates.Harness.X86_MERGES)
     val tiny = Seq((1L, "lower stow"), (2L, "ab lower")).toDF("doc_id", "text")
-    val enc = TextAnalysis.bpeEncode(tiny, "text", "doc_id", merges)
+    val enc = Subwords.encode(tiny, "text", "doc_id", merges)
     val rows = enc.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3), r.getLong(4)))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
@@ -2223,14 +2222,14 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, 1, 0, "st", 6L), (1L, 1, 1, "ow", 5L),
       (2L, 0, 0, "a", 1L), (2L, 0, 1, "b", 2L),
       (2L, 1, 0, "low", 4L), (2L, 1, 1, "er", 3L)), rows.toString)
-    // encode token counts agree with tokenizeBpe's
+    // encode token counts agree with tokenize's
     val encCounts = enc.groupBy("id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    TextAnalysis.tokenizeBpe(tiny, "text", "doc_id", merges).collect()
+    Subwords.tokenize(tiny, "text", "doc_id", merges, Int.MaxValue).collect()
       .foreach(r => assert(encCounts(r.getLong(0)) == r.getLong(2)))
     // capped encode: OOV words stream one token per char, in order
-    val capped = TextAnalysis.bpeEncode(tiny, "text", "doc_id", merges,
-        vocabCap = 1) // keeps only "lower" (freq 2)
+    val capped = Subwords.encode(tiny, "text", "doc_id", merges,
+        cap = 1) // keeps only "lower" (freq 2)
       .where(col("id") === 2L && col("wpos") === 0)
       .orderBy("tpos").collect().map(_.getString(3)).toSeq
     assert(capped == Seq("a", "b"))
@@ -2248,10 +2247,9 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("packTokenStreamAuto: shard count tracks the corpus; totals invariant at any shard count (r11)") {
-    val merges = graft.gates.Harness.X86_MERGES
+    val merges = Subwords.Bpe(graft.gates.Harness.X86_MERGES)
     val d = docs.limit(200)
-    val enc = TextAnalysis.bpeEncode(d, "text", "doc_id", merges,
-      vocabCap = 12).localCheckpoint()
+    val enc = Subwords.encode(d, "text", "doc_id", merges, 12).localCheckpoint()
     val total = enc.count()
     def packedTotals(df: org.apache.spark.sql.DataFrame): (Long, Map[Long, Long]) =
       (df.count(), df.groupBy("id").count().collect()
@@ -2284,7 +2282,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("bpeEncode: the dense-id window input is cap-bounded (default = DefaultBpeVocabCap, r11)") {
-    val merges = Seq(("e", "r"))
+    val merges = Subwords.Bpe(Seq(("e", "r")))
     // many distinct OOV words, cap 2: the emitted token vocabulary may
     // contain multi-char tokens ONLY from the in-cap words ("person",
     // "wower" — both emit "er") — every OOV word streams single chars.
@@ -2295,7 +2293,7 @@ class OperatorsSpec extends AnyFunSuite {
       .map(i => (i, s"wower person w${"x" * (i % 7).toInt}q person"))
       .toDF("doc_id", "text")
     val cap = 2
-    val enc = TextAnalysis.bpeEncode(wide, "text", "doc_id", merges, cap)
+    val enc = Subwords.encode(wide, "text", "doc_id", merges, cap)
     val toks = enc.select("token").distinct().collect().map(_.getString(0))
     val multi = toks.filter(_.length > 1).toSet
     assert(toks.length <= cap * 16 + 26, s"${toks.length} distinct tokens")
@@ -2304,48 +2302,69 @@ class OperatorsSpec extends AnyFunSuite {
     assert(multi == Set("er"), multi.toString)
     // the default cap IS DefaultBpeVocabCap: default-call ≡ explicit call
     val tiny = Seq((1L, "lower stow"), (2L, "ab lower")).toDF("doc_id", "text")
-    val viaDefault = TextAnalysis.bpeEncode(tiny, "text", "doc_id", merges)
+    val viaDefault = Subwords.encode(tiny, "text", "doc_id", merges)
       .orderBy("id", "wpos", "tpos").collect().map(_.toSeq).toSeq
-    val viaExplicit = TextAnalysis.bpeEncode(tiny, "text", "doc_id", merges,
-        TextAnalysis.DefaultBpeVocabCap)
+    val viaExplicit = Subwords.encode(tiny, "text", "doc_id", merges,
+        Subwords.DefaultBpeVocabCap)
       .orderBy("id", "wpos", "tpos").collect().map(_.toSeq).toSeq
     assert(viaDefault == viaExplicit && viaDefault.nonEmpty)
+  }
+
+  test("subword tokenizers: per-doc counts equal the token stream for every model shape") {
+    val d = Seq(
+      (1L, "The lower stow, aaa aab!"),
+      (2L, "banana bandana ERR"),
+      (3L, "12345 !!!"), // no [a-z] word: absent from both surfaces
+      (4L, "zzz aa a ab lower lower")).toDF("doc_id", "text")
+    val unigram = Subwords.Unigram(
+      Subwords.unigramTrain(Subwords.vocab(d, "text", "doc_id"), vocabSize = 16, iters = 2))
+    val models = Seq(
+      "distinct-pair BPE" -> Subwords.Bpe(graft.gates.Harness.X86_MERGES),
+      "same-symbol BPE" -> Subwords.Bpe(Seq("a" -> "a", "e" -> "r")),
+      "trained unigram" -> unigram)
+    // cap 4 sends most words to the char fallback; the default keeps all
+    for ((name, m) <- models; cap <- Seq(4, Subwords.DefaultBpeVocabCap)) {
+      val counts = Subwords.tokenize(d, "text", "doc_id", m, cap).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val stream = Subwords.encode(d, "text", "doc_id", m, cap)
+        .groupBy("id").agg(countDistinct(col("wpos")), count(lit(1))).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(counts == stream, s"$name, cap $cap")
+      assert(counts.keySet == Set(1L, 2L, 4L), s"$name, cap $cap")
+    }
   }
 
   test("bpeSpacedApply replace chain ≡ reference BPE segmentation on the corpus vocabulary") {
     val merges = graft.gates.Harness.X86_MERGES
     // every distinct word of the real corpus: chain token count must
     // equal the driver reference tokenizer's, word by word
-    val vocab = docs.select(explode(split(lower(col("text")), "[^a-z]+")).as("word"))
-      .where(col("word") =!= "").distinct()
-    val chain = TextAnalysis.bpeTokenCounts(vocab, merges)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
+    val chain = Subwords.segmentation(docs, "text", "doc_id", Subwords.Bpe(merges), Int.MaxValue)
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toVector)
     assert(chain.nonEmpty)
-    chain.foreach { case (w, n) =>
-      val ref = TextAnalysis.bpeSegment(w, merges)
-      assert(ref.length.toLong == n,
-        s"word `$w`: chain $n vs reference ${ref.mkString("|")}")
+    chain.foreach { case (w, toks) =>
+      val ref = Subwords.bpeSegment(w, merges)
+      assert(ref == toks, s"word `$w`: chain ${toks.mkString("|")} vs reference ${ref.mkString("|")}")
     }
     // the tokens themselves (not just counts) on adversarial words:
     // alternating runs (the pass-2 case), nested second-order merges
     val hard = Seq("ererer", "erererer", "lowerg", "merger", "ininin",
       "stowst", "mmerer", "glowing").toDF("word")
     hard.select(col("word"),
-        trim(TextAnalysis.bpeSpacedApply(col("word"), merges)).as("s"))
+        trim(Subwords.bpeSpacedApply(col("word"), merges)).as("s"))
       .collect().foreach { r =>
         val w = r.getString(0)
-        assert(r.getString(1).split(" ").toVector == TextAnalysis.bpeSegment(w, merges),
+        assert(r.getString(1).split(" ").toVector == Subwords.bpeSegment(w, merges),
           s"tokens diverge on `$w`: got `${r.getString(1)}`")
       }
     // same-symbol merges are rejected eagerly (the chain would be wrong)
     val err = intercept[IllegalArgumentException] {
-      TextAnalysis.bpeSpacedApply(col("word"), Seq("a" -> "a"))
+      Subwords.bpeSpacedApply(col("word"), Seq("a" -> "a"))
     }
     assert(err.getMessage.contains("same-symbol"))
-    // tokenizeBpe end-to-end, hand-computed: "lower" -> [low, er] (the
+    // tokenize end-to-end, hand-computed: "lower" -> [low, er] (the
     // (l,ow) merge needs (o,w)'s output), "stow" -> [st, ow]
-    val out = TextAnalysis.tokenizeBpe(
-      Seq((1L, "lower stow")).toDF("doc_id", "text"), "text", "doc_id", merges)
+    val out = Subwords.tokenize(
+      Seq((1L, "lower stow")).toDF("doc_id", "text"), "text", "doc_id", Subwords.Bpe(merges))
       .collect().head
     assert(out.getLong(1) == 2L && out.getLong(2) == 4L)
   }

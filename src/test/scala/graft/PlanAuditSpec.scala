@@ -24,7 +24,7 @@ class PlanAuditSpec extends AnyFunSuite {
   private val globalWindowByDesign = Map(
     "q67_ignore_nulls" -> "user query: LOCF via over (order by …), no partition by",
     "x32_global_shuffle" -> "deterministicShuffle IS a global sort by definition (SCALE.md honest limits)",
-    "x97_bpe_encode" -> "dense token ids: row_number over the TOKEN VOCABULARY — model-sized BY DEFAULT (bpeEncode caps at DefaultBpeVocabCap unless the caller explicitly uncaps; r11)",
+    "x97_bpe_encode" -> "dense token ids: row_number over the TOKEN VOCABULARY — model-sized BY DEFAULT (Subwords.encode caps at DefaultBpeVocabCap unless the caller explicitly uncaps; r11)",
     "x98_pack_tokens" -> "same encode stage: the id window runs over the cap-bounded token vocabulary",
     "q114_bpe_encode_fn" -> "same encode stage reached from SQL: cap-bounded token-id window (SQL default = DefaultBpeVocabCap)",
     "x100_tokens_pipeline" -> "the encode stage's model-sized token-id window (see x97)")

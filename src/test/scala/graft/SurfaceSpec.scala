@@ -60,7 +60,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("model artifacts: train -> create model -> sidecar round-trip -> apply by name") {
-    import graft.operators.{IvfIndex, TextAnalysis}
+    import graft.operators.{IvfIndex, Subwords}
     val dir = java.nio.file.Files.createTempDirectory("graft_models_")
     val sidecar = dir.resolve("catalog.json").toString
     val mergesPath = dir.resolve("bpe_merges.txt").toString
@@ -69,10 +69,10 @@ class SurfaceSpec extends AnyFunSuite {
       val g1 = new GraftSession(spark).registerDir(TestSpark.sf).persistTo(sidecar)
       val docs = g1.catalog.relation("documents")
       // train + persist the two artifact kinds
-      val merges = TextAnalysis.trainBpeModel(docs, "text", "doc_id",
-        numMerges = 8, path = mergesPath)
-      assert(merges.nonEmpty)
-      assert(TextAnalysis.loadBpeMerges(spark, mergesPath) == merges)
+      val merges = Subwords.Bpe(Subwords.bpeTrain(Subwords.vocab(docs, "text", "doc_id"), 8))
+      merges.save(spark, mergesPath)
+      assert(merges.merges.nonEmpty)
+      assert(Subwords.Bpe.load(spark, mergesPath) == merges)
       IvfIndex.save(g1.catalog.relation("embeddings"), ivfDir,
         nlist = 8, iters = 2)
       g1.sql(s"create model toktok kind 'bpe' at '$mergesPath'")
@@ -85,7 +85,7 @@ class SurfaceSpec extends AnyFunSuite {
       val byName = g1.sql(
         "select id, n_tokens from bpe_tokenize(documents, 'toktok') order by id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val direct = TextAnalysis.tokenizeBpeModel(docs, "text", "doc_id", merges)
+      val direct = Subwords.tokenize(docs, "text", "doc_id", merges)
         .orderBy("id")
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
       assert(byName == direct && byName.nonEmpty)
@@ -255,12 +255,12 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("sidecar replay degrades a model whose artifact vanished instead of poisoning the catalog (r11 advisory)") {
-    import graft.operators.TextAnalysis
+    import graft.operators.Subwords
     val dir = java.nio.file.Files.createTempDirectory("graft_cat_deg_")
     val sidecar = dir.resolve("catalog.json").toString
     val mergesPath = dir.resolve("m.txt")
     try {
-      TextAnalysis.saveBpeMerges(spark, Seq(("e", "r")), mergesPath.toString)
+      Subwords.Bpe(Seq(("e", "r"))).save(spark, mergesPath.toString)
       val g1 = new GraftSession(spark).registerDir(TestSpark.sf).persistTo(sidecar)
       g1.sql(s"create model deg_model kind 'bpe' at '$mergesPath'")
       g1.sql("create table deg_keep as select n_nationkey as k from nation where n_nationkey < 3")
@@ -297,11 +297,11 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("bpe_tokenize by model name applies an explicit vocab cap on distinct-pair models (r11 advisory)") {
-    import graft.operators.TextAnalysis
+    import graft.operators.Subwords
     val dir = java.nio.file.Files.createTempDirectory("graft_bpe_cap_")
     val mergesPath = dir.resolve("m.txt").toString
     try {
-      TextAnalysis.saveBpeMerges(spark, Seq(("e", "r")), mergesPath)
+      Subwords.Bpe(Seq(("e", "r"))).save(spark, mergesPath)
       val g = new GraftSession(spark).registerDir(TestSpark.sf)
       g.sql(s"create model cap_model kind 'bpe' at '$mergesPath'")
       val docs = g.catalog.relation("documents")
@@ -309,8 +309,8 @@ class SurfaceSpec extends AnyFunSuite {
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val viaSql = rows(g.sql(
         "select id, n_tokens from bpe_tokenize(documents, 'cap_model', 1) order by id"))
-      val direct = rows(TextAnalysis
-        .tokenizeBpe(docs, "text", "doc_id", Seq(("e", "r")), vocabCap = 1)
+      val direct = rows(Subwords
+        .tokenize(docs, "text", "doc_id", Subwords.Bpe(Seq(("e", "r"))), 1)
         .orderBy("id").selectExpr("id", "n_tokens"))
       assert(viaSql == direct && viaSql.nonEmpty)
       // the cap is load-bearing: capping to 1 word changes some count

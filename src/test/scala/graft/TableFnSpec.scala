@@ -226,22 +226,22 @@ class TableFnSpec extends AnyFunSuite {
   }
 
   test("bpe_pairs / bpe_tokenize table functions: both modes from SQL") {
-    import graft.operators.TextAnalysis
+    import graft.operators.Subwords
     import graft.gates.Harness.X86_MERGES
     // bpe_pairs ≡ operator API
     val viaSql = g.sql("select pair, n from bpe_pairs(documents, 10)")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val viaApi = TextAnalysis.bpePairCounts(
-        TextAnalysis.bpeWordFrequencies(
+    val viaApi = Subwords.bpePairCounts(
+        Subwords.bpeWordFrequencies(
           g.catalog.relation("documents"), "text", "doc_id"), k = 10)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(viaSql == viaApi && viaSql.length == 10)
-    // apply mode: merge-list literal ≡ tokenizeBpe with X86_MERGES
+    // apply mode: merge-list literal ≡ the uncapped tokenize with X86_MERGES
     val lit = X86_MERGES.map { case (a, b) => s"$a $b" }.mkString(",")
     val applied = g.sql(
       s"select id, n_tokens from bpe_tokenize(documents, '$lit') order by id")
-    val expected = TextAnalysis.tokenizeBpe(
-        g.catalog.relation("documents"), "text", "doc_id", X86_MERGES)
+    val expected = Subwords.tokenize(
+        g.catalog.relation("documents"), "text", "doc_id", Subwords.Bpe(X86_MERGES), Int.MaxValue)
       .select("id", "n_tokens").orderBy("id")
     assert(applied.exceptAll(expected).isEmpty && expected.exceptAll(applied).isEmpty)
     // train mode: n merges trained on the relation itself; more merges
@@ -272,8 +272,10 @@ class TableFnSpec extends AnyFunSuite {
     val tight = g.sql("select id, n_words, n_tokens from bpe_tokenize(documents, 8, 5) order by id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(tight.map(t => (t._1, t._2)) == base.map(t => (t._1, t._2)))
-    val tightApi = TextAnalysis.tokenizeBpeTrained(
-        g.catalog.relation("documents"), "text", "doc_id", 8, vocabCap = 5)
+    val rel = g.catalog.relation("documents")
+    val wf = Subwords.vocab(rel, "text", "doc_id", 5)
+    val tightApi = Subwords.tokenize(rel, "text", "doc_id",
+        Subwords.Bpe(Subwords.bpeTrain(wf, 8)), 5, Some(wf))
       .orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(tight == tightApi)
@@ -375,13 +377,17 @@ class TableFnSpec extends AnyFunSuite {
   }
 
   test("non-positive k or cap is an analysis error before any Spark job") {
+    val mergesPath = java.nio.file.Files.createTempFile("graft_capguard_", ".txt")
+    graft.operators.Subwords.Bpe(Seq(("e", "r"))).save(spark, mergesPath.toString)
+    g.sql(s"create model capguard kind 'bpe' at '$mergesPath'")
     val bad = Seq(
+      "bpe_tokenize(documents, 'capguard', 0)" -> "bpe_tokenize: vocab cap must be positive",
       "heavy_hitters(documents, 0)" -> "heavy_hitters: k must be positive",
       "heavy_hitters_exact(documents, -1)" -> "heavy_hitters_exact: k must be positive",
       "cluster_sample(embeddings, 0)" -> "cluster_sample: cap must be positive",
       "cluster_sample(embeddings, 4, 0)" -> "cluster_sample: k must be positive",
       "pca_project(embeddings, 0)" -> "pca_project: k must be positive")
-    bad.foreach { case (call, msg) =>
+    try bad.foreach { case (call, msg) =>
       val (out, counters) =
         graft.obs.Obs.around(spark)(scala.util.Try(g.sql(s"select * from $call")))
       out match {
@@ -390,6 +396,9 @@ class TableFnSpec extends AnyFunSuite {
         case other => fail(s"$call: $other")
       }
       assert(counters.jobs == 0, s"$call ran ${counters.jobs} jobs")
+    } finally {
+      g.sql("drop model capguard")
+      java.nio.file.Files.delete(mergesPath)
     }
   }
 
@@ -420,5 +429,18 @@ class TableFnSpec extends AnyFunSuite {
       .flatMap(p => code(p).filter(l => kindTest.findFirstIn(l).nonEmpty)
         .map(l => s"${main.relativize(p)}: ${l.trim}"))
     assert(kindTests.isEmpty, s"model-kind comparisons outside ModelKind: ${kindTests.mkString("; ")}")
+    // the capped vocabulary reaches the driver in one auditable place:
+    // only the tokenizer file builds it, and only its `vocab` collects
+    val tokenizers = "operators/Subwords.scala"
+    val cappers = files.filter(p => !p.endsWith(tokenizers) &&
+      code(p).exists(_.contains("bpeCappedVocab"))).map(main.relativize)
+    assert(cappers.isEmpty, s"bpeCappedVocab outside $tokenizers: ${cappers.mkString(", ")}")
+    val defLine = """^\s*(?:private\s+)?def\s+(\w+)""".r.unanchored
+    val collectors = code(main.resolve(tokenizers))
+      .scanLeft(("", "")) { case ((fn, _), l) =>
+        (l match { case defLine(name) => name; case _ => fn }, l) }
+      .collect { case (fn, l) if """\.(collect\(\)|collectAsList|toLocalIterator)""".r
+        .findFirstIn(l).nonEmpty => fn }
+    assert(collectors == Seq("vocab"), s"driver collects in $tokenizers: ${collectors.mkString(", ")}")
   }
 }

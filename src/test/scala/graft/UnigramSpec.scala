@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TextAnalysis
+import graft.operators.Subwords
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,36 +19,36 @@ class UnigramSpec extends AnyFunSuite {
     // 'ab' -> ab. Counts: ab = 2*10 + 5 = 25, everything else 0 ->
     // ln(25/25) = 0.0 for 'ab'; a/b survive at the char floor; ba/aba/bab
     // drop. Iter 2 is the fixed point.
-    val model = TextAnalysis.unigramTrain(
+    val model = Subwords.unigramTrain(
       Seq(("abab", 10L), ("ab", 5L)), vocabSize = 10, iters = 2, maxPieceLen = 3)
     assert(model === Seq(
       ("ab", 0.0),
-      ("a", TextAnalysis.UnigramFloorLogProb),
-      ("b", TextAnalysis.UnigramFloorLogProb)))
+      ("a", Subwords.UnigramFloorLogProb),
+      ("b", Subwords.UnigramFloorLogProb)))
     // deterministic: a second train is identical
-    val again = TextAnalysis.unigramTrain(
+    val again = Subwords.unigramTrain(
       Seq(("abab", 10L), ("ab", 5L)), vocabSize = 10, iters = 2, maxPieceLen = 3)
     assert(again === model)
   }
 
   test("unigramSegment: Viterbi optimum, OOV char floor, tie-break order") {
     val m = Map("ab" -> 0.0, "a" -> -20.0, "b" -> -20.0)
-    assert(TextAnalysis.unigramSegment("abab", m) === Vector("ab", "ab"))
+    assert(Subwords.unigramSegment("abab", m) === Vector("ab", "ab"))
     // OOV char 'x' segments as itself at the floor; surrounding pieces
     // still take the high-probability split
-    assert(TextAnalysis.unigramSegment("abaxb", m) === Vector("ab", "a", "x", "b"))
-    assert(TextAnalysis.unigramSegment("", m) === Vector.empty)
+    assert(Subwords.unigramSegment("abaxb", m) === Vector("ab", "a", "x", "b"))
+    assert(Subwords.unigramSegment("", m) === Vector.empty)
     // equal score, equal piece count -> the LONGER LAST piece wins
     // (ascending-j scan keeps the earlier split): 'aaa' under
     // {aa: -1.0, a: -0.5} scores -1.5 for both a+aa and aa+a
     val t = Map("aa" -> -1.0, "a" -> -0.5)
-    assert(TextAnalysis.unigramSegment("aaa", t) === Vector("a", "aa"))
+    assert(Subwords.unigramSegment("aaa", t) === Vector("a", "aa"))
     // fewer pieces beats more pieces at equal score: 'aa' as one piece
     // (-1.0) vs a+a (-1.0)
-    assert(TextAnalysis.unigramSegment("aa", t) === Vector("aa"))
+    assert(Subwords.unigramSegment("aa", t) === Vector("aa"))
     // concatenation identity on arbitrary input (totality)
     Seq("hello", "zzz", "q", "mixedcase").foreach { w =>
-      assert(TextAnalysis.unigramSegment(w, m).mkString === w)
+      assert(Subwords.unigramSegment(w, m).mkString === w)
     }
   }
 
@@ -59,8 +59,9 @@ class UnigramSpec extends AnyFunSuite {
       (3L, "one-word"),
       (4L, "!!!")) // no [a-z] words: absent from output
       .toDF("doc_id", "text")
-    val out = TextAnalysis.tokenizeUnigramTrained(
-      docs, "text", "doc_id", vocabSize = 64, iters = 2)
+    val wf = Subwords.vocab(docs, "text", "doc_id")
+    val out = Subwords.tokenize(docs, "text", "doc_id",
+        Subwords.Unigram(Subwords.unigramTrain(wf, vocabSize = 64, iters = 2)), trainedOn = Some(wf))
       .orderBy("id").collect()
     assert(out.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
     out.foreach { r =>
@@ -75,11 +76,9 @@ class UnigramSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "The banana and the bandana!"),
       (2L, "ba na na")).toDF("doc_id", "text")
-    val wf = TextAnalysis.bpeCappedVocab(docs, "text", "doc_id", 100)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val model = TextAnalysis.unigramTrain(wf, vocabSize = 32, iters = 2).toMap
-    val decoded = TextAnalysis.bpeDecode(
-      TextAnalysis.unigramEncode(docs, "text", "doc_id", model))
+    val wf = Subwords.vocab(docs, "text", "doc_id", 100)
+    val model = Subwords.Unigram(Subwords.unigramTrain(wf, vocabSize = 32, iters = 2))
+    val decoded = Subwords.bpeDecode(Subwords.encode(docs, "text", "doc_id", model))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(decoded.toSeq === Seq(
       (1L, "the banana and the bandana"),
@@ -91,10 +90,11 @@ class UnigramSpec extends AnyFunSuite {
     val path = s"$dir/vocab.tsv"
     val g = TestSpark.session
     val docs = g.catalog.relation("documents")
-    val trained = TextAnalysis.trainUnigramModel(
-      docs, "text", "doc_id", vocabSize = 128, iters = 2, path = path)
+    val trained = Subwords.Unigram(
+      Subwords.unigramTrain(Subwords.vocab(docs, "text", "doc_id"), vocabSize = 128, iters = 2))
+    trained.save(spark, path)
     // 6-dp text round-trip is exact (both directions correctly rounded)
-    assert(TextAnalysis.loadUnigramVocab(spark, path) === trained)
+    assert(Subwords.Unigram.load(spark, path) === trained)
     val g2 = new GraftSession(spark).registerDir(TestSpark.sf)
     g2.sql(s"create model uni13 kind 'unigram' at '$path'")
     val byName = g2.sql(
@@ -119,8 +119,8 @@ class UnigramSpec extends AnyFunSuite {
   test("nested table functions: encode-by-name feeds bpe_decode in one statement") {
     val dir = java.nio.file.Files.createTempDirectory("unigram_nest_").toString
     val g = new GraftSession(spark).registerDir(TestSpark.sf)
-    TextAnalysis.trainUnigramModel(g.catalog.relation("documents"),
-      "text", "doc_id", vocabSize = 128, iters = 2, path = s"$dir/v.tsv")
+    Subwords.Unigram(Subwords.unigramTrain(Subwords.vocab(g.catalog.relation("documents"),
+      "text", "doc_id"), vocabSize = 128, iters = 2)).save(spark, s"$dir/v.tsv")
     g.sql(s"create model uninest kind 'unigram' at '$dir/v.tsv'")
     val out = g.sql("select id, text_detok from " +
       "bpe_decode(unigram_encode(documents, 'uninest')) where id < 5 order by id")

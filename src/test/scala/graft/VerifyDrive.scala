@@ -215,8 +215,8 @@ object VerifyDrive {
     })
     println("=== bpe round trip: " + {
       g.catalog.registerTable("vd_enc",
-        graft.operators.TextAnalysis.bpeEncode(
-          g.catalog.relation("documents"), "text", "doc_id", Seq(("e", "r"))))
+        graft.operators.Subwords.encode(
+          g.catalog.relation("documents"), "text", "doc_id", graft.operators.Subwords.Bpe(Seq(("e", "r")))))
       val r = g.sql("select count(*) as n, min(length(text_detok)) as mn " +
         "from bpe_decode(vd_enc)").head()
       s"docs=${r.getLong(0)} min-len=${r.getInt(1)}"
@@ -249,9 +249,10 @@ object VerifyDrive {
     })
     println("=== unigram model-branch arity: " + {
       val dir = java.nio.file.Files.createTempDirectory("vd_uni_").toString
-      graft.operators.TextAnalysis.trainUnigramModel(
-        g.catalog.relation("documents"), "text", "doc_id",
-        vocabSize = 64, iters = 1, path = s"$dir/v.tsv")
+      import graft.operators.Subwords
+      Subwords.Unigram(Subwords.unigramTrain(
+        Subwords.vocab(g.catalog.relation("documents"), "text", "doc_id"), vocabSize = 64, iters = 1))
+        .save(spark, s"$dir/v.tsv")
       g.sql(s"create model vduni kind 'unigram' at '$dir/v.tsv'")
       try { g.sql("select * from unigram_tokenize(documents, 'vduni', 5)"); "NO-ERROR" }
       catch { case e: Exception =>
