@@ -140,10 +140,23 @@ object TableFunctions {
   }
 
   /** ANN serving, `fn(queries, 'model'|'dir', k[, …])` over a persisted
-    * [[IvfIndex]] layout: (queries, layout dir, k). */
-  private def annArgs(a: Args, kind: String): (DataFrame, String, Int) =
+    * [[IvfIndex]] layout: (queries, layout dir, k). `k` is checked before
+    * the model resolves, which may read the layout. */
+  private def annArgs(a: Args, kind: String): (DataFrame, String, Int) = {
+    val k = a.posInt(2, 8, "k")
     (a.rel(0, Seq("vec_id", "embedding"), "query relation must follow the embeddings convention"),
-      a.model(1, ModelKind.ann(kind)), a.int(2, 8))
+      a.model(1, ModelKind.ann(kind)), k)
+  }
+
+  /** `fn(queries, 'model'|'dir', k[, nprobe[, shortlist]])` over an IVF
+    * layout of `kind`, with `nprobe` checked before the layout is read;
+    * only a PQ codec reads the shortlist, raised to at least k. */
+  private def ivfServe(a: Args, kind: String): DataFrame = {
+    val nprobe = a.posInt(3, 4, "nprobe")
+    val (q, dir, k) = annArgs(a, kind)
+    IvfIndex.topK(a.spark, dir, q, k, nprobe = nprobe,
+      shortlist = math.max(a.int(4, math.max(50L, k)), k))
+  }
 
   val all: Seq[Fn] = Seq(
     Fn("gopher_flags", 1, 1)(a => QualityFilters.gopherFlags(a.rel(0), "text", "doc_id")),
@@ -299,16 +312,13 @@ object TableFunctions {
     Fn("hard_negatives", 3, 5)(a => Similarity.hardNegatives(
       a.rel(0, Seq("vec_id", "embedding", "label"), "argument 1 must follow the embeddings corpus convention"),
       a.rel(1, Seq("vec_id", "embedding", "label"), "argument 2 must follow the embeddings corpus convention"),
-      k = a.int(2, 8), dupCeiling = a.dblOr(3, 0.95), floor = a.dblOr(4, -1.0))),
+      k = a.posInt(2, 8, "k"), dupCeiling = a.dblOr(3, 0.95), floor = a.dblOr(4, -1.0))),
     // leakage_safe_split(rel, pct) — duplicate families never straddle train/test
     Fn("leakage_safe_split", 2, 2)(a => Sampling.leakageSafeSplit(
       a.rel(0, Docs, "document corpus convention"), "text", "doc_id", testPercent = a.int(1, 10))),
     // ann_topk(queries, 'model'|'dir', k[, nprobe]) — IVF: float cosine
     // over the probed buckets only
-    Fn("ann_topk", 3, 4) { a =>
-      val (q, dir, k) = annArgs(a, "ivf")
-      IvfIndex.topK(a.spark, dir, q, k, nprobe = a.int(3, 4))
-    },
+    Fn("ann_topk", 3, 4)(ivfServe(_, "ivf")),
     // bpe_pairs(rel[, k]) — top-k frequency-weighted adjacent char pairs
     Fn("bpe_pairs", 1, 2)(a => Subwords.bpePairCounts(
       Subwords.bpeWordFrequencies(a.rel(0), "text", "doc_id"), k = a.int(1, 30))),
@@ -328,6 +338,13 @@ object TableFunctions {
             val m = merges(a, s)
             if (a.length > 2) a.fail("a vocab cap only applies to train mode (integer " +
               "merge count) or a registered model; an explicit merge list is already a model")
+            // an uncapped list segments with the replace chain, exact
+            // only for distinct-symbol pairs
+            m.merges.find { case (x, y) => x == y }.foreach { case (x, y) =>
+              a.fail(s"same-symbol merge `$x $y` in a literal merge list needs a " +
+                "registered bpe model (CREATE MODEL name KIND 'bpe' AT 'path'), which " +
+                "segments a capped vocabulary")
+            }
             Subwords.tokenize(r, "text", "doc_id", m, Int.MaxValue)
         }
         case other => a.fail(s"argument 2 must be a merge count (integer) or a " +
@@ -381,18 +398,11 @@ object TableFunctions {
     },
     // ivfsq8_topk(queries, 'model'|'dir', k[, nprobe]) — IVF+SQ8 (FAISS
     // "IVF,SQ8"): integer-dot cosine over the probed int8 buckets
-    Fn("ivfsq8_topk", 3, 4) { a =>
-      val (q, dir, k) = annArgs(a, "ivfsq8")
-      IvfIndex.topK(a.spark, dir, q, k, nprobe = a.int(3, 4))
-    },
+    Fn("ivfsq8_topk", 3, 4)(ivfServe(_, "ivfsq8")),
     // ivfpq_topk(queries, 'model'|'dir', k[, nprobe[, shortlist]]) —
     // IVF-PQ: ADC over the probed codes, exact re-rank of the shortlist
     // against the same buckets' originals
-    Fn("ivfpq_topk", 3, 5) { a =>
-      val (q, dir, k) = annArgs(a, "ivfpq")
-      IvfIndex.topK(a.spark, dir, q, k, nprobe = a.int(3, 4),
-        shortlist = math.max(a.int(4, math.max(50L, k)), k))
-    },
+    Fn("ivfpq_topk", 3, 5)(ivfServe(_, "ivfpq")),
     // bpe_decode(rel) — a bpe_encode output back to text, (id,
     // text_detok): decode(encode(x)) is the lowercase word normalization
     // of x (merges are concatenative)

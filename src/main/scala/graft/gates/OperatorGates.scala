@@ -368,9 +368,10 @@ object OperatorGates {
       "ORDER BY id",
       (s, d) => {
       val dd = docs(s, d)
-      val model = Subwords.Unigram(
-        Subwords.unigramTrain(Subwords.vocab(dd, "text", "doc_id"), vocabSize = 512, iters = 3))
-      Subwords.bpeDecode(Subwords.encode(dd, "text", "doc_id", model)).orderBy("id")
+      val wf = Subwords.vocab(dd, "text", "doc_id")
+      val model = Subwords.Unigram(Subwords.unigramTrain(wf, vocabSize = 512, iters = 3))
+      Subwords.bpeDecode(Subwords.encode(dd, "text", "doc_id", model,
+        trainedOn = Some(wf))).orderBy("id")
     }),
     // ---- x124: per-doc unigram token counts through the SQL surface;
     // n_words is DuckDB-recomputed, and the piece-count bounds (every
@@ -1074,7 +1075,7 @@ object OperatorGates {
       // than the layout holds (16 buckets; if the probe set ever covered
       // all of them the flag fails loudly instead of passing vacuously)
       val corpus = s.read.parquet(s"$dir/corpus")
-      val needed = Similarity.probeBuckets(q, model.centroids, nprobe = 4)
+      val needed = IvfIndex.probeBuckets(q, model.centroids, nprobe = 4)
       val pruned = filesScanned(
         corpus.where(col("c").isin(needed.map(Int.box): _*))) <
         corpus.inputFiles.length
@@ -1186,7 +1187,7 @@ object OperatorGates {
       val rRes = recall(dirRes)
       val rRaw = recall(dirRaw)
       val resModel = IvfIndex.load(s, dirRes)
-      val needed = Similarity.probeBuckets(q, resModel.centroids, nprobe = 4)
+      val needed = IvfIndex.probeBuckets(q, resModel.centroids, nprobe = 4)
       val codes = s.read.parquet(s"$dirRes/codes")
       val pruned = filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
@@ -1219,7 +1220,7 @@ object OperatorGates {
       val vsFlat = Similarity.annRecall(served, flat).head()
       val vsTruth = Similarity.annRecall(served,
         Similarity.bruteForceTopK(e, q, k = 10)).head()
-      val needed = Similarity.probeBuckets(q, model.centroids, nprobe = 4)
+      val needed = IvfIndex.probeBuckets(q, model.centroids, nprobe = 4)
       val pruned = filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
         codes.inputFiles.length
@@ -1262,7 +1263,7 @@ object OperatorGates {
       val vsTruth = Similarity.annRecall(served,
         Similarity.bruteForceTopK(e, q, k = 5)).head()
       val codes = s.read.parquet(s"$dir/codes")
-      val needed = Similarity.probeBuckets(q, model.centroids, nprobe = 4)
+      val needed = IvfIndex.probeBuckets(q, model.centroids, nprobe = 4)
       val pruned = filesScanned(
         codes.where(col("c").isin(needed.map(Int.box): _*))) <
         codes.inputFiles.length
@@ -1274,7 +1275,7 @@ object OperatorGates {
     }),
     // hard-negative mining (r9): per query, the k most-similar
     // DIFFERENT-label vectors inside the [floor, ceiling) cosine band —
-    // exact brute path (the TopK bounded-heap partial agg), full DuckDB
+    // exact brute path (Similarity.topKPerQuery's bounded heap), full DuckDB
     // recompute as oracle; the IVF scale variant is recall-audited in
     // OperatorsSpec via annRecall against this truth
     Gate("x89_hard_negatives", Operator, duckHardNegatives, (s, d) => {

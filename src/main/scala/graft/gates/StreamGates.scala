@@ -330,9 +330,10 @@ object StreamGates {
       "w -> w <> '')) > 0",
       (s, d) => {
       val dd = docs(s, d).localCheckpoint()
-      val model = Subwords.Unigram(
-        Subwords.unigramTrain(Subwords.vocab(dd, "text", "doc_id"), vocabSize = 512, iters = 3))
-      val (seg0, ids0) = Subwords.encodeTables(dd, "text", "doc_id", model)
+      val wf = Subwords.vocab(dd, "text", "doc_id")
+      val model = Subwords.Unigram(Subwords.unigramTrain(wf, vocabSize = 512, iters = 3))
+      val (seg0, ids0) = Subwords.encodeTables(dd, "text", "doc_id", model,
+        trainedOn = Some(wf))
       val seg = seg0.localCheckpoint(); val ids = ids0.localCheckpoint()
       def digest(enc: org.apache.spark.sql.DataFrame) = enc.groupBy(col("id"))
         .agg(count(lit(1)).as("n_tokens"),

@@ -34,17 +34,7 @@ object Components {
     * is a few MB collected — model-sized, far under any broadcast bound —
     * and the result is IDENTICAL by construction (comp = min member id;
     * min is schedule-independent). Corpus-scale graphs keep the loop. */
-  private val smallGraphEdgeCap: Long =
-    sys.props.get("graft.cc.smallGraphEdgeCap").flatMap { raw =>
-      // defensive parse (r15 advice): a malformed property must surface as
-      // a clear warning, not an opaque ExceptionInInitializerError on the
-      // object's first use
-      val p = scala.util.Try(raw.toLong).toOption
-      if (p.isEmpty) System.err.println(
-        s"[components] ignoring malformed graft.cc.smallGraphEdgeCap='$raw' " +
-          "(not a long); using default 200000")
-      p
-    }.getOrElse(200000L)
+  private val SmallGraphEdgeCap: Long = 200000L
 
   /** Unsigned lexicographic byte compare — Spark's BinaryType/StringType
     * ordering (UTF8String compares UTF-8 bytes unsigned, which diverges
@@ -79,7 +69,7 @@ object Components {
   }
 
   /** Driver union-find over a collected edge list: (id, comp=min member). */
-  private def localComponents(edges: Array[(Any, Any)]): Seq[(Any, Any)] = {
+  private def unionFind(edges: Array[(Any, Any)]): Seq[(Any, Any)] = {
     val idx = new java.util.HashMap[Any, Int]
     val vals = new scala.collection.mutable.ArrayBuffer[Any]
     def id(v: Any): Int = {
@@ -116,25 +106,33 @@ object Components {
     * `pairs` appear. */
   def connectedComponents(pairs: DataFrame, aCol: String = "ida",
                           bCol: String = "idb", maxIter: Int = 50): DataFrame = {
-    val fwd = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
-    val rev = pairs.select(col(bCol).as("s"), col(aCol).as("d"))
-    val edges = fwd.union(rev).distinct().localCheckpoint()
-
+    val edges = edgeList(pairs, aCol, bCol)
     // small-graph fast path: one count on the already-materialized edge
     // list decides; identical output, none of the per-round actions
-    if (edges.count() <= smallGraphEdgeCap) {
-      val spark = pairs.sparkSession
-      val schema = edges.select(col("s").as("id"))
-        .withColumn("comp", col("id")).schema
-      val collected = edges.collect().map(r => (r.get(0), r.get(1)))
-      val rows = localComponents(collected)
-        .map { case (i, c) => org.apache.spark.sql.Row(i, c) }
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        schema)
-    }
+    if (edges.count() <= SmallGraphEdgeCap) localComponents(edges)
+    else labelLoop(edges, maxIter)
+  }
 
+  /** The symmetric, deduplicated (s, d) edge list of `pairs`,
+    * checkpointed once so every later pass re-reads it. */
+  private[graft] def edgeList(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val fwd = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
+    val rev = pairs.select(col(bCol).as("s"), col(aCol).as("d"))
+    fwd.union(rev).distinct().localCheckpoint()
+  }
+
+  /** (id, comp) of an [[edgeList]], solved by union-find on the driver. */
+  private[graft] def localComponents(edges: DataFrame): DataFrame = {
+    val schema = edges.select(col("s").as("id")).withColumn("comp", col("id")).schema
+    val rows = unionFind(edges.collect().map(r => (r.get(0), r.get(1))))
+      .map { case (i, c) => org.apache.spark.sql.Row(i, c) }
+    edges.sparkSession.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
+  }
+
+  /** (id, comp) of an [[edgeList]], solved by distributed min-label
+    * propagation: O(diameter) rounds, failing past `maxIter`. */
+  private[graft] def labelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = edges.select(col("s").as("id")).distinct()
       .withColumn("comp", col("id")).localCheckpoint()
     var i = 0

@@ -252,7 +252,7 @@ object IvfIndex {
            nprobe: Int = 4, shortlist: Int = 50, vecCol: String = "embedding",
            idCol: String = "vec_id"): DataFrame = {
     val m = load(spark, dir)
-    val needed = guardedProbeBuckets(queries, m.centroids, nprobe, vecCol)
+    val needed = probeBuckets(queries, m.centroids, nprobe, vecCol)
     serve(m, sub => readLayout(spark, s"$dir/$sub")
       .where(col("c").isin(needed.map(Int.box): _*)),
       queries, k, nprobe, shortlist, vecCol, idCol)
@@ -283,20 +283,11 @@ object IvfIndex {
     m.codec match {
       case _: Pq =>
         require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-        val topsl = udaf(new Similarity.TopK(shortlist))
-        val cand = scored.groupBy(col("qid"))
-          .agg(topsl(col("cos"), col("vec_id")).as("top"))
-          .select(col("qid"), explode(col("top")).as("e"))
-          .select(col("qid"), col("e._2").as("vec_id"))
-        val q = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv")))
         // shortlist ids come from probed buckets only: the re-rank reads
         // the same pruned directories
-        val exact = data("corpus").select(col("vec_id"), col("v"))
-          .join(cand, "vec_id").join(q, "qid")
-          .select(col("qid"), col("vec_id"),
-            round(Similarity.cosine(col("v"), col("qv")), 4).as("cos"))
-        Similarity.topKPerGroup(exact, k)
-      case _ => Similarity.topKPerGroup(scored, k)
+        Similarity.rerank(Similarity.topKPerQuery(scored, shortlist),
+          data("corpus"), queries, k, vecCol, idCol)
+      case _ => Similarity.topKPerQuery(scored, k)
     }
   }
 
@@ -355,16 +346,17 @@ object IvfIndex {
     * side. */
   val MaxServeQueryRows: Int = 65536
 
-  /** [[Similarity.probeBuckets]] with the broadcast-contract guard riding
-    * the same aggregation: `groupBy(c).count` has the partial-agg plan
-    * shape of `distinct` (≤ nlist rows collected either way), and each
-    * query row explodes to exactly min(nprobe, nlist) probes, so the
-    * count sum detects an oversized batch in the job the serve needed
-    * anyway. No LIMIT: a global limit inserts a single-partition exchange
-    * (x103 paid ~35 ms per micro-batch for one). */
-  private def guardedProbeBuckets(queries: DataFrame,
-                                  centroids: Array[Array[Double]],
-                                  nprobe: Int, vecCol: String): Array[Int] = {
+  /** The sorted distinct buckets a query batch probes (≤ min(nlist,
+    * |queries|·nprobe) values — bounded because the query side is): the
+    * literal partition filter the serve scan prunes on. One job, which
+    * also enforces the broadcast contract: `groupBy(c).count` has the
+    * partial-agg plan shape of `distinct` (≤ nlist rows collected), and
+    * each query row explodes to exactly min(nprobe, nlist) probes, so the
+    * count sum detects a batch over [[MaxServeQueryRows]]. No LIMIT: a
+    * global limit inserts a single-partition exchange (x103 paid ~35 ms
+    * per micro-batch for one). */
+  def probeBuckets(queries: DataFrame, centroids: Array[Array[Double]],
+                   nprobe: Int, vecCol: String = "embedding"): Array[Int] = {
     val perRow = math.min(nprobe, centroids.length).toLong
     val probeRows = queries
       .select(explode(AnnModelOps.probeCentroids(col(vecCol), centroids, nprobe)).as("c"))
@@ -413,12 +405,12 @@ object IvfIndex {
                     k: Int, shortlist: Int = 50,
                     vecCol: String = "embedding",
                     idCol: String = "vec_id"): DataFrame = {
-    // the layout always stores (vec_id, embedding); align to the
-    // caller's column convention before the shared rerank path
-    val originals = readLayout(spark, s"$dir/corpus")
-      .select(col("vec_id").as(idCol), col("embedding").as(vecCol))
-    Similarity.pqTopKRerank(readLayout(spark, s"$dir/codes"),
-      loadPqCodebooks(spark, dir), originals, queries, k, shortlist, vecCol, idCol)
+    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
+    val cand = Similarity.pqTopK(readLayout(spark, s"$dir/codes"),
+      loadPqCodebooks(spark, dir), queries, shortlist, vecCol, idCol)
+    // the layout stores (vec_id, embedding)
+    Similarity.rerank(cand, readLayout(spark, s"$dir/corpus")
+      .withColumnRenamed("embedding", "v"), queries, k, vecCol, idCol)
   }
 
   // ------------------------------------------------------------------

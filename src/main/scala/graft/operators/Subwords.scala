@@ -204,10 +204,13 @@ object Subwords {
     * freeze them (localCheckpoint) first. The cap keeps the id window
     * model-sized: an uncapped web-scale corpus would push a Heaps-law
     * vocabulary (10⁸+ distinct noisy "words") through ONE row_number
-    * task, so an uncapped encode must say `cap = Int.MaxValue`. */
+    * task, so an uncapped encode must say `cap = Int.MaxValue`.
+    * `trainedOn` is [[segmentation]]'s: the vocabulary copy the model was
+    * just trained on, so it is not collected again. */
   def encodeTables(df: DataFrame, textCol: String, idCol: String, model: Model,
-                   cap: Int = DefaultBpeVocabCap): (DataFrame, DataFrame) = {
-    val segmented = segmentation(df, textCol, idCol, model, cap)
+                   cap: Int = DefaultBpeVocabCap,
+                   trainedOn: Option[Seq[(String, Long)]] = None): (DataFrame, DataFrame) = {
+    val segmented = segmentation(df, textCol, idCol, model, cap, trainedOn)
     val tokenIds = stream(df, textCol, idCol, segmented)
       .select("token").distinct()
       .select(col("token"),
@@ -231,8 +234,9 @@ object Subwords {
   /** The token stream of `df` under `model`, totally ordered per doc by
     * (wpos, tpos): [[encodeTables]], then [[encodeWith]]. */
   def encode(df: DataFrame, textCol: String, idCol: String, model: Model,
-             cap: Int = DefaultBpeVocabCap): DataFrame = {
-    val (segmented, tokenIds) = encodeTables(df, textCol, idCol, model, cap)
+             cap: Int = DefaultBpeVocabCap,
+             trainedOn: Option[Seq[(String, Long)]] = None): DataFrame = {
+    val (segmented, tokenIds) = encodeTables(df, textCol, idCol, model, cap, trainedOn)
     encodeWith(df, textCol, idCol, segmented, tokenIds)
   }
 

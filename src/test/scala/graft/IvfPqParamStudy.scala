@@ -66,7 +66,7 @@ object IvfPqParamStudy {
         val recall = Similarity.annRecall(
           IvfIndex.topK(spark, dir, q, k = 10, nprobe = nprobe,
             shortlist = shortlist), truth).head().getDouble(1)
-        val probed = Similarity.probeBuckets(q, centroids, nprobe).length
+        val probed = IvfIndex.probeBuckets(q, centroids, nprobe).length
         println(f"[study] res=$residual m=$m%2d k=$kSub%2d sl=$shortlist%3d nlist=$nlist%5d nprobe=$nprobe%4d train=$trainS%6.1fs " +
           f"serve=$lat%6.2fs recall@10=$recall%.3f probed=$probed%4d/$nlist " +
           f"candRowsPerQ~${n * math.min(nprobe, nlist) / nlist}%7d")

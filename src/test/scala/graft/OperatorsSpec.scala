@@ -118,13 +118,92 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("bounded-heap TopK udaf matches the exact collect_list top-k") {
+  test("bounded-heap topKPerQuery matches a full sort of every scored pair") {
+    // ties on score, a null score, a query with fewer than k rows, and
+    // rows spread over partitions so the heap merges partial buffers
+    val raw = Seq[(Long, Long, java.lang.Double)](
+      (1L, 5L, 0.5), (1L, 3L, 0.5), (1L, 9L, 0.9), (1L, 2L, null),
+      (1L, 7L, 0.1), (1L, 4L, 0.5), (1L, 8L, -0.2), (2L, 6L, 0.3),
+      (2L, 1L, 0.3), (3L, 2L, null))
+    val scored = raw.toDF("qid", "vec_id", "cos").repartition(4)
+    def sorted(k: Int) = raw.filter(_._3 != null).groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (_, rs) =>
+        rs.sortBy(r => (-r._3.doubleValue, r._2)).take(k)
+          .map(r => (r._1, r._2, r._3.doubleValue))
+      }
+    for (k <- Seq(1, 3, 10)) {
+      // per query, the heap's row order is the contract order
+      val got = Similarity.topKPerQuery(scored, k).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(got.sortBy(_._1)(Ordering.Long) == sorted(k), s"k=$k")
+    }
     val q = emb.where(col("vec_id") < 3)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val partial = Similarity.bruteForceTopKPartial(emb, q, k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(partial == exact)
+    val exact = emb.select(col("vec_id"), col("embedding").as("v"))
+      .crossJoin(q.select(col("vec_id").as("qid"), col("embedding").as("qv")))
+      .where(col("qid") =!= col("vec_id"))
+      .select(col("qid"), col("vec_id"),
+        round(Similarity.cosine(col("v"), col("qv")), 4).as("cos"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap(_._2.sortBy(r => (-r._3, r._2)).take(5))
+    val brute = Similarity.bruteForceTopK(emb, q, k = 5).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(brute.sortBy(_._1)(Ordering.Long) == exact)
+    intercept[IllegalArgumentException](Similarity.topKPerQuery(scored, 0))
+  }
+
+  test("a null-embedding corpus row never ranks in brute-force, LSH or int8 top-k") {
+    // cosine against a null vector is null; a null score must not win
+    val withNull = emb.unionByName(Seq((999999L, null.asInstanceOf[Array[Float]], 0))
+      .toDF("vec_id", "embedding", "label")
+      .select(emb.columns.map(c => col(c).cast(emb.schema(c).dataType)): _*))
+    val q = emb.where(col("vec_id") < 5)
+    def ids(df: DataFrame) = df.select("vec_id").collect().map(_.getLong(0)).toSet
+    for ((name, top) <- Seq(
+        "bruteForceTopK" -> Similarity.bruteForceTopK(withNull, q, k = 5),
+        "lshTopK" -> Similarity.lshTopK(withNull, q, k = 5),
+        "int8CosineTopK" -> Similarity.int8CosineTopK(withNull, q, k = 5))) {
+      val got = ids(top)
+      assert(got.nonEmpty && !got.contains(999999L), s"$name ranked the null row")
+    }
+  }
+
+  test("no collect_list aggregate in the executed brute-force, LSH and IVF top-k plans") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    def aggregates(p: SparkPlan): Seq[String] = {
+      val here = p match {
+        case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction)
+          .map(f => if (f.isInstanceOf[CollectList]) "collect_list" else f.prettyName)
+        case _ => Nil
+      }
+      here ++ (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case other => other.children
+      }).flatMap(aggregates)
+    }
+    val q = emb.where(col("vec_id") < 3)
+    val dir = java.nio.file.Files.createTempDirectory("topkplan_").toString
+    try {
+      IvfIndex.save(emb, dir, nlist = 4, iters = 1)
+      for ((name, top) <- Seq(
+          "bruteForceTopK" -> Similarity.bruteForceTopK(emb, q, k = 5),
+          "lshTopK" -> Similarity.lshTopK(emb, q, k = 5),
+          "IvfIndex.topK" -> IvfIndex.topK(spark, dir, q, k = 5, nprobe = 2))) {
+        assert(top.collect().nonEmpty, name)
+        val aggs = aggregates(top.queryExecution.executedPlan)
+        assert(aggs.nonEmpty && !aggs.contains("collect_list"),
+          s"$name aggregates: ${aggs.mkString(", ")}")
+      }
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+      }
+      rm(new java.io.File(dir))
+    }
   }
 
   test("lsh top-k is a subset-quality approximation of brute force") {
@@ -338,7 +417,7 @@ class OperatorsSpec extends AnyFunSuite {
       // here, and the executed scan must READ fewer files (numFiles
       // metric — inputFiles ignores filters and can't prove this)
       val corpus = spark.read.parquet(s"$dir/corpus")
-      val needed = Similarity.probeBuckets(q, loaded, nprobe = 3)
+      val needed = IvfIndex.probeBuckets(q, loaded, nprobe = 3)
       assert(needed.length < 8)
       assert(graft.gates.Harness.filesScanned(
         corpus.where(col("c").isin(needed.map(Int.box): _*))) <
@@ -387,7 +466,7 @@ class OperatorsSpec extends AnyFunSuite {
       // pruning is observable on the EXECUTED code scan (numFiles) — a
       // small query batch, the serving-path shape (10 queries × 3 probes
       // can legitimately cover all 8 buckets of this tiny corpus)
-      val needed = Similarity.probeBuckets(
+      val needed = IvfIndex.probeBuckets(
         emb.where(col("vec_id") < 2), model.centroids, nprobe = 3)
       assert(needed.length < 8)
       assert(graft.gates.Harness.filesScanned(
@@ -1211,6 +1290,39 @@ class OperatorsSpec extends AnyFunSuite {
     val comp2 = Components.connectedComponents(rev)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp2 == comp)
+  }
+
+  test("connected components: the driver union-find equals the distributed label loop") {
+    // the edge-count cap picks one solver; both must label every graph
+    // alike, ids compared in Spark's ordering (U+FFFD sorts before U+1F600
+    // and U+10000 as UTF-8 bytes, after them as UTF-16 chars; binary ids
+    // compare unsigned)
+    def longs(ps: (Long, Long)*) = ps.toDF("ida", "idb")
+    val clique = (a: Long) => for (i <- a until a + 4; j <- i + 1 until a + 4) yield (i, j)
+    val graphs = Seq(
+      "chain" -> longs((1L to 9L).map(i => (i, i + 1)): _*),
+      "cycle" -> longs((1L to 6L).map(i => (i, i % 6 + 1)): _*),
+      "two cliques" -> longs(clique(10L) ++ clique(20L): _*),
+      "strings" -> Seq(("\uFFFD", "\uD83D\uDE00"), ("\uD83D\uDE00", "\uD800\uDC00"),
+        ("z", "y"))
+        .toDF("ida", "idb"),
+      "binary" -> Seq((Array[Byte](-1), Array[Byte](1)), (Array[Byte](1), Array[Byte](0, 5)),
+        (Array[Byte](7), Array[Byte](-128))).toDF("ida", "idb"))
+    def labels(df: DataFrame) = df.collect().map { r =>
+      def v(i: Int): Any = r.get(i) match {
+        case b: Array[Byte] => b.toSeq
+        case o => o
+      }
+      v(0) -> v(1)
+    }.toMap
+    for ((name, pairs) <- graphs) {
+      val edges = Components.edgeList(pairs, "ida", "idb")
+      val local = labels(Components.localComponents(edges))
+      assert(local == labels(Components.labelLoop(edges, 50)), name)
+      assert(local.size == pairs.select("ida").union(pairs.select("idb")).distinct().count(), name)
+    }
+    assert(labels(Components.localComponents(Components.edgeList(graphs(3)._2, "ida", "idb")))
+      .values.toSet == Set("\uFFFD", "y"))
   }
 
   test("clusterNearDuplicates: star edges stay linear under duplicate skew") {

@@ -286,6 +286,12 @@ class TableFnSpec extends AnyFunSuite {
     val e3 = intercept[graft.translate.GraftAnalysisException](
       g.sql("select * from bpe_tokenize(documents, 'e r', 5)"))
     assert(e3.getMessage.contains("train mode"))
+    // a literal list segments with the replace chain, which is exact only
+    // for distinct-symbol pairs
+    val same = intercept[graft.translate.GraftAnalysisException](
+      g.sql("select * from bpe_tokenize(documents, 'a a')"))
+    assert(same.getMessage.startsWith("bpe_tokenize: same-symbol merge `a a`") &&
+      same.getMessage.contains("registered bpe model"), same.getMessage)
     // bpe_encode: the token-id STREAM — per-doc counts agree with
     // bpe_tokenize under the same merges, ids are a dense 1..V range
     val encAgg = g.sql(
@@ -380,7 +386,20 @@ class TableFnSpec extends AnyFunSuite {
     val mergesPath = java.nio.file.Files.createTempFile("graft_capguard_", ".txt")
     graft.operators.Subwords.Bpe(Seq(("e", "r"))).save(spark, mergesPath.toString)
     g.sql(s"create model capguard kind 'bpe' at '$mergesPath'")
+    import graft.operators.IvfIndex
+    val idx = java.nio.file.Files.createTempDirectory("graft_annguard_")
+    val Seq(flat, sq8, pq) = Seq[IvfIndex.Codec](IvfIndex.Flat, IvfIndex.Sq8,
+        IvfIndex.Pq(m = 4, k = 4)).zipWithIndex.map { case (codec, i) =>
+      val dir = idx.resolve(s"i$i").toString
+      IvfIndex.save(g.catalog.relation("embeddings"), dir, codec, nlist = 4, iters = 1)
+      dir
+    }
     val bad = Seq(
+      "hard_negatives(embeddings, embeddings, 0)" -> "hard_negatives: k must be positive",
+      s"ann_topk(embeddings, '$flat', 0)" -> "ann_topk: k must be positive",
+      s"ann_topk(embeddings, '$flat', 5, -1)" -> "ann_topk: nprobe must be positive",
+      s"ivfsq8_topk(embeddings, '$sq8', 5, 0)" -> "ivfsq8_topk: nprobe must be positive",
+      s"ivfpq_topk(embeddings, '$pq', 5, -2)" -> "ivfpq_topk: nprobe must be positive",
       "bpe_tokenize(documents, 'capguard', 0)" -> "bpe_tokenize: vocab cap must be positive",
       "heavy_hitters(documents, 0)" -> "heavy_hitters: k must be positive",
       "heavy_hitters_exact(documents, -1)" -> "heavy_hitters_exact: k must be positive",
@@ -399,6 +418,10 @@ class TableFnSpec extends AnyFunSuite {
     } finally {
       g.sql("drop model capguard")
       java.nio.file.Files.delete(mergesPath)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+      }
+      rm(idx.toFile)
     }
   }
 
@@ -442,5 +465,21 @@ class TableFnSpec extends AnyFunSuite {
       .collect { case (fn, l) if """\.(collect\(\)|collectAsList|toLocalIterator)""".r
         .findFirstIn(l).nonEmpty => fn }
     assert(collectors == Seq("vocab"), s"driver collects in $tokenizers: ${collectors.mkString(", ")}")
+    // one per-query top-k: only Similarity names the TopK heap, only its
+    // topKPerQuery builds one, and the IVF serve collects no candidate list
+    val similarity = "operators/Similarity.scala"
+    val topK = """\bTopK\b""".r
+    val namers = files.filter(p => !p.endsWith(similarity) &&
+      code(p).exists(l => topK.findFirstIn(l).nonEmpty)).map(p => s"${main.relativize(p)} names TopK")
+    val member = """^  (?:(?:private|protected)(?:\[\w+\])?\s+)?(?:final\s+|lazy\s+)*(?:def|val|var|class|object|trait)\s+(\w+)""".r.unanchored
+    val builders = code(main.resolve(similarity))
+      .scanLeft(("", "")) { case ((fn, _), l) =>
+        (l match { case member(name) => name; case _ => fn }, l) }
+      .collect { case (fn, l) if l.contains("new TopK(") && fn != "topKPerQuery" =>
+        s"$similarity: $fn builds a TopK" }
+    val lists = code(main.resolve("operators/IvfIndex.scala")).filter(_.contains("collect_list"))
+      .map(l => s"operators/IvfIndex.scala calls collect_list: ${l.trim}")
+    val topKStrays = namers ++ builders ++ lists
+    assert(topKStrays.isEmpty, topKStrays.mkString("; "))
   }
 }

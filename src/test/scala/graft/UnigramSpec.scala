@@ -85,6 +85,23 @@ class UnigramSpec extends AnyFunSuite {
       (2L, "ba na na")))
   }
 
+  test("encodeTables with trainedOn segments the training copy and runs no job") {
+    val docs = Seq(
+      (1L, "The banana and the bandana!"),
+      (2L, "ba na na")).toDF("doc_id", "text")
+    val wf = Subwords.vocab(docs, "text", "doc_id")
+    val model = Subwords.Unigram(Subwords.unigramTrain(wf, vocabSize = 32, iters = 2))
+    val (given, counters) = graft.obs.Obs.around(spark)(
+      Subwords.encodeTables(docs, "text", "doc_id", model, trainedOn = Some(wf)))
+    assert(counters.jobs == 0, s"ran ${counters.jobs} jobs")
+    // without it the vocabulary is collected again, to the same tables
+    val (collected, again) = graft.obs.Obs.around(spark)(
+      Subwords.encodeTables(docs, "text", "doc_id", model))
+    assert(again.jobs > 0)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(given._1) == rows(collected._1) && rows(given._2) == rows(collected._2))
+  }
+
   test("model artifact: save -> load round-trips exactly; create model + apply by name") {
     val dir = java.nio.file.Files.createTempDirectory("unigram_model_").toString
     val path = s"$dir/vocab.tsv"
